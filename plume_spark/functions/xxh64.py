@@ -1,13 +1,19 @@
-"""Vectorized XXH64 (seed 42) over short byte strings — bit-identical to
-Spark's ``xxhash64`` expression (org.apache.spark.sql.catalyst.expressions.
-XxHash64, default seed 42), so driver-side kernels can reproduce JVM hash
-values exactly.  Validated against Spark in tests/test_operators.py.
+"""XXH64 (seed 42) bit-identical to Spark's ``xxhash64`` expression
+(org.apache.spark.sql.catalyst.expressions.XxHash64, default seed 42), so
+driver-side code can reproduce JVM hash values exactly.  Validated against
+Spark in tests/test_operators.py and tests/test_properties.py.
 
-Only the short-input path (< 32 bytes) is implemented — enough for character
-n-grams; longer inputs raise so a mismatch can never pass silently.
+Two entry points:
+* ``xxh64_fixed`` / ``xxh64_ngrams`` — vectorized over many short byte
+  strings (< 32 bytes, enough for character n-grams; longer inputs raise so a
+  mismatch can never pass silently);
+* ``xxhash64`` — one value of a LongType, IntegerType or StringType column at
+  any length: the store's driver-side bucket hash.
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 
@@ -92,3 +98,68 @@ def xxh64_ngrams(strings: list[str], n: int = 3) -> list[np.ndarray]:
         out.append(np.unique(hashes[pos : pos + c]))
         pos += c
     return out
+
+
+# ------------------------------------------------------------------ scalar
+
+_M64 = (1 << 64) - 1
+_Q1, _Q2, _Q3, _Q4, _Q5, _S = (int(p) for p in (_P1, _P2, _P3, _P4, _P5, _SEED))
+_INT_FORMATS = {"bigint": "<q", "int": "<i"}  # Spark hashLong / hashInt bytes
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _lane(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _Q2) & _M64, 31) * _Q1 & _M64
+
+
+def xxh64_bytes(data: bytes) -> int:
+    """Unsigned XXH64 (seed 42) of one byte string of any length (Spark's
+    XXH64.hashUnsafeBytes, including the 32-byte stripe loop)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(_S + _Q1 + _Q2) & _M64, (_S + _Q2) & _M64, _S, (_S - _Q1) & _M64]
+        while i + 32 <= n:
+            v = [_lane(a, b) for a, b in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _lane(0, a)) * _Q1 + _Q4) & _M64
+    else:
+        h = (_S + _Q5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _lane(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl64(h, 27) * _Q1 + _Q4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _Q1 & _M64
+        h = (_rotl64(h, 23) * _Q2 + _Q3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _Q5 & _M64
+        h = _rotl64(h, 11) * _Q1 & _M64
+    h ^= h >> 33
+    h = h * _Q2 & _M64
+    h ^= h >> 29
+    h = h * _Q3 & _M64
+    return h ^ (h >> 32)
+
+
+def xxhash64(value, dtype) -> int:
+    """Spark's ``xxhash64(lit(value).cast(dtype))`` as a signed 64-bit int,
+    for a LongType, IntegerType or StringType ``dtype``; any other type
+    raises.  A NULL hashes to the seed, as in Spark."""
+    name = dtype.simpleString() if dtype is not None else None
+    if name != "string" and name not in _INT_FORMATS:
+        raise TypeError(f"no driver-side xxhash64 for a {name} key")
+    if value is None:
+        return _S
+    if name == "string":
+        data = value.encode("utf-8")
+    else:
+        data = struct.pack(_INT_FORMATS[name], value)
+    h = xxh64_bytes(data)
+    return h - (1 << 64) if h >> 63 else h

@@ -24,15 +24,6 @@ def out_neighbors(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def in_neighbors(edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J6 one-hop in()."""
-    return (
-        nodes.join(edges, nodes["node"] == edges["obj"])
-        .select(F.col("subj").alias("node"))
-        .distinct()
-    )
-
-
 def roots(edges: DataFrame) -> DataFrame:
     """P7 degree predicate: nodes with out-edges but no in-edges (the DFS
     seed selection of OverflowDbReadBenchmark.scala:30-33) — semi-join on
@@ -59,7 +50,7 @@ def reachable(edges: DataFrame, seeds: DataFrame, max_hops: int = 20) -> DataFra
             nxt = nxt.localCheckpoint(eager=True)
         else:
             nxt = nxt.cache()
-        if nxt.limit(1).count() == 0:
+        if nxt.isEmpty():
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt
@@ -98,7 +89,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 20) -> Dat
             nxt = nxt.localCheckpoint(eager=True)
         else:
             nxt = nxt.cache()
-        if nxt.limit(1).count() == 0:
+        if nxt.isEmpty():
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt.select("node")
@@ -128,7 +119,7 @@ def parent_walk(edges: DataFrame, start: DataFrame, max_hops: int = 20) -> DataF
             .select(F.col("subj").alias("node"))
             .distinct()
         )
-        if frontier.limit(1).count() == 0:
+        if frontier.isEmpty():
             break
         out = out.unionByName(frontier).distinct()
     return out

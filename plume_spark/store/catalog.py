@@ -26,6 +26,19 @@ Semantics mirrored from Iceberg (and why they matter at 100 TB):
   pyarrow), and ``read(point=...)`` opens only the files that can contain the
   probed key — file skipping, not full scans, is what a point lookup costs.
 
+Read path: a point lookup pays for its own scan and nothing else.
+* Pinned schema: a table with a declared schema is read with
+  ``spark.read.schema(...)``, so building a frame runs no footer-inference
+  job.  ``_write_files`` refuses frames whose column names or types differ
+  from the declared schema, so a pinned read never drops a column or
+  mis-reads a file.
+* Driver-side bucket hash: ``files_for(point=...)`` computes the key's bucket
+  with a scalar XXH64 (``functions/xxh64.py``) that is bit-identical to the
+  ``pmod(xxhash64(key), n)`` the write path assigned — no Spark job.
+* One job per lookup: the only job left is the scan of the kept files
+  (``GraphStore.node_exists`` / ``edge_exists`` end in one ``isEmpty``, and
+  skip even that when pruning keeps no file).
+
 On a real cluster this class is replaced 1:1 by Iceberg
 (``df.writeTo("cat.db.t").append()`` / ``MERGE INTO`` with
 ``PARTITIONED BY (bucket(N, key))`` + ``WRITE ORDERED BY``); the GraphStore
@@ -46,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from plume_spark.functions.xxh64 import xxhash64
 
 
 @dataclass(frozen=True)
@@ -165,10 +180,22 @@ class SnapshotTable:
         os.replace(tmp, os.path.join(self.path, "_current"))
         return version
 
+    def _check_schema(self, df: DataFrame) -> None:
+        """A declared-schema table accepts only frames with exactly its column
+        names and types (order and nullability aside): reads pin the declared
+        schema, so a file written any other way would be mis-read."""
+        if self.schema is None:
+            return
+        want = sorted((f.name, f.dataType.simpleString()) for f in self.schema.fields)
+        got = sorted((f.name, f.dataType.simpleString()) for f in df.schema.fields)
+        if got != want:
+            raise ValueError(f"{self.path}: frame columns {got} do not match the declared {want}")
+
     def _write_files(self, df: DataFrame) -> tuple[list[dict], int]:
         """Materialize df as immutable parquet files under a fresh commit dir,
         honoring the table layout (bucketing + sort), and harvest per-file
         footer stats into manifest entries."""
+        self._check_schema(df)
         commit_dir = f"data/{uuid.uuid4().hex}"
         out = os.path.join(self.path, commit_dir)
         lay = self.layout
@@ -224,19 +251,13 @@ class SnapshotTable:
         return self._commit([], 0, "truncate")
 
     def _bucket_of(self, value) -> int:
-        """Bucket id of a key value, computed with the SAME hash Spark used at
-        write time (xxhash64 on the declared column type) — one 1-row job."""
-        lay = self.layout
-        dtype = None
-        if self.schema is not None:
-            for f_ in self.schema.fields:
-                if f_.name == lay.bucket_by:
-                    dtype = f_.dataType
-        lit = F.lit(value) if dtype is None else F.lit(value).cast(dtype)
-        row = self.spark.range(1).select(
-            F.pmod(F.xxhash64(lit), F.lit(lay.n_buckets)).cast("int").alias("b")
-        ).first()
-        return int(row["b"])
+        """Bucket id of a key value: the ``pmod(xxhash64(key), n)`` that
+        ``_write_files`` assigned, hashed on the driver with the declared
+        column type (no Spark job).  A key of a type ``xxhash64`` does not
+        cover, or one the schema does not declare, raises."""
+        key = self.layout.bucket_by
+        dtype = self.schema[key].dataType if self.schema and key in self.schema.names else None
+        return xxhash64(value, dtype) % self.layout.n_buckets
 
     def buckets_of(self, df: DataFrame, col: str) -> set[int]:
         """Bucket ids the given key column's values hash into — computed with
@@ -302,13 +323,20 @@ class SnapshotTable:
         skip files (the returned frame still applies no filter itself — pair
         with ``.filter``/join for exactness; pruning is conservative so the
         filtered result is identical to a full scan)."""
-        files = self.files_for(point, snapshot_id, buckets)
+        return self.scan(self.files_for(point, snapshot_id, buckets))
+
+    def scan(self, files: list[str]) -> DataFrame:
+        """Frame over data files (relative paths, as ``files_for`` returns
+        them).  A declared schema is pinned on the reader, so building the
+        frame runs no footer-inference job; ``_write_files`` guarantees every
+        file carries exactly that schema."""
         if not files:
             if self.schema is None:
                 raise ValueError(f"empty table {self.path} with no declared schema")
             return self.spark.createDataFrame([], schema=self.schema)
         paths = [os.path.join(self.path, f) for f in files]
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read if self.schema is None else self.spark.read.schema(self.schema)
+        return reader.parquet(*paths)
 
     def merge_insert(self, df: DataFrame, keys: list[str], prune: bool = False) -> int:
         """MERGE ... WHEN NOT MATCHED THEN INSERT (the idempotent-upsert path,
@@ -474,10 +502,10 @@ class SnapshotTable:
         the incremental-rebuild primitive (CHANGELOG.md:179 changed-files-only)."""
         old = {e["path"] for e in self._entries(self._manifest(snapshot_id))}
         cur = self._entries(self._manifest(self._current_version()))
-        new_files = [os.path.join(self.path, e["path"]) for e in cur if e["path"] not in old]
-        if not new_files:
+        new_files = [e["path"] for e in cur if e["path"] not in old]
+        if not new_files and self.schema is None:
             return self.spark.createDataFrame([], schema=self.read().schema)
-        return self.spark.read.parquet(*new_files)
+        return self.scan(new_files)
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

@@ -11,8 +11,13 @@ contract query.)
 from __future__ import annotations
 
 import re
+import uuid
+from contextlib import contextmanager
+
+import pytest
 
 import __spark_entry__ as entrymod
+from plume_spark.store import GraphStore
 
 SF = "/root/testdata/sf0.001"
 
@@ -304,3 +309,72 @@ def test_broadcastable_dims_are_broadcast(spark):
     SMJ (Catalyst sizes it; this pins that the plan still qualifies)."""
     plan = _plan(spark, "j1_edge_endpoint_join")
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan[:1500]
+
+
+# ------------------------------------------------------- read job budgets
+
+
+@contextmanager
+def _jobs(spark):
+    """Yields a list that, on exit, holds the Spark job ids the body ran —
+    counted under a fresh job group once the listener bus has drained."""
+    sc = spark.sparkContext
+    gid = f"budget-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", gid)
+    out: list[int] = []
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        out.extend(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+@pytest.fixture()
+def probe_store(spark, tmp_path):
+    store = GraphStore(spark, str(tmp_path / "graph"))
+    ents = spark.range(200).selectExpr(
+        "id AS entity_id", "concat('e', id) AS canonical_name",
+        "'person' AS kind", "array(concat('e', id)) AS aliases",
+    )
+    trips = spark.range(200).selectExpr(
+        "id AS subj", "'uses' AS pred", "id + 1 AS obj",
+        "concat('c', id % 20) AS conv_id", "CAST(0 AS INT) AS turn_idx",
+        "'s' AS src_mention", "'o' AS obj_mention",
+    )
+    store.bulk_write(ents, trips)
+    return store
+
+
+def test_pinned_reads_and_pruning_run_no_job(spark, probe_store):
+    """Building a declared-schema table's frame infers nothing (the schema
+    is pinned on the reader) and bucket/min-max pruning hashes the key on
+    the driver: neither may start a Spark job."""
+    with _jobs(spark) as jobs:
+        for t in (probe_store.entities, probe_store.triples, probe_store.lineage):
+            t.read().schema
+        probe_store.entities.files_for(point={"entity_id": 17})
+        probe_store.triples.files_for(point={"conv_id": "c3", "pred": "uses"})
+    assert jobs == []
+
+
+def test_existence_checks_run_one_job_or_none(spark, probe_store):
+    """node_exists/edge_exists: one executeTake job when pruning keeps a
+    file (hit or miss), none when it keeps no file."""
+    s = probe_store
+    assert s.entities.files_for(point={"entity_id": 10**12}) == []
+    assert s.triples.files_for(point={"pred": "zzz", "subj": 3}) == []
+    assert s.triples.files_for(point={"pred": "uses", "subj": 4})
+    for probe, want in [
+        (lambda: s.node_exists(17), True),
+        (lambda: s.edge_exists(3, 4, "uses"), True),
+        (lambda: s.edge_exists(4, 3, "uses"), False),
+    ]:
+        with _jobs(spark) as jobs:
+            assert probe() is want
+        assert len(jobs) == 1, jobs
+    for probe in (lambda: s.node_exists(10**12), lambda: s.edge_exists(3, 4, "zzz")):
+        with _jobs(spark) as jobs:
+            assert probe() is False
+        assert jobs == []

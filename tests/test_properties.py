@@ -11,12 +11,14 @@ pure-Python/numpy kernels get hundreds of examples.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from plume_spark.functions.textnorm import norm_py
-from plume_spark.functions.xxh64 import xxh64_ngrams
+from plume_spark.functions.xxh64 import xxh64_ngrams, xxhash64
 from plume_spark.operators.components import _driver_union_find
 from plume_spark.operators.linking import JACCARD_TAU, driver_link_kernel, gram_array
 
@@ -122,6 +124,57 @@ def test_xxh64_ngrams_matches_spark(spark, strings):
     for r in rows:
         jvm[r["norm"]].add(int(r["h"]))
     assert kernel == jvm
+
+
+_N_BUCKETS = 16
+
+
+def _assert_buckets_match_spark(spark, values, dtype: T.DataType):
+    """Driver-side (xxhash64, bucket id) equals Spark's (xxhash64(v),
+    pmod(xxhash64(v), n)) — the pair the store's write path assigns."""
+    df = spark.createDataFrame(
+        list(enumerate(values)),
+        T.StructType([T.StructField("i", T.IntegerType()), T.StructField("v", dtype)]),
+    )
+    h = F.xxhash64("v")
+    rows = df.select("i", h.alias("h"), F.pmod(h, F.lit(_N_BUCKETS)).cast("int").alias("b"))
+    jvm = {r["i"]: (r["h"], r["b"]) for r in rows.collect()}
+    mine = {i: (xxhash64(v, dtype), xxhash64(v, dtype) % _N_BUCKETS) for i, v in enumerate(values)}
+    assert mine == jvm
+
+
+_bucket_settings = settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(st.lists(st.integers(-(2**63), 2**63 - 1), max_size=30))
+@_bucket_settings
+def test_scalar_bucket_hash_matches_spark_long(spark, values):
+    _assert_buckets_match_spark(spark, [0, -1, -(2**63), 2**63 - 1, None, *values], T.LongType())
+
+
+@given(st.lists(st.integers(-(2**31), 2**31 - 1), max_size=30))
+@_bucket_settings
+def test_scalar_bucket_hash_matches_spark_int(spark, values):
+    _assert_buckets_match_spark(spark, [0, -1, -(2**31), 2**31 - 1, *values], T.IntegerType())
+
+
+@given(st.lists(st.text(max_size=80), max_size=30))
+@_bucket_settings
+def test_scalar_bucket_hash_matches_spark_string(spark, values):
+    # every XXH64 tail and stripe boundary by byte length (31/32/33, 64+),
+    # plus multi-byte UTF-8 ("é" is 2 bytes, "日" 3, "𝔸" 4)
+    edges = ["", "a", "x" * 31, "x" * 32, "x" * 33, "y" * 71, "é" * 16, "日本語" * 11, "𝔸" * 9]
+    _assert_buckets_match_spark(spark, edges + values, T.StringType())
+
+
+def test_scalar_bucket_hash_rejects_other_types():
+    for dtype in (T.DoubleType(), T.ShortType(), T.DateType(), None):
+        with pytest.raises(TypeError):
+            xxhash64(1, dtype)
 
 
 # ------------------------------------------------------------- link kernel

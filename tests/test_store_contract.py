@@ -6,6 +6,7 @@ idempotency; clear; export/import round trip; snapshot time travel."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -229,6 +230,23 @@ def test_bucket_and_minmax_pruning(spark, store):
     assert not store.edge_exists(3, 4, "uses")
 
 
+def test_write_rejects_frames_off_the_declared_schema(spark, store):
+    """Reads pin the declared schema, so a write must match it (names and
+    types; order and nullability aside) or raise before any file lands."""
+    ents, _ = _fixture_frames(spark)
+    t = store.entities
+    for bad in (
+        ents.withColumn("extra", F.lit(1)),
+        ents.withColumn("entity_id", F.col("entity_id").cast("int")),
+    ):
+        with pytest.raises(ValueError, match="declared"):
+            t.append(bad)
+    assert t._current_version() == 0
+    assert not any(files for _, _, files in os.walk(os.path.join(t.path, "data")))
+    t.append(ents.select(*reversed(ents.columns)))
+    assert t.read().columns == ENTITIES.names and t.row_count() == 4
+
+
 def test_rebucket_grows_modulus_and_stays_exact(spark, tmp_path):
     """rebucket() contract: rows identical afterward, pruned point/probe
     reads stay exact under the grown modulus, and a NEW table handle opened
@@ -352,7 +370,7 @@ def test_reader_never_sees_torn_snapshot(spark, tmp_path):
     )
     t = SnapshotTable(spark, str(tmp_path / "torn"), schema=schema)
     n = 50
-    t.overwrite(spark.range(n).select(F.col("id").alias("k"), F.lit(0).alias("ver")))
+    t.overwrite(spark.range(n).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("ver")))
 
     bad: list[tuple] = []
     stop = threading.Event()
@@ -370,7 +388,7 @@ def test_reader_never_sees_torn_snapshot(spark, tmp_path):
     try:
         for v in range(1, 6):
             t.overwrite(
-                spark.range(n).select(F.col("id").alias("k"), F.lit(v).alias("ver"))
+                spark.range(n).select(F.col("id").alias("k"), F.lit(v).cast("long").alias("ver"))
             )
     finally:
         stop.set()
