@@ -3729,10 +3729,14 @@ def _q_emb_power_iter(spark, sf):
     )
 
 
+# bigram-LM interpolation weight, shared by the query and its oracle
+_BIGRAM_LAM = 0.7
+
+
 def _q_corpus_bigram_logprob(spark, sf):
     """Interpolated bigram-LM quality score over documents (lam=0.7) —
     the KenLM-shaped gate one rung above corpus_unigram_logprob."""
-    return corpus.bigram_logprob(graft.load(spark, sf, "documents"), lam=0.7)
+    return corpus.bigram_logprob(graft.load(spark, sf, "documents"), lam=_BIGRAM_LAM)
 
 
 def _q_text_pmi_bigrams(spark, sf):
@@ -4160,12 +4164,12 @@ _MINHASH_PARAMS = ", ".join(
 def _minhash_oracle_body(
     verify_table: str, verify_col: str, pair_where: str = "", round_digits: int = 4
 ) -> str:
-    q_scale = float(10**round_digits)
     """Banding/cap/star/verify SQL shared by the full and incremental minhash
     oracles — one source of truth so a banding change cannot desynchronize
     them.  ``verify_table``/``verify_col``: the exact-Jaccard substrate
     ("tok"/"tok" for raw shingles — the full path; "idd"/"tok_id" for the
     persisted-index token ids — the incremental path)."""
+    q_scale = float(10**round_digits)
     return f""",
         params(h, a, b) AS (VALUES {_MINHASH_PARAMS}),
         sig AS (
@@ -6395,7 +6399,7 @@ def oracle_sql() -> dict[str, str]:
                  AS avg_logratio
         FROM tk JOIN stats USING (tok) CROSS JOIN tot
         GROUP BY doc_id"""
-    sql["corpus_bigram_logprob"] = """
+    sql["corpus_bigram_logprob"] = f"""
         WITH base AS (
           SELECT doc_id,
                  list_filter(string_split(text, ' '), t -> t <> '') AS ts
@@ -6408,8 +6412,8 @@ def oracle_sql() -> dict[str, str]:
         big AS (SELECT w1, w2, count(*) AS c12 FROM pos GROUP BY w1, w2),
         tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_tok FROM uni)
         SELECT doc_id, count(*) AS n_bigrams,
-               round(avg(ln(0.7 * (CAST(c12 AS DOUBLE) / CAST(u1.c AS DOUBLE))
-                            + 0.30000000000000004
+               round(avg(ln({_BIGRAM_LAM!r} * (CAST(c12 AS DOUBLE) / CAST(u1.c AS DOUBLE))
+                            + {1.0 - _BIGRAM_LAM!r}
                               * (CAST(u2.c AS DOUBLE)
                                  / CAST(n_tok AS DOUBLE)))), 6) AS avg_logprob
         FROM pos

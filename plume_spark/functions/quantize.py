@@ -30,9 +30,3 @@ def qround(col: Column, digits: int) -> Column:
     """floor(x * 10^digits + 0.5) / 10^digits as plain IEEE double ops."""
     s = float(10**digits)
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s)
-
-
-def qround_sql(expr: str, digits: int) -> str:
-    """The DuckDB twin of :func:`qround` for oracle generation."""
-    s = float(10**digits)
-    return f"floor(({expr}) * {s} + 0.5) / {s}"

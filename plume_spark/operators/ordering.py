@@ -22,12 +22,6 @@ def ordered_turns(transcripts: DataFrame) -> DataFrame:
     return transcripts.withColumn("turn_rank", F.row_number().over(w) - 1)
 
 
-def with_prev_text(transcripts: DataFrame) -> DataFrame:
-    """lag(text) over the turn window — cross-turn context for extraction."""
-    w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc(), F.col("ts").asc())
-    return transcripts.withColumn("prev_text", F.lag("text").over(w))
-
-
 def reassemble(transcripts: DataFrame) -> DataFrame:
     """(conv_id, joined_text): turns concatenated in stable order — the
     per-turn text-equality round-trip check (the analog of the reference's

@@ -97,8 +97,12 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 20) -> Dat
 
 
 def k_hop(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
-    """Exactly-k-hop frontier (bounded traversal — the benchmarkable form)."""
-    frontier = seeds.select("node").distinct()
+    """Exactly-k-hop frontier (bounded traversal — the benchmarkable form).
+    Duplicate seeds need no distinct of their own: each hop's distinct
+    removes what they would add."""
+    if k == 0:
+        return seeds.select("node").distinct()
+    frontier = seeds.select("node")
     for _ in range(k):
         frontier = (
             frontier.join(edges, frontier["node"] == edges["subj"])

@@ -25,6 +25,15 @@ Semantics mirrored from Iceberg (and why they matter at 100 TB):
   its bucket id and per-column min/max (read from the parquet footer via
   pyarrow), and ``read(point=...)`` opens only the files that can contain the
   probed key — file skipping, not full scans, is what a point lookup costs.
+* Per-file bucket provenance: a bucket id only means something together
+  with the key and modulus it was hashed under, so every file entry records
+  its ``bucket_by`` and ``n_buckets`` next to ``bucket``.  A point probe is
+  hashed under each file's own key and modulus; a ``buckets_of`` set prunes
+  only files whose recorded key and modulus equal the set's.  Files written
+  before a layout change (another key, or the pre-``rebucket`` modulus) stay
+  exact, and time travel across a ``rebucket`` keeps pruning.  Entries with
+  no recorded key (written before provenance existed) are never
+  bucket-pruned; min/max pruning still applies to them.
 
 Read path: a point lookup pays for its own scan and nothing else.
 * Pinned schema: a table with a declared schema is read with
@@ -35,6 +44,7 @@ Read path: a point lookup pays for its own scan and nothing else.
 * Driver-side bucket hash: ``files_for(point=...)`` computes the key's bucket
   with a scalar XXH64 (``functions/xxh64.py``) that is bit-identical to the
   ``pmod(xxhash64(key), n)`` the write path assigned — no Spark job.
+  It runs once per distinct (key, modulus) among the files.
 * One job per lookup: the only job left is the scan of the kept files
   (``GraphStore.node_exists`` / ``edge_exists`` end in one ``isEmpty``, and
   skip even that when pruning keeps no file).
@@ -78,6 +88,17 @@ class TableLayout:
     n_buckets: int = 16
     sort_by: tuple[str, ...] = ()
     stats_cols: tuple[str, ...] = ()
+
+
+@dataclass(frozen=True)
+class BucketSet:
+    """Bucket ids a batch of keys hashes into, with the key and modulus they
+    were hashed under (``SnapshotTable.buckets_of``): only a file that
+    records the same key and modulus can be pruned by ``ids``."""
+
+    key: str
+    n_buckets: int
+    ids: frozenset[int]
 
 
 def _file_stats(abs_path: str, stats_cols: tuple[str, ...]) -> tuple[int, dict]:
@@ -124,9 +145,9 @@ class SnapshotTable:
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         # the bucket modulus is TABLE state, not constructor state: a process
-        # reopening a table that ``rebucket`` grew must probe with the modulus
-        # the data was written under, or bucket pruning silently reads the
-        # wrong files.  The current manifest is authoritative.
+        # reopening a table that ``rebucket`` grew keeps writing under the
+        # grown modulus.  (Reads stay exact either way: each file records the
+        # key and modulus it was bucketed under.)
         if layout and layout.bucket_by:
             persisted = self._manifest(self._current_version()).get("n_buckets")
             if persisted and persisted != layout.n_buckets:
@@ -229,7 +250,10 @@ class SnapshotTable:
                     bucket = int(comp.split("=", 1)[1])
                 rows, stats = _file_stats(abs_path, stats_cols)
                 total += rows
-                entries.append({"path": rel, "bucket": bucket, "stats": stats, "rows": rows})
+                entry = {"path": rel, "bucket": bucket, "stats": stats, "rows": rows}
+                if bucket is not None:
+                    entry.update(bucket_by=lay.bucket_by, n_buckets=lay.n_buckets)
+                entries.append(entry)
         return entries, total
 
     # ------------------------------------------------------------ operations
@@ -250,57 +274,61 @@ class SnapshotTable:
         so history survives (Iceberg TRUNCATE semantics)."""
         return self._commit([], 0, "truncate")
 
-    def _bucket_of(self, value) -> int:
+    def _bucket_of(self, key: str, value, n_buckets: int) -> int:
         """Bucket id of a key value: the ``pmod(xxhash64(key), n)`` that
         ``_write_files`` assigned, hashed on the driver with the declared
         column type (no Spark job).  A key of a type ``xxhash64`` does not
         cover, or one the schema does not declare, raises."""
-        key = self.layout.bucket_by
         dtype = self.schema[key].dataType if self.schema and key in self.schema.names else None
-        return xxhash64(value, dtype) % self.layout.n_buckets
+        return xxhash64(value, dtype) % n_buckets
 
-    def buckets_of(self, df: DataFrame, col: str) -> set[int]:
-        """Bucket ids the given key column's values hash into — computed with
-        the SAME xxhash64/pmod Spark applied at write time.  One small job
-        over ``df`` (distinct over at most n_buckets ints); feed the result to
+    def buckets_of(self, df: DataFrame, col: str) -> BucketSet:
+        """Bucket ids the values of ``df[col]`` (keys of this table's bucket
+        key) hash into — computed with the SAME xxhash64/pmod Spark applied
+        at write time, under the current layout.  One small job over ``df``
+        (distinct over at most n_buckets ints); feed the result to
         ``read(buckets=...)`` for a batch-probe pruned scan: the multi-key
         generalization of ``read(point=...)``."""
-        n = self.layout.n_buckets if self.layout else 16
+        lay = self.layout
         rows = (
-            df.select(F.pmod(F.xxhash64(col), F.lit(n)).cast("int").alias("b"))
+            df.select(F.pmod(F.xxhash64(col), F.lit(lay.n_buckets)).cast("int").alias("b"))
             .distinct()
             .collect()
         )
-        return {int(r["b"]) for r in rows}
+        return BucketSet(lay.bucket_by, lay.n_buckets, frozenset(int(r["b"]) for r in rows))
 
     def files_for(
         self,
         point: dict | None = None,
         snapshot_id: int | None = None,
-        buckets: set[int] | None = None,
+        buckets: BucketSet | None = None,
     ) -> list[str]:
         """Data files (relative paths) that can contain rows matching the
-        equality ``point`` predicates — bucket pruning on the layout key,
-        min/max pruning on stats columns.  ``buckets`` prunes to an explicit
-        bucket-id set (from ``buckets_of``) — the probe side of an
-        incremental join touches only the file-buckets the batch's keys hash
-        into.  The pruning contract is conservative: a pruned-out file
-        provably holds no matching row (unbucketed legacy files always
-        survive bucket pruning)."""
+        equality ``point`` predicates — bucket pruning on each file's
+        recorded key, min/max pruning on stats columns.  ``buckets`` prunes
+        to an explicit bucket-id set (from ``buckets_of``) — the probe side
+        of an incremental join touches only the file-buckets the batch's keys
+        hash into.  The pruning contract is conservative: a pruned-out file
+        provably holds no matching row.  A file's bucket id is compared only
+        with a hash under the file's own key and modulus, and a file that
+        records no key survives bucket pruning."""
         version = self._current_version() if snapshot_id is None else snapshot_id
         entries = self._entries(self._manifest(version))
         if not point and buckets is None:
             return [e["path"] for e in entries]
-        lay = self.layout
-        want_bucket = None
-        if lay and lay.bucket_by and point and lay.bucket_by in point:
-            want_bucket = self._bucket_of(point[lay.bucket_by])
+        hashed: dict[tuple[str, int], int] = {}
         keep = []
         for e in entries:
-            if want_bucket is not None and e.get("bucket") is not None and e["bucket"] != want_bucket:
-                continue
-            if buckets is not None and e.get("bucket") is not None and e["bucket"] not in buckets:
-                continue
+            key, n, b = e.get("bucket_by"), e.get("n_buckets"), e.get("bucket")
+            if key is not None and b is not None:
+                if point and key in point:
+                    if (key, n) not in hashed:
+                        hashed[key, n] = self._bucket_of(key, point[key], n)
+                    if b != hashed[key, n]:
+                        continue
+                if buckets is not None and (key, n) == (buckets.key, buckets.n_buckets):
+                    if b not in buckets.ids:
+                        continue
             stats = e.get("stats") or {}
             pruned = False
             for col, val in (point or {}).items():
@@ -316,7 +344,7 @@ class SnapshotTable:
         self,
         snapshot_id: int | None = None,
         point: dict | None = None,
-        buckets: set[int] | None = None,
+        buckets: BucketSet | None = None,
     ) -> DataFrame:
         """Snapshot read; ``point`` = {col: value} equality hints and
         ``buckets`` = bucket-id set (from ``buckets_of``) are used ONLY to
@@ -350,7 +378,8 @@ class SnapshotTable:
         only the file-buckets the incoming keys hash into for the anti-join —
         a matching current row must share the incoming row's bucket, so the
         pruned anti-join is exact while the MERGE cost tracks the BATCH, not
-        the table (the per-epoch streaming-ingest path).  The incoming frame
+        the table (the per-epoch streaming-ingest path).  Files bucketed
+        under another key or modulus are read whole.  The incoming frame
         is consumed twice (bucket probe + anti-join): pass something cheap to
         recompute or already checkpointed.
         """
@@ -427,8 +456,8 @@ class SnapshotTable:
         dedup-epoch probe's 60x drift).  Growing the modulus on a doubling
         schedule keeps rows-per-bucket bounded; the rewrite is O(table) but
         amortized O(1) per ingested row.  The new modulus is committed in the
-        manifest, so later processes reopening the table probe with the
-        modulus the data was actually written under."""
+        manifest, so later processes reopening the table keep writing under
+        it; older snapshots' files keep their own recorded modulus."""
         from dataclasses import replace
 
         lay = self.layout

@@ -22,12 +22,15 @@ TRIPLE_KEY = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 # Physical layouts — the Spark recast of the reference's secondary indexes
 # (drivers/neo4j/.../Neo4jDriver.scala:277-285 CREATE INDEX on id/fullName;
 # drivers/overflowdb/.../OverflowDbDriver.scala:49 heap index):
-# * triples bucketed by conv_id (SURVEY §4: PARTITIONED BY bucket(N, conv_id))
-#   and sorted by (pred, subj) so a predicate/subject probe prunes by file
-#   min/max; at 10^12 turns n_buckets is sized ~ |table| / (executors * few GB).
+# * triples bucketed by subj and sorted by (pred, subj): an edge probe
+#   (edge_exists knows subj, never conv_id) hashes subj on the driver and
+#   opens the one file of that bucket, as a node probe does.  This departs
+#   from SURVEY §4's bucket(N, conv_id): transcripts and extraction work units
+#   stay conv_id-keyed, but no read of the edge table knows a conv_id.  At
+#   10^12 turns n_buckets is sized ~ |table| / (executors * few GB).
 # * entities bucketed + sorted by entity_id: point-lookup file skipping.
 TRIPLES_LAYOUT = TableLayout(
-    bucket_by="conv_id", n_buckets=16, sort_by=("pred", "subj"),
+    bucket_by="subj", n_buckets=16, sort_by=("pred", "subj"),
     stats_cols=("pred", "subj", "conv_id"),
 )
 ENTITIES_LAYOUT = TableLayout(
@@ -51,7 +54,7 @@ class GraphStore:
         GremlinDriver.scala:61-79 / Neo4jDriver.scala:198-213), both MERGE-
         idempotent so re-running a killed job cannot duplicate
         (IDriver node-identity contract, IDriver.scala:91-98)."""
-        # pruned MERGEs: both layouts carry their key (entity_id / conv_id),
+        # pruned MERGEs: both layouts carry their key (entity_id / subj),
         # so the idempotency anti-join reads only the incoming keys' buckets —
         # a bulkTx against a large store costs the delta, not the store.
         # (Incoming frames are consumed twice; callers pass materialized or
@@ -87,7 +90,8 @@ class GraphStore:
     def edge_exists(self, subj: int, obj: int, pred: str) -> bool:
         """P3 directed-edge predicate (OverflowDbDriver.scala:65-66).
         Direction matters: (s,p,o) true does not imply (o,p,s).
-        min/max-pruned on (pred, subj) — the sort keys of the triple files."""
+        Bucket-pruned on subj (one file), then min/max-pruned on (pred,
+        subj) — the sort keys of the triple files."""
         cond = (F.col("subj") == subj) & (F.col("obj") == obj) & (F.col("pred") == pred)
         return self._any(self.triples, {"pred": pred, "subj": subj}, cond)
 

@@ -169,9 +169,6 @@ class DedupIndex:
     def tables(self) -> tuple[SnapshotTable, ...]:
         return (self.sigs, self.toks, self.bands, self.gsets, self.docs, self.pairs)
 
-    def has_index(self) -> bool:
-        return self.sigs.row_count() > 0
-
     # ----------------------------------------------- epoch intent marker
     # Write-ahead flag bracketing each fold.  Present on entry <=> the
     # previous fold crashed between its first table write and its registry

@@ -355,6 +355,7 @@ def test_pinned_reads_and_pruning_run_no_job(spark, probe_store):
         for t in (probe_store.entities, probe_store.triples, probe_store.lineage):
             t.read().schema
         probe_store.entities.files_for(point={"entity_id": 17})
+        probe_store.triples.files_for(point={"pred": "uses", "subj": 3})
         probe_store.triples.files_for(point={"conv_id": "c3", "pred": "uses"})
     assert jobs == []
 
@@ -378,3 +379,22 @@ def test_existence_checks_run_one_job_or_none(spark, probe_store):
         with _jobs(spark) as jobs:
             assert probe() is False
         assert jobs == []
+
+
+def test_k_hop_job_budget(spark, probe_store):
+    """A 2-hop traversal over the stored edges: 6 jobs on this fixture (one
+    per shuffle stage under AQE, plus the count).  The seeds get no distinct
+    of their own — each hop's distinct removes duplicates — so a seed-side
+    shuffle would show here as a 7th job."""
+    from pyspark.sql import functions as F
+
+    from plume_spark.operators.traversal import k_hop
+
+    edges = probe_store.triples.read()
+    seeds = spark.createDataFrame([(5,), (5,), (7,)], "node long")
+    with _jobs(spark) as jobs:
+        assert k_hop(edges, seeds, 2).count() == 2
+    assert len(jobs) == 6, jobs
+    assert sorted(r["node"] for r in k_hop(edges, seeds, 2).collect()) == [7, 9]
+    assert sorted(r["node"] for r in k_hop(edges, seeds, 0).collect()) == [5, 7]
+    assert k_hop(edges, seeds.filter(F.lit(False)), 2).isEmpty()

@@ -194,12 +194,7 @@ def test_append_only_and_snapshot_diff(spark, store):
     assert t.read(snapshot_id=v1).count() == 4 and v2 == v1 + 1
 
 
-def test_bucket_and_minmax_pruning(spark, store):
-    """Layout contract (SURVEY §4 bucket(N, conv_id) + sort (pred, subj)):
-    a point read must open strictly fewer files than the full scan, and the
-    pruned read filtered must equal the full read filtered (conservative
-    pruning)."""
-    n = 600
+def _pruning_frames(spark, n=600):
     ents = spark.range(n).selectExpr(
         "id AS entity_id", "concat('e', id) AS canonical_name",
         "'person' AS kind", "array(concat('e', id)) AS aliases",
@@ -212,6 +207,16 @@ def test_bucket_and_minmax_pruning(spark, store):
         "CAST(id % 7 AS INT) AS turn_idx",
         "'s' AS src_mention", "'o' AS obj_mention",
     )
+    return ents, trips
+
+
+def test_bucket_and_minmax_pruning(spark, store):
+    """Layout contract (triples bucket(N, subj) + sort (pred, subj)): a point
+    read must open strictly fewer files than the full scan, an edge probe
+    opens exactly one, and the pruned read filtered must equal the full read
+    filtered (conservative pruning)."""
+    n = 600
+    ents, trips = _pruning_frames(spark, n)
     store.bulk_write(ents, trips)
 
     all_ent_files = store.entities.files_for()
@@ -220,9 +225,8 @@ def test_bucket_and_minmax_pruning(spark, store):
     assert len(pruned_ent) < len(all_ent_files)
     assert store.node_exists(17) and not store.node_exists(n + 5)
 
-    all_tri_files = store.triples.files_for()
-    pruned_tri = store.triples.files_for(point={"conv_id": "c3"})
-    assert len(pruned_tri) < len(all_tri_files)
+    assert len(store.triples.files_for()) > 1
+    assert len(store.triples.files_for(point={"pred": "works_at", "subj": 3})) == 1
     full = store.triples.read().filter("conv_id = 'c3'").count()
     pruned = store.triples.read(point={"conv_id": "c3"}).filter("conv_id = 'c3'").count()
     assert full == pruned == 15
@@ -281,6 +285,92 @@ def test_rebucket_grows_modulus_and_stays_exact(spark, tmp_path):
     assert t2.read(point={"k": 505}).filter("k = 505").count() == 1
     # growing is one-way here: same modulus is a no-op
     assert t2.rebucket(16) is None
+
+
+def test_time_travel_point_reads_survive_rebucket(spark, tmp_path):
+    """A snapshot written before ``rebucket`` keeps its own bucket modulus:
+    a point read at that snapshot still opens the file that holds the key,
+    for every key, and still prunes."""
+    from pyspark.sql import types as T
+
+    from plume_spark.store.catalog import SnapshotTable, TableLayout
+
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
+    lay = TableLayout(bucket_by="k", n_buckets=4, sort_by=("k",), stats_cols=("k",))
+    t = SnapshotTable(spark, str(tmp_path / "tt"), schema=schema, layout=lay)
+    t.append(spark.range(200).selectExpr("id AS k", "id * 2 AS v"))
+    v1 = t._current_version()
+    assert t.rebucket(32) is not None
+
+    holder = {
+        r["k"]: r["f"]
+        for r in t.read(snapshot_id=v1).select("k", F.input_file_name().alias("f")).collect()
+    }
+    assert sorted(holder) == list(range(200))
+    n_old = len(t.files_for(snapshot_id=v1))
+    for k, f in holder.items():
+        kept = t.files_for(snapshot_id=v1, point={"k": k})
+        assert len(kept) < n_old
+        assert any(f.endswith(p) for p in kept), (k, f, kept)
+    assert t.read(snapshot_id=v1, point={"k": 17}).filter("k = 17").count() == 1
+    assert t.read(point={"k": 17}).filter("k = 17").count() == 1
+
+
+@pytest.mark.parametrize("recorded", [True, False], ids=["conv_id_recorded", "no_key_recorded"])
+def test_conv_id_keyed_triples_stay_exact_under_subj_layout(spark, tmp_path, recorded):
+    """A triple table written under ``bucket_by="conv_id"`` — with that key
+    recorded per file, or with no key recorded (stores written before files
+    carried their bucket key) — and reopened under the subj-keyed
+    ``TRIPLES_LAYOUT`` answers exactly: no file is bucket-pruned by a subj
+    hash, and a repeated bulk write adds no duplicates.  One overwrite
+    rewrites it keyed by subj."""
+    import json
+    from dataclasses import replace
+
+    from plume_spark.store.catalog import SnapshotTable
+    from plume_spark.store.graph import TRIPLES_LAYOUT
+
+    root = tmp_path / "graph"
+    ents, trips = _pruning_frames(spark)
+    old = SnapshotTable(
+        spark, str(root / "triples"), TRIPLES, replace(TRIPLES_LAYOUT, bucket_by="conv_id")
+    )
+    old.append(trips)
+    if not recorded:
+        mpath = os.path.join(old.path, "_snapshots", f"v{old._current_version()}.json")
+        with open(mpath) as f:
+            manifest = json.load(f)
+        for e in manifest["files"]:
+            del e["bucket_by"], e["n_buckets"]
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+
+    store = GraphStore(spark, str(root))
+    t = store.triples
+    assert t.layout.bucket_by == "subj"
+    for s in range(0, 600, 29):
+        p = ("works_at", "uses", "met")[s % 3]
+        assert store.edge_exists(s, s + 1, p), s
+        assert not store.edge_exists(s + 1, s, p), s
+    point = {"pred": "uses", "subj": 301, "conv_id": "c21"}
+    full = t.read().filter("pred = 'uses' AND subj = 301").count()
+    pruned = t.read(point=point).filter("pred = 'uses' AND subj = 301").count()
+    assert full == pruned == 1
+    if recorded:  # each file is probed under its own key: conv_id
+        assert len(t.files_for(point=point)) == 1
+
+    # a delta whose subjs hash into few buckets: a MERGE that pruned the
+    # conv_id-keyed files by subj bucket would miss the stored rows
+    for _ in range(2):
+        store.bulk_write(ents.filter("entity_id < 5"), trips.filter("subj < 5"))
+    assert t.row_count() == 600
+    assert t.read().dropDuplicates().count() == 600
+
+    t.overwrite(t.read())
+    entries = t._entries(t._manifest(t._current_version()))
+    assert entries and all((e["bucket_by"], e["n_buckets"]) == ("subj", 16) for e in entries)
+    assert len(t.files_for(point={"pred": "uses", "subj": 301})) == 1
+    assert store.edge_exists(301, 302, "uses") and not store.edge_exists(302, 301, "uses")
 
 
 def test_merge_upsert_and_delete_where(spark, store):
