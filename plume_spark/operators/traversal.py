@@ -99,9 +99,15 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int = 20) -> Dat
 def k_hop(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
     """Exactly-k-hop frontier (bounded traversal — the benchmarkable form).
     Duplicate seeds need no distinct of their own: each hop's distinct
-    removes what they would add."""
+    removes what they would add.  The edges are projected to non-null
+    (subj, obj) once, so every hop joins the same plan and Spark reuses one
+    exchange of it; an edge with a null obj is no edge here, so a null is
+    never returned as a node."""
     if k == 0:
         return seeds.select("node").distinct()
+    edges = edges.select("subj", "obj").filter(
+        F.col("subj").isNotNull() & F.col("obj").isNotNull()
+    )
     frontier = seeds.select("node")
     for _ in range(k):
         frontier = (

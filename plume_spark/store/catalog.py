@@ -35,7 +35,8 @@ Semantics mirrored from Iceberg (and why they matter at 100 TB):
   no recorded key (written before provenance existed) are never
   bucket-pruned; min/max pruning still applies to them.
 
-Read path: a point lookup pays for its own scan and nothing else.
+Read path: a point probe runs no Spark job, and a full read is resolved once
+per snapshot.
 * Pinned schema: a table with a declared schema is read with
   ``spark.read.schema(...)``, so building a frame runs no footer-inference
   job.  ``_write_files`` refuses frames whose column names or types differ
@@ -45,16 +46,27 @@ Read path: a point lookup pays for its own scan and nothing else.
   with a scalar XXH64 (``functions/xxh64.py``) that is bit-identical to the
   ``pmod(xxhash64(key), n)`` the write path assigned — no Spark job.
   It runs once per distinct (key, modulus) among the files.
-* One job per lookup: the only job left is the scan of the kept files
-  (``GraphStore.node_exists`` / ``edge_exists`` end in one ``isEmpty``, and
-  skip even that when pruning keeps no file).
+* Driver-side probes: ``exists(eq)`` prunes with ``files_for(point=eq)`` and
+  reads the kept files with pyarrow, only the ``eq`` columns, with the
+  equality pushed down to row-group statistics; it stops at the first hit.
+  A probe costs a manifest read plus one small file read — the I/O the single
+  Spark task of a scan would do, without scheduling a job
+  (``GraphStore.node_exists`` / ``edge_exists`` are one call each).
+* One frame per snapshot: ``read()`` with no pruning hint and no snapshot id
+  returns the same frame for as long as the current snapshot's file list is
+  unchanged (data files are immutable, so it never goes stale); a new commit
+  replaces it.  Building a frame over every file costs a file listing in the
+  JVM, which every full-table query would otherwise pay again.  Pruned reads
+  (``scan(files)``) are built fresh each time.
 
 On a real cluster this class is replaced 1:1 by Iceberg
 (``df.writeTo("cat.db.t").append()`` / ``MERGE INTO`` with
 ``PARTITIONED BY (bucket(N, key))`` + ``WRITE ORDERED BY``); the GraphStore
 API above it is written against this minimal surface so the swap is confined
-here.  Single-writer per table is assumed (Iceberg's optimistic-concurrency
-loop is out of scope for the sandbox).
+here.  ``exists`` maps to a manifest-pruned pyiceberg scan
+(``table.scan(row_filter=...)``), which also reads on the driver.
+Single-writer per table is assumed (Iceberg's optimistic-concurrency loop is
+out of scope for the sandbox).
 """
 
 from __future__ import annotations
@@ -142,6 +154,8 @@ class SnapshotTable:
         self.path = path
         self.schema = schema
         self.layout = layout
+        # (file list, frame) of the last full read — see ``read``
+        self._full: tuple[list[str], DataFrame] | None = None
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         # the bucket modulus is TABLE state, not constructor state: a process
@@ -350,8 +364,45 @@ class SnapshotTable:
         ``buckets`` = bucket-id set (from ``buckets_of``) are used ONLY to
         skip files (the returned frame still applies no filter itself — pair
         with ``.filter``/join for exactness; pruning is conservative so the
-        filtered result is identical to a full scan)."""
+        filtered result is identical to a full scan).
+
+        A full read of the current snapshot (no hint, no ``snapshot_id``)
+        returns one frame per file list: the same frame until a commit
+        changes the files.  Files are immutable, so it never goes stale, and
+        a version number that repeats after ``drop`` cannot hand back a
+        frame over deleted files."""
+        if snapshot_id is None and point is None and buckets is None:
+            files = self.files_for()
+            if self._full is None or self._full[0] != files:
+                self._full = (files, self.scan(files))
+            return self._full[1]
         return self.scan(self.files_for(point, snapshot_id, buckets))
+
+    def exists(self, eq: dict, snapshot_id: int | None = None) -> bool:
+        """Whether any row equals ``eq`` ({col: value}) on every column —
+        answered on the driver, with no Spark job.  Pruned by
+        ``files_for(point=eq)``; each kept file is read with pyarrow, only
+        the ``eq`` columns, the equality pushed down to row-group statistics,
+        stopping at the first hit.  Probe values are typed from the declared
+        schema before any file is pruned, so a value the column type cannot
+        hold raises, and so does ``None`` (SQL equality with NULL holds for
+        no row, and a NULL key probe is a caller's bug)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        declared = {f.name: to_arrow_type(f.dataType) for f in self.schema or ()}
+        cond = None
+        for col, val in eq.items():
+            if val is None:
+                raise TypeError(f"{self.path}: probe value for {col} is None")
+            term = pc.field(col) == pa.scalar(val, declared.get(col))
+            cond = term if cond is None else cond & term
+        return any(
+            pq.read_table(os.path.join(self.path, f), columns=list(eq), filters=cond).num_rows
+            for f in self.files_for(point=eq, snapshot_id=snapshot_id)
+        )
 
     def scan(self, files: list[str]) -> DataFrame:
         """Frame over data files (relative paths, as ``files_for`` returns
@@ -431,10 +482,15 @@ class SnapshotTable:
         entries = self._entries(self._manifest(self._current_version()))
         lay = self.layout
         if lay and lay.bucket_by:
-            # bucketed natural form: at most one file per bucket — already
-            # there (no stray unbucketed files, no bucket split across files)
+            # bucketed natural form: every file bucketed under the layout's
+            # key and modulus, at most one file per bucket.  Files recording
+            # another key, or none, are rewritten even one per bucket.
+            laid_out = all(
+                (e.get("bucket_by"), e.get("n_buckets")) == (lay.bucket_by, lay.n_buckets)
+                for e in entries
+            )
             buckets = [e.get("bucket") for e in entries]
-            if None not in buckets and len(buckets) == len(set(buckets)):
+            if laid_out and len(buckets) == len(set(buckets)):
                 return None
         elif len(entries) <= min_files:
             return None

@@ -71,29 +71,17 @@ class GraphStore:
 
     # -------------------------------------------------------------- reads
 
-    @staticmethod
-    def _any(table, point: dict, cond) -> bool:
-        """Whether any row of ``table`` matching ``point`` satisfies ``cond``:
-        no job when pruning keeps no file (pruning is conservative, so that
-        answer is exact), otherwise one ``executeTake`` job over the kept
-        files."""
-        files = table.files_for(point=point)
-        return bool(files) and not table.scan(files).filter(cond).isEmpty()
-
     def node_exists(self, entity_id: int) -> bool:
-        """P2 point predicate (OverflowDbDriver.scala:63) — bucket-pruned:
-        only the entity_id's hash bucket's files are opened."""
-        return self._any(
-            self.entities, {"entity_id": entity_id}, F.col("entity_id") == entity_id
-        )
+        """P2 point predicate (OverflowDbDriver.scala:63) — bucket-pruned to
+        the entity_id's file and read on the driver, no Spark job."""
+        return self.entities.exists({"entity_id": entity_id})
 
     def edge_exists(self, subj: int, obj: int, pred: str) -> bool:
         """P3 directed-edge predicate (OverflowDbDriver.scala:65-66).
         Direction matters: (s,p,o) true does not imply (o,p,s).
-        Bucket-pruned on subj (one file), then min/max-pruned on (pred,
-        subj) — the sort keys of the triple files."""
-        cond = (F.col("subj") == subj) & (F.col("obj") == obj) & (F.col("pred") == pred)
-        return self._any(self.triples, {"pred": pred, "subj": subj}, cond)
+        Bucket-pruned on subj (one file), min/max-pruned on (pred, subj) —
+        the sort keys of the triple files — and read on the driver."""
+        return self.triples.exists({"subj": subj, "pred": pred, "obj": obj})
 
     def property_from_nodes(self, kind: str, *keys: str) -> DataFrame:
         """P1 typed projection with defaults (OverflowDbDriver.scala:85-94):

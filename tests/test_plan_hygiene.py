@@ -360,9 +360,9 @@ def test_pinned_reads_and_pruning_run_no_job(spark, probe_store):
     assert jobs == []
 
 
-def test_existence_checks_run_one_job_or_none(spark, probe_store):
-    """node_exists/edge_exists: one executeTake job when pruning keeps a
-    file (hit or miss), none when it keeps no file."""
+def test_existence_checks_run_no_job(spark, probe_store):
+    """node_exists/edge_exists read the pruned file on the driver: no Spark
+    job for a hit, a miss in a kept file, or a probe pruning rules out."""
     s = probe_store
     assert s.entities.files_for(point={"entity_id": 10**12}) == []
     assert s.triples.files_for(point={"pred": "zzz", "subj": 3}) == []
@@ -371,21 +371,20 @@ def test_existence_checks_run_one_job_or_none(spark, probe_store):
         (lambda: s.node_exists(17), True),
         (lambda: s.edge_exists(3, 4, "uses"), True),
         (lambda: s.edge_exists(4, 3, "uses"), False),
+        (lambda: s.node_exists(10**12), False),
+        (lambda: s.edge_exists(3, 4, "zzz"), False),
     ]:
         with _jobs(spark) as jobs:
             assert probe() is want
-        assert len(jobs) == 1, jobs
-    for probe in (lambda: s.node_exists(10**12), lambda: s.edge_exists(3, 4, "zzz")):
-        with _jobs(spark) as jobs:
-            assert probe() is False
         assert jobs == []
 
 
 def test_k_hop_job_budget(spark, probe_store):
-    """A 2-hop traversal over the stored edges: 6 jobs on this fixture (one
+    """A 2-hop traversal over the stored edges: 5 jobs on this fixture (one
     per shuffle stage under AQE, plus the count).  The seeds get no distinct
-    of their own — each hop's distinct removes duplicates — so a seed-side
-    shuffle would show here as a 7th job."""
+    of their own — each hop's distinct removes duplicates — and both hops
+    join the same projected edges, so their exchange runs once: a seed-side
+    shuffle or a second edge exchange would show here as a 6th job."""
     from pyspark.sql import functions as F
 
     from plume_spark.operators.traversal import k_hop
@@ -394,7 +393,7 @@ def test_k_hop_job_budget(spark, probe_store):
     seeds = spark.createDataFrame([(5,), (5,), (7,)], "node long")
     with _jobs(spark) as jobs:
         assert k_hop(edges, seeds, 2).count() == 2
-    assert len(jobs) == 6, jobs
+    assert len(jobs) == 5, jobs
     assert sorted(r["node"] for r in k_hop(edges, seeds, 2).collect()) == [7, 9]
     assert sorted(r["node"] for r in k_hop(edges, seeds, 0).collect()) == [5, 7]
     assert k_hop(edges, seeds.filter(F.lit(False)), 2).isEmpty()

@@ -1030,9 +1030,13 @@ def test_bigram_logprob_bruteforce(spark, texts):
 def test_power_iter_exact_sums(spark, vecs):
     """The emb_power_iter kernel vs exact numpy integer arithmetic: the
     s_d sums are exact, the normalized u within 1 quantization unit."""
-    import math
+    from decimal import ROUND_HALF_UP, Decimal
 
-    rows = [(i, [v / 1000.0 for v in vec], 0) for i, vec in enumerate(vecs)]
+    # plus one explicit half-boundary row: k/128 is exact in float32 and
+    # k/128 * 1e6 = k * 7812.5, so an odd k lands on .5, both signs
+    half_row = [-1 / 128, 1 / 128, -3 / 128, 5 / 128]
+    floats = [[v / 1000.0 for v in vec] for vec in vecs] + [half_row]
+    rows = [(i, f, 0) for i, f in enumerate(floats)]
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1055,12 +1059,15 @@ def test_power_iter_exact_sums(spark, vecs):
         F.sum((F.col("qv") * F.col("p")).cast("decimal(38,0)")).alias("s")
     )
     got = {r["dim"]: int(r["s"]) for r in s.collect()}
-    # exact reference: q = round(float32(v/1000) * 1e6) — mirror the
-    # float32 storage the frame applies before the engine's double widening
-    q = [
-        [int(math.floor(float(np.float32(v / 1000.0)) * 1e6 + 0.5)) for v in vec]
-        for vec in vecs
-    ]
+    def half_up(x: float) -> int:
+        """Spark's ``round``: HALF_UP (ties away from zero) on the double's
+        decimal form (``BigDecimal.valueOf``)."""
+        return int(Decimal(repr(x)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+    # exact reference: q = round(float32(v) * 1e6) — mirror the float32
+    # storage the frame applies before the engine's double widening
+    q = [[half_up(float(np.float32(v)) * 1e6) for v in f] for f in floats]
+    assert q[-1] == [-7813, 7813, -23438, 39063]
     p = [sum(r) for r in q]
     for d in range(4):
         assert got[d] == sum(q[i][d] * p[i] for i in range(len(q)))

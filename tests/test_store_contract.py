@@ -9,6 +9,8 @@ import datetime as dt
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from plume_spark.schemas import ENTITIES, TRIPLES
@@ -322,8 +324,9 @@ def test_conv_id_keyed_triples_stay_exact_under_subj_layout(spark, tmp_path, rec
     recorded per file, or with no key recorded (stores written before files
     carried their bucket key) — and reopened under the subj-keyed
     ``TRIPLES_LAYOUT`` answers exactly: no file is bucket-pruned by a subj
-    hash, and a repeated bulk write adds no duplicates.  One overwrite
-    rewrites it keyed by subj."""
+    hash, and a repeated bulk write adds no duplicates.  ``compact()``
+    rewrites it keyed by subj although it already holds one file per bucket
+    id, and a second ``compact()`` is a no-op."""
     import json
     from dataclasses import replace
 
@@ -366,11 +369,113 @@ def test_conv_id_keyed_triples_stay_exact_under_subj_layout(spark, tmp_path, rec
     assert t.row_count() == 600
     assert t.read().dropDuplicates().count() == 600
 
-    t.overwrite(t.read())
+    entries = t._entries(t._manifest(t._current_version()))
+    assert len({e["bucket"] for e in entries}) == len(entries)
+    v = t._current_version()
+    assert t.compact() == v + 1
     entries = t._entries(t._manifest(t._current_version()))
     assert entries and all((e["bucket_by"], e["n_buckets"]) == ("subj", 16) for e in entries)
+    assert t.row_count() == 600 and t.compact() is None
     assert len(t.files_for(point={"pred": "uses", "subj": 301})) == 1
     assert store.edge_exists(301, 302, "uses") and not store.edge_exists(302, 301, "uses")
+
+
+_PROBE_IDS = [0, -1, -(2**63), 2**63 - 1, *range(1, 21)]
+_PROBE_PREDS = ["uses", "", "日本語-é𝔸", "works_at"]
+# 72 triples over 24 subjects: every subject has three edges, each written
+# by a different append, so a bucket holds several files
+_PROBE_ROWS = [
+    (s, _PROBE_PREDS[(i + r) % 4], _PROBE_IDS[(5 * i + 7 * r + 1) % 24])
+    for r in range(3)
+    for i, s in enumerate(_PROBE_IDS)
+]
+
+
+@pytest.fixture(scope="module")
+def probe_tables(spark, tmp_path_factory):
+    """Triple tables holding ``_PROBE_ROWS``, as (table, snapshot_id) pairs:
+    three appends under ``TRIPLES_LAYOUT`` read at that snapshot after a
+    ``rebucket`` (time travel), the rebucketed current snapshot, and a
+    conv_id-keyed table whose files record no key."""
+    import json
+    from dataclasses import replace
+
+    from plume_spark.store.catalog import SnapshotTable
+    from plume_spark.store.graph import TRIPLES_LAYOUT
+
+    root = tmp_path_factory.mktemp("probes")
+
+    def frame(rows):
+        full = [(s, p, o, f"c{abs(s) % 5}", 0, "s", "o") for s, p, o in rows]
+        return spark.createDataFrame(full, schema=TRIPLES)
+
+    t = SnapshotTable(spark, str(root / "t"), TRIPLES, TRIPLES_LAYOUT)
+    for r in range(3):
+        t.append(frame(_PROBE_ROWS[24 * r : 24 * (r + 1)]))
+    appended = t._current_version()
+    assert t.rebucket(32) is not None
+
+    lay = replace(TRIPLES_LAYOUT, bucket_by="conv_id")
+    nokey = SnapshotTable(spark, str(root / "nokey"), TRIPLES, lay)
+    nokey.append(frame(_PROBE_ROWS))
+    mpath = os.path.join(nokey.path, "_snapshots", f"v{nokey._current_version()}.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    for e in manifest["files"]:
+        del e["bucket_by"], e["n_buckets"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    nokey = SnapshotTable(spark, nokey.path, TRIPLES, TRIPLES_LAYOUT)
+    return [(t, appended), (t, None), (nokey, None)]
+
+
+_row = st.sampled_from(_PROBE_ROWS)
+_probe = st.one_of(
+    _row,
+    _row.map(lambda r: (r[2], r[1], r[0])),  # reversed edge
+    st.tuples(
+        st.sampled_from([*_PROBE_IDS, 21, 2**62]),
+        st.sampled_from([*_PROBE_PREDS, "zzz"]),
+        st.sampled_from(_PROBE_IDS),
+    ),
+)
+
+
+@given(which=st.integers(0, 2), probe=_probe, node=st.booleans())
+@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
+def test_exists_matches_a_spark_scan(spark, probe_tables, which, probe, node):
+    """``exists`` (pyarrow on the driver) answers as a Spark filter over the
+    same pruned files, and as the rows written: present and absent subjects
+    and edges, reversed edges, 0/-1/int64 min/max ids, empty and multi-byte
+    preds, buckets of several files, files with no recorded key, and a
+    time-travel read after ``rebucket``."""
+    t, snap = probe_tables[which]
+    s, p, o = probe
+    eq = {"subj": s} if node else {"subj": s, "pred": p, "obj": o}
+    cond = F.lit(True)
+    for col, val in eq.items():
+        cond = cond & (F.col(col) == val)
+    spark_says = not t.scan(t.files_for(point=eq, snapshot_id=snap)).filter(cond).isEmpty()
+    written = any(r[0] == s and (node or r[1:] == (p, o)) for r in _PROBE_ROWS)
+    assert t.exists(eq, snapshot_id=snap) is spark_says is written
+
+
+def test_probes_reject_values_the_key_cannot_hold(spark, store):
+    """A None or out-of-int64 probe value raises rather than answer False,
+    whichever files pruning would keep."""
+    ents, trips = _fixture_frames(spark)
+    store.bulk_write(ents, trips)
+    for probe in (
+        lambda: store.node_exists(None),
+        lambda: store.node_exists(2**63),
+        lambda: store.edge_exists(None, 2, "works_at"),
+        lambda: store.edge_exists(1, None, "works_at"),
+        lambda: store.edge_exists(1, 2, None),
+        lambda: store.edge_exists(-(2**63) - 1, 2, "works_at"),
+        lambda: store.edge_exists(1, 2**63, "works_at"),
+    ):
+        with pytest.raises((TypeError, OverflowError)):
+            probe()
 
 
 def test_merge_upsert_and_delete_where(spark, store):
