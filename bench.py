@@ -110,7 +110,7 @@ def _kg_build_distlink(spark, sf_dir):
     """Flagship pipeline with the driver-local linking kernel DISABLED — the
     unbounded-dictionary fallback (distributed LSH + verify + CC) measured at
     bench scale, not just unit-test scale.  The path decision happens eagerly
-    inside norm_components, so toggling the module constant around the call
+    inside build_entities, so toggling the module constant around the call
     is sufficient; output is bit-identical to the kernel path (tested)."""
     from plume_spark import graft
     from plume_spark.operators import canonicalize

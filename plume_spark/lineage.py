@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from plume_spark.schemas import LINEAGE
+from plume_spark.session import local_frame
 from plume_spark.store.catalog import SnapshotTable
 
 BUCKET_COL = "_bucket"
@@ -79,19 +80,14 @@ def pending_units(
 def commit_lineage(
     lineage: SnapshotTable,
     stage: str,
-    units: DataFrame,
+    units: list[tuple[int, str, int]],
     rows_out: int,
 ) -> None:
-    """Durably record completed units.  rows_out is a stage-level counter
-    (the nDiff of the reference's pass log)."""
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    rows = units.select(
-        F.lit(stage).alias("stage"),
-        F.col("partition_id").cast("int"),
-        F.col("input_hash").cast("string"),
-        F.col("rows_in").cast("long"),
-        F.lit(rows_out).cast("long").alias("rows_out"),
-        F.lit(now).cast("timestamp").alias("committed_at"),
-    )
-    spark = units.sparkSession
-    lineage.append(spark.createDataFrame(rows.collect(), schema=LINEAGE))
+    """Durably record completed units: driver rows ``(partition_id,
+    input_hash, rows_in)``, written as one local frame (no Spark job builds
+    it; the append's write is the only one).  rows_out is a stage-level
+    counter (the nDiff of the reference's pass log); every row of the commit
+    carries the same UTC ``committed_at``."""
+    now = dt.datetime.now(dt.timezone.utc)
+    rows = [(stage, p, h, n, rows_out, now) for p, h, n in units]
+    lineage.append(local_frame(lineage.spark, rows, LINEAGE))

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from plume_spark.session import local_frame
+
 CHECKPOINT_EVERY = 3
 MAX_ITERS = 50
 # Nodes whose degree exceeds this are "hot": their edge rows are salted in
@@ -94,7 +96,7 @@ def connected_components(
             [T.StructField("node", node_t), T.StructField("component", node_t)]
         )
         rows = _driver_union_find([(r["a"], r["b"]) for r in head])
-        return edges.sparkSession.createDataFrame(rows, schema=schema)
+        return local_frame(edges.sparkSession, rows, schema)
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from plume_spark.schemas import EDGE_CONSTRAINTS
+from plume_spark.session import local_frame
 
 
 def constraint_rules(spark) -> DataFrame:
@@ -26,7 +27,7 @@ def constraint_rules(spark) -> DataFrame:
         for s in subj_kinds
         for o in obj_kinds
     ]
-    return spark.createDataFrame(rows, "pred string, r_subj string, r_obj string")
+    return local_frame(spark, rows, "pred string, r_subj string, r_obj string")
 
 
 def kind_violations(typed: DataFrame, rules: DataFrame | None = None) -> DataFrame:

@@ -166,7 +166,7 @@ def build_graph(
             extract_changelog(sub, fallback_acc=fb_acc)
         ).localCheckpoint(eager=True)
         staging.merge_insert(cl, ["rec_id"], prune=True)
-        done = transcripts.sparkSession.createDataFrame(pend_rows)
+        done = [(r["partition_id"], r["input_hash"], r["rows_in"]) for r in pend_rows]
         commit_lineage(store.lineage, "extract", done, rows_out=staging.row_count())
         stats["vec_fallback_batches"] = fb_acc.value
 
@@ -220,11 +220,10 @@ def materialize_graph(store, tau: float | None = None) -> dict:
     store.triples.overwrite(triples)
     stats["entities"] = store.entities.row_count()
     stats["triples"] = store.triples.row_count()
-    mat_unit = store.spark.createDataFrame(
-        [(-1, "global", int(stats["entities"]))],
-        "partition_id int, input_hash string, rows_in long",
+    commit_lineage(
+        store.lineage, "materialize", [(-1, "global", stats["entities"])],
+        rows_out=stats["triples"],
     )
-    commit_lineage(store.lineage, "materialize", mat_unit, rows_out=stats["triples"])
     return stats
 
 

@@ -13,8 +13,10 @@ Defaults chosen for the 100 TB target:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _default_driver_mem() -> str:
@@ -100,3 +102,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """Frame over rows the driver already holds (tuples in ``schema``'s field
+    order; ``schema`` may be a DDL string).
+
+    The rows go to the JVM as one Arrow table, which Spark plans as a
+    ``LocalRelation``: scanning it runs no Python worker, projections over it
+    are folded at plan time, a ``collect`` of it runs no job, and an empty
+    one lets the optimizer drop the joins it feeds.  A list handed to
+    ``createDataFrame`` would instead become a pickled Python RDD whose every
+    scan runs Python tasks.  A naive ``datetime`` is read as UTC.  This is
+    the package's one ``createDataFrame`` call on the build, store and
+    streaming paths."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)

@@ -83,6 +83,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plume_spark.functions.xxh64 import xxhash64
+from plume_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -226,10 +227,11 @@ class SnapshotTable:
         if got != want:
             raise ValueError(f"{self.path}: frame columns {got} do not match the declared {want}")
 
-    def _write_files(self, df: DataFrame) -> tuple[list[dict], int]:
+    def _write_files(self, df: DataFrame, keep_empty: bool = True) -> tuple[list[dict], int]:
         """Materialize df as immutable parquet files under a fresh commit dir,
         honoring the table layout (bucketing + sort), and harvest per-file
-        footer stats into manifest entries."""
+        footer stats into manifest entries.  ``keep_empty=False`` removes the
+        commit dir again when it holds no row and returns ``([], 0)``."""
         self._check_schema(df)
         commit_dir = f"data/{uuid.uuid4().hex}"
         out = os.path.join(self.path, commit_dir)
@@ -268,13 +270,20 @@ class SnapshotTable:
                 if bucket is not None:
                     entry.update(bucket_by=lay.bucket_by, n_buckets=lay.n_buckets)
                 entries.append(entry)
+        if total == 0 and not keep_empty:
+            shutil.rmtree(out)
+            return [], 0
         return entries, total
 
     # ------------------------------------------------------------ operations
 
     def append(self, df: DataFrame) -> int:
-        """Append-only commit: no existing file is touched."""
-        files, n = self._write_files(df)
+        """Append-only commit: no existing file is touched.  A frame with no
+        rows commits nothing and returns the current version, so re-running
+        an applied MERGE leaves the snapshot history as it was."""
+        files, n = self._write_files(df, keep_empty=False)
+        if n == 0:
+            return self._current_version()
         prev = self._manifest(self._current_version())
         return self._commit(list(prev["files"]) + files, prev["row_count"] + n, "append")
 
@@ -408,11 +417,13 @@ class SnapshotTable:
         """Frame over data files (relative paths, as ``files_for`` returns
         them).  A declared schema is pinned on the reader, so building the
         frame runs no footer-inference job; ``_write_files`` guarantees every
-        file carries exactly that schema."""
+        file carries exactly that schema.  No files give an empty local
+        frame, which the optimizer folds away (a join against it runs no
+        scan)."""
         if not files:
             if self.schema is None:
                 raise ValueError(f"empty table {self.path} with no declared schema")
-            return self.spark.createDataFrame([], schema=self.schema)
+            return local_frame(self.spark, [], self.schema)
         paths = [os.path.join(self.path, f) for f in files]
         reader = self.spark.read if self.schema is None else self.spark.read.schema(self.schema)
         return reader.parquet(*paths)
@@ -432,10 +443,12 @@ class SnapshotTable:
         the table (the per-epoch streaming-ingest path).  Files bucketed
         under another key or modulus are read whole.  The incoming frame
         is consumed twice (bucket probe + anti-join): pass something cheap to
-        recompute or already checkpointed.
+        recompute or already checkpointed.  A table with no files skips the
+        probe: its read is an empty local frame, and the optimizer drops the
+        anti-join.
         """
         lay = self.layout
-        if prune and lay and lay.bucket_by and lay.bucket_by in keys:
+        if prune and lay and lay.bucket_by and lay.bucket_by in keys and self.files_for():
             current = self.read(buckets=self.buckets_of(df, lay.bucket_by)).select(*keys)
         else:
             current = self.read().select(*keys)
@@ -589,7 +602,7 @@ class SnapshotTable:
         cur = self._entries(self._manifest(self._current_version()))
         new_files = [e["path"] for e in cur if e["path"] not in old]
         if not new_files and self.schema is None:
-            return self.spark.createDataFrame([], schema=self.read().schema)
+            return local_frame(self.spark, [], self.read().schema)
         return self.scan(new_files)
 
     def drop(self) -> None:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from plume_spark.schemas import ENTITIES, LINEAGE, TRIPLES, with_defaults
+from plume_spark.session import local_frame
 from plume_spark.store.catalog import SnapshotStore, TableLayout
 
 TRIPLE_KEY = ["subj", "pred", "obj", "conv_id", "turn_idx"]
@@ -263,8 +264,8 @@ class GraphStore:
                     d.get("obj_mention"),
                 )
             )
-        self.entities.overwrite(self.spark.createDataFrame(node_rows, schema=ENTITIES))
-        self.triples.overwrite(self.spark.createDataFrame(edge_rows, schema=TRIPLES))
+        self.entities.overwrite(local_frame(self.spark, node_rows, ENTITIES))
+        self.triples.overwrite(local_frame(self.spark, edge_rows, TRIPLES))
 
     # -------------------------------------------------------------- checks
 

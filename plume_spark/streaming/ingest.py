@@ -96,11 +96,10 @@ def stream_build(
         staging.merge_insert(cl, ["rec_id"], prune=True)
         # per-epoch lineage/metrics (A6 pass-metrics analog; stage="stream"
         # keys by epoch, disjoint from the batch path's bucket ids)
-        unit = batch_df.sparkSession.createDataFrame(
-            [(int(epoch_id), f"epoch-{epoch_id}", n)],
-            "partition_id int, input_hash string, rows_in long",
+        commit_lineage(
+            store.lineage, "stream", [(epoch_id, f"epoch-{epoch_id}", n)],
+            rows_out=staging.row_count(),
         )
-        commit_lineage(store.lineage, "stream", unit, rows_out=staging.row_count())
         progress["epochs"] += 1
         progress["rows_in"] += n
 

@@ -708,20 +708,91 @@ def test_driver_link_kernel_equals_distributed(spark):
         dist = {tuple(r) for r in verified_pairs(norms_df, "norm", tau=tau).collect()}
         kern = set(driver_link_kernel(vals, tau=tau))
         assert dist == kern, (tau, dist ^ kern)
+    # the driver kernel when the caller hands over the collected norms,
+    # the distributed chain otherwise
     fast = {
+        (r["norm"], r["canonical_norm"])
+        for r in canonicalize.norm_components(mentions, norms=vals).collect()
+    }
+    slow = {
         (r["norm"], r["canonical_norm"])
         for r in canonicalize.norm_components(mentions).collect()
     }
+    assert fast == slow
+
+
+# (norm, kind) mention sets for the two build_entities paths.  With tau 0.55
+# each one-letter variant links to its stem, so every set below has
+# multi-member components.
+_ENTITY_MENTIONS = {
+    "null_kind_hints": [
+        ("lonely planet", None), ("lonely planets", None),
+        ("lonely planet", "entity"), ("solo artist", None), ("solo artists", "person"),
+    ],
+    "all_entity_components": [
+        ("quantum widget", "entity"), ("quantum widgets", "entity"),
+        ("quantum widgetx", "entity"), ("other thing", "entity"),
+    ],
+    "mixed_kind_components": [
+        ("alexander hamilton", "person"), ("alexander hamiltons", "org"),
+        ("alexander hamilton", "entity"), ("acme corporation", "org"),
+        ("acme corporations", "tool"), ("acme corporationx", "artifact"),
+        ("zacme corporation", "org"), ("macme corporation", "org"),
+        ("zebra", "tool"), ("zebra", "org"),
+    ],
+    "empty": [],
+}
+
+
+def _entity_tables(spark, rows, driver: bool):
+    from plume_spark.operators import canonicalize
+
+    mentions = spark.createDataFrame(rows, "norm string, kind string")
     saved = canonicalize.DRIVER_LINK_MAX_NORMS
+    # uncoalesced, the dictionary arrives in several hash partitions, each
+    # sorted by norm: alias order must not depend on how they concatenate
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     try:
-        canonicalize.DRIVER_LINK_MAX_NORMS = 0  # force distributed
-        slow = {
-            (r["norm"], r["canonical_norm"])
-            for r in canonicalize.norm_components(mentions).collect()
-        }
+        spark.conf.set(coalesce, "false")
+        if not driver:
+            canonicalize.DRIVER_LINK_MAX_NORMS = 0  # force distributed
+        ents, n2e = canonicalize.build_entities(mentions, tau=0.55)
     finally:
         canonicalize.DRIVER_LINK_MAX_NORMS = saved
-    assert fast == slow
+        spark.conf.set(coalesce, "true")
+    return (
+        ents,
+        n2e,
+        sorted((r["entity_id"], r["canonical_name"], r["kind"], tuple(r["aliases"])) for r in ents.collect()),
+        sorted((r["norm"], r["entity_id"]) for r in n2e.collect()),
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_ENTITY_MENTIONS))
+def test_build_entities_driver_and_distributed_paths_agree(spark, case):
+    """build_entities' driver path (Python assembly over one dictionary
+    collect) and its distributed path give equal entities — ids, names,
+    kinds and alias ORDER — and equal norm->entity dictionaries.  The driver
+    path's frames are local relations."""
+    rows = _ENTITY_MENTIONS[case]
+    d_ents, d_n2e, fast_ents, fast_n2e = _entity_tables(spark, rows, driver=True)
+    _, _, slow_ents, slow_n2e = _entity_tables(spark, rows, driver=False)
+    assert fast_ents == slow_ents
+    assert fast_n2e == slow_n2e
+    for df in (d_ents, d_n2e):
+        assert df._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+    if rows:
+        assert len(fast_ents) < len({n for n, _ in rows})  # some norms did merge
+    kinds = {name: kind for _, name, kind, _ in fast_ents}
+    if case == "all_entity_components":
+        assert set(kinds.values()) == {"entity"}
+    if case == "mixed_kind_components":
+        # smallest non-'entity' kind over all members of the component
+        assert kinds == {
+            "alexander hamilton": "org", "acme corporation": "artifact", "zebra": "org",
+        }
+    if case == "null_kind_hints":
+        assert kinds == {"lonely planet": "entity", "solo artist": "person"}
 
 
 def test_vec_kernel_fallback_is_counted_and_correct(spark):

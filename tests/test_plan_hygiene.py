@@ -397,3 +397,129 @@ def test_k_hop_job_budget(spark, probe_store):
     assert sorted(r["node"] for r in k_hop(edges, seeds, 2).collect()) == [7, 9]
     assert sorted(r["node"] for r in k_hop(edges, seeds, 0).collect()) == [5, 7]
     assert k_hop(edges, seeds.filter(F.lit(False)), 2).isEmpty()
+
+
+# ------------------------------------------------ driver rows and the build
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize("table", ["LINEAGE", "ENTITIES", "TRIPLES"])
+def test_local_frame_round_trips_and_plans_as_local_relation(spark, table):
+    """Driver rows enter Spark as a LocalRelation and come back unchanged:
+    nulls in every column, empty and null arrays, a naive timestamp read as
+    UTC under the session's UTC time zone, and an empty row list."""
+    import datetime as dt
+
+    from plume_spark import schemas
+    from plume_spark.session import local_frame
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    at = dt.datetime(2026, 3, 29, 1, 30, 0, 123456)
+    rows = {
+        "LINEAGE": [
+            ("extract", 3, "ABC", 10, 20, at),
+            ("materialize", -1, "global", 2**40, 0, at.replace(tzinfo=dt.timezone.utc)),
+            (None, None, None, None, None, None),
+        ],
+        "ENTITIES": [
+            (-(2**63), "acme", "org", ["acme", "acme corp"]),
+            (7, "", "entity", []),
+            (8, None, None, None),
+            (9, "x", "tool", [None, "y"]),
+        ],
+        "TRIPLES": [
+            (1, "works_at", 2, "c1", 0, "Alice", "Acme"),
+            (2**63 - 1, None, None, None, None, None, None),
+        ],
+    }[table]
+    schema = getattr(schemas, table)
+    df = local_frame(spark, rows, schema)
+    assert _optimized(df).startswith("LocalRelation")
+    assert df.schema == schema
+    def collected(v):
+        # collect() hands timestamps back as naive local time of this process
+        if isinstance(v, dt.datetime):
+            return dt.datetime.fromtimestamp(v.replace(tzinfo=v.tzinfo or dt.timezone.utc).timestamp())
+        return v
+
+    assert [tuple(r) for r in df.collect()] == [tuple(map(collected, r)) for r in rows]
+    if table == "LINEAGE":
+        # stored as the UTC instant, whatever the Python process's zone
+        epoch = df.selectExpr("unix_micros(committed_at) AS us").collect()
+        assert epoch[0]["us"] == epoch[1]["us"] == int(
+            at.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000
+        )
+    empty = local_frame(spark, [], schema)
+    assert _optimized(empty).startswith("LocalRelation")
+    assert empty.schema == schema and empty.collect() == []
+
+
+def test_no_list_backed_frames_in_the_package():
+    """Every driver-rows frame goes through ``session.local_frame`` (an Arrow
+    LocalRelation).  A list handed to ``createDataFrame`` is a pickled Python
+    RDD whose every scan runs Python worker tasks."""
+    import pathlib
+
+    import plume_spark
+
+    allowed = {
+        # the one call: builds the Arrow table the others go through
+        "session.py",
+        # the synthetic input generator: a test and benchmark fixture, not
+        # on the build, store or streaming path
+        "generator.py",
+        # the multimodal decoder family, scheduled for deletion (ROADMAP
+        # item 2); its media rows never reach the graph build
+        "multimodal.py",
+    }
+    root = pathlib.Path(plume_spark.__file__).parent
+    hits = sorted(
+        f"{p.relative_to(root)}:{i}"
+        for p in root.rglob("*.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line and p.name not in allowed
+    )
+    assert hits == []
+    session_calls = [
+        line for line in (root / "session.py").read_text().splitlines()
+        if "createDataFrame(" in line and not line.lstrip().startswith(("#", '"'))
+    ]
+    assert len(session_calls) == 1 and "table" in session_calls[0]
+
+
+@pytest.fixture()
+def transcript_parts(spark, tmp_path):
+    """Two transcript parquet inputs: 24 conversations, then the same 24 plus
+    6 new ones."""
+    from plume_spark.generator import generate_transcripts
+    from plume_spark.schemas import TRANSCRIPTS
+
+    paths = []
+    for n in (24, 30):
+        p = str(tmp_path / f"t{n}")
+        generate_transcripts(spark, n, seed=5).write.parquet(p)
+        paths.append(p)
+    return [spark.read.schema(TRANSCRIPTS).parquet(p) for p in paths]
+
+
+def test_build_graph_job_budget(spark, tmp_path, transcript_parts):
+    """Jobs of a small ``build_graph`` (8 work units): a cold build, an
+    unchanged rerun and an append — 19, 16 and 24 jobs (36, 28 and 37 while
+    driver rows were Python-backed frames and the entity tables were
+    derived by Spark).  Driver rows are local relations (no Python worker,
+    no collect round trip for lineage), the empty staging table's MERGE
+    skips its bucket probe, and build_entities assembles the entity
+    dictionary from one collect: a new job in any of these shows here."""
+    from plume_spark.pipeline import build_graph
+
+    base, grown = transcript_parts
+    store = GraphStore(spark, str(tmp_path / "g"))
+    counts = {}
+    for label, df in (("cold", base), ("rerun", base), ("append", grown)):
+        with _jobs(spark) as jobs:
+            stats = build_graph(df, store, n_buckets=8)
+        counts[label] = (len(jobs), stats["pending_units"])
+    assert counts == {"cold": (19, 8), "rerun": (16, 0), "append": (24, 4)}, counts

@@ -73,10 +73,23 @@ def test_directed_edge_exists(spark, store):
 def test_merge_idempotency(spark, store):
     ents, trips = _fixture_frames(spark)
     store.bulk_write(ents, trips)
+    versions = [t._current_version() for t in (store.entities, store.triples)]
+    files = [t.files_for() for t in (store.entities, store.triples)]
     counts = store.bulk_write(ents, trips)  # double write => no duplicates
     assert counts == {"entities": 4, "triples": 2}
     assert store.entities.read().count() == 4
     assert store.triples.read().count() == 2
+    # ... and no new snapshot: an append of no rows commits nothing, and
+    # leaves no data file behind
+    assert [t._current_version() for t in (store.entities, store.triples)] == versions
+    assert [t.files_for() for t in (store.entities, store.triples)] == files
+    for t in (store.entities, store.triples):
+        on_disk = {
+            os.path.relpath(os.path.join(d, f), t.path)
+            for d, _, fs in os.walk(os.path.join(t.path, "data"))
+            for f in fs if f.endswith(".parquet")
+        }
+        assert on_disk == set(t.files_for())
 
 
 def test_clear_and_time_travel(spark, store):
