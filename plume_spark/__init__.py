@@ -4,7 +4,7 @@ Recasts the capabilities of plume-oss/plume (reference at /root/reference, a
 JVM-bytecode -> Code Property Graph builder over pluggable graph stores) as a
 transcript -> (subj, pred, obj) triple pipeline on Spark:
 
-* parallel per-unit extraction passes  -> ``applyInPandas`` over conv_id groups
+* parallel per-unit extraction passes  -> zero-shuffle ``mapInPandas`` batches
   (reference: astcreator/.../PlumeForkJoinParallelCpgPass.scala:40-71)
 * idempotent ID assignment             -> deterministic ``xxhash64(kind, key)``
   (reference: drivers/base/.../IDriver.scala:19-20,91-98)

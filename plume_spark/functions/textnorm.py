@@ -1,9 +1,10 @@
 """Surface-form normalization, defined ONCE for Spark columns and for Python.
 
 The Spark column expression (JVM-side, codegen'd — the hot path) and the
-Python function (used inside pandas-UDF extraction and the test oracle) must
-agree exactly; ``tests/test_extraction.py`` asserts parity on adversarial
-strings.
+Python function (used inside the pandas-UDF extraction kernel) must agree
+exactly; ``tests/test_properties.py::test_norm_py_matches_norm_col`` asserts
+parity on adversarial strings.  The golden extractor in tests/oracle.py keeps
+its own ``norm`` and shares no code with this module.
 
 Normalization: lowercase, strip non-alphanumerics to single spaces, drop
 corporate legal suffixes, collapse whitespace.  The reference's analog is the

@@ -21,8 +21,6 @@ same steps distributed, with equal output.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,9 +33,9 @@ from plume_spark.session import local_frame
 # assembly.  Entity vocabularies are scale-free: even at 10^12 turns the
 # distinct-norm dictionary is typically << this, so most jobs take the
 # driver path; the distributed LSH pipeline is the unbounded fallback (and
-# both paths are asserted to give equal tables in tests).  Env-overridable
-# so benchmarks can force the distributed path (DRIVER_LINK_MAX_NORMS=0).
-DRIVER_LINK_MAX_NORMS = int(os.environ.get("DRIVER_LINK_MAX_NORMS", "500000"))
+# both paths are asserted to give equal tables in tests).  bench.py and the
+# tests set it to 0 to force the distributed path.
+DRIVER_LINK_MAX_NORMS = 500_000
 
 
 def norm_components(
@@ -90,13 +88,16 @@ def build_entities(mentions: DataFrame, tau: float | None = None) -> tuple[DataF
     Python — the in-process identity map of IDriver.scala:19-20 — and handed
     back as local frames, so no further job derives them.  Both frames take
     ``entity_id`` from Spark's own ``xxhash64`` projected over them.
+
+    A NULL norm names nothing and can never join a triple, so both paths
+    drop it here.
     """
-    norm_kind = mentions.groupBy("norm").agg(
+    norm_kind = mentions.filter(F.col("norm").isNotNull()).groupBy("norm").agg(
         F.min(F.when(F.col("kind") != "entity", F.col("kind"))).alias("kind_hint")
     )
     cap = DRIVER_LINK_MAX_NORMS  # 0: always distributed
     head = norm_kind.limit(cap + 1).collect() if cap else []
-    hints = {r["norm"]: r["kind_hint"] for r in head if r["norm"] is not None}
+    hints = {r["norm"]: r["kind_hint"] for r in head}
     if cap and len(head) <= cap and all(n.isascii() for n in hints):
         comp = norm_components(norm_kind, tau, norms=list(hints))
         canonical = {r["norm"]: r["canonical_norm"] for r in comp.collect()}
@@ -167,19 +168,15 @@ def _driver_entities(
     return entities, norm_to_entity
 
 
-def canonicalize_triples(
-    raw_triples: DataFrame, norm_to_entity: DataFrame, broadcast_dict: bool = True
-) -> DataFrame:
+def canonicalize_triples(raw_triples: DataFrame, norm_to_entity: DataFrame) -> DataFrame:
     """Rewrite raw (norm-keyed) triples to entity-id triples.
 
-    The norm->entity dictionary is small (distinct norms) — broadcast it so
-    the fact-table join is map-side (no shuffle of the triple stream).  At
-    dictionary sizes beyond broadcast limits, fall back to a shuffle join and
-    let AQE split the hot-entity skew.
+    The norm->entity dictionary (one row per distinct norm) is always
+    broadcast, so the fact-table join is map-side: the triple stream is not
+    shuffled.  The hint is unconditional; a dictionary too large to
+    broadcast is not demoted to a shuffle join.
     """
-    d = norm_to_entity
-    if broadcast_dict:
-        d = F.broadcast(d)
+    d = F.broadcast(norm_to_entity)
     subj_d = d.select(F.col("norm").alias("subj_norm"), F.col("entity_id").alias("subj"))
     obj_d = d.select(F.col("norm").alias("obj_norm"), F.col("entity_id").alias("obj"))
     return (

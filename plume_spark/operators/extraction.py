@@ -1,31 +1,30 @@
-"""Per-conversation mention + relation extraction.
+"""Mention + relation extraction: transcript turns -> one change log.
 
 Reference analog: the abstract pass ``generateParts()`` + ``runOnPart(builder,
 part)`` (astcreator/.../PlumeForkJoinParallelCpgPass.scala:21,30) with the one
 concrete pass AstCreationPass.runOnPart (astcreator/.../AstCreationPass.scala:35-51):
-one independent part in, many nodes/edges out, exceptions tolerated per-part
-(AstCreationPass.scala:46-50).
+one independent part in, many nodes/edges out.
 
-Spark recast: ``applyInPandas`` over ``groupBy("conv_id")`` — one pandas frame
-per conversation, sorted by ``turn_idx`` inside the UDF (the stable turn
-ordering the window materializes), emitting a single change-log frame that is
-then split per record kind (the 3-way ``collect { case ... }`` split of
-Neo4jDriver.scala:198-212).  All Python executes on Arrow batches; nothing in
-this module runs per-row on the JVM side.
+Spark recast: ``mapInPandas`` over the input's existing partitioning, with no
+shuffle.  Each Arrow batch is one part: the vectorized kernel
+``_extract_part_vec`` sorts it by (conv_id, turn_idx) and emits a single
+change-log frame, later split per record kind (the 3-way ``collect { case ...
+}`` split of Neo4jDriver.scala:198-212).  The grammar is strictly turn-local,
+so a part need not hold whole conversations.
 
-At 100 TB the groupBy(conv_id) shuffle is avoided by storing transcripts
-bucketed/partitioned by hash(conv_id) (Iceberg ``bucket(N, conv_id)``) so
-grouping is shuffle-free; in the sandbox the shuffle is explicit.
+Failure policy: malformed rows are skipped, by ``split_valid_rejects`` and by
+the kernel's own row mask (the per-part tolerance of
+AstCreationPass.scala:46-50).  A kernel exception is a bug: it fails the Spark
+task, and so the build, with its Python traceback.
 
 The extraction grammar is the contract documented in plume_spark/generator.py;
-tests/oracle.py re-implements it independently in plain pandas as the golden
-reference.
+tests/oracle.py re-implements it independently in plain Python as the golden
+reference the kernel is tested against.
 """
 
 from __future__ import annotations
 
 import re
-from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -44,68 +43,7 @@ KEYWORDS = [
 ]
 FALLBACK_PRED = ("mentions", "entity", "entity")
 
-_TOKEN_RE = re.compile(r"\S+")
 _STRIP = ".,;:!?\"'()[]{}<>«»—–-"
-
-
-class Mention(NamedTuple):
-    surface: str
-    start: int
-    end: int
-
-
-def find_mentions(text: str) -> list[Mention]:
-    """Maximal runs of tokens whose stripped form starts with an uppercase
-    ASCII letter.  Pure function — shared contract with tests/oracle.py."""
-    mentions: list[Mention] = []
-    run: list[tuple[int, int]] = []
-    prev_idx = -2
-    for idx, m in enumerate(_TOKEN_RE.finditer(text)):
-        raw = m.group(0)
-        core = raw.strip(_STRIP)
-        if core and "A" <= core[0] <= "Z":
-            off = raw.find(core)
-            span = (m.start() + off, m.start() + off + len(core))
-            if prev_idx == idx - 1 and run:
-                run.append(span)
-            else:
-                if run:
-                    mentions.append(Mention(text[run[0][0] : run[-1][1]], run[0][0], run[-1][1]))
-                run = [span]
-            prev_idx = idx
-    if run:
-        mentions.append(Mention(text[run[0][0] : run[-1][1]], run[0][0], run[-1][1]))
-    return mentions
-
-
-def find_relations(text: str, ms: list[Mention] | None = None) -> list[dict]:
-    """Relations between consecutive mention pairs; FIRST keyword between the
-    two spans wins, else the 'mentions' fallback.  Returns dicts with mention
-    spans, pred, endpoint kinds.  ``ms`` lets callers that already ran
-    find_mentions skip recomputing it."""
-    if ms is None:
-        ms = find_mentions(text)
-    out = []
-    for left, right in zip(ms, ms[1:]):
-        between = text[left.end : right.start].lower()
-        best = None  # (pos, pred, sk, ok)
-        for kw, pred, sk, ok in KEYWORDS:
-            p = between.find(kw)
-            if p >= 0 and (best is None or p < best[0]):
-                best = (p, pred, sk, ok)
-        pred, sk, ok = (best[1], best[2], best[3]) if best else FALLBACK_PRED
-        out.append({"subj": left, "pred": pred, "obj": right, "subj_kind": sk, "obj_kind": ok})
-    return out
-
-
-def mention_kinds(text: str, relations: list[dict] | None = None) -> dict[int, str]:
-    """span_start -> kind, from the first relation each mention joins."""
-    kinds: dict[int, str] = {}
-    for r in find_relations(text) if relations is None else relations:
-        kinds.setdefault(r["subj"].start, r["subj_kind"])
-        kinds.setdefault(r["obj"].start, r["obj_kind"])
-    return kinds
-
 
 # change-log schema: one frame per pass, split per kind downstream (U2)
 CHANGELOG_SCHEMA = T.StructType(
@@ -135,20 +73,12 @@ CHANGELOG_SCHEMA = T.StructType(
 # measured as a material slice of extraction CPU.
 _UDF_SCHEMA = T.StructType([f for f in CHANGELOG_SCHEMA.fields if f.name != "mention_id"])
 
-_MENTION_COLS = ("surface", "norm", "kind", "span_start", "span_end", "arg_index")
-_TRIPLE_COLS = (
-    "pred", "subj_norm", "subj_kind", "obj_norm", "obj_kind",
-    "src_mention", "obj_mention",
-)
-
-
 # one regex that matches a MAXIMAL capitalized-token run directly: a token
-# qualifies iff its first non-STRIP character is an ASCII uppercase letter
-# (exactly find_mentions' per-token strip test), runs extend across single
-# whitespace gaps (token-index adjacency == whitespace-only separation, since
-# tokens are \S+), and a non-qualifying token breaks the run because it
-# cannot match the token alternative.  The per-token Python loop becomes one
-# C-level scan.
+# qualifies iff its first non-STRIP character is an ASCII uppercase letter,
+# runs extend across whitespace gaps (token-index adjacency == whitespace-only
+# separation, since tokens are \S+), and a non-qualifying token breaks the run
+# because it cannot match the token alternative.  One C-level scan finds every
+# run of a batch.
 _RUN_TOKEN = r"[.,;:!?\"'()\[\]{}<>«»—–-]*[A-Z]\S*"
 _RUN_RE = re.compile(rf"(?:^|(?<=\s))(?:{_RUN_TOKEN})(?:\s+(?:{_RUN_TOKEN}))*")
 # separator between turns in the batch mega-string: the \x00 token's first
@@ -156,66 +86,22 @@ _RUN_RE = re.compile(rf"(?:^|(?<=\s))(?:{_RUN_TOKEN})(?:\s+(?:{_RUN_TOKEN}))*")
 _SEP = "\n\x00\n"
 
 
-# per-worker one-time warning latch: a systematic vec-kernel failure would
-# otherwise silently run every batch on the ~3x-slower loop kernel with green
-# tests and no signal (round-3 ADVICE).
-_FALLBACK_WARNED = False
-
-
-def _extract_part(
-    pdf: pd.DataFrame, on_fallback=None, _poison: bool = False
-) -> pd.DataFrame:
-    """Batch extraction with the vectorized kernel; any unexpected failure
-    inside it degrades the batch to the retained loop kernel (identical
-    semantics, per-turn exception tolerance) instead of failing the Arrow
-    batch — the whole-batch analog of runOnPart's per-part tolerance.
-
-    The degradation is OBSERVABLE, not silent: the first fallback on each
-    worker prints one stderr warning with the causing exception, and
-    ``on_fallback`` (an Accumulator.add bound by extract_changelog) counts
-    fallen-back batches so build_graph can surface the perf cliff in its
-    stats.  ``_poison`` is a test-only hook that forces the failure path
-    (closure-serialized, so it reaches real executors — monkeypatching the
-    driver module does not)."""
-    global _FALLBACK_WARNED
-    try:
-        if _poison:
-            raise RuntimeError("test-poisoned vectorized kernel")
-        return _extract_part_vec(pdf)
-    except Exception as exc:  # noqa: BLE001 — deliberate batch tolerance
-        if not _FALLBACK_WARNED:
-            _FALLBACK_WARNED = True
-            import sys
-            import traceback
-
-            print(
-                "plume_spark WARNING: vectorized extraction kernel failed; "
-                f"batch degraded to the loop kernel (~3x slower): {exc!r}\n"
-                + "".join(traceback.format_exception(exc)[-3:]),
-                file=sys.stderr,
-            )
-        if on_fallback is not None:
-            on_fallback(1)
-        return _extract_part_loop(pdf)
-
-
 def _extract_part_vec(pdf: pd.DataFrame) -> pd.DataFrame:
-    """runOnPart analog: one part (a hash-bucket of whole conversations) in,
-    its change log out.  Rows are sorted (conv_id, turn_idx) so each
-    conversation is contiguous in stable turn order (W1).
+    """runOnPart analog: one part (an Arrow batch of turns) in, its change
+    log out.  Rows are sorted (conv_id, turn_idx) so each conversation's
+    turns are contiguous in stable turn order (W1).
 
     VECTORIZED batch kernel: all turns of the batch are joined into one
     mega-string (separator \\x00 cannot start or extend a run), mention runs
     are found by ONE compiled-regex scan (C-level, replacing the per-token
     Python loop), matches map back to turns via searchsorted over the turn
     offsets, and every output column is assembled by numpy array arithmetic.
-    The per-token iteration + per-record append loop this replaces was ~2/3
+    The per-token iteration + per-record append loop this replaced was ~2/3
     of kernel CPU (kernel micro-bench 0.97 s -> 0.31 s per 20k turns, 3.2x);
     extraction was 94% of flagship wall time, and the k=192 phase profile
     moved 116 s -> 63 s on 8 cores (232k -> 400k triples/s end-to-end).
-    Semantics are EXACTLY find_mentions/find_relations per turn: the loop
-    kernel is retained below (_extract_part_loop) as the reference, and
-    test_vectorized_kernel_equals_loop pins equality on adversarial text.
+    test_vectorized_kernel_equals_oracle pins its records, column by column,
+    to the golden extractor in tests/oracle.py on adversarial text.
     ``norm_py`` is memoized per part via a distinct-surface map: surface
     forms repeat heavily in real transcripts.  Malformed rows (non-string /
     empty text, non-numeric turn_idx) are skipped, not fatal — the same
@@ -227,7 +113,7 @@ def _extract_part_vec(pdf: pd.DataFrame) -> pd.DataFrame:
     texts_raw = pdf["text"]
     # non-numeric AND non-finite turn_idx rows are skipped (an unguarded
     # int64 cast would turn inf into INT64_MIN garbage); fractional floats
-    # truncate exactly like the loop kernel's int()
+    # truncate toward zero, like int()
     ti_f = pd.to_numeric(pdf["turn_idx"], errors="coerce").to_numpy(
         dtype="float64", na_value=float("nan")
     )
@@ -290,8 +176,8 @@ def _extract_part_vec(pdf: pd.DataFrame) -> pd.DataFrame:
         preds[j], sks[j], oks[j] = (
             (best[1], best[2], best[3]) if best else FALLBACK_PRED
         )
-    # mention kind — mention_kinds' setdefault order means: the obj-kind of
-    # the PRECEDING relation wins over the subj-kind of the following one
+    # mention kind: the obj-kind of the PRECEDING relation wins over the
+    # subj-kind of the following one, else 'entity'
     is_pair = np.zeros(n_m, dtype=bool)
     is_pair[pair] = True
     sk_arr = np.empty(n_m, dtype=object)
@@ -318,7 +204,7 @@ def _extract_part_vec(pdf: pd.DataFrame) -> pd.DataFrame:
     # no pd.concat (whose extension-dtype NA reconciliation was measured at
     # >60% of kernel time) and no per-row Python in sight.  Mention rows
     # occupy [0, n_m), triple rows [n_m, n); columns that only one record
-    # kind carries stay None on the other side, exactly as the loop kernel.
+    # kind carries stay None on the other side.
     def _both(m_vals, t_vals):
         col = np.empty(n, dtype=object)
         col[:n_m] = m_vals
@@ -349,83 +235,19 @@ def _extract_part_vec(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({name: cols[name] for name in names})
 
 
-def _extract_part_loop(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The original per-turn loop kernel, retained VERBATIM as the reference
-    implementation for test_vectorized_kernel_equals_loop (the vectorized
-    kernel above must emit the identical record set).
-
-    COLUMNAR accumulation: values append to per-column lists, never to
-    per-row dicts — at millions of records the dict-per-row form allocates
-    ~20x more Python objects, and that allocation pressure was measured to
-    destroy multi-worker scaling (workers' CPU time inflates under shared
-    memory-bandwidth contention).  ``norm_py`` is memoized per part: surface
-    forms repeat heavily in real transcripts."""
-    pdf = pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-    mcols: dict[str, list] = {c: [] for c in ("conv_id", "turn_idx", *_MENTION_COLS)}
-    tcols: dict[str, list] = {c: [] for c in ("conv_id", "turn_idx", *_TRIPLE_COLS)}
-    norm_cache: dict[str, str] = {}
-
-    def _norm(s: str) -> str:
-        v = norm_cache.get(s)
-        if v is None:
-            v = norm_cache[s] = norm_py(s)
-        return v
-
-    for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-        try:
-            if not isinstance(text, str) or not text:
-                continue
-            # one mention scan + one relation scan per turn, shared by both
-            # record kinds (find_mentions is the expensive regex pass)
-            ms = find_mentions(text)
-            rels = find_relations(text, ms)
-            kinds = mention_kinds(text, rels)
-            ti = int(turn_idx)
-            for ai, m in enumerate(ms):
-                mcols["conv_id"].append(conv_id)
-                mcols["turn_idx"].append(ti)
-                mcols["surface"].append(m.surface)
-                mcols["norm"].append(_norm(m.surface))
-                mcols["kind"].append(kinds.get(m.start, "entity"))
-                mcols["span_start"].append(m.start)
-                mcols["span_end"].append(m.end)
-                mcols["arg_index"].append(ai)  # W2 ARGUMENT_INDEX analog
-            for r in rels:
-                tcols["conv_id"].append(conv_id)
-                tcols["turn_idx"].append(ti)
-                tcols["pred"].append(r["pred"])
-                tcols["subj_norm"].append(_norm(r["subj"].surface))
-                tcols["subj_kind"].append(r["subj_kind"])
-                tcols["obj_norm"].append(_norm(r["obj"].surface))
-                tcols["obj_kind"].append(r["obj_kind"])
-                tcols["src_mention"].append(r["subj"].surface)
-                tcols["obj_mention"].append(r["obj"].surface)
-        except Exception:
-            continue  # tolerate a bad turn, keep the part going
-
-    n_m, n_t = len(mcols["conv_id"]), len(tcols["conv_id"])
-    names = [f.name for f in _UDF_SCHEMA.fields]
-    mdf = pd.DataFrame(
-        {
-            name: (
-                ["mention"] * n_m if name == "rec_kind"
-                else mcols[name] if name in mcols
-                else [None] * n_m
-            )
-            for name in names
-        }
-    )
-    tdf = pd.DataFrame(
-        {
-            name: (
-                ["triple"] * n_t if name == "rec_kind"
-                else tcols[name] if name in tcols
-                else [None] * n_t
-            )
-            for name in names
-        }
-    )
-    return pd.concat([mdf, tdf], ignore_index=True)
+def find_relations(text: str) -> list[dict]:
+    """The relations the kernel extracts from ``text`` taken as one turn, in
+    text order: dicts with ``subj``/``obj`` (the mention surfaces), ``pred``,
+    ``subj_kind`` and ``obj_kind``.  A driver-side view of
+    ``_extract_part_vec`` for code that checks text against the grammar."""
+    out = _extract_part_vec(pd.DataFrame({"conv_id": [""], "turn_idx": [0], "text": [text]}))
+    t = out[out["rec_kind"] == "triple"]
+    return [
+        {"subj": subj, "pred": pred, "obj": obj, "subj_kind": sk, "obj_kind": ok}
+        for subj, pred, obj, sk, ok in zip(
+            t["src_mention"], t["pred"], t["obj_mention"], t["subj_kind"], t["obj_kind"]
+        )
+    ]
 
 
 def split_valid_rejects(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -439,16 +261,16 @@ def split_valid_rejects(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     return transcripts.filter(~bad), transcripts.filter(bad)
 
 
-def _extract_batches(batches, on_fallback=None, _poison: bool = False):
-    """mapInPandas adapter: the same per-part extraction kernel applied to
-    each incoming Arrow batch in place (no shuffle — see extract_changelog)."""
+def _extract_batches(batches):
+    """mapInPandas adapter: the kernel applied to each incoming Arrow batch in
+    place (no shuffle — see extract_changelog)."""
     for pdf in batches:
-        out = _extract_part(pdf, on_fallback=on_fallback, _poison=_poison)
+        out = _extract_part_vec(pdf)
         if len(out):
             yield out
 
 
-def _extract_batches_compact(batches, on_fallback=None, _poison: bool = False):
+def _extract_batches_compact(batches):
     """mapInPandas adapter with per-batch mention pre-aggregation: mention
     records collapse to the batch's DISTINCT (norm, kind) pairs (a map-side
     partial of the global per-norm reduction build_entities performs), triple
@@ -461,10 +283,7 @@ def _extract_batches_compact(batches, on_fallback=None, _poison: bool = False):
     cache (mention occurrences outnumber distinct norms ~3000:1 at bench
     scale; the mention-stream scan was measured memory-bandwidth-bound, i.e.
     the one cost MORE cores cannot buy down)."""
-    for pdf in batches:
-        out = _extract_part(pdf, on_fallback=on_fallback, _poison=_poison)
-        if not len(out):
-            continue
+    for out in _extract_batches(batches):
         is_m = out["rec_kind"] == "mention"
         m = out[is_m]
         if len(m):
@@ -478,14 +297,7 @@ def _extract_batches_compact(batches, on_fallback=None, _poison: bool = False):
         yield pd.concat([m, out[~is_m]], ignore_index=True)
 
 
-def extract_changelog(
-    transcripts: DataFrame,
-    n_parts: int | None = None,
-    colocate: bool = False,
-    compact_mentions: bool = False,
-    fallback_acc=None,
-    _poison: bool = False,
-) -> DataFrame:
+def extract_changelog(transcripts: DataFrame, compact_mentions: bool = False) -> DataFrame:
     """Parallel extraction pass: valid rows -> change-log DataFrame.
 
     The ForkJoin ``parts.parallel().collect(supplier, accumulator, combiner)``
@@ -493,50 +305,24 @@ def extract_changelog(
     UDF pass — Spark's task parallelism is the pool, the implicit union of
     per-batch outputs is the associative ``absorb``.
 
-    Physical strategy (the extraction grammar is strictly turn-local, so the
-    output row set is identical either way):
+    ``mapInPandas`` runs over the input's EXISTING partitioning: zero
+    shuffle.  The reference's runOnPart needs whole-compilation-unit parts;
+    a per-turn grammar does not, and shuffling the full transcript text (by
+    far the widest column) just to re-bucket it was measured as the dominant
+    non-scaling cost at high core counts — shuffle write+read of the text
+    stream is disk/memory-bandwidth-bound, which caps N-vs-4N scaling well
+    below the CPU-bound extraction itself.
 
-    * default — ``mapInPandas`` over the input's EXISTING partitioning: zero
-      shuffle.  The reference's runOnPart needs whole-compilation-unit parts;
-      a per-turn grammar does not, and shuffling the full transcript text
-      (by far the widest column) just to re-bucket it was measured as the
-      dominant non-scaling cost at high core counts — shuffle write+read of
-      the text stream is disk/memory-bandwidth-bound, which caps N-vs-4N
-      scaling well below the CPU-bound extraction itself.
-    * ``colocate=True`` — the runOnPart-faithful layout: parts are
-      hash-buckets of WHOLE conversations (pmod(xxhash64(conv_id), n_parts),
-      fixed 256 so work units are identical at every cluster size),
-      conversations contiguous in stable turn order within a part.  Use when
-      a future grammar needs cross-turn context, or on a cluster where the
-      storage bucketing makes the groupBy shuffle-free anyway.
-
-    ``compact_mentions`` (default-path only): mention records are collapsed
-    to per-batch distinct (norm, kind) pairs — sufficient (and ~3000x
-    lighter at bench scale) for entity linking, which is a pure function of
-    the distinct-norm dictionary; occurrence-level fields are nulled.  Use
-    for linking-only pipelines; the store/staging path keeps full records."""
+    ``compact_mentions``: mention records are collapsed to per-batch distinct
+    (norm, kind) pairs — sufficient (and ~3000x lighter at bench scale) for
+    entity linking, which is a pure function of the distinct-norm dictionary;
+    occurrence-level fields are nulled.  run_pipeline sets it (its mention
+    records only feed linking); the store/staging path keeps full records."""
     valid, _ = split_valid_rejects(transcripts)
-    # fallback counting: Accumulator.add is closure-serialized into the UDF,
-    # so counts flow back from real executors with task results; read
-    # fallback_acc.value after an action to observe the perf cliff.
-    on_fb = fallback_acc.add if fallback_acc is not None else None
-    if colocate:
-        p = n_parts or 256
-        extracted = (
-            valid.select("conv_id", "turn_idx", "text")
-            .withColumn("_part", F.pmod(F.xxhash64("conv_id"), F.lit(p)).cast("int"))
-            .groupBy("_part")
-            .applyInPandas(
-                lambda pdf: _extract_part(pdf, on_fallback=on_fb, _poison=_poison),
-                schema=_UDF_SCHEMA,
-            )
-        )
-    else:
-        base = _extract_batches_compact if compact_mentions else _extract_batches
-        fn = lambda batches: base(batches, on_fallback=on_fb, _poison=_poison)  # noqa: E731
-        extracted = valid.select("conv_id", "turn_idx", "text").mapInPandas(
-            fn, schema=_UDF_SCHEMA
-        )
+    extracted = valid.select("conv_id", "turn_idx", "text").mapInPandas(
+        _extract_batches_compact if compact_mentions else _extract_batches,
+        schema=_UDF_SCHEMA,
+    )
     # stable mention identity, JVM-side and vectorized (the IDriver.scala:91-98
     # identity contract): deterministic over the natural key, so resume runs
     # regenerate identical ids.

@@ -12,10 +12,10 @@ Design — exactly-once without a transactional sink:
 
 * the file source's checkpoint tracks which files each epoch consumed
   (at-least-once replay after a crash);
-* every change-log record carries a content-derived rec_id
-  (pipeline._with_rec_id) and lands via MERGE-on-rec_id into the snapshot
-  staging table — so replayed epochs are no-ops (idempotent sink =
-  exactly-once effect, the standard Spark recipe);
+* every change-log record carries a content-derived rec_id and lands via
+  MERGE-on-rec_id into the snapshot staging table, through the batch path's
+  own staging step (pipeline.stage_changelog) — so replayed epochs are
+  no-ops (idempotent sink = exactly-once effect, the standard Spark recipe);
 * materialization stays a deterministic global function of the staging table
   (pipeline.materialize_graph), shared verbatim with the batch path: a store
   fed by the stream is bit-identical to one built by build_graph over the
@@ -78,28 +78,17 @@ def stream_build(
 
     Returns counters ({"epochs", "rows_in", **materialize stats}).
     """
-    from plume_spark.lineage import commit_lineage
-    from plume_spark.operators.extraction import extract_changelog
-    from plume_spark.pipeline import _with_rec_id, materialize_graph, staging_table
+    from plume_spark.pipeline import materialize_graph, stage_changelog, staging_table
 
-    staging = staging_table(store)
     progress = {"epochs": 0, "rows_in": 0}
 
     def _fold_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         n = batch_df.count()
         if n == 0:
             return
-        # checkpoint + pruned MERGE: the idempotency anti-join touches only
-        # the file-buckets this epoch's rec_ids hash into, so per-epoch cost
-        # tracks the batch, not the accumulated change log
-        cl = _with_rec_id(extract_changelog(batch_df)).localCheckpoint(eager=True)
-        staging.merge_insert(cl, ["rec_id"], prune=True)
-        # per-epoch lineage/metrics (A6 pass-metrics analog; stage="stream"
-        # keys by epoch, disjoint from the batch path's bucket ids)
-        commit_lineage(
-            store.lineage, "stream", [(epoch_id, f"epoch-{epoch_id}", n)],
-            rows_out=staging.row_count(),
-        )
+        # per-epoch lineage (A6 pass-metrics analog; stage="stream" keys by
+        # epoch, disjoint from the batch path's bucket ids)
+        stage_changelog(store, batch_df, "stream", [(epoch_id, f"epoch-{epoch_id}", n)])
         progress["epochs"] += 1
         progress["rows_in"] += n
 
@@ -117,7 +106,7 @@ def stream_build(
     # drain's anti-join scans files proportional to data, not to epochs
     # (Iceberg rewrite_data_files on a schedule).  History is retained —
     # reclaiming it is the operator's explicit expire_snapshots call.
-    if progress["epochs"] and staging.compact(min_files=1) is not None:
+    if progress["epochs"] and staging_table(store).compact(min_files=1) is not None:
         progress["compacted"] = True
     return progress
 

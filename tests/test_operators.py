@@ -722,8 +722,8 @@ def test_driver_link_kernel_equals_distributed(spark):
 
 
 # (norm, kind) mention sets for the two build_entities paths.  With tau 0.55
-# each one-letter variant links to its stem, so every set below has
-# multi-member components.
+# each one-letter variant links to its stem, so every set below but
+# null_norm has multi-member components; a NULL norm yields no entity.
 _ENTITY_MENTIONS = {
     "null_kind_hints": [
         ("lonely planet", None), ("lonely planets", None),
@@ -741,6 +741,7 @@ _ENTITY_MENTIONS = {
         ("zebra", "tool"), ("zebra", "org"),
     ],
     "empty": [],
+    "null_norm": [("acme", "org"), (None, "person")],
 }
 
 
@@ -793,29 +794,8 @@ def test_build_entities_driver_and_distributed_paths_agree(spark, case):
         }
     if case == "null_kind_hints":
         assert kinds == {"lonely planet": "entity", "solo artist": "person"}
-
-
-def test_vec_kernel_fallback_is_counted_and_correct(spark):
-    """A poisoned vectorized kernel must (a) degrade every batch to the loop
-    kernel with IDENTICAL output and (b) fire the fallback accumulator — the
-    perf cliff is observable, never silent (round-3 VERDICT #2 / ADVICE).
-    On clean input the counter must stay at exactly 0."""
-    from plume_spark.generator import generate_transcripts
-    from plume_spark.operators.extraction import extract_changelog
-
-    t = generate_transcripts(spark, 30, seed=7)
-    sc = spark.sparkContext
-
-    clean_acc = sc.accumulator(0)
-    clean = extract_changelog(t, fallback_acc=clean_acc)
-    clean_rows = {tuple(r) for r in clean.collect()}
-    assert clean_acc.value == 0, "vec kernel fell back on clean input"
-
-    poison_acc = sc.accumulator(0)
-    poisoned = extract_changelog(t, fallback_acc=poison_acc, _poison=True)
-    poisoned_rows = {tuple(r) for r in poisoned.collect()}
-    assert poison_acc.value > 0, "poisoned kernel did not fire the counter"
-    assert poisoned_rows == clean_rows  # loop kernel ≡ vec kernel output
+    if case == "null_norm":
+        assert kinds == {"acme": "org"} and fast_n2e == [("acme", fast_ents[0][0])]
 
 
 def test_salted_join_and_salted_cc(spark):
