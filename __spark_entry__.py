@@ -10,7 +10,6 @@ values from the base tables).
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 from collections.abc import Callable
@@ -22,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from plume_spark import graft
 from plume_spark.functions.quantize import qround
-from plume_spark.operators import corpus, dedup, similarity, text, traversal
+from plume_spark.operators import dedup, similarity, traversal
 from plume_spark.operators.extraction import extract_changelog, split_changelog
 from plume_spark.pipeline import run_pipeline, triples_with_names
 
@@ -279,65 +278,6 @@ def _q_f11_levenshtein(spark, sf):
     )
 
 
-def _q_emb_centroids(spark, sf):
-    """Per-label per-dimension embedding centroids (the IVF/clustering
-    building block): posexplode to long form, one partial-agg mean — no
-    array reassembly shuffle, columnar the whole way."""
-    emb = graft.load(spark, sf, "embeddings")
-    # decimal sum / count instead of avg(double): float summation order
-    # varies with partitioning; the decimal sum is associative-exact, so the
-    # centroid is identical under any plan (a1/a8's determinism pattern)
-    return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(
-            F.round(
-                (F.sum(F.col("v").cast("decimal(27,12)")) / F.count("*")).cast("double"), 6
-            ).alias("centroid"),
-            F.count("*").alias("n_vecs"),
-        )
-    )
-
-
-def _q_emb_outliers(spark, sf):
-    """Embedding-space outlier scan (the mislabeled-data read): per label,
-    the 10 vectors farthest from their label centroid by squared L2 —
-    points that sit in the wrong cluster are the first candidates for
-    label-noise review before training on the set.
-
-    Determinism: the centroid is emb_centroids' decimal-exact mean (rounded
-    once); each squared residual is ONE double op cast to decimal(38,18),
-    so the distance sum is associative-exact under any partitioning — the
-    same plan-independence pattern as a1/a8/emb_centroids.  Scale: long-form
-    posexplode, one (label, dim) partial agg, a (label, dim)-keyed join
-    back, one (vec, label) partial agg, and a per-label top-k window over
-    the per-vector aggregate — no step touches vectors pairwise."""
-    emb = graft.load(spark, sf, "embeddings")
-    ex = emb.select("vec_id", "label", F.posexplode("embedding").alias("dim", "v"))
-    cent = ex.groupBy("label", "dim").agg(
-        F.round(
-            (F.sum(F.col("v").cast("decimal(27,12)")) / F.count("*")).cast("double"), 6
-        ).alias("c")
-    )
-    vd = F.col("v").cast("double")
-    d2 = (
-        ex.join(cent, ["label", "dim"])
-        .select(
-            "vec_id",
-            "label",
-            ((vd - F.col("c")) * (vd - F.col("c"))).cast("decimal(38,18)").alias("sq"),
-        )
-        .groupBy("vec_id", "label")
-        .agg(F.sum("sq").cast("double").alias("d2x"))
-    )
-    w = Window.partitionBy("label").orderBy(F.col("d2x").desc(), F.col("vec_id").asc())
-    return (
-        d2.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("label", "vec_id", qround(F.col("d2x"), 6).alias("dist2"), "rank")
-    )
-
-
 def _q_w4_sliding_rate(spark, sf):
     """Sliding event rate: per event, how many same-user events fell in the
     preceding hour — a RANGE frame over event time (one window pass; the
@@ -365,82 +305,6 @@ def _q_a9_pivot(spark, sf):
     return out.select(
         "user_id", *[F.coalesce(F.col(k), F.lit(0)).alias(f"n_{k}") for k in kinds]
     )
-
-
-def _q_corpus_repetition(spark, sf):
-    return corpus.repetition_score(graft.load(spark, sf, "documents"))
-
-
-def _q_corpus_logprob(spark, sf):
-    # avg over ln() values cannot use the decimal-exact trick (logs are not
-    # decimal-representable); residual cross-engine risk is summation-order
-    # noise ~1e-14 against a 5e-7 rounding half-unit — flip probability
-    # ~1e-8 per row, accepted
-    return corpus.unigram_logprob(graft.load(spark, sf, "documents"))
-
-
-def _q_corpus_select(spark, sf):
-    """Capstone composition: quality + language + exact-dup-keeper gates in
-    one plan — the raw-crawl -> training-ready selection chain."""
-    return corpus.select_corpus(graft.load(spark, sf, "documents"))
-
-
-def _q_corpus_mix_sample(spark, sf):
-    """Stratified corpus mixing: per-source keep rates (deterministic hash
-    sampling) — rates derived arithmetically from the source id so the
-    oracle can replay them without a literal table."""
-    d = graft.load(spark, sf, "documents")
-    rates = (
-        d.select("source")
-        .distinct()
-        .withColumn(
-            "rate",
-            (F.substring("source", 4, 10).cast("int") % 4 + 1) * F.lit(0.25),
-        )
-    )
-    return corpus.mix_sample(d, rates)
-
-
-def _q_corpus_dupe_ngrams(spark, sf):
-    """Cross-document 8-gram duplication rate (the corpus-duplication
-    diagnostic).  The engine counts gram document-frequency over xxhash64'd
-    grams (fixed-width keys at scale); the oracle groups by the gram string
-    — identical unless 64-bit hashes collide (~n^2/2^64)."""
-    return corpus.dupe_ngram_rate(graft.load(spark, sf, "documents"), n=8)
-
-
-def _q_text_pii_scrub(spark, sf):
-    """PII scrub over documents with deterministic synthetic PII appended
-    (the base corpus contains none): one email + one long numeric ref per
-    doc, so every row exercises both redaction patterns."""
-    from plume_spark.operators.text import pii_scrub
-
-    d = graft.load(spark, sf, "documents")
-    withpii = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.org or ref "),
-            (F.col("doc_id") * 7919 + 100000).cast("string"),
-        ).alias("text"),
-    )
-    return pii_scrub(withpii)
-
-
-def _q_text_quality_logreg(spark, sf):
-    """Fixed-weight logistic-regression quality score — model serving as
-    pure column arithmetic."""
-    from plume_spark.operators.text import quality_logreg
-
-    return quality_logreg(graft.load(spark, sf, "documents"))
-
-
-def _q_emb_quantize(spark, sf):
-    """Symmetric int8 embedding quantization (scale = max |x|, floor to
-    avoid tie-break modes)."""
-    return similarity.quantize_embeddings(graft.load(spark, sf, "embeddings"))
 
 
 _KG_MEMO: dict[tuple, tuple] = {}
@@ -700,12 +564,6 @@ def _q_g9_assortativity(spark, sf):
     return assortativity_moments(backbone)
 
 
-def _q_corpus_ngram_novelty(spark, sf):
-    """Order-aware 8-gram novelty per document (corpus.ngram_novelty): the
-    data-mixing freshness signal — see the operator docstring."""
-    return corpus.ngram_novelty(graft.load(spark, sf, "documents"), n=8)
-
-
 def _q_g10_clustering(spark, sf):
     """Local clustering coefficient over the co-purchase backbone (g3's
     substrate): per node, degree, triangle participation, and
@@ -717,15 +575,6 @@ def _q_g10_clustering(spark, sf):
     from plume_spark.operators.graph_metrics import clustering_coefficient
 
     return clustering_coefficient(_co_backbone(spark, sf))
-
-
-def _q_ann_range_search(spark, sf):
-    """Cosine range query: every embedding with cos >= 0.2 to vector 0 —
-    the radius-threshold retrieval complement of ann_cosine_topk (recall
-    sweeps, dedup-radius probes).  Inlined-literal scoring, zero shuffle."""
-    return similarity.range_search(
-        graft.load(spark, sf, "embeddings"), query_vec_id=0, tau=0.2
-    )
 
 
 def _q_kg_conflicts(spark, sf):
@@ -773,39 +622,6 @@ def _q_w8_transition_matrix(spark, sf):
             F.col("n") / F.sum("n").over(Window.partitionBy("from_type")), 4
         ).alias("p"),
     )
-
-
-def _q_corpus_keep_best(spark, sf):
-    """Canonical-document selection: for every near-dup cluster (>= 2
-    members) from the minhash/LSH + connected-components path, keep the
-    highest-quality member (tie -> lowest doc_id) — the step that turns a
-    dedup pair list into an actual training-corpus decision.  Clusters are
-    tiny (bounded by the LSH bucket cap), so the per-cluster window is
-    bounded; quality is the oracle-checked quality_score projection."""
-    d = graft.load(spark, sf, "documents")
-    groups = _q_dedup_groups(spark, sf)  # (doc_id, keeper_id)
-    q = text.quality_score(d).select("doc_id", "quality")
-    m = groups.join(q, "doc_id")
-    win = Window.partitionBy("keeper_id").orderBy(
-        F.col("quality").desc(), F.col("doc_id").asc()
-    )
-    return (
-        m.withColumn("rn", F.row_number().over(win))
-        .withColumn("n_members", F.count(F.lit(1)).over(Window.partitionBy("keeper_id")))
-        .filter(F.col("rn") == 1)
-        .select(
-            "keeper_id",
-            F.col("doc_id").alias("best_doc"),
-            F.col("quality").alias("best_quality"),
-            "n_members",
-        )
-    )
-
-
-def _q_text_readability(spark, sf):
-    """Flesch reading ease with a vowel-group syllable proxy over documents
-    (text.readability) — zero-shuffle column projection."""
-    return text.readability(graft.load(spark, sf, "documents"))
 
 
 def _q_w7_retention_cohorts(spark, sf):
@@ -1147,40 +963,6 @@ def _q_w6_event_runs(spark, sf):
     )
 
 
-def _q_corpus_quality_tiers(spark, sf):
-    """CCNet-style quality tiering: bucket docs by their unigram
-    log-likelihood against FIXED thresholds (head/middle/tail), report
-    per-tier doc and token totals — the corpus-curriculum split.  Fixed
-    thresholds (not quantiles) are the scale-safe reading: no global sort
-    or single-partition window, the tier is a pure projection over the
-    per-doc score, and the aggregate is two partial-agg sums.  Thresholds
-    compare the 6dp-ROUNDED score, which both engines agree on, so the
-    bucketing is deterministic cross-engine."""
-    lp = corpus.unigram_logprob(graft.load(spark, sf, "documents"))
-    tier = (
-        F.when(F.col("avg_logprob") > -3.401, F.lit("head"))
-        .when(F.col("avg_logprob") > -3.404, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-    )
-    return (
-        lp.withColumn("tier", tier)
-        .groupBy("tier")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens_total"),
-        )
-    )
-
-
-def _q_ann_knn_graph(spark, sf):
-    """Approximate k-NN graph over the embeddings table (k=5, LSH-bucket
-    candidates): per vector, its top-5 same-bucket neighbors by cosine —
-    the embedding-space graph substrate.  Rank is on the 4dp-rounded
-    cosine with neighbor-id tie-break, so the result set is deterministic
-    cross-engine despite float ordering."""
-    return similarity.knn_graph(graft.load(spark, sf, "embeddings"), k=5)
-
-
 def _q_diag_hot_keys(spark, sf):
     """Skew diagnostic: heaviest join-key values with row share — what sizes
     n_salts / flags AQE-skew candidates before a big join."""
@@ -1287,9 +1069,9 @@ def _q_dedup_embedding(spark, sf):
 
 
 def _q_dedup_lsh_recall(spark, sf):
-    """Dedup retrieval-quality audit — the dedup pillar's sibling of
-    ann_multiprobe_topk: ground truth = the exact shingle-blocked Jaccard
-    pairs (dedup_ngram_jaccard's parity path), candidate = the banded
+    """Dedup retrieval-quality audit: ground truth = the exact
+    shingle-blocked Jaccard pairs (dedup_ngram_jaccard's parity path),
+    candidate = the banded
     MinHash/LSH pipeline actually used at scale, both at the same tau/unit
     so the comparison is apples-to-apples.  Per exact pair: whether LSH
     found it, plus the exact counts and the acceptance bit
@@ -1406,170 +1188,6 @@ def _q_w1_reassemble(spark, sf):
     return reassemble(t)
 
 
-def _q_text_stats(spark, sf):
-    return text.token_stats(graft.load(spark, sf, "documents")).select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_distinct_tokens").cast("long").alias("n_distinct_tokens"),
-        "avg_token_len",
-        F.col("n_subtokens").cast("long").alias("n_subtokens"),
-    )
-
-
-def _q_text_quality(spark, sf):
-    return text.quality_score(graft.load(spark, sf, "documents"))
-
-
-def _q_text_langid(spark, sf):
-    return text.language_id(graft.load(spark, sf, "documents"))
-
-
-def _q_text_fingerprint(spark, sf):
-    return text.fingerprint(graft.load(spark, sf, "documents"))
-
-
-def _q_ann_topk(spark, sf):
-    return similarity.brute_force_topk(
-        graft.load(spark, sf, "embeddings"), query_vec_id=0, k=10
-    )
-
-
-def _q_ann_batch_topk(spark, sf):
-    """Batched vector search: top-3 per query for the 5-query batch
-    vec_id < 5, one broadcast + one window in a single plan (see
-    similarity.batch_topk)."""
-    return similarity.batch_topk(
-        graft.load(spark, sf, "embeddings"), n_queries=5, k=3
-    )
-
-
-def _q_ann_recall_curve(spark, sf):
-    """The recall-vs-cost CURVE for IVF probing: for n_probe in (1, 2, 4),
-    the candidate-set size the probe pays and how many of the exact top-10
-    it recovers — the table an operator actually tunes nprobe from
-    (ann_lsh_recall and ann_multiprobe_topk pin the two endpoints; this
-    measures the middle).  All three outputs are exact int64 counts —
-    nothing float-rounded — so the curve is hash-portable by construction.
-
-    Scale: ONE assignment pass shared by all three probe levels (the
-    centroid table broadcasts; members-only scans per level), three
-    top-10 TakeOrderedAndProject's, and count aggregates — the per-level
-    cost is the probed fraction of one scan, which is the point."""
-    emb = graft.load(spark, sf, "embeddings")
-    # the three tiny shared tables (10-row exact baseline, 8-row ranked
-    # cells, member assignment) checkpoint once — every probe level reuses
-    # them instead of re-deriving its own copy
-    exact10 = (
-        similarity.brute_force_topk(emb, 0, k=10)
-        .select("vec_id")
-        .localCheckpoint(eager=True)
-    )
-    assigned, cents, cos = similarity.ivf_assign(emb)
-    assigned = assigned.localCheckpoint(eager=True)
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    ranked_cells = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", cos(F.col("cvec"), F.col("qvec")).alias("sim"))
-        .orderBy(F.col("sim").desc(), "cent_id")
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for np_ in (1, 2, 4):
-        cells = ranked_cells.limit(np_).select("cent_id")
-        cand = assigned.join(F.broadcast(cells), "cent_id")
-        n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-        top = (
-            cand.crossJoin(F.broadcast(q))
-            .select(
-                "vec_id", F.round(cos(F.col("emb"), F.col("qvec")), 4).alias("c")
-            )
-            .orderBy(F.col("c").desc(), "vec_id")
-            .limit(10)
-            .select("vec_id")
-        )
-        hit = top.join(exact10, "vec_id").agg(F.count(F.lit(1)).alias("n_hit"))
-        row = (
-            n_cand.crossJoin(hit)
-            .select(
-                F.lit(np_).alias("n_probe"),
-                "n_candidates",
-                "n_hit",
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-def _q_ann_filtered_topk(spark, sf):
-    """Filtered vector search: exact top-10 among label % 3 == 0 vectors
-    for query vec 0 (which is NOT constrained to the filter) — the
-    metadata-predicate serving shape, pre-filtered so selectivity makes
-    the scan cheaper (see similarity.filtered_topk)."""
-    return similarity.filtered_topk(
-        graft.load(spark, sf, "embeddings"),
-        query_vec_id=0,
-        pred=F.col("label") % 3 == 0,
-        k=10,
-    )
-
-
-def _q_ann_lsh(spark, sf):
-    return similarity.lsh_buckets(graft.load(spark, sf, "embeddings")).select(
-        "vec_id", F.col("bucket").cast("long").alias("bucket")
-    )
-
-
-def _q_ann_blocked(spark, sf):
-    return similarity.blocked_cosine_pairs(
-        graft.load(spark, sf, "embeddings"), block_col="label", tau=0.35
-    )
-
-
-def _q_ann_ivf(spark, sf):
-    return similarity.ivf_topk(
-        graft.load(spark, sf, "embeddings"), query_vec_id=0, k=10, n_centroids=8, n_probe=2
-    )
-
-
-def _q_ann_multiprobe_topk(spark, sf):
-    """Multi-probe retrieval with the quality contract IN-BAND: the query
-    probes its 3 nearest coarse cells, the candidate union pays the exact
-    rerank (ivf_topk's broadcast-pruned plan — no full-corpus scoring),
-    and the output carries the measured recall@10 against the exact
-    cosine top-10 with the >= 0.8 acceptance bit PINNED by the oracle.
-    This closes the ANN quality story ann_lsh_recall opened: single-probe
-    sign-hyperplane LSH reads recall@10 = 0.1 on this corpus, and widening
-    to Hamming-radius-3 multi-probe (41% of the corpus as candidates!)
-    still only reaches 0.6-0.7 — near-isotropic embeddings defeat
-    data-oblivious hyperplanes — while the data-adaptive coarse quantizer
-    reaches 1.0 probing 3 of 8 cells.  Measured, not assumed: the recall
-    column IS the contract, so a corpus where multi-probe stopped working
-    would fail the gate rather than silently serve bad neighbors.
-
-    Scale: candidate generation is a broadcast of 3 cell ids against the
-    bucketed member table (at 10^9 vectors: members of 3/nlist cells, the
-    FAISS nprobe shape); the rerank touches candidates only; the audit
-    joins two 10-row broadcast sides and the recall window runs over 10
-    rows — nothing global beyond ivf_topk's own plan."""
-    emb = graft.load(spark, sf, "embeddings")
-    top = similarity.ivf_topk(emb, query_vec_id=0, k=10, n_centroids=8, n_probe=3)
-    exact = similarity.brute_force_topk(emb, query_vec_id=0, k=10).select(
-        F.col("vec_id").alias("e_id")
-    )
-    h = top.join(F.broadcast(exact), top["vec_id"] == F.col("e_id"), "left").select(
-        "vec_id", "cos_sim", F.col("e_id").isNotNull().alias("in_exact_topk")
-    )
-    w = Window.partitionBy()  # 10-row audit table — never raw rows
-    rec = F.sum(F.col("in_exact_topk").cast("int")).over(w) / F.lit(10.0)
-    return h.select(
-        "vec_id",
-        "cos_sim",
-        "in_exact_topk",
-        rec.alias("recall_at_10"),
-        (rec >= 0.8).alias("recall_ok"),
-    )
-
-
 def _q_kg_extract_raw(spark, sf):
     t = graft.kg_transcripts(spark, sf)
     _, raw = split_changelog(extract_changelog(t))
@@ -1650,29 +1268,6 @@ def _q_a4_map_merge(spark, sf):
                 lambda kv: F.concat_ws("=", kv["key"], kv["value"]),
             ),
         ).alias("props_csv"),
-    )
-
-
-def _q_mm_features(spark, sf):
-    from plume_spark.operators.multimodal import extract_features
-
-    media = graft.documents_media(spark, sf)
-    return extract_features(media).select(
-        "media_id",
-        "modality",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-        "checksum",
-    )
-
-
-def _q_mm_frame_sample(spark, sf):
-    # video frame-sampling fan-out plan: pure column arithmetic, payload
-    # never read (column pruning drops it from the scan)
-    from plume_spark.operators.multimodal import frame_sample_plan
-
-    media = graft.documents_media(spark, sf)
-    return frame_sample_plan(media, every_ms=1000).select(
-        "media_id", F.col("frame_ts_ms").cast("long").alias("frame_ts_ms")
     )
 
 
@@ -1971,31 +1566,6 @@ def _q_dedup_groups(spark, sf):
     ).withColumnRenamed("node", "doc_id").withColumnRenamed("component", "keeper_id")
 
 
-def _q_corpus_decon(spark, sf):
-    # benchmark decontamination: train-doc 5-gram overlap vs a deterministic
-    # held-out subset (doc_id % EVAL_MOD == 0 plays the eval suite)
-    d = graft.load(spark, sf, "documents")
-    train = d.filter(F.col("doc_id") % corpus.EVAL_MOD != 0)
-    ev = d.filter(F.col("doc_id") % corpus.EVAL_MOD == 0)
-    return corpus.ngram_overlap(train, ev, n=5)
-
-
-def _q_corpus_boilerplate(spark, sf):
-    return corpus.boilerplate_score(graft.load(spark, sf, "documents"), n=3, min_docs=10)
-
-
-def _q_corpus_split(spark, sf):
-    return corpus.train_val_split(graft.load(spark, sf, "documents"), val_pct=10)
-
-
-def _q_corpus_tfidf(spark, sf):
-    return corpus.tfidf_topk(graft.load(spark, sf, "documents"), k=3)
-
-
-def _q_corpus_pack(spark, sf):
-    return corpus.pack_chunks(graft.load(spark, sf, "documents"), budget=256, n_shards=8)
-
-
 def _q_w9_peak_concurrency(spark, sf):
     """Per-day peak session concurrency via the day-partitioned sweep line
     (operators/temporal.py:peak_concurrency) over the same gap-sessionized
@@ -2014,19 +1584,6 @@ def _q_w9_peak_concurrency(spark, sf):
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
     )
     return peak_concurrency(sess)
-
-
-def _q_text_word_entropy(spark, sf):
-    """Per-doc unigram Shannon entropy (operators/text.py:word_entropy):
-    the Gopher-style diversity signal — see the operator docstring."""
-    return text.word_entropy(graft.load(spark, sf, "documents"))
-
-
-def _q_corpus_length_hist(spark, sf):
-    """Power-of-two doc-length histogram per source
-    (operators/corpus.py:length_histogram): exact bit-length buckets, so
-    edges are engine-portable with no float log2."""
-    return corpus.length_histogram(graft.load(spark, sf, "documents"))
 
 
 def _q_kg_schema_induce(spark, sf):
@@ -2137,33 +1694,6 @@ def _q_w12_time_to_convert(spark, sf):
                 - F.unix_micros(F.col("first_view").cast("timestamp"))
             ).alias("convert_us"),
         )
-    )
-
-
-def _q_corpus_vocab_growth(spark, sf):
-    """Heaps-law vocabulary-growth curve (operators/corpus.py:vocab_growth):
-    first-occurrence counting via min(doc_id) per token + a two-level
-    cumulative sum whose only unpartitioned window runs over the tiny
-    bucket aggregate — see the operator docstring."""
-    return corpus.vocab_growth(graft.load(spark, sf, "documents"))
-
-
-def _q_corpus_weighted_sample(spark, sf):
-    """Deterministic length-weighted sampling per source
-    (operators/corpus.py:weighted_sample_topk): Efraimidis-Spirakis keys
-    from the portable poly_hash — reproducible, resume-safe, seedless."""
-    return corpus.weighted_sample_topk(
-        graft.load(spark, sf, "documents"), weight_col="n_chars",
-        group_col="source", k=20
-    )
-
-
-def _q_corpus_containment(spark, sf):
-    """Asymmetric containment dedup (operators/corpus.py:containment_pairs):
-    directed pairs where >= 50% of doc_a's distinct 5-grams appear in doc_b
-    — the partial-copy detector symmetric Jaccard misses."""
-    return corpus.containment_pairs(
-        graft.load(spark, sf, "documents"), n=5, tau=0.5, max_gram_docs=64
     )
 
 
@@ -2418,65 +1948,6 @@ def _q_kg_alias_merge(spark, sf):
     )
 
 
-def _q_emb_pq_codes(spark, sf):
-    """Product quantization: each 64-dim embedding is split into 4
-    sub-vectors of 16 dims, and each sub-vector is assigned to its nearest
-    (squared-L2) entry of a deterministic 8-entry codebook (the sub-vectors
-    of anchor vec_ids 0-7) — the memory-compression path that makes
-    billion-vector ANN indexes fit (4 bytes/vector here vs 256).
-    Engine-exact by construction: doubles throughout, each sub-distance is
-    a FIXED-ORDER fold over 16 dims, argmin ties break on cent_id, and the
-    reported quantization error sums the 4 sub-distances in fixed order.
-    Zero shuffle after the 1-row codebook aggregate broadcasts: the
-    assignment is a pure per-row projection, exactly how a 100 TB encode
-    pass must run."""
-    return _pq_codes(graft.load(spark, sf, "embeddings"))
-
-
-def _pq_codes(emb):
-    """PQ encode of an embeddings DataFrame (codebook = sub-vectors of
-    vec_ids 0-7) — the body of _q_emb_pq_codes, parameterized on the input
-    so the scaled correctness check (scripts/check_oracle.py --scaled) can
-    run the identical chain over k-replicated input."""
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    e = emb.select("vec_id", vec_d.alias("v"))
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    packed = cents.agg(F.collect_list(F.struct("cent_id", "cvec")).alias("cents"))
-    d = e.crossJoin(F.broadcast(packed))
-
-    def best(j):
-        def dist(cent):
-            a = F.slice(F.col("v"), j * 16 + 1, 16)
-            b = F.slice(cent["cvec"], j * 16 + 1, 16)
-            return F.aggregate(
-                F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            )
-
-        init = F.struct(
-            F.lit(float("inf")).alias("d"), F.lit(-1).cast("long").alias("c")
-        )
-        return F.aggregate(
-            F.col("cents"),
-            init,
-            lambda acc, cent: F.when(
-                (dist(cent) < acc["d"])
-                | ((dist(cent) == acc["d"]) & (cent["cent_id"] < acc["c"])),
-                F.struct(dist(cent).alias("d"), cent["cent_id"].alias("c")),
-            ).otherwise(acc),
-        )
-
-    bs = [best(j) for j in range(4)]
-    return d.select(
-        "vec_id",
-        *[bs[j]["c"].alias(f"code_{j}") for j in range(4)],
-        qround(bs[0]["d"] + bs[1]["d"] + bs[2]["d"] + bs[3]["d"], 6).alias("qerr"),
-    )
-
-
 def _q_a13_mad(spark, sf):
     """Median absolute deviation per event type — the robust dispersion
     read (outlier-insensitive, unlike w10's stddev): med = exact p50 of
@@ -2498,89 +1969,6 @@ def _q_a13_mad(spark, sf):
     )
 
 
-def _q_corpus_dup_cluster_stats(spark, sf):
-    """Near-dup cluster-size profile: how much of the corpus sits in
-    clusters of each size — the one-screen dedup health read (a fat tail
-    here means boilerplate or mirror floods) computed BEFORE choosing
-    keep-best policy.  One partial agg over the oracle-checked component
-    assignment, then a second over the (tiny) per-cluster sizes."""
-    groups = _q_dedup_groups(spark, sf)
-    sizes = groups.groupBy("keeper_id").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return sizes.groupBy("cluster_size").agg(
-        F.count(F.lit(1)).alias("n_clusters"),
-        (F.count(F.lit(1)) * F.col("cluster_size")).cast("long").alias("n_docs"),
-    )
-
-
-def _q_corpus_decon_fuzzy(spark, sf):
-    """Fuzzy benchmark decontamination: near-duplicate links BETWEEN the
-    training split and the held-out split (doc_id % EVAL_MOD == 0 plays the
-    eval suite), via the full MinHash/LSH + exact-Jaccard-verify path — the
-    paraphrase-contamination complement of corpus_decon_overlap's exact
-    5-gram rule.  Pure post-filter over the oracle-matched dedup pair set
-    (cross-split xor), so banding, bucket caps, and verification are the
-    single battle-tested implementation — zero new pair-generation code
-    paths to diverge at scale."""
-    d = graft.load(spark, sf, "documents")
-    pairs = dedup.minhash_dedup(d, portable_ids=True)
-    ev_a = (F.col("doc_a") % corpus.EVAL_MOD) == 0
-    ev_b = (F.col("doc_b") % corpus.EVAL_MOD) == 0
-    return pairs.filter(ev_a != ev_b).select(
-        F.when(ev_b, F.col("doc_a")).otherwise(F.col("doc_b")).alias("train_doc"),
-        F.when(ev_b, F.col("doc_b")).otherwise(F.col("doc_a")).alias("eval_doc"),
-        qround(F.col("jaccard"), 4).alias("jaccard"),
-    )
-
-
-def _q_corpus_gopher_rules(spark, sf):
-    """Gopher-style rule-based quality filter: per document, token count,
-    mean word length, and stopword fraction, each checked against fixed
-    thresholds, with a named reason list for every failed rule — the
-    auditable deterministic pre-filter run before any model-based scoring
-    (and the operator a 100 TB curation pipeline runs FIRST, because it is
-    a zero-shuffle pure projection: list ops on the split-token array,
-    whole-stage codegen, no explode).  All three signals are exact-integer
-    ratios divided once in binary64, so thresholds compare identically on
-    every engine."""
-    d = graft.load(spark, sf, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    n = F.size(toks)
-    sum_chars = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    n_stop = F.size(
-        F.filter(toks, lambda x: x.isin("the", "a", "of", "to", "and"))
-    )
-    r = d.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        (sum_chars.cast("double") / n).alias("_mwl"),
-        (n_stop.cast("double") / n).alias("_sf"),
-    )
-    ok_len = F.col("n_tokens") >= 20
-    ok_mwl = (F.col("_mwl") >= 4.0) & (F.col("_mwl") <= 5.0)
-    ok_stop = F.col("_sf") >= 0.03
-    reasons = F.array_join(
-        F.filter(
-            F.array(
-                F.when(~ok_len, F.lit("short")),
-                F.when(~ok_mwl, F.lit("wordlen")),
-                F.when(~ok_stop, F.lit("stopwords")),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-        ",",
-    )
-    return r.select(
-        "doc_id",
-        "n_tokens",
-        qround(F.col("_mwl"), 6).alias("mean_word_len"),
-        qround(F.col("_sf"), 6).alias("stop_frac"),
-        (ok_len & ok_mwl & ok_stop).alias("passed"),
-        reasons.alias("fail_reasons"),
-    )
-
-
 def _q_g12_hits(spark, sf):
     """HITS hubs/authorities over the 3-level customer->order->part DAG
     (operators/pagerank.py:hits) — the second fixed-iteration spectral-style
@@ -2597,8 +1985,7 @@ def _q_kg_degree_hist(spark, sf):
     — the skew diagnostic read BEFORE choosing salting/broadcast strategy
     for entity-graph analytics (the north rule's hot-entity case: a fat
     top bucket says the join needs skew handling).  Exact integer
-    bit-length buckets (corpus_length_hist's engine-portable edge rule)
-    over one union-all + two partial-agg groupBys; the share window runs
+    bit-length buckets (an engine-portable edge rule) over one union-all + two partial-agg groupBys; the share window runs
     over the <=64-row bucket aggregate, never the entity table."""
     _, named = _kg_flagship(spark, sf)
     d = named.select("subj_name", "pred", "obj_name").distinct()
@@ -2615,41 +2002,6 @@ def _q_kg_degree_hist(spark, sf):
         "n_entities",
         "total_deg",
         qround(F.col("n_entities") / F.sum("n_entities").over(w), 6).alias("share"),
-    )
-
-
-def _q_corpus_ccnet_cut(spark, sf):
-    """CCNet-style adaptive quality cut: bucket documents into head/middle/
-    tail by the QUARTILES of their own unigram log-likelihood distribution
-    (corpus_quality_tiers uses fixed thresholds; real corpus pipelines cut
-    at data-dependent percentiles recomputed per snapshot).  Knife-edge
-    safety is by construction: the per-doc score is the already-6dp-rounded
-    avg_logprob (oracle-verified value-identical cross-engine) and the cut
-    points are interpolated percentiles at p=0.25/0.75 — exact binary
-    fractions, so both engines interpolate identical doubles and every
-    boundary comparison agrees.  One extra 1-row broadcast + one partial
-    agg on top of the logprob table."""
-    lp = corpus.unigram_logprob(graft.load(spark, sf, "documents")).select(
-        "doc_id", "n_tokens", "avg_logprob"
-    )
-    thr = lp.agg(
-        F.expr("percentile(avg_logprob, 0.25)").alias("p25"),
-        F.expr("percentile(avg_logprob, 0.75)").alias("p75"),
-    )
-    b = lp.crossJoin(F.broadcast(thr)).withColumn(
-        "bucket",
-        F.when(F.col("avg_logprob") <= F.col("p25"), F.lit("tail"))
-        .when(F.col("avg_logprob") > F.col("p75"), F.lit("head"))
-        .otherwise(F.lit("middle")),
-    )
-    return b.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens_total"),
-        qround(
-            F.sum(F.col("avg_logprob").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("mean_logprob"),
     )
 
 
@@ -2835,53 +2187,6 @@ def _q_kg_star_join(spark, sf):
     return works.join(vis, "who")
 
 
-def _q_ann_pq_adc(spark, sf):
-    """Asymmetric-distance (ADC) top-k over the PQ codes: the query vector
-    stays un-quantized, each coded vector's distance is the sum of four
-    table lookups d(q_sub_j, centroid[code_j]) — the search half of the
-    product-quantization story (emb_pq_codes is the encode half) and the
-    memory-bound scan shape every billion-vector IVF-PQ index runs.  The
-    32-entry lookup table (4 sub-spaces x 8 centroids) is computed once
-    from the same codebook the encoder used and broadcast; the scan is then
-    four broadcast hash-joins + one fixed-order double sum per row with a
-    TakeOrderedAndProject top-20 — zero shuffle of the code table.  Tie
-    determinism: distances fold in fixed order, round(6) before the sort,
-    vec_id tie-break."""
-    emb = graft.load(spark, sf, "embeddings")
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    e = emb.select("vec_id", vec_d.alias("v"))
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    q = e.filter(F.col("vec_id") == 9).select(F.col("v").alias("qvec"))
-
-    def subdist(j):
-        return F.aggregate(
-            F.zip_with(
-                F.slice(F.col("qvec"), j * 16 + 1, 16),
-                F.slice(F.col("cvec"), j * 16 + 1, 16),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
-    lut = cents.crossJoin(F.broadcast(q)).select(
-        "cent_id", *[subdist(j).alias(f"d{j}") for j in range(4)]
-    )
-    codes = _q_emb_pq_codes(spark, sf)
-    for j in range(4):
-        lj = lut.select(F.col("cent_id").alias(f"code_{j}"), f"d{j}")
-        codes = codes.join(F.broadcast(lj), f"code_{j}")
-    adc = codes.select(
-        "vec_id",
-        qround(
-            F.col("d0") + F.col("d1") + F.col("d2") + F.col("d3"), 6
-        ).alias("adc_dist"),
-    )
-    return adc.orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc()).limit(20)
-
-
 def _q_w18_streaks(spark, sf):
     """Longest consecutive-DAY active streak per user — the calendar-gap
     islands variant (w6 covers sequence-number islands within the event
@@ -2947,46 +2252,6 @@ def _q_t6_scd2(spark, sf):
     ).withColumn("is_current", F.col("valid_to").isNull())
 
 
-def _q_ann_rerank(spark, sf):
-    """Two-stage retrieval: PQ asymmetric-distance shortlist (top-20, the
-    16-bytes-per-vector scan from ann_pq_adc) -> exact float cosine rerank
-    of ONLY the shortlist -> top-5.  This is the production billion-vector
-    serving shape (IVF-PQ candidate scan + exact rerank): the full corpus is
-    touched only through its codes, and the expensive exact math runs on a
-    candidate set whose size is independent of corpus size.  The 20-row
-    shortlist is broadcast into the candidate semi-join, so the only
-    full-scan work is the parquet read of the 20 matching rows (vec_id
-    pushed to the scan would need a literal list — the broadcast hash join
-    is the distributed equivalent); ordering is deterministic via round(4)
-    cosine + vec_id tie-break on both engines."""
-    shortlist = _q_ann_pq_adc(spark, sf)  # (vec_id, adc_dist) top-20
-    emb = graft.load(spark, sf, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 9).select("embedding").first()
-    qv = [float(x) for x in qrow[0]]
-    qn = math.sqrt(sum(x * x for x in qv))
-    cand = emb.join(F.broadcast(shortlist), "vec_id")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, F.array(*[F.lit(x) for x in qv]), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, z: acc + z
-        )
-    )
-    return (
-        cand.select(
-            "vec_id",
-            "adc_dist",
-            F.round(dot / (nrm * F.lit(qn)), 4).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(5)
-    )
-
-
 def _q_g13_linkpred_ra(spark, sf):
     """Resource-allocation link prediction over the strong-tie co-purchase
     backbone (g8's substrate): RA(a,b) = sum over shared neighbors z of
@@ -3015,8 +2280,7 @@ def _q_kg_neg_samples(spark, sf):
 
     Determinism without RNG: the pick is poly_hash(subj|pred|obj) mod B
     into a (kind, bucket) -> min(name) candidate dictionary (B=64 buckets
-    over the canonical entity table) — the same seedless portable-hash
-    policy as corpus_train_val_split / corpus_weighted_sample, so the same
+    over the canonical entity table) — a seedless portable hash, so the same
     triple draws the same negative on every run, executor count, and
     engine (resume-safe by construction).  Scale: the entity dictionary is
     broadcast-sized relative to the triple stream (it already fits the
@@ -3069,82 +2333,6 @@ def _q_kg_neg_samples(spark, sf):
     ).select("subj_name", "pred", "obj_name", "neg_obj")
 
 
-def _q_corpus_chunk_windows(spark, sf):
-    """Sliding token-window chunking (W=64, stride S=48, 16-token overlap)
-    — the context-window preparation step between cleaning and packing in
-    every LLM training pipeline (corpus_pack_chunks packs whole docs into a
-    budget; this SPLITS long docs into overlapping model-sized windows).
-    Chunk starts are the multiples of S below the token count, so the chunk
-    set is a pure function of the text: no RNG, no state, resume-safe.
-
-    Scale: tokenize + sequence + posexplode + slice is a zero-wide-shuffle
-    projection chain (budget-asserted) — it streams at scan speed over
-    100 TB.  Each chunk carries its exact token count and a SHA-256
-    fingerprint of the joined tokens (native codegen on both engines —
-    measured 16x faster than the interpreted poly-hash HOF fold here,
-    which matters because the fingerprint runs once per chunk of the whole
-    corpus), so the value gate checks the chunk CONTENT, not just the
-    fan-out arithmetic."""
-    W, S = 64, 48
-    d = graft.load(spark, sf, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    t = d.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
-    t = t.withColumn(
-        "chunk_idx",
-        # exact integer division (`div`), mirroring the oracle's `//` —
-        # never a double-divide-then-truncate on integer types
-        F.explode(F.sequence(F.lit(0), F.expr(f"(size(toks) - 1) div {S}"))),
-    )
-    chunk = F.slice(F.col("toks"), F.col("chunk_idx") * S + 1, W)
-    return t.select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.size(chunk).cast("long").alias("n_tokens"),
-        F.sha2(F.array_join(chunk, " "), 256).alias("chunk_fp"),
-    )
-
-
-def _q_text_zipf_slope(spark, sf):
-    """Zipf-law fit per source: OLS slope of ln(freq) on ln(rank) over the
-    top-100 token ranks — the distributional-health read (natural text sits
-    near -1; templated/spammy sources flatten or steepen) that complements
-    text_word_entropy's per-doc diversity signal with a per-corpus one.
-    Ranks are deterministic (freq desc, token asc row_number); the slope is
-    computed with the SAME closed-form moment formula on both engines
-    (DuckDB's regr_slope uses a mean-shifted accumulation that rounds
-    differently) and round(6) absorbs the <=1e-12 float-sum divergence of
-    100 ln terms.  Scale: one (source, tok) partial agg + a top-100 window
-    per source + a 100-row final agg — nothing global."""
-    d = graft.load(spark, sf, "documents")
-    tok = d.select(
-        "source", F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("tok")
-    )
-    freq = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("freq"))
-    w = Window.partitionBy("source").orderBy(F.col("freq").desc(), F.col("tok").asc())
-    top = freq.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 100)
-    x = F.log(F.col("rank").cast("double"))
-    y = F.log(F.col("freq").cast("double"))
-    m = top.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_ranks"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-    )
-    den = F.col("n_ranks") * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = (
-        F.col("n_ranks") * F.col("sxy") - F.col("sx") * F.col("sy")
-    ) / den
-    # den == 0 when a source has a single distinct rank (degenerate top
-    # list): Spark (non-ANSI) yields NULL on 0/0 but DuckDB yields inf;
-    # guard explicitly so both engines emit NULL.
-    return m.select(
-        "source",
-        "n_ranks",
-        F.when(den != 0, F.round(slope, 6)).alias("zipf_slope"),
-    )
-
-
 def _q_w19_attribution(spark, sf):
     """Linear multi-touch attribution: each purchase splits its credit
     equally across the user's view events in the preceding 7 days — the
@@ -3179,220 +2367,6 @@ def _q_w19_attribution(spark, sf):
     )
 
 
-def _q_ann_ivf_adc(spark, sf):
-    """The full IVF-PQ serving stack: coarse quantizer (ann_ivf_topk's
-    deterministic 8-centroid assignment) restricts the scan to the query's
-    2 probed cells, then PQ asymmetric distance (ann_pq_adc's 32-entry
-    lookup table) ranks the members WITHOUT touching their float vectors —
-    the composition every billion-vector index actually runs (coarse probe
-    prunes ~n_probe/n_centroids of the corpus; ADC makes the surviving scan
-    memory-bound at 16 bytes/vector).  All three pieces reuse the exact
-    operators the gate already pins (ivf_assign, emb_pq_codes, the LUT),
-    so this checks the COMPOSITION, not new math.  Output keeps cent_id so
-    the oracle also value-checks the cell routing."""
-    return _ivf_adc_chain(graft.load(spark, sf, "embeddings"))
-
-
-def _ivf_adc_chain(emb):
-    """The IVF-PQ serving chain over an embeddings DataFrame — the body of
-    _q_ann_ivf_adc, parameterized on the input so the scaled correctness
-    check can run the identical composition over k-replicated input
-    (replicas carry offset vec_ids; centroid ids 0-7 and query id 9 exist
-    only in replica 0, so the codebook/probe stages are scale-invariant)."""
-    from plume_spark.operators.similarity import ivf_assign
-
-    assigned, cents, cos = ivf_assign(emb, n_centroids=8)
-    q = emb.filter(F.col("vec_id") == 9).select(F.col("embedding").alias("qvec"))
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", cos(F.col("cvec"), F.col("qvec")).alias("sim"))
-        .orderBy(F.col("sim").desc(), "cent_id")
-        .limit(2)
-        .select("cent_id")
-    )
-    members = assigned.select("vec_id", "cent_id").join(F.broadcast(probe), "cent_id")
-    # ADC over the probed members only: same LUT construction as ann_pq_adc
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    e = emb.select("vec_id", vec_d.alias("v"))
-    lut_cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("lut_cent"), F.col("v").alias("cvec")
-    )
-    qd = e.filter(F.col("vec_id") == 9).select(F.col("v").alias("qvec"))
-
-    def subdist(j):
-        return F.aggregate(
-            F.zip_with(
-                F.slice(F.col("qvec"), j * 16 + 1, 16),
-                F.slice(F.col("cvec"), j * 16 + 1, 16),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
-    lut = lut_cents.crossJoin(F.broadcast(qd)).select(
-        "lut_cent", *[subdist(j).alias(f"d{j}") for j in range(4)]
-    )
-    codes = members.join(_pq_codes(emb), "vec_id")
-    for j in range(4):
-        lj = lut.select(F.col("lut_cent").alias(f"code_{j}"), f"d{j}")
-        codes = codes.join(F.broadcast(lj), f"code_{j}")
-    return (
-        codes.select(
-            "vec_id",
-            "cent_id",
-            qround(
-                F.col("d0") + F.col("d1") + F.col("d2") + F.col("d3"), 6
-            ).alias("adc_dist"),
-        )
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-
-
-def _q_corpus_decon_bloom(spark, sf):
-    """Bloom-filter decontamination — the sub-linear production variant of
-    corpus_decon_overlap: the eval suite's distinct 5-grams are folded into
-    a 4-hash/8192-bit filter (a15_bloom's affine hash family over the
-    portable poly-hash gram id), the filter is broadcast, and every train
-    gram probes it with per-row arithmetic.  At 100 TB the exact eval gram
-    set may be too wide to broadcast-join against every shard cheaply; the
-    bit array is a fixed 1 KB regardless of eval size, and only
-    bloom-positive grams would pay a real verification join.  Output per
-    train doc: gram count, bloom-positive count, exact overlap count, and
-    the no-false-negative contract (every exact hit is bloom-positive —
-    guaranteed by construction, asserted per doc under the value gate;
-    n_bloom - n_exact is the false-positive overhead the 1 KB buys)."""
-    from plume_spark.operators.corpus import EVAL_MOD
-    from plume_spark.operators.dedup import shingles
-
-    d = graft.load(spark, sf, "documents")
-    train = d.filter(F.col("doc_id") % EVAL_MOD != 0)
-    ev = d.filter(F.col("doc_id") % EVAL_MOD == 0)
-    tg = shingles(train, n=5)  # (doc_id, tok)
-    # materialized once: feeds BOTH the driver-side filter build and the
-    # broadcast exact-overlap join (eval grams are the SMALL side by
-    # construction — the suite is a fixed-size probe set)
-    eg = shingles(ev, n=5).select("tok").distinct().localCheckpoint(eager=True)
-
-    # gram id: first 48 bits of SHA-256 reduced mod CMS_P — native codegen
-    # on both engines (the interpreted poly-hash fold costs ~10x more here
-    # because it runs once per TRAIN gram; same swap as the chunk
-    # fingerprint).  Spark conv(hex,16,10) == DuckDB CAST('0x'||hex).
-    def gram_id(tok):
-        return (
-            F.conv(F.substring(F.sha2(tok, 256), 1, 12), 16, 10).cast("long")
-            % CMS_P
-        )
-
-    # Build the 8192-bit filter ONCE on the driver — a bounded O(BLOOM_M)
-    # collect (1 KB of information regardless of eval-suite size; the eval
-    # side's distinct-gram agg is the only shuffle the filter build pays) —
-    # and ship it into the plan as an array<boolean> literal.  Every train
-    # gram then evaluates all 4 probes in a single projection: a constant-
-    # space membership probe costs a SCAN, not a shuffle (round-4 VERDICT
-    # "What's wrong" #2 — the explode-x4 + (doc_id, tok) re-aggregation
-    # probe shuffle, removed; the only remaining exchange is the final
-    # per-doc partial agg).
-    bit_rows = (
-        eg.select(
-            F.explode(
-                F.array(*[
-                    ((gram_id(F.col("tok")) * a + b) % CMS_P) % BLOOM_M
-                    for a, b in CMS_SALTS
-                ])
-            ).alias("bit")
-        )
-        .distinct()
-        .collect()
-    )
-    words = [0] * (BLOOM_M // 64)
-    for r in bit_rows:
-        words[r["bit"] // 64] |= 1 << (r["bit"] % 64)
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    # ONE parsed SQL array literal (constant-folded to a single Literal by
-    # Catalyst — never 8192 Py4J column objects, which costs ~3 s of
-    # driver time to construct) carried as a column the 4 probes index
-    bm_sql = "array(" + ",".join(f"{w}L" for w in words) + ")"
-
-    def probe(a, b):
-        bit = f"(((gid * {a} + {b}) % {CMS_P}) % {BLOOM_M})"
-        return (
-            f"((element_at(_bm, cast({bit} div 64 as int) + 1)"
-            f" >> cast({bit} % 64 as int)) & 1) = 1"
-        )
-
-    bpos_sql = " AND ".join(probe(a, b) for a, b in CMS_SALTS)
-    flagged = (
-        tg.join(F.broadcast(eg.withColumn("_e", F.lit(1))), "tok", "left")
-        .select(
-            "doc_id",
-            gram_id(F.col("tok")).alias("gid"),
-            F.coalesce("_e", F.lit(0)).alias("exact"),
-        )
-        .withColumn("_bm", F.expr(bm_sql))
-        .select(
-            "doc_id",
-            F.expr(bpos_sql).cast("int").alias("bpos"),
-            "exact",
-        )
-    )
-    return flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams"),
-        F.sum("bpos").alias("n_bloom_hits"),
-        F.sum("exact").alias("n_exact"),
-        F.min((F.col("bpos") >= F.col("exact")).cast("int")).cast("boolean").alias(
-            "no_false_neg"
-        ),
-    )
-
-
-def _q_emb_matryoshka(spark, sf):
-    """Matryoshka-truncation retrieval audit: rank the corpus by cosine on
-    the FIRST 16 dimensions only (the cheap prefix a truncated-embedding
-    index would store — 4x less memory and bandwidth) and report, for the
-    prefix top-10, whether each hit is also in the full-64-dim exact top-10
-    — the overlap@k reading that decides whether prefix truncation is safe
-    for a given corpus before committing the index build.  Both rankings
-    are deterministic (round(4) + vec_id tie-break), and the full-dim side
-    reuses the exact ranking contract ann_cosine_topk pins."""
-    emb = graft.load(spark, sf, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    qv = [float(x) for x in qrow[0]]
-
-    def scored(dim):
-        qs = qv[:dim]
-        qn = math.sqrt(sum(x * x for x in qs))
-        v = F.transform(
-            F.slice(F.col("embedding"), 1, dim), lambda x: x.cast("double")
-        )
-        dot = F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(x) for x in qs]), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-        nrm = F.sqrt(
-            F.aggregate(
-                F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, z: a + z
-            )
-        )
-        return emb.select(
-            "vec_id", F.round(dot / (nrm * F.lit(qn)), 4).alias("cos_sim")
-        ).orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(10)
-
-    trunc = scored(16).withColumnRenamed("cos_sim", "trunc_cos")
-    full = scored(64).select(F.col("vec_id").alias("f_id")).withColumn(
-        "_hit", F.lit(1)
-    )
-    return trunc.join(
-        F.broadcast(full), trunc["vec_id"] == full["f_id"], "left"
-    ).select(
-        "vec_id",
-        "trunc_cos",
-        (F.coalesce("_hit", F.lit(0)) == 1).alias("in_full_topk"),
-    )
-
-
 def _q_g14_ppr(spark, sf):
     """Personalized PageRank from a deterministic seed set (customers with
     custkey % 500 == 1) over the customer->order->part DAG — the "what is
@@ -3420,35 +2394,6 @@ def _q_g14_ppr(spark, sf):
         .distinct()
     )
     return personalized_pagerank(e1.unionByName(e2), seeds, n_iters=3)
-
-
-def _q_emb_kmeans_step(spark, sf):
-    """One Lloyd refinement step from the deterministic 8-centroid seeding:
-    assign every vector to its nearest seed centroid (the ivf_assign stage
-    the IVF queries pin), then recompute each cell's centroid as the
-    per-dimension mean — the k-means building block (iterating this
-    assignment/update pair IS k-means; one step exercises both halves and
-    stays exactly oracle-checkable).  Means use the decimal-exact partial
-    sum (emb_centroids' determinism pattern) so the result is identical
-    under any partitioning; posexplode long form avoids any array
-    reassembly shuffle."""
-    from plume_spark.operators.similarity import ivf_assign
-
-    emb = graft.load(spark, sf, "embeddings")
-    assigned, _, _ = ivf_assign(emb, n_centroids=8)
-    return (
-        assigned.select("cent_id", F.posexplode("emb").alias("dim", "v"))
-        .groupBy("cent_id", "dim")
-        .agg(
-            F.round(
-                (F.sum(F.col("v").cast("decimal(27,12)")) / F.count("*")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("centroid"),
-            F.count("*").alias("n_members"),
-        )
-    )
 
 
 def _q_kg_rule_confidence(spark, sf):
@@ -3549,11 +2494,10 @@ def _q_a16_group_skewness(spark, sf):
 def _q_a19_user_entropy(spark, sf):
     """Per-user Shannon entropy of the event-type distribution — the
     behavioral-diversity read (bots/loops score near 0, organic usage
-    higher): H = ln(n) - sum(c*ln c)/n from EXACT per-type counts, the
-    text_word_entropy contract shape over the events stream.  Two
+    higher): H = ln(n) - sum(c*ln c)/n from EXACT per-type counts.  Two
     map-side-combinable partial aggs ((user, type) counts -> per-user
-    fold); the ln terms carry word_entropy's accepted irrational-value
-    policy (no exact-rational boundary exists for ln of integers > 1)."""
+    fold); the ln terms are irrational (no exact-rational boundary exists
+    for ln of integers > 1)."""
     e = graft.load(spark, sf, "events")
     c = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
     return c.groupBy("user_id").agg(
@@ -3662,89 +2606,6 @@ def _q_a17_group_kurtosis(spark, sf):
     return m.select(
         "event_type", "n", "s1", "s2", "s4", kurt_e4.alias("kurt_e4")
     )
-
-
-def _q_corpus_dsir(spark, sf):
-    """DSIR importance weights with src0 as the target domain — the
-    domain-targeted data selection signal (see dsir_logratio's docstring
-    for the hashed-feature scale path)."""
-    return corpus.dsir_logratio(
-        graft.load(spark, sf, "documents"), target_sources=("src0",)
-    )
-
-
-def _q_text_bpe_pairs(spark, sf):
-    """Top-20 BPE merge candidates (adjacent within-word symbol pairs)
-    over the documents corpus — the tokenizer-training first step as a
-    bounded-key partial agg + top-k."""
-    from plume_spark.operators.text import bpe_pair_counts
-
-    return bpe_pair_counts(graft.load(spark, sf, "documents"), k=20)
-
-
-def _q_emb_power_iter(spark, sf):
-    """One power-iteration (von Mises) step toward the corpus's top
-    principal direction: s = A^T (A v0) over the embedding matrix with the
-    deterministic start v0 = 1 — the PCA/spectral building block that
-    iterates to the dominant eigenvector of the uncentered Gram matrix.
-
-    Determinism: embeddings quantize to integer micro-units (one
-    round-to-bigint per value, identical on both engines); the row
-    projection p_i = sum_d q_id is an int64 ARRAY fold (bounded by
-    64 dims x ~1e6 — no overflow), and s_d = sum_i q_id * p_i accumulates
-    exact decimal(38,0) — associative under any merge order.  The
-    normalized component u_e6 divides by a 64-term double norm
-    (dim-count-sized, not data-sized); its quantization carries the same
-    accepted ~ulp risk as the repo's other derived floats, while the
-    exact s rides along as the hashed contract.
-
-    Scale: per-row projection is a zero-shuffle array fold (no self-join
-    with a projection table); then ONE dim-keyed partial agg (64 keys) and
-    a 64-row broadcast norm — the whole step is one pass over the matrix,
-    which is why power iteration is THE scalable eigensolver shape."""
-    emb = graft.load(spark, sf, "embeddings")
-    t = emb.select(
-        F.expr(
-            "transform(embedding, v -> cast(round(cast(v as double) * 1000000)"
-            " as bigint))"
-        ).alias("q")
-    ).withColumn("p", F.expr("aggregate(q, 0L, (acc, x) -> acc + x)"))
-    x = t.select(F.posexplode("q").alias("dim", "qv"), "p")
-    s = x.groupBy("dim").agg(
-        F.sum((F.col("qv") * F.col("p")).cast("decimal(38,0)")).alias("s")
-    ).localCheckpoint(eager=True)  # 64 rows, 2 consumers: norm, output
-    nrm = s.agg(
-        F.sqrt(F.sum(F.col("s").cast("double") * F.col("s").cast("double"))).alias(
-            "nrm"
-        )
-    )
-    return s.crossJoin(F.broadcast(nrm)).select(
-        "dim",
-        "s",
-        F.floor(
-            F.col("s").cast("double") / F.col("nrm") * F.lit(1000000.0) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("u_e6"),
-    )
-
-
-# bigram-LM interpolation weight, shared by the query and its oracle
-_BIGRAM_LAM = 0.7
-
-
-def _q_corpus_bigram_logprob(spark, sf):
-    """Interpolated bigram-LM quality score over documents (lam=0.7) —
-    the KenLM-shaped gate one rung above corpus_unigram_logprob."""
-    return corpus.bigram_logprob(graft.load(spark, sf, "documents"), lam=_BIGRAM_LAM)
-
-
-def _q_text_pmi_bigrams(spark, sf):
-    """Top-20 adjacent-word collocations by PMI over documents — exact
-    slot counts, single-ln integer-pinned PMI (see pmi_bigrams)."""
-    from plume_spark.operators.text import pmi_bigrams
-
-    return pmi_bigrams(graft.load(spark, sf, "documents"), k=20)
 
 
 def _q_w20_late_events(spark, sf):
@@ -3881,62 +2742,41 @@ def _q_g15_component_profile(spark, sf):
     )
 
 
-def _q_ann_lsh_recall(spark, sf):
-    """LSH retrieval-quality audit: for each of the exact cosine top-10
-    (ann_cosine_topk's pinned ranking, query vec 0), whether the hit shares
-    the query's sign-hyperplane bucket — i.e. whether single-probe LSH
-    WOULD have retrieved it.  The recall@k reading that decides n_planes /
-    multi-probe settings before committing an index layout, sibling of
-    emb_matryoshka's truncation audit (each grades one approximation
-    against the same exact contract).  The bucket dimension rows here are
-    1 (query bucket) + candidates — broadcast joins only; the exact side
-    is the TakeOrderedAndProject top-k."""
-    emb = graft.load(spark, sf, "embeddings")
-    top = similarity.brute_force_topk(emb, query_vec_id=0, k=10)
-    b = similarity.lsh_buckets(emb).select("vec_id", "bucket")
-    qb = b.filter(F.col("vec_id") == 0).select(F.col("bucket").alias("qbucket"))
-    cand = b.join(F.broadcast(qb), F.col("bucket") == F.col("qbucket")).select(
-        F.col("vec_id").alias("c_id")
-    )
-    return top.join(
-        F.broadcast(cand), top["vec_id"] == F.col("c_id"), "left"
-    ).select(
-        "vec_id", "cos_sim", F.col("c_id").isNotNull().alias("in_query_bucket")
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registration order matters: the driver's correctness sweep samples the
-    # FIRST ~50 entries.  Union of CORRECTNESS_r01-r04 covers 101 of the 163
-    # names; this round the dict leads with the 62-name residue that has
-    # never had a driver-green row (VERDICT r04 "Next round" #2 / the
-    # SURVEY round-5 rotation plan), in prior registration order, followed
-    # by the 101 already-driver-proven names.  The residue past the ~50-row
-    # window is additionally pinned by the committed full-run artifact
-    # CORRECTNESS_full_r05.json (scripts/check_oracle.py --emit).
+    # FIRST ~50 entries.  The dict leads with the 18 names that no
+    # CORRECTNESS_r01..r05.json shows hash-green, followed by the names
+    # earlier driver runs already proved, in prior registration order.
+    # The full registry is pinned by the committed full-run artifact
+    # CORRECTNESS_full_r06.json (scripts/check_oracle.py --emit).
     return {
-        # --- new in round 5 (never checked by anything before this round) --
-        "ann_multiprobe_topk": _q_ann_multiprobe_topk,
-        "dedup_lsh_recall": _q_dedup_lsh_recall,
+        # --- never hash-green in a driver run (r01-r05) ---------------------
         "a17_group_kurtosis": _q_a17_group_kurtosis,
-        "g16_modularity": _q_g16_modularity,
-        "corpus_dsir": _q_corpus_dsir,
-        "text_bpe_pairs": _q_text_bpe_pairs,
-        "text_pmi_bigrams": _q_text_pmi_bigrams,
-        "w20_late_events": _q_w20_late_events,
-        "emb_power_iter": _q_emb_power_iter,
         "a18_group_corr": _q_a18_group_corr,
-        "corpus_bigram_logprob": _q_corpus_bigram_logprob,
-        "ann_filtered_topk": _q_ann_filtered_topk,
-        "ann_batch_topk": _q_ann_batch_topk,
+        "a9_pivot": _q_a9_pivot,
+        "f11_levenshtein": _q_f11_levenshtein,
+        "f5_json_payload": _q_f5_json_payload,
+        "a16_group_skewness": _q_a16_group_skewness,
+        "g9_assortativity": _q_g9_assortativity,
+        "g10_clustering_coeff": _q_g10_clustering,
+        "w8_transition_matrix": _q_w8_transition_matrix,
+        "stream_sessionize": _q_stream_sessionize,
+        "stream_kg_build": _q_stream_kg_build,
+        "stream_turn_counts": _q_stream_turn_counts,
+        "kg_build_incr": _q_kg_build_incr,
+        "kg_entities": _q_kg_entities,
+        "kg_entity_degrees": _q_kg_entity_degrees,
+        "kg_path2": _q_kg_path2,
+        "kg_triple_support": _q_kg_triple_support,
+        "kg_conflicts": _q_kg_conflicts,
+        # --- hash-green in a driver run -----------------------------------
+        "dedup_lsh_recall": _q_dedup_lsh_recall,
+        "g16_modularity": _q_g16_modularity,
+        "w20_late_events": _q_w20_late_events,
         "stream_dedup": _q_stream_dedup,
         "w22_ema": _q_w22_ema,
-        "ann_recall_curve": _q_ann_recall_curve,
         "a19_user_entropy": _q_a19_user_entropy,
-        # --- never driver-checked (rounds 1-4) — rotation lead block ----
         "w10_zscore_outliers": _q_w10_zscore_outliers,
-        "text_word_entropy": _q_text_word_entropy,
-        "corpus_length_hist": _q_corpus_length_hist,
         "kg_schema_induce": _q_kg_schema_induce,
         "kg_pred_cardinality": _q_kg_pred_cardinality,
         "kg_entity_cooccur": _q_kg_entity_cooccur,
@@ -3961,60 +2801,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t4_resample_gapfill": _q_t4_resample_gapfill,
         "dedup_minhash_incr": _q_dedup_incr,
         "dedup_minhash_groups": _q_dedup_groups,
-        "corpus_decon_overlap": _q_corpus_decon,
-        "corpus_boilerplate": _q_corpus_boilerplate,
-        "corpus_train_val_split": _q_corpus_split,
-        "corpus_tfidf_topk": _q_corpus_tfidf,
-        "corpus_pack_chunks": _q_corpus_pack,
-        "corpus_select": _q_corpus_select,
-        "corpus_unigram_logprob": _q_corpus_logprob,
-        "corpus_repetition": _q_corpus_repetition,
-        "corpus_mix_sample": _q_corpus_mix_sample,
-        "corpus_dupe_ngrams": _q_corpus_dupe_ngrams,
-        "corpus_quality_tiers": _q_corpus_quality_tiers,
-        "a9_pivot": _q_a9_pivot,
-        "emb_centroids": _q_emb_centroids,
-        "emb_quantize": _q_emb_quantize,
-        "f11_levenshtein": _q_f11_levenshtein,
-        "f5_json_payload": _q_f5_json_payload,
-        "text_pii_scrub": _q_text_pii_scrub,
-        "text_quality_logreg": _q_text_quality_logreg,
-        "ann_knn_graph": _q_ann_knn_graph,
-        "stream_sessionize": _q_stream_sessionize,
-        "stream_kg_build": _q_stream_kg_build,
-        "stream_turn_counts": _q_stream_turn_counts,
-        "kg_build_incr": _q_kg_build_incr,
-        "kg_entities": _q_kg_entities,
-        "kg_entity_degrees": _q_kg_entity_degrees,
-        "kg_path2": _q_kg_path2,
-        "kg_triple_support": _q_kg_triple_support,
-        "g9_assortativity": _q_g9_assortativity,
-        "corpus_ngram_novelty": _q_corpus_ngram_novelty,
-        "g10_clustering_coeff": _q_g10_clustering,
-        "ann_range_search": _q_ann_range_search,
-        "kg_conflicts": _q_kg_conflicts,
-        "w8_transition_matrix": _q_w8_transition_matrix,
-        "corpus_keep_best": _q_corpus_keep_best,
-        "text_readability": _q_text_readability,
-        # --- driver-green in r01-r04 (trailing block) -----------------------
-        "ann_rerank": _q_ann_rerank,
         "g13_linkpred_ra": _q_g13_linkpred_ra,
         "kg_neg_samples": _q_kg_neg_samples,
-        "corpus_chunk_windows": _q_corpus_chunk_windows,
-        "text_zipf_slope": _q_text_zipf_slope,
         "w19_attribution": _q_w19_attribution,
-        "ann_ivf_adc": _q_ann_ivf_adc,
-        "corpus_decon_bloom": _q_corpus_decon_bloom,
-        "emb_matryoshka": _q_emb_matryoshka,
         "g14_ppr": _q_g14_ppr,
-        "emb_kmeans_step": _q_emb_kmeans_step,
         "kg_rule_confidence": _q_kg_rule_confidence,
-        "a16_group_skewness": _q_a16_group_skewness,
         "g15_component_profile": _q_g15_component_profile,
-        "ann_lsh_recall": _q_ann_lsh_recall,
         "a15_bloom": _q_a15_bloom,
         "kg_star_join": _q_kg_star_join,
-        "ann_pq_adc": _q_ann_pq_adc,
         "w18_streaks": _q_w18_streaks,
         "t6_scd2": _q_t6_scd2,
         "w13_rolling_active": _q_w13_rolling_active,
@@ -4024,13 +2818,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_current_facts": _q_kg_current_facts,
         "g12_hits": _q_g12_hits,
         "kg_degree_hist": _q_kg_degree_hist,
-        "corpus_ccnet_cut": _q_corpus_ccnet_cut,
         "w15_interarrival": _q_w15_interarrival,
-        "corpus_decon_fuzzy": _q_corpus_decon_fuzzy,
-        "corpus_gopher_rules": _q_corpus_gopher_rules,
         "a13_mad": _q_a13_mad,
-        "corpus_dup_cluster_stats": _q_corpus_dup_cluster_stats,
-        "emb_pq_codes": _q_emb_pq_codes,
         "kg_alias_merge": _q_kg_alias_merge,
         "w16_gini": _q_w16_gini,
         "a14_countmin": _q_a14_countmin,
@@ -4040,12 +2829,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a11_approx_quantile": _q_a11_approx_quantile,
         "w9_peak_concurrency": _q_w9_peak_concurrency,
         "g11_edge_lift": _q_g11_edge_lift,
-        "corpus_containment": _q_corpus_containment,
         "kg_fact_recency": _q_kg_fact_recency,
-        "corpus_weighted_sample": _q_corpus_weighted_sample,
         "w11_week_over_week": _q_w11_week_over_week,
-        "emb_outliers": _q_emb_outliers,
-        "corpus_vocab_growth": _q_corpus_vocab_growth,
         "w12_time_to_convert": _q_w12_time_to_convert,
         "u3_except_intersect": _q_u3_except_intersect,
         "w1_turn_ordering": _q_w1,
@@ -4079,24 +2864,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "f2_list_csv": _q_f2,
         "f8_content_hash": _q_f8,
         "j8_constraint_check": _q_j8,
-        "text_token_stats": _q_text_stats,
-        "text_quality": _q_text_quality,
-        "text_langid": _q_text_langid,
-        "text_fingerprint": _q_text_fingerprint,
-        "ann_cosine_topk": _q_ann_topk,
-        "ann_lsh_buckets": _q_ann_lsh,
-        "ann_blocked_pairs": _q_ann_blocked,
-        "ann_ivf_topk": _q_ann_ivf,
         "kg_extract_raw": _q_kg_extract_raw,
         "kg_build_triples": _q_kg_build,
-        "mm_feature_extract": _q_mm_features,
         "j8b_kind_constraints": _q_j8b_kind_constraints,
         "j7_parent_walk": _q_parent_walk,
         "a1_order_sum": _q_order_sum,
         "a2_order_count": _q_order_count,
         "a4_map_merge": _q_a4_map_merge,
         "stream_ordered_release": _q_stream_ordered_release,
-        "mm_frame_sample": _q_mm_frame_sample,
         "g1_pagerank": _q_g1_pagerank,
     }
 
@@ -4318,46 +3093,6 @@ def oracle_sql() -> dict[str, str]:
     sql["stream_dedup"] = _SHINGLE_CTE + _minhash_oracle_body(
         "tok", "tok", round_digits=6
     )
-    # fuzzy decon = the SAME verified pair set, filtered to cross-split
-    # links — one source of truth with the dedup oracle
-    sql["corpus_decon_fuzzy"] = f"""
-        WITH p AS ({sql['dedup_minhash_lsh']})
-        SELECT CASE WHEN doc_b % {corpus.EVAL_MOD} = 0 THEN doc_a
-                    ELSE doc_b END AS train_doc,
-               CASE WHEN doc_b % {corpus.EVAL_MOD} = 0 THEN doc_b
-                    ELSE doc_a END AS eval_doc,
-               jaccard
-        FROM p
-        WHERE (doc_a % {corpus.EVAL_MOD} = 0) <> (doc_b % {corpus.EVAL_MOD} = 0)"""
-    sql["corpus_gopher_rules"] = """
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          FROM documents),
-        s AS (
-          SELECT doc_id, len(toks) AS n_tokens,
-                 CAST(list_aggregate(list_transform(toks, x -> length(x)),
-                                     'sum') AS DOUBLE) / len(toks) AS mwl,
-                 CAST(len(list_filter(toks,
-                        x -> x IN ('the', 'a', 'of', 'to', 'and')))
-                      AS DOUBLE) / len(toks) AS sf
-          FROM t),
-        f AS (
-          SELECT doc_id, n_tokens, mwl, sf,
-                 n_tokens >= 20 AS ok_len,
-                 mwl >= 4.0 AND mwl <= 5.0 AS ok_mwl,
-                 sf >= 0.03 AS ok_stop
-          FROM s)
-        SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-               floor((mwl) * 1000000.0 + 0.5) / 1000000.0 AS mean_word_len,
-               floor((sf) * 1000000.0 + 0.5) / 1000000.0 AS stop_frac,
-               ok_len AND ok_mwl AND ok_stop AS passed,
-               coalesce(array_to_string(list_filter(
-                 [CASE WHEN NOT ok_len THEN 'short' END,
-                  CASE WHEN NOT ok_mwl THEN 'wordlen' END,
-                  CASE WHEN NOT ok_stop THEN 'stopwords' END],
-                 x -> x IS NOT NULL), ','), '') AS fail_reasons
-        FROM f"""
     sql["dedup_simhash"] = (
         _TOK_CTE
         + f""",
@@ -4406,125 +3141,8 @@ def oracle_sql() -> dict[str, str]:
                CAST(sum(CASE WHEN lsh_found THEN 1 ELSE 0 END) OVER ()
                     AS BIGINT) * 5 >= count(*) OVER () * 4 AS recall_ok
         FROM h"""
-    sql["text_token_stats"] = """
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), x -> x <> '') AS toks,
-                 list_filter(
-                   string_split(
-                     regexp_replace(text, '([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]+)', '\\1' || chr(31), 'g'),
-                     chr(31)),
-                   x -> trim(x) <> '') AS subtoks
-          FROM documents)
-        SELECT doc_id,
-               len(toks) AS n_tokens,
-               len(list_distinct(toks)) AS n_distinct_tokens,
-               CAST(floor((list_aggregate(list_transform(toks, x -> length(x)), 'sum') * 1.0 / greatest(len(toks), 1)) * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS avg_token_len,
-               len(subtoks) AS n_subtokens
-        FROM t"""
-    stop_list = ", ".join(f"'{s}'" for s in text.STOPWORDS)
-    def _quality_select() -> str:
-        return f"""
-        WITH t AS (
-          SELECT doc_id, text,
-                 list_filter(string_split(text, ' '), x -> x <> '') AS toks,
-                 length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct
-          FROM documents),
-        m AS (
-          SELECT doc_id, text, n_punct,
-                 greatest(len(toks), 1) AS n_tok,
-                 len(list_filter(toks, x -> list_contains([{stop_list}], lower(x)))) AS n_stop
-          FROM t)
-        SELECT doc_id,
-               CAST(floor((n_stop * 1.0 / n_tok) * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS stopword_ratio,
-               CAST(floor((n_punct * 1.0 / greatest(length(text), 1)) * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS punct_ratio,
-               CAST(floor(((CASE WHEN length(text) BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + least(n_stop * 1.0 / n_tok, 0.3) + (CASE WHEN n_punct * 1.0 / greatest(length(text), 1) < 0.1 THEN 0.3 ELSE 0.0 END)) * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS quality
-        FROM m"""
 
-    sql["text_quality"] = _quality_select()
-    def _langid_select() -> str:
-        marker_cases = []
-        for i, lang in enumerate(sorted(text.LANG_MARKERS)):
-            arr = ", ".join(f"'{m}'" for m in text.LANG_MARKERS[lang])
-            marker_cases.append(
-                f"len(list_filter(toks, x -> list_contains([{arr}], x))) AS s_{lang}"
-            )
-        langs = sorted(text.LANG_MARKERS)
-        when_chain = " ".join(
-            f"WHEN s_{lang} = m THEN '{lang}'" for lang in langs[:-1]
-        )
-        return f"""
-            WITH t AS (
-              SELECT doc_id, text,
-                     list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-              FROM documents),
-            s AS (SELECT doc_id, text, {', '.join(marker_cases)} FROM t),
-            m AS (SELECT *, greatest({', '.join('s_' + la for la in langs)}) AS m FROM s)
-            SELECT doc_id,
-                   CASE WHEN regexp_matches(text, '[一-鿿]') THEN 'zh'
-                        WHEN m = 0 THEN 'und'
-                        {when_chain}
-                        ELSE '{langs[-1]}' END AS pred_lang
-            FROM m"""
 
-    sql["text_langid"] = _langid_select()
-    sql["corpus_select"] = f"""
-        WITH q AS ({_quality_select()}),
-        l AS ({_langid_select()}),
-        k AS (SELECT doc_id,
-                     CASE WHEN text IS NULL THEN doc_id
-                          ELSE min(doc_id) OVER (PARTITION BY text) END AS keeper_id
-              FROM documents)
-        SELECT d.doc_id, q.quality, l.pred_lang
-        FROM documents d
-        JOIN q USING (doc_id) JOIN l USING (doc_id) JOIN k USING (doc_id)
-        WHERE q.quality >= 0.5 AND l.pred_lang = 'en' AND d.doc_id = k.keeper_id"""
-    sql["text_fingerprint"] = """
-        WITH t AS (
-          SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          FROM documents),
-        e AS (
-          SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos
-          FROM t)
-        SELECT doc_id,
-               CAST(sum((pos * (((length(tok) * 131 + ascii(tok)) * 131 + ascii(reverse(tok)))
-                                % 1000000007)) % 1000000007)
-                    % 1000000007 AS BIGINT) AS fingerprint
-        FROM e GROUP BY doc_id"""
-    sql["ann_cosine_topk"] = """
-        WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        SELECT vec_id,
-               CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qe), 4) AS DOUBLE) AS cos_sim
-        FROM embeddings, q
-        ORDER BY cos_sim DESC, vec_id LIMIT 10"""
-    sql["ann_batch_topk"] = """
-        WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe
-                   FROM embeddings WHERE vec_id < 5),
-        scored AS (
-          SELECT q.q_id, e.vec_id,
-                 CAST(round(list_cosine_similarity(
-                        CAST(e.embedding AS DOUBLE[]), q.qe), 4) AS DOUBLE)
-                   AS cos_sim
-          FROM embeddings e CROSS JOIN q),
-        ranked AS (
-          SELECT q_id, vec_id, cos_sim,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY cos_sim DESC, vec_id ASC) AS rank
-          FROM scored)
-        SELECT q_id, rank, vec_id, cos_sim FROM ranked WHERE rank <= 3"""
-    sql["ann_filtered_topk"] = """
-        WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        SELECT vec_id,
-               CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qe), 4) AS DOUBLE) AS cos_sim
-        FROM embeddings, q
-        WHERE label % 3 = 0
-        ORDER BY cos_sim DESC, vec_id LIMIT 10"""
-    sql["ann_range_search"] = """
-        WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        SELECT vec_id,
-               CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qe), 4) AS DOUBLE) AS cos_sim
-        FROM embeddings, q
-        WHERE round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qe), 4) >= 0.2"""
     bucket_cte = f"""
         WITH e AS (
           SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
@@ -4540,7 +3158,6 @@ def oracle_sql() -> dict[str, str]:
           SELECT vec_id,
                  CAST(sum(CASE WHEN s >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
           FROM proj GROUP BY vec_id)"""
-    sql["ann_lsh_buckets"] = bucket_cte + "\nSELECT vec_id, bucket FROM buckets"
     sql["dedup_embedding_cosine"] = (
         bucket_cte
         + """
@@ -4553,24 +3170,6 @@ def oracle_sql() -> dict[str, str]:
         JOIN embeddings eb ON eb.vec_id = b.vec_id
         WHERE round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
                                            CAST(eb.embedding AS DOUBLE[])), 4) >= 0.35"""
-    )
-    sql["ann_knn_graph"] = (
-        bucket_cte
-        + """,
-        pairs AS (
-          SELECT a.vec_id AS src, b.vec_id AS dst,
-                 CAST(round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-                                                   CAST(eb.embedding AS DOUBLE[])), 4) AS DOUBLE) AS cos_sim
-          FROM buckets a
-          JOIN buckets b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-          JOIN embeddings ea ON ea.vec_id = a.vec_id
-          JOIN embeddings eb ON eb.vec_id = b.vec_id)
-        SELECT src, dst, cos_sim + 0.0 AS cos_sim FROM (
-          SELECT src, dst, cos_sim,
-                 row_number() OVER (PARTITION BY src
-                                    ORDER BY cos_sim DESC, dst ASC) AS rn
-          FROM pairs)
-        WHERE rn <= 5"""
     )
     sql["p5_property_presence"] = """
         SELECT event_id, event_type FROM events
@@ -4602,14 +3201,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT count(*) AS n_violations FROM edges e
         WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = e.subj)"""
     )
-    sql["ann_blocked_pairs"] = """
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               CAST(round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                                 CAST(b.embedding AS DOUBLE[])), 4) AS DOUBLE) AS cos_sim
-        FROM embeddings a
-        JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                           CAST(b.embedding AS DOUBLE[])), 4) >= 0.35"""
     subj_norm = NORM_SQL.format(col="c_name")
     obj_norm = NORM_SQL.format(col="n_name")
     sql["kg_extract_raw"] = f"""
@@ -4639,112 +3230,8 @@ def oracle_sql() -> dict[str, str]:
                'user' AS role,
                c_name || (CASE WHEN o_orderkey % 2 = 0 THEN ' works at ' ELSE ' visited ' END) || n_name AS text
         FROM t"""
-    sql["ann_ivf_topk"] = """
-        WITH cents AS (
-          SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
-          FROM embeddings WHERE vec_id < 8),
-        q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
-        assigned AS (
-          SELECT vec_id, embedding, cent_id FROM (
-            SELECT e.vec_id, e.embedding, c.cent_id,
-                   row_number() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec) DESC,
-                              c.cent_id) AS rk
-            FROM embeddings e CROSS JOIN cents c)
-          WHERE rk = 1),
-        probe AS (
-          SELECT cent_id FROM cents, q
-          ORDER BY list_cosine_similarity(cvec, qvec) DESC, cent_id LIMIT 2)
-        SELECT a.vec_id,
-               CAST(round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), q.qvec), 4) AS DOUBLE) AS cos_sim
-        FROM assigned a JOIN probe USING (cent_id), q
-        ORDER BY cos_sim DESC, a.vec_id LIMIT 10"""
-    _ivf_curve_cte = """
-        WITH cents AS (
-          SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
-          FROM embeddings WHERE vec_id < 8),
-        q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
-        assigned AS (
-          SELECT vec_id, embedding, cent_id FROM (
-            SELECT e.vec_id, e.embedding, c.cent_id,
-                   row_number() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec) DESC,
-                              c.cent_id) AS rk
-            FROM embeddings e CROSS JOIN cents c)
-          WHERE rk = 1),
-        exact10 AS (
-          SELECT vec_id FROM (
-            SELECT vec_id,
-                   CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qvec), 4) AS DOUBLE) AS cs
-            FROM embeddings, q ORDER BY cs DESC, vec_id LIMIT 10)),"""
 
-    def _ivf_curve_level(np_: int) -> str:
-        return f"""
-        probe{np_} AS (
-          SELECT cent_id FROM cents, q
-          ORDER BY list_cosine_similarity(cvec, qvec) DESC, cent_id LIMIT {np_}),
-        cand{np_} AS (
-          SELECT a.vec_id, a.embedding FROM assigned a JOIN probe{np_} USING (cent_id)),
-        top{np_} AS (
-          SELECT vec_id FROM (
-            SELECT c.vec_id,
-                   CAST(round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), q.qvec), 4) AS DOUBLE) AS cs
-            FROM cand{np_} c, q ORDER BY cs DESC, c.vec_id LIMIT 10))"""
 
-    sql["ann_recall_curve"] = (
-        _ivf_curve_cte
-        + ",".join(_ivf_curve_level(n) for n in (1, 2, 4))
-        + """
-        SELECT * FROM ("""
-        + " UNION ALL ".join(
-            f"""
-        SELECT {n} AS n_probe,
-               (SELECT count(*) FROM cand{n}) AS n_candidates,
-               (SELECT count(*) FROM top{n} t JOIN exact10 e USING (vec_id))
-                 AS n_hit"""
-            for n in (1, 2, 4)
-        )
-        + ")"
-    )
-    sql["ann_multiprobe_topk"] = """
-        WITH cents AS (
-          SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
-          FROM embeddings WHERE vec_id < 8),
-        q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
-        assigned AS (
-          SELECT vec_id, embedding, cent_id FROM (
-            SELECT e.vec_id, e.embedding, c.cent_id,
-                   row_number() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec) DESC,
-                              c.cent_id) AS rk
-            FROM embeddings e CROSS JOIN cents c)
-          WHERE rk = 1),
-        probe AS (
-          SELECT cent_id FROM cents, q
-          ORDER BY list_cosine_similarity(cvec, qvec) DESC, cent_id LIMIT 3),
-        top AS (
-          SELECT a.vec_id,
-                 CAST(round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), q.qvec), 4) AS DOUBLE) AS cos_sim
-          FROM assigned a JOIN probe USING (cent_id), q
-          ORDER BY cos_sim DESC, a.vec_id LIMIT 10),
-        ex AS (
-          SELECT vec_id FROM (
-            SELECT e.vec_id,
-                   round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qvec), 4) AS c
-            FROM embeddings e, q ORDER BY c DESC, e.vec_id LIMIT 10)),
-        h AS (
-          SELECT t.vec_id, t.cos_sim,
-                 EXISTS (SELECT 1 FROM ex WHERE ex.vec_id = t.vec_id) AS in_exact_topk
-          FROM top t)
-        SELECT vec_id, cos_sim, in_exact_topk,
-               CAST(sum(CASE WHEN in_exact_topk THEN 1 ELSE 0 END) OVER ()
-                    AS DOUBLE) / 10.0 AS recall_at_10,
-               (CAST(sum(CASE WHEN in_exact_topk THEN 1 ELSE 0 END) OVER ()
-                     AS DOUBLE) / 10.0) >= 0.8 AS recall_ok
-        FROM h"""
     # Flagship oracle.  At tau=0.95 on this norm population every verified
     # pair has IDENTICAL distinct-3-gram sets (checked empirically at sf0.001
     # and sf0.01: a one-gram difference over <=19-gram unions caps J at
@@ -5080,23 +3567,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT from_type, to_type, n,
                floor((n * 1.0 / sum(n) OVER (PARTITION BY from_type)) * 10000.0 + 0.5) / 10000.0 AS p
         FROM c"""
-    sql["text_readability"] = """
-        WITH t AS (
-          SELECT doc_id,
-                 greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS n_words,
-                 greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
-                 len(regexp_extract_all(lower(text), '[aeiou]+')) AS n_syllables
-          FROM documents)
-        SELECT doc_id,
-               CAST(n_words AS BIGINT) AS n_words,
-               CAST(n_sentences AS BIGINT) AS n_sentences,
-               CAST(n_syllables AS BIGINT) AS n_syllables,
-               -- floor-quantize (not round): see operators/text.py
-               -- readability — the 85.165 half-boundary knife edge
-               floor((206.835 - 1.015 * (n_words * 1.0 / n_sentences)
-                              - 84.6 * (n_syllables * 1.0 / n_words))
-                     * 100.0 + 0.5) / 100.0 AS flesch
-        FROM t"""
     sql["w7_retention_cohorts"] = """
         WITH f AS (SELECT user_id,
                           CAST(date_trunc('week', min(ts)) AS TIMESTAMP) AS cohort_week
@@ -5192,28 +3662,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT user_id,
                string_agg(event_type || '=' || props, ';' ORDER BY event_type) AS props_csv
         FROM firsts GROUP BY user_id"""
-    # mm_feature_extract IS oracle-checkable on this fixture: the payload is
-    # the utf-8 encoding of `text` (graft.documents_media), and sf0.01 text is
-    # pure ASCII (verified: octet_length(encode(text)) == length(text) for all
-    # rows), so byte values == character codes.  The real binary-decode path
-    # stays non-SQL (multimodal.decode_*); only the deterministic fixture is.
-    sql["mm_feature_extract"] = """
-        SELECT doc_id AS media_id,
-               CASE CAST(doc_id % 3 AS INT)
-                    WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video'
-               END AS modality,
-               CAST(length(text) AS BIGINT) AS n_bytes,
-               CAST(coalesce(list_aggregate(
-                      list_transform(string_split_regex(text, ''), c -> ascii(c)),
-                      'sum'), 0) % 4611686018427387904 AS BIGINT) AS checksum
-        FROM documents"""
-    # Spark: sequence(0, greatest(duration_ms-1, 0), 1000) — inclusive end;
-    # DuckDB range is exclusive-end, so range(0, max(duration, 1), 1000) is
-    # the exact equivalent (duration 0 still emits frame 0 on both engines).
-    sql["mm_frame_sample"] = """
-        SELECT doc_id AS media_id,
-               CAST(unnest(range(0, CASE WHEN n_chars * 10 > 1 THEN n_chars * 10 ELSE 1 END, 1000)) AS BIGINT) AS frame_ts_ms
-        FROM documents WHERE doc_id % 3 = 2"""
     # unrolled-CTE PageRank generated by the operator module itself, so the
     # iteration count / damping can never drift between the two engines
     from plume_spark.operators.pagerank import pagerank_oracle_sql
@@ -5240,51 +3688,6 @@ def oracle_sql() -> dict[str, str]:
            SELECT 1000000 + l_orderkey, 2000000 + l_partkey FROM lineitem""",
         n_iters=2,
     )
-    sql["corpus_repetition"] = """
-        WITH t AS (
-          SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          FROM documents),
-        g AS (
-          SELECT doc_id,
-                 list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-                                i -> toks[i] || ' ' || toks[i + 1]) AS grams
-          FROM t)
-        SELECT doc_id, len(grams) AS n_ngrams,
-               CASE WHEN len(grams) > 0
-                    THEN floor(((len(grams) - len(list_distinct(grams))) / CAST(len(grams) AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0
-                    ELSE 0.0 END AS rep_frac
-        FROM g"""
-    sql["corpus_unigram_logprob"] = """
-        WITH toks AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        tk AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
-        freq AS (SELECT tok, count(*) AS n_tok FROM tk GROUP BY tok),
-        tot AS (SELECT sum(n_tok) AS n_total FROM freq)
-        SELECT doc_id, count(*) AS n_tokens,
-               round(avg(ln(n_tok / CAST(n_total AS DOUBLE))), 6) AS avg_logprob
-        FROM tk JOIN freq USING (tok) CROSS JOIN tot
-        GROUP BY doc_id"""
-    sql["corpus_ccnet_cut"] = f"""
-        WITH lp AS ({sql['corpus_unigram_logprob']}),
-        thr AS (SELECT quantile_cont(avg_logprob, 0.25) AS p25,
-                       quantile_cont(avg_logprob, 0.75) AS p75 FROM lp),
-        b AS (SELECT lp.n_tokens, lp.avg_logprob,
-                     CASE WHEN avg_logprob <= p25 THEN 'tail'
-                          WHEN avg_logprob > p75 THEN 'head'
-                          ELSE 'middle' END AS bucket
-              FROM lp, thr)
-        SELECT bucket, count(*) AS n_docs,
-               CAST(sum(n_tokens) AS BIGINT) AS n_tokens_total,
-               floor((CAST(sum(CAST(avg_logprob AS DECIMAL(18,6))) AS DOUBLE)
-                     / count(*)) * 1000000.0 + 0.5) / 1000000.0 AS mean_logprob
-        FROM b GROUP BY bucket"""
-    sql["corpus_quality_tiers"] = f"""
-        WITH lp AS ({sql['corpus_unigram_logprob']})
-        SELECT CASE WHEN avg_logprob > -3.401 THEN 'head'
-                    WHEN avg_logprob > -3.404 THEN 'middle'
-                    ELSE 'tail' END AS tier,
-               count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens_total
-        FROM lp GROUP BY 1"""
     sql["f5_json_payload"] = """
         WITH j AS (SELECT event_id,
                           to_json(struct_pack(t := event_type, v := value)) AS doc
@@ -5299,37 +3702,6 @@ def oracle_sql() -> dict[str, str]:
         FROM customer a JOIN customer b
           ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
         WHERE levenshtein(a.c_name, b.c_name) <= 2"""
-    sql["emb_centroids"] = """
-        WITH d AS (SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        x AS (SELECT label, CAST(i - 1 AS INT) AS dim, e[i] AS v
-              FROM d, (SELECT unnest(range(1, (SELECT max(len(CAST(embedding AS DOUBLE[]))) + 1 FROM embeddings))) AS i)
-              WHERE i <= len(e))
-        SELECT label, dim,
-               round(CAST(sum(CAST(v AS DECIMAL(27,12))) / count(*) AS DOUBLE), 6)
-                 AS centroid,
-               count(*) AS n_vecs
-        FROM x GROUP BY label, dim"""
-    sql["emb_outliers"] = """
-        WITH d AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-                   FROM embeddings),
-        x AS (SELECT vec_id, label, CAST(i - 1 AS INT) AS dim, e[i] AS v
-              FROM d, (SELECT unnest(range(1, (SELECT max(len(CAST(embedding AS DOUBLE[]))) + 1 FROM embeddings))) AS i)
-              WHERE i <= len(e)),
-        cent AS (SELECT label, dim,
-                        round(CAST(sum(CAST(v AS DECIMAL(27,12))) / count(*)
-                                   AS DOUBLE), 6) AS c
-                 FROM x GROUP BY label, dim),
-        sq AS (SELECT x.vec_id, x.label,
-                      CAST((x.v - cent.c) * (x.v - cent.c) AS DECIMAL(38,18)) AS sq
-               FROM x JOIN cent ON cent.label = x.label AND cent.dim = x.dim),
-        d2 AS (SELECT vec_id, label, CAST(sum(sq) AS DOUBLE) AS d2x
-               FROM sq GROUP BY vec_id, label),
-        r AS (SELECT label, vec_id, d2x,
-                     row_number() OVER (PARTITION BY label
-                                        ORDER BY d2x DESC, vec_id ASC) AS rank
-              FROM d2)
-        SELECT label, vec_id, CAST(floor((d2x) * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE) AS dist2, rank
-        FROM r WHERE rank <= 10"""
     sql["w4_sliding_rate"] = """
         SELECT event_id, user_id,
                count(*) OVER (PARTITION BY user_id ORDER BY epoch(ts)
@@ -5473,32 +3845,6 @@ def oracle_sql() -> dict[str, str]:
                   GROUP BY sx.user_id, sx.session_idx)
             SELECT s_start, s_end FROM s"""
     )
-    sql["text_word_entropy"] = """
-        WITH toks AS (
-          SELECT doc_id, t AS tok
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents)
-          WHERE t <> ''),
-        cnt AS (SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok)
-        SELECT doc_id,
-               CAST(sum(c) AS BIGINT) AS n_tokens,
-               CAST(count(*) AS BIGINT) AS n_distinct_tokens,
-               CAST(round(ln(sum(c)) - sum(c * ln(c)) / sum(c), 6) AS DOUBLE)
-                 AS entropy
-        FROM cnt GROUP BY doc_id"""
-    sql["corpus_length_hist"] = """
-        WITH a AS (
-          SELECT source AS grp, coalesce(n_chars, 0) AS len,
-                 CASE WHEN coalesce(n_chars, 0) > 0
-                      THEN CAST(length(bin(coalesce(n_chars, 0))) AS INT)
-                      ELSE 0 END AS bucket
-          FROM documents),
-        g AS (SELECT grp, bucket, count(*) AS n_docs, sum(len) AS total_chars
-              FROM a GROUP BY grp, bucket)
-        SELECT grp, bucket, n_docs, CAST(total_chars AS BIGINT) AS total_chars,
-               CAST(floor((n_docs * 1.0 / sum(n_docs) OVER (PARTITION BY grp)) * 1000000.0 + 0.5) / 1000000.0
-                    AS DOUBLE) AS share
-        FROM g"""
     from plume_spark.operators.graph_metrics import triangle_oracle_sql
 
     sql["g3_triangles"] = triangle_oracle_sql(
@@ -5626,39 +3972,6 @@ def oracle_sql() -> dict[str, str]:
         node_col="doc_id",
         comp_col="keeper_id",
     )
-    # cluster-size profile over the SAME component assignment
-    sql["corpus_dup_cluster_stats"] = f"""
-        WITH g AS ({sql['dedup_minhash_groups']}),
-        sz AS (SELECT keeper_id, count(*) AS cluster_size FROM g
-               GROUP BY keeper_id)
-        SELECT cluster_size, count(*) AS n_clusters,
-               CAST(count(*) * cluster_size AS BIGINT) AS n_docs
-        FROM sz GROUP BY cluster_size"""
-    sql["emb_pq_codes"] = """
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                   FROM embeddings),
-        cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < 8),
-        sub AS (
-          SELECT e.vec_id, js.j, cents.cent_id,
-                 list_aggregate(list_transform(range(1, 17),
-                   i -> (e.v[js.j * 16 + i] - cents.cvec[js.j * 16 + i])
-                      * (e.v[js.j * 16 + i] - cents.cvec[js.j * 16 + i])),
-                   'sum') AS d
-          FROM e
-          CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-          CROSS JOIN cents),
-        best AS (
-          SELECT vec_id, j, cent_id, d,
-                 row_number() OVER (PARTITION BY vec_id, j
-                                    ORDER BY d ASC, cent_id ASC) AS rk
-          FROM sub)
-        SELECT vec_id,
-               max(CASE WHEN j = 0 THEN cent_id END) AS code_0,
-               max(CASE WHEN j = 1 THEN cent_id END) AS code_1,
-               max(CASE WHEN j = 2 THEN cent_id END) AS code_2,
-               max(CASE WHEN j = 3 THEN cent_id END) AS code_3,
-               floor((max(CASE WHEN j = 0 THEN d END) + max(CASE WHEN j = 1 THEN d END) + max(CASE WHEN j = 2 THEN d END) + max(CASE WHEN j = 3 THEN d END)) * 1000000.0 + 0.5) / 1000000.0 AS qerr
-        FROM best WHERE rk = 1 GROUP BY vec_id"""
     # CMS oracle generated from the SAME geometry constants as the query
     _cms_b = " UNION ALL ".join(
         f"SELECT user_id, {j} AS j, ((user_id * {a} + {b}) % {CMS_P}) % {CMS_W} AS bucket FROM events"
@@ -5710,22 +4023,6 @@ def oracle_sql() -> dict[str, str]:
                round(quantile_cont(abs(e.value - med.med), 0.5), 6) AS mad
         FROM events e JOIN med ON med.event_type = e.event_type
         GROUP BY e.event_type"""
-    # canonical-doc selection: the cluster oracle above joined to the
-    # quality oracle, best (quality DESC, doc_id ASC) member per cluster —
-    # pure composition of the two already-checked derivations
-    sql["corpus_keep_best"] = f"""
-        WITH comp AS (SELECT * FROM ({sql['dedup_minhash_groups']}) c),
-        q AS (SELECT doc_id, quality FROM ({_quality_select()}) qq),
-        m AS (SELECT c.keeper_id, c.doc_id, q.quality
-              FROM comp c JOIN q ON q.doc_id = c.doc_id),
-        r AS (SELECT keeper_id, doc_id, quality,
-                     row_number() OVER (PARTITION BY keeper_id
-                                        ORDER BY quality DESC, doc_id ASC) AS rn,
-                     count(*) OVER (PARTITION BY keeper_id) AS n_members
-              FROM m)
-        SELECT keeper_id, doc_id AS best_doc, quality AS best_quality,
-               CAST(n_members AS BIGINT) AS n_members
-        FROM r WHERE rn = 1"""
     # incremental near-dup: identical banding/cap/star pipeline to
     # dedup_minhash_lsh, restricted to pairs touching the "new batch"
     # (doc_id % 4 == 0) and verified over token-id sets (the engine's
@@ -5733,148 +4030,6 @@ def oracle_sql() -> dict[str, str]:
     sql["dedup_minhash_incr"] = _SHINGLE_CTE + _minhash_oracle_body(
         "idd", "tok_id", pair_where="WHERE doc_a % 4 = 0 OR doc_b % 4 = 0"
     )
-    # word-5-gram shingle CTE over documents (decontamination unit)
-    gram5 = """
-        WITH g AS (
-          SELECT DISTINCT doc_id,
-                 toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                 toks[i+3] || ' ' || toks[i+4] AS tok
-          FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                FROM documents
-                WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 5),
-               (SELECT unnest(range(1, (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) + 1 FROM documents))) AS i)
-          WHERE i <= len(toks) - 4)
-    """
-    sql["corpus_decon_overlap"] = (
-        gram5
-        + f""",
-        eg AS (SELECT DISTINCT tok FROM g WHERE doc_id % {corpus.EVAL_MOD} = 0),
-        tg AS (SELECT doc_id, tok FROM g WHERE doc_id % {corpus.EVAL_MOD} <> 0),
-        sizes AS (SELECT doc_id, count(*) AS n_grams FROM tg GROUP BY doc_id),
-        hits AS (SELECT doc_id, count(*) AS n_overlap
-                 FROM tg JOIN eg USING (tok) GROUP BY doc_id)
-        SELECT h.doc_id, s.n_grams, h.n_overlap,
-               floor((h.n_overlap / CAST(s.n_grams AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0 AS overlap_frac
-        FROM hits h JOIN sizes s USING (doc_id)"""
-    )
-    sql["corpus_mix_sample"] = f"""
-        WITH r AS (SELECT source,
-                          (CAST(substr(source, 4, 10) AS INT) % 4 + 1) * 0.25 AS rate
-                   FROM (SELECT DISTINCT source FROM documents))
-        SELECT d.doc_id, d.source
-        FROM documents d JOIN r USING (source)
-        WHERE ((d.doc_id % {corpus.MIX_P}) * {corpus.MIX_A} + {corpus.MIX_B})
-                % {corpus.MIX_P} < r.rate * {corpus.MIX_P}"""
-    sql["corpus_vocab_growth"] = """
-        WITH toks AS (
-          SELECT doc_id, t AS tok
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                FROM documents)
-          WHERE t <> ''),
-        first AS (SELECT tok, min(doc_id) AS doc_id FROM toks GROUP BY tok),
-        news AS (SELECT doc_id, count(*) AS n_new_tokens FROM first GROUP BY doc_id),
-        alldocs AS (SELECT DISTINCT doc_id FROM documents),
-        nd AS (SELECT a.doc_id, coalesce(n.n_new_tokens, 0) AS n_new_tokens
-               FROM alldocs a LEFT JOIN news n USING (doc_id))
-        SELECT doc_id, CAST(n_new_tokens AS BIGINT) AS n_new_tokens,
-               CAST(sum(n_new_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS vocab_size
-        FROM nd"""
-    sql["corpus_containment"] = """
-        WITH g AS (
-          SELECT DISTINCT doc_id,
-                 toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                 toks[i+3] || ' ' || toks[i+4] AS tok
-          FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                FROM documents
-                WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 5),
-               (SELECT unnest(range(1, (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) + 1 FROM documents))) AS i)
-          WHERE i <= len(toks) - 4),
-        rare AS (SELECT tok FROM (SELECT tok, count(*) AS dfc FROM g GROUP BY tok)
-                 WHERE dfc <= 64),
-        gg AS (SELECT g.doc_id, g.tok FROM g JOIN rare USING (tok)),
-        sizes AS (SELECT doc_id, count(*) AS n_grams_a FROM gg GROUP BY doc_id),
-        p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-              FROM gg a JOIN gg b ON a.tok = b.tok AND a.doc_id <> b.doc_id
-              GROUP BY a.doc_id, b.doc_id)
-        SELECT p.doc_a, p.doc_b, s.n_grams_a, p.n_common,
-               CAST(floor((p.n_common / CAST(s.n_grams_a AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE)
-                 AS containment
-        FROM p JOIN sizes s ON s.doc_id = p.doc_a
-        WHERE p.n_common >= 0.5 * s.n_grams_a"""
-    sql["corpus_dupe_ngrams"] = """
-        WITH g AS (
-          SELECT DISTINCT doc_id,
-                 toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                 toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' ||
-                 toks[i+6] || ' ' || toks[i+7] AS tok
-          FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                FROM documents
-                WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 8),
-               (SELECT unnest(range(1, (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) + 1 FROM documents))) AS i)
-          WHERE i <= len(toks) - 7),
-        gdf AS (SELECT tok, count(*) AS n_docs FROM g GROUP BY tok)
-        SELECT doc_id, count(*) AS n_ngrams,
-               floor((sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0 AS dup_frac
-        FROM g JOIN gdf USING (tok) GROUP BY doc_id"""
-    # novelty shares dupe_ngrams' gram CTE; first occurrence = min doc_id
-    sql["corpus_ngram_novelty"] = """
-        WITH g AS (
-          SELECT DISTINCT doc_id,
-                 toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' ||
-                 toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' ||
-                 toks[i+6] || ' ' || toks[i+7] AS tok
-          FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                FROM documents
-                WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 8),
-               (SELECT unnest(range(1, (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) + 1 FROM documents))) AS i)
-          WHERE i <= len(toks) - 7),
-        gmin AS (SELECT tok, min(doc_id) AS first_doc FROM g GROUP BY tok)
-        SELECT doc_id, count(*) AS n_ngrams,
-               CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-               floor((sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0 AS novelty_frac
-        FROM g JOIN gmin USING (tok) GROUP BY doc_id"""
-    from plume_spark.operators.text import PII_DIGITS, PII_EMAIL
-
-    sql["text_pii_scrub"] = f"""
-        WITH w AS (SELECT doc_id,
-                     text || ' contact user' || CAST(doc_id AS VARCHAR)
-                          || '@mail.example.org or ref '
-                          || CAST(doc_id * 7919 + 100000 AS VARCHAR) AS text
-                   FROM documents),
-        s1 AS (SELECT doc_id, text,
-                      regexp_replace(text, '{PII_EMAIL}', '<EMAIL>', 'g') AS t1
-               FROM w)
-        SELECT doc_id,
-               regexp_replace(t1, '{PII_DIGITS}', '<NUM>', 'g') AS text,
-               CAST((len(string_split_regex(text, '{PII_EMAIL}')) - 1)
-                  + (len(string_split_regex(t1, '{PII_DIGITS}')) - 1) AS BIGINT)
-                 AS n_redactions
-        FROM s1"""
-    from plume_spark.operators.text import LOGREG_BIAS, LOGREG_W, STOPWORDS
-
-    _stoplist = ", ".join(f"'{s}'" for s in STOPWORDS)
-    sql["text_quality_logreg"] = f"""
-        WITH t AS (SELECT doc_id, text,
-                          list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                   FROM documents),
-        f AS (SELECT doc_id,
-                     least(length(text) / 500.0, 1.0) AS f_len,
-                     len(list_filter(toks, x -> x IN ({_stoplist})))
-                       / CAST(greatest(len(toks), 1) AS DOUBLE) AS f_stop,
-                     coalesce(list_sum(list_transform(toks, x -> length(x))), 0)
-                       / CAST(greatest(len(toks), 1) AS DOUBLE) / 10.0 AS f_word
-              FROM t)
-        SELECT doc_id,
-               floor((f_len) * 1000000.0 + 0.5) / 1000000.0 AS f_len,
-               floor((f_stop) * 1000000.0 + 0.5) / 1000000.0 AS f_stop,
-               floor((f_word) * 1000000.0 + 0.5) / 1000000.0 AS f_word,
-               round(1.0 / (1.0 + exp(-({LOGREG_BIAS}
-                     + {LOGREG_W['f_len']} * f_len
-                     + {LOGREG_W['f_stop']} * f_stop
-                     + {LOGREG_W['f_word']} * f_word))), 6) AS score
-        FROM f"""
     sql["stream_sessionize"] = """
         SELECT event_id, user_id,
                CAST(sum(new_sess) OVER (PARTITION BY user_id
@@ -5918,88 +4073,6 @@ def oracle_sql() -> dict[str, str]:
                min(value) AS v_low,
                max(CASE WHEN rd = 1 THEN value END) AS v_close
         FROM r GROUP BY user_id, bucket_ts"""
-    sql["emb_quantize"] = """
-        WITH d AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        s AS (SELECT vec_id, e,
-                     list_max(list_transform(e, x -> abs(x))) AS scale
-              FROM d)
-        SELECT vec_id, round(scale, 6) AS scale,
-               CASE WHEN scale = 0 THEN list_transform(e, x -> 0)
-                    ELSE list_transform(e, x -> CAST(floor(x / scale * 127.0) AS INT))
-               END AS q
-        FROM s"""
-    sql["corpus_boilerplate"] = """
-        WITH sh AS (
-          SELECT DISTINCT doc_id,
-                 toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS tok
-          FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                FROM documents
-                WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 3),
-               (SELECT unnest(range(1, (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) + 1 FROM documents))) AS i)
-          WHERE i <= len(toks) - 2),
-        common AS (SELECT tok FROM (SELECT tok, count(*) AS c FROM sh GROUP BY tok)
-                   WHERE c >= 10),
-        marked AS (SELECT doc_id, count(*) AS n_common
-                   FROM sh JOIN common USING (tok) GROUP BY doc_id),
-        sizes AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY doc_id)
-        SELECT s.doc_id, s.n_shingles,
-               coalesce(m.n_common, 0) AS n_common,
-               floor((coalesce(m.n_common, 0) / CAST(s.n_shingles AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0
-                 AS boilerplate_frac
-        FROM sizes s LEFT JOIN marked m USING (doc_id)"""
-    _poly_docid = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(string_split_regex(CAST(doc_id AS VARCHAR), ''), c -> ascii(c))), "
-        f"(a, b) -> (a * {dedup.POLY_MUL} + b) % {dedup.MINHASH_P})"
-    )
-    sql["corpus_train_val_split"] = f"""
-        SELECT doc_id, bucket,
-               CASE WHEN bucket < 10 THEN 'val' ELSE 'train' END AS split
-        FROM (SELECT doc_id, CAST({_poly_docid} % 100 AS INT) AS bucket
-              FROM documents)"""
-    sql["corpus_weighted_sample"] = f"""
-        WITH keyed AS (
-          SELECT source AS grp, doc_id,
-                 greatest(CAST(n_chars AS DOUBLE), 1.0) AS w,
-                 ln((({_poly_docid} % 1048576) + 1) / 1048577.0)
-                   / greatest(CAST(n_chars AS DOUBLE), 1.0) AS k
-          FROM documents),
-        ranked AS (
-          SELECT grp, doc_id, w, k,
-                 row_number() OVER (PARTITION BY grp
-                                    ORDER BY k DESC, doc_id ASC) AS rank
-          FROM keyed)
-        SELECT grp, doc_id, CAST(w AS BIGINT) AS w,
-               CAST(round(k, 9) AS DOUBLE) AS samp_key, rank
-        FROM ranked WHERE rank <= 20"""
-    sql["corpus_tfidf_topk"] = """
-        WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-                      FROM documents),
-        tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks
-               WHERE tok <> '' GROUP BY doc_id, tok),
-        dfreq AS (SELECT tok, count(*) AS df_docs FROM tf GROUP BY tok),
-        n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-        SELECT doc_id, tok, tf, df_docs,
-               round(tf * ln(n_docs / CAST(df_docs AS DOUBLE)), 6) AS score
-        FROM (SELECT tf.*, dfreq.df_docs, n.n_docs,
-                     row_number() OVER (PARTITION BY doc_id
-                       ORDER BY tf DESC, df_docs ASC, tok ASC) AS rnk
-              FROM tf JOIN dfreq USING (tok) CROSS JOIN n)
-        WHERE rnk <= 3"""
-    sql["corpus_pack_chunks"] = f"""
-        WITH base AS (
-          SELECT doc_id,
-                 CAST({_poly_docid} % 8 AS INT) AS shard,
-                 len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tokens
-          FROM documents),
-        offs AS (
-          SELECT doc_id, shard,
-                 CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                   AS tok_offset
-          FROM base)
-        SELECT doc_id, shard, tok_offset,
-               CAST(tok_offset // 256 AS BIGINT) AS chunk FROM offs"""
     sql["w18_streaks"] = """
         WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
                       FROM events),
@@ -6064,38 +4137,6 @@ def oracle_sql() -> dict[str, str]:
                v.obj_name AS visited_place
         FROM d w JOIN d v ON v.subj_name = w.subj_name AND v.pred = 'visited'
         WHERE w.pred = 'works_at'"""
-    # ADC lookup-table oracle: one column per sub-space, same fixed-order
-    # 16-dim fold as the emb_pq_codes oracle it composes with
-    _adc_d = ", ".join(
-        "list_aggregate(list_transform(range(1, 17), "
-        f"i -> (q.qvec[{j} * 16 + i] - cents.cvec[{j} * 16 + i])"
-        f" * (q.qvec[{j} * 16 + i] - cents.cvec[{j} * 16 + i])), 'sum') AS d{j}"
-        for j in range(4)
-    )
-    sql["ann_pq_adc"] = f"""
-        WITH codes AS ({sql['emb_pq_codes']}),
-        e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < 8),
-        q AS (SELECT v AS qvec FROM e WHERE vec_id = 9),
-        lut AS (SELECT cent_id, {_adc_d} FROM cents CROSS JOIN q)
-        SELECT c.vec_id,
-               floor((l0.d0 + l1.d1 + l2.d2 + l3.d3) * 1000000.0 + 0.5) / 1000000.0 AS adc_dist
-        FROM codes c
-        JOIN lut l0 ON l0.cent_id = c.code_0
-        JOIN lut l1 ON l1.cent_id = c.code_1
-        JOIN lut l2 ON l2.cent_id = c.code_2
-        JOIN lut l3 ON l3.cent_id = c.code_3
-        ORDER BY adc_dist ASC, c.vec_id ASC LIMIT 20"""
-    sql["ann_rerank"] = f"""
-        WITH adc AS ({sql['ann_pq_adc']}),
-        q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-              WHERE vec_id = 9)
-        SELECT a.vec_id, a.adc_dist,
-               CAST(round(list_cosine_similarity(
-                      CAST(e.embedding AS DOUBLE[]), q.qe), 4) AS DOUBLE)
-                 AS cos_sim
-        FROM adc a JOIN embeddings e ON e.vec_id = a.vec_id, q
-        ORDER BY cos_sim DESC, a.vec_id ASC LIMIT 5"""
 
     # portable poly hash over an arbitrary string SQL expression — the same
     # fold as dedup.poly_hash / _POLY_ID, parameterized for reuse below
@@ -6127,41 +4168,6 @@ def oracle_sql() -> dict[str, str]:
                           WHERE t.subj_name = pk.subj_name
                             AND t.pred = pk.pred
                             AND t.obj_name = pk.neg_obj)"""
-    sql["corpus_chunk_windows"] = f"""
-        WITH tk AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), x -> x <> '') AS toks
-          FROM documents),
-        nn AS (SELECT doc_id, toks, len(toks) AS n FROM tk WHERE len(toks) > 0),
-        ix AS (SELECT doc_id, toks,
-                      unnest(range(0, ((n - 1) // 48) + 1)) AS chunk_idx
-               FROM nn),
-        ch AS (SELECT doc_id, chunk_idx,
-                      toks[(chunk_idx * 48 + 1):(chunk_idx * 48 + 64)] AS chunk
-               FROM ix)
-        SELECT doc_id, chunk_idx, len(chunk) AS n_tokens,
-               sha256(array_to_string(chunk, ' ')) AS chunk_fp
-        FROM ch"""
-    sql["text_zipf_slope"] = """
-        WITH tok AS (
-          SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents),
-        freq AS (SELECT source, tok, count(*) AS freq FROM tok
-                 WHERE tok <> '' GROUP BY source, tok),
-        top AS (SELECT source, freq,
-                       row_number() OVER (PARTITION BY source
-                                          ORDER BY freq DESC, tok ASC) AS rank
-                FROM freq QUALIFY rank <= 100),
-        m AS (SELECT source, count(*) AS n_ranks,
-                     sum(ln(CAST(rank AS DOUBLE))) AS sx,
-                     sum(ln(CAST(freq AS DOUBLE))) AS sy,
-                     sum(ln(CAST(rank AS DOUBLE)) * ln(CAST(freq AS DOUBLE))) AS sxy,
-                     sum(ln(CAST(rank AS DOUBLE)) * ln(CAST(rank AS DOUBLE))) AS sxx
-              FROM top GROUP BY source)
-        SELECT source, n_ranks,
-               CAST(round((n_ranks * sxy - sx * sy)
-                          / NULLIF(n_ranks * sxx - sx * sx, 0), 6) AS DOUBLE)
-                 AS zipf_slope
-        FROM m"""
     sql["w19_attribution"] = """
         WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts
                    FROM events WHERE event_type = 'purchase'),
@@ -6172,112 +4178,6 @@ def oracle_sql() -> dict[str, str]:
         FROM p JOIN v ON v.user_id = p.user_id
          AND v.v_ts <= p.p_ts AND v.v_ts >= p.p_ts - INTERVAL 7 DAY
         GROUP BY p.purchase_id"""
-    # IVF-PQ composition: the ann_ivf_topk assignment/probe CTEs (query
-    # vec 9) feed the ann_pq_adc LUT — _adc_d reused verbatim (same q/cents
-    # aliases), so the two oracles cannot drift apart
-    sql["ann_ivf_adc"] = f"""
-        WITH codes AS ({sql['emb_pq_codes']}),
-        e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < 8),
-        q AS (SELECT v AS qvec FROM e WHERE vec_id = 9),
-        assigned AS (
-          SELECT vec_id, cent_id FROM (
-            SELECT e.vec_id, c.cent_id,
-                   row_number() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.v, c.cvec) DESC,
-                              c.cent_id) AS rk
-            FROM e CROSS JOIN cents c)
-          WHERE rk = 1),
-        probe AS (
-          SELECT cent_id FROM cents, q
-          ORDER BY list_cosine_similarity(cvec, qvec) DESC, cent_id LIMIT 2),
-        lut AS (SELECT cent_id AS lut_cent, {_adc_d} FROM cents CROSS JOIN q),
-        m AS (SELECT a.vec_id, a.cent_id
-              FROM assigned a JOIN probe p USING (cent_id))
-        SELECT m.vec_id, m.cent_id,
-               floor((l0.d0 + l1.d1 + l2.d2 + l3.d3) * 1000000.0 + 0.5) / 1000000.0 AS adc_dist
-        FROM m JOIN codes c ON c.vec_id = m.vec_id
-        JOIN lut l0 ON l0.lut_cent = c.code_0
-        JOIN lut l1 ON l1.lut_cent = c.code_1
-        JOIN lut l2 ON l2.lut_cent = c.code_2
-        JOIN lut l3 ON l3.lut_cent = c.code_3
-        ORDER BY adc_dist ASC, m.vec_id ASC LIMIT 10"""
-    _eval_bits = " UNION ALL ".join(
-        f"SELECT ((gid * {a} + {b}) % {CMS_P}) % {BLOOM_M} AS bit FROM egid"
-        for a, b in CMS_SALTS
-    )
-    sql["corpus_decon_bloom"] = (
-        gram5
-        + f""",
-        eg AS (SELECT DISTINCT tok FROM g WHERE doc_id % {corpus.EVAL_MOD} = 0),
-        tg AS (SELECT doc_id, tok FROM g WHERE doc_id % {corpus.EVAL_MOD} <> 0),
-        egid AS (SELECT CAST('0x' || substr(sha256(tok), 1, 12) AS BIGINT)
-                          % {CMS_P} AS gid FROM eg),
-        bits AS (SELECT DISTINCT bit FROM ({_eval_bits})),
-        tgid AS (SELECT doc_id, tok,
-                        CAST('0x' || substr(sha256(tok), 1, 12) AS BIGINT)
-                          % {CMS_P} AS gid FROM tg),
-        tbits AS (
-          SELECT doc_id, tok, bit FROM (
-            {" UNION ALL ".join(
-                f"SELECT doc_id, tok, ((gid * {a} + {b}) % {CMS_P}) % {BLOOM_M}"
-                f" AS bit FROM tgid" for a, b in CMS_SALTS)})),
-        kh AS (SELECT doc_id, tok, count(*) AS k
-               FROM tbits JOIN bits USING (bit) GROUP BY doc_id, tok),
-        fl AS (SELECT t.doc_id,
-                      CASE WHEN coalesce(kh.k, 0) = {len(CMS_SALTS)}
-                           THEN 1 ELSE 0 END AS bpos,
-                      CASE WHEN eg.tok IS NOT NULL THEN 1 ELSE 0 END AS exact
-               FROM tg t
-               LEFT JOIN kh ON kh.doc_id = t.doc_id AND kh.tok = t.tok
-               LEFT JOIN eg ON eg.tok = t.tok)
-        SELECT doc_id, count(*) AS n_grams,
-               CAST(sum(bpos) AS BIGINT) AS n_bloom_hits,
-               CAST(sum(exact) AS BIGINT) AS n_exact,
-               min(CASE WHEN bpos >= exact THEN 1 ELSE 0 END) = 1 AS no_false_neg
-        FROM fl GROUP BY doc_id"""
-    )
-    sql["emb_matryoshka"] = """
-        WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-                   WHERE vec_id = 0),
-        tr AS (SELECT vec_id,
-                      CAST(round(list_cosine_similarity(
-                             CAST(embedding AS DOUBLE[])[1:16], q.qe[1:16]), 4)
-                        AS DOUBLE) AS trunc_cos
-               FROM embeddings, q
-               ORDER BY trunc_cos DESC, vec_id LIMIT 10),
-        fl AS (SELECT vec_id FROM (
-                 SELECT vec_id,
-                        round(list_cosine_similarity(
-                          CAST(embedding AS DOUBLE[]), q.qe), 4) AS c
-                 FROM embeddings, q ORDER BY c DESC, vec_id LIMIT 10))
-        SELECT t.vec_id, t.trunc_cos,
-               EXISTS (SELECT 1 FROM fl WHERE fl.vec_id = t.vec_id)
-                 AS in_full_topk
-        FROM tr t"""
-    sql["emb_kmeans_step"] = """
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                   FROM embeddings),
-        cents AS (SELECT vec_id AS cent_id, v AS cvec FROM e WHERE vec_id < 8),
-        assigned AS (
-          SELECT vec_id, v, cent_id FROM (
-            SELECT e.vec_id, e.v, c.cent_id,
-                   row_number() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_cosine_similarity(e.v, c.cvec) DESC,
-                              c.cent_id) AS rk
-            FROM e CROSS JOIN cents c)
-          WHERE rk = 1),
-        x AS (SELECT cent_id, CAST(i - 1 AS INT) AS dim, v[i] AS val
-              FROM assigned,
-                   (SELECT unnest(range(1, (SELECT max(len(v)) + 1 FROM e))) AS i)
-              WHERE i <= len(v))
-        SELECT cent_id, dim,
-               round(CAST(sum(CAST(val AS DECIMAL(27,12))) / count(*) AS DOUBLE), 6)
-                 AS centroid,
-               count(*) AS n_members
-        FROM x GROUP BY cent_id, dim"""
     sql["kg_rule_confidence"] = f"""
         WITH kg AS ({kg_varied}),
         d AS (SELECT DISTINCT subj_name, pred, obj_name FROM kg),
@@ -6378,50 +4278,6 @@ def oracle_sql() -> dict[str, str]:
                               AS BIGINT)
                END AS kurt_e4
         FROM z"""
-    sql["corpus_dsir"] = """
-        WITH toks AS (
-          SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
-          FROM documents),
-        tk AS (SELECT doc_id, source, tok FROM toks WHERE tok <> ''),
-        raw AS (SELECT tok, count(*) AS c_r FROM tk GROUP BY tok),
-        tgt AS (SELECT tok, count(*) AS c_t FROM tk
-                WHERE source IN ('src0') GROUP BY tok),
-        stats AS (SELECT raw.tok, raw.c_r, coalesce(tgt.c_t, 0) AS c_t
-                  FROM raw LEFT JOIN tgt ON tgt.tok = raw.tok),
-        tot AS (SELECT sum(c_r) AS n_raw, sum(c_t) AS n_tgt,
-                       count(*) AS v
-                FROM stats)
-        SELECT doc_id, count(*) AS n_tokens,
-               round(avg(ln(CAST(c_t + 1 AS DOUBLE)
-                              / CAST(n_tgt + v AS DOUBLE))
-                         - ln(CAST(c_r + 1 AS DOUBLE)
-                                / CAST(n_raw + v AS DOUBLE))), 6) + 0.0
-                 AS avg_logratio
-        FROM tk JOIN stats USING (tok) CROSS JOIN tot
-        GROUP BY doc_id"""
-    sql["corpus_bigram_logprob"] = f"""
-        WITH base AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS ts
-          FROM documents),
-        pos AS (SELECT doc_id, ts[i] AS w1, ts[i+1] AS w2
-                FROM base, unnest(range(1, len(ts))) AS t(i)
-                WHERE len(ts) >= 2),
-        uni AS (SELECT w, count(*) AS c FROM (
-                  SELECT unnest(ts) AS w FROM base) GROUP BY w),
-        big AS (SELECT w1, w2, count(*) AS c12 FROM pos GROUP BY w1, w2),
-        tot AS (SELECT CAST(sum(c) AS BIGINT) AS n_tok FROM uni)
-        SELECT doc_id, count(*) AS n_bigrams,
-               round(avg(ln({_BIGRAM_LAM!r} * (CAST(c12 AS DOUBLE) / CAST(u1.c AS DOUBLE))
-                            + {1.0 - _BIGRAM_LAM!r}
-                              * (CAST(u2.c AS DOUBLE)
-                                 / CAST(n_tok AS DOUBLE)))), 6) AS avg_logprob
-        FROM pos
-        JOIN big USING (w1, w2)
-        JOIN uni u1 ON u1.w = pos.w1
-        JOIN uni u2 ON u2.w = pos.w2
-        CROSS JOIN tot
-        GROUP BY doc_id"""
     sql["a18_group_corr"] = """
         WITH q AS (
           SELECT event_type,
@@ -6453,44 +4309,6 @@ def oracle_sql() -> dict[str, str]:
                               AS BIGINT)
                END AS corr_e6
         FROM z"""
-    sql["emb_power_iter"] = """
-        WITH t AS (
-          SELECT list_transform(CAST(embedding AS DOUBLE[]),
-                                v -> CAST(round(v * 1000000) AS BIGINT)) AS q
-          FROM embeddings),
-        tp AS (SELECT q, CAST(list_sum(q) AS BIGINT) AS p FROM t),
-        x AS (SELECT CAST(i - 1 AS INT) AS dim, q[i] AS qv, p
-              FROM tp, (SELECT unnest(range(1,
-                    (SELECT max(len(CAST(embedding AS DOUBLE[]))) + 1
-                     FROM embeddings))) AS i)
-              WHERE i <= len(q)),
-        s AS (SELECT dim, CAST(sum(qv * p) AS DECIMAL(38,0)) AS s
-              FROM x GROUP BY dim),
-        n AS (SELECT sqrt(sum(CAST(s AS DOUBLE) * CAST(s AS DOUBLE))) AS nrm
-              FROM s)
-        SELECT dim, s,
-               CAST(floor(CAST(s AS DOUBLE) / nrm * 1000000.0 + 0.5)
-                    AS BIGINT) AS u_e6
-        FROM s CROSS JOIN n"""
-    sql["text_pmi_bigrams"] = """
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(string_split(text, ' '), t -> t <> '') AS ts
-          FROM documents),
-        bg AS (SELECT ts[i] AS w1, ts[i+1] AS w2
-               FROM toks, unnest(range(1, len(ts))) AS t(i)
-               WHERE len(ts) >= 2),
-        big AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY w1, w2),
-        lft AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS l1 FROM big GROUP BY w1),
-        rgt AS (SELECT w2, CAST(sum(c12) AS BIGINT) AS r2 FROM big GROUP BY w2),
-        tot AS (SELECT CAST(sum(c12) AS BIGINT) AS t_big FROM big)
-        SELECT w1, w2, c12, l1, r2,
-               CAST(floor(ln(CAST(c12 AS DOUBLE) * CAST(t_big AS DOUBLE)
-                             / (CAST(l1 AS DOUBLE) * CAST(r2 AS DOUBLE)))
-                          * 1000000.0 + 0.5) AS BIGINT) AS pmi_e6
-        FROM big JOIN lft USING (w1) JOIN rgt USING (w2) CROSS JOIN tot
-        ORDER BY c12 DESC, w1 ASC, w2 ASC
-        LIMIT 20"""
     sql["w20_late_events"] = """
         WITH x AS (
           SELECT event_type,
@@ -6503,17 +4321,6 @@ def oracle_sql() -> dict[str, str]:
                count(CASE WHEN late_us > 0 THEN 1 END) AS n_late,
                max(CASE WHEN late_us > 0 THEN late_us END) AS max_late_us
         FROM x GROUP BY event_type"""
-    sql["text_bpe_pairs"] = """
-        WITH words AS (
-          SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        pairs AS (
-          SELECT unnest(list_transform(range(1, length(w)),
-                                       i -> w[i:i+1])) AS pair
-          FROM words WHERE length(w) >= 2)
-        SELECT pair, count(*) AS n_pairs
-        FROM pairs GROUP BY pair
-        ORDER BY n_pairs DESC, pair ASC
-        LIMIT 20"""
     from plume_spark.operators.graph_metrics import modularity_oracle_sql
 
     sql["g16_modularity"] = modularity_oracle_sql(
@@ -6537,22 +4344,4 @@ def oracle_sql() -> dict[str, str]:
                coalesce(ee.n_edges, 0) AS n_edges,
                coalesce(ee.n_edges, 0) = nn.n_nodes - 1 AS is_tree
         FROM nn LEFT JOIN ee ON ee.component = nn.component"""
-    sql["ann_lsh_recall"] = (
-        bucket_cte
-        + """,
-        q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-               WHERE vec_id = 0),
-        top AS (SELECT vec_id,
-                       CAST(round(list_cosine_similarity(
-                              CAST(embedding AS DOUBLE[]), q0.qe), 4) AS DOUBLE)
-                         AS cos_sim
-                FROM embeddings, q0
-                ORDER BY cos_sim DESC, vec_id LIMIT 10),
-        qb AS (SELECT bucket FROM buckets WHERE vec_id = 0),
-        cand AS (SELECT b.vec_id FROM buckets b, qb WHERE b.bucket = qb.bucket)
-        SELECT t.vec_id, t.cos_sim,
-               EXISTS (SELECT 1 FROM cand c WHERE c.vec_id = t.vec_id)
-                 AS in_query_bucket
-        FROM top t"""
-    )
     return sql

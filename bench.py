@@ -38,15 +38,11 @@ HEADLINE = [
     "kg_extract_raw",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "text_quality",
-    "text_fingerprint",
-    "ann_cosine_topk",
-    "ann_blocked_pairs",
+    # LSH buckets + blocked cosine pairs over the embeddings table
+    "dedup_embedding_cosine",
     "j7_two_hop",
     "a1_group_sum",
     "w1_turn_ordering",
-    "corpus_decon_overlap",
-    "corpus_tfidf_topk",
     # round-3 additions: one per operator family added in round 2, so
     # regressions are visible in per-round diffs (VERDICT r2 item 8)
     "g3_triangles",
@@ -54,40 +50,28 @@ HEADLINE = [
     "t2_range_join",
     "w3_sessionize",
     "w4_sliding_rate",
-    "corpus_select",
     # round-3 late additions: one per family added this round (same
     # regression-visibility policy); the stream_* and kg-analytics queries
     # re-run the full flagship/persist path and are tracked via the
     # flagship + --write benches instead of doubling suite time here
     "g7_kcore",
-    "ann_knn_graph",
     # round-4 additions: one per family added this round (same policy) —
-    # the capped shared-gram containment join, the lift/PMI shared-groups
-    # fold, and the day-partitioned sweep line
-    "corpus_containment",
+    # the lift/PMI shared-groups fold and the day-partitioned sweep line
     "g11_edge_lift",
     "w9_peak_concurrency",
     # round-4 session-2 additions (same one-per-family policy): the second
-    # iterative spectral ranking, the explode-rewrite rolling distinct, and
-    # the zero-shuffle rule filter; the varied-substrate kg_* queries re-run
-    # a full pipeline build and are covered by the flagship benches
+    # iterative spectral ranking and the explode-rewrite rolling distinct;
+    # the varied-substrate kg_* queries re-run a full pipeline build and
+    # are covered by the flagship benches
     "g12_hits",
     "w13_rolling_active",
-    "corpus_gopher_rules",
-    # round-4 session-3 additions (same policy): the IVF-PQ serving
-    # composition, the sub-linear bloom decon probe, the scan-speed token
-    # chunker, the fixed-point link-prediction wedge fold, the seeded
-    # sparse PPR loop, and the touch-attribution range join; kg_neg_samples
-    # re-runs the flagship build and is covered by the flagship benches
-    "ann_ivf_adc",
-    "corpus_decon_bloom",
-    "corpus_chunk_windows",
+    # round-4 session-3 additions (same policy): the fixed-point
+    # link-prediction wedge fold, the seeded sparse PPR loop, and the
+    # touch-attribution range join; kg_neg_samples re-runs the flagship
+    # build and is covered by the flagship benches
     "g13_linkpred_ra",
     "g14_ppr",
     "w19_attribution",
-    # round 5: the multi-probe serving contract (candidate-union + exact
-    # rerank + in-band recall audit) — the ANN family's quality headline
-    "ann_multiprobe_topk",
 ]
 
 

@@ -10,9 +10,8 @@ text_readability sf0.1 sweep in round 5).
 ``floor(x * 10^d + 0.5) / 10^d`` uses only IEEE-754 ops, so BOTH engines
 evaluate the identical sequence on the identical double and can never
 split — even exactly on a boundary.  Every reported ratio of exact
-integers (jaccard, overlap/boilerplate/repetition/novelty/containment
-fractions, histogram shares) quantizes through this helper, with the
-DuckDB oracles carrying the same floor expression.
+integers (jaccard, transition shares, histogram shares) quantizes through
+this helper, with the DuckDB oracles carrying the same floor expression.
 
 (This does NOT remove summation-order noise in avg-of-ln scores — those
 carry a separately documented ~1e-8 flip risk; this closes the exact-

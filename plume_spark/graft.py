@@ -231,23 +231,3 @@ def dag_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(NODE_PART_OFFSET) + F.col("l_partkey")).alias("obj"),
     )
     return e1.unionByName(e2)
-
-
-def documents_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> multimodal MEDIA shape: payload = utf-8 bytes of text,
-    modality cycles by doc_id.  Deterministic, so feature extraction over it
-    is oracle-checkable (n_bytes, checksum)."""
-    d = load(spark, sf_dir, "documents")
-    modality = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    return d.select(
-        F.col("doc_id").alias("media_id"),
-        modality.alias("modality"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        (F.col("n_chars") * 10).cast("int").alias("duration_ms"),
-    )

@@ -45,7 +45,7 @@ JACCARD_TAU = 0.5
 # Max docs per band bucket before the bucket is dropped as non-discriminative
 # (web-scale boilerplate skew kill; exact dups rescued by star edges).
 MAX_BUCKET_SIZE = 64
-POLY_MUL = 131  # portable rolling-hash multiplier (shared with text.fingerprint)
+POLY_MUL = 131  # portable rolling-hash multiplier (shared with the oracle SQL)
 
 
 def tokens(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:

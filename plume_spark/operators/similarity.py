@@ -1,14 +1,14 @@
-"""Similarity search over embedding columns (array<float>).
+"""LSH blocking and blocked cosine pairs over embedding columns
+(array<float>) — the two halves of ``dedup.embedding_neardup``.
 
-* brute_force_topk — exact cosine top-k against a query vector; the baseline.
 * lsh_buckets — random-hyperplane signs with integer pseudo-weights
   (deterministic, engine-portable); the blocking path for pairwise search.
 * blocked_cosine_pairs — near-dup pairs within coarse blocks (label column or
-  LSH bucket): the IVF-style scale path — at 100 TB you never all-pairs, you
-  bucket then verify within buckets.
+  LSH bucket): at 100 TB you never all-pairs, you bucket then verify within
+  buckets.
 
-Vector arithmetic has TWO evaluation paths and every operator here picks
-between them by Catalyst's size estimate (see CODEGEN_MIN_BYTES):
+Vector arithmetic has TWO evaluation paths and both operators pick between
+them by Catalyst's size estimate (see CODEGEN_MIN_BYTES):
 
 * UNROLLED fixed-width element_at expression chains (whole-stage codegen) —
   the scale path: HOFs evaluate interpreted per element with per-call
@@ -16,7 +16,7 @@ between them by Catalyst's size estimate (see CODEGEN_MIN_BYTES):
   at sf0.1) vs single-digit seconds unrolled.
 * F.aggregate/F.zip_with higher-order functions (interpreted, zero Janino
   compile) — the small-scan path: compiling one ~400-node unrolled kernel
-  costs ~0.7 s that a small scan never earns back (ivf_topk compiles THREE).
+  costs ~0.7 s that a small scan never earns back.
 
 Both run the identical left-to-right float64 fold with elements widened to
 double before multiplying, so results are bit-identical either way (pinned
@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 N_PLANES = 8
@@ -39,8 +39,8 @@ _W_MOD = 8191
 _W_OFF = 4095
 
 
-# The ONE pair of interpreted (HOF) kernels every operator's small-scan path
-# shares.  Elements are widened to double BEFORE multiplying — a float32
+# The ONE pair of interpreted (HOF) kernels both operators' small-scan paths
+# share.  Elements are widened to double BEFORE multiplying — a float32
 # product rounds differently from the unrolled double-first codegen kernels,
 # and the two paths must stay bit-identical (the auto strategy choice may
 # never be observable in values).
@@ -58,14 +58,6 @@ def _norm_hof(a: Column) -> Column:
             a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
         )
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot_hof(a, b) / (_norm_hof(a) * _norm_hof(b))
-
-
-def _as_double(c: Column) -> Column:
-    return F.transform(c, lambda x: x.cast("double"))
 
 
 def _de(c: Column, i: int) -> Column:
@@ -110,7 +102,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
 
 
 def _resolve_strategy(df: DataFrame, strategy: str) -> str:
-    """The ONE codegen-vs-HOF decision all five similarity operators share:
+    """The ONE codegen-vs-HOF decision both similarity operators share:
     'auto' resolves by Catalyst's size estimate against CODEGEN_MIN_BYTES;
     anything but codegen/hof is rejected here so no call site can drift."""
     if strategy == "auto":
@@ -118,114 +110,6 @@ def _resolve_strategy(df: DataFrame, strategy: str) -> str:
     if strategy not in ("codegen", "hof"):
         raise ValueError(f"strategy must be auto|codegen|hof, got {strategy!r}")
     return strategy
-
-
-def brute_force_topk(
-    embeddings: DataFrame, query_vec_id: int, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    strategy: str = "auto",
-) -> DataFrame:
-    """Exact top-k by cosine to the embedding of ``query_vec_id``.
-
-    The 1-row query vector is fetched once (a capped driver read, like a
-    point lookup) and inlined as LITERALS: the scoring expression is then
-    sum(v_i * const) / (norm(v) * const) — no join stage at all, and the
-    query norm is a Python constant.  The only shuffle is the final top-k
-    (TakeOrderedAndProject).
-
-    ``strategy``: 'codegen' unrolls the dot/norm into a whole-stage-codegen
-    expression chain (the 100 TB path — per-row cost ~30x below the HOF
-    form, compile cost amortized over the scan); 'hof' evaluates
-    aggregate/zip_with interpreted (zero compile — right for small scans);
-    'auto' picks by Catalyst's sizeInBytes estimate (no job).  Both compute
-    the identical left-to-right float64 summation, so values (and the
-    DuckDB oracle comparison) are bit-identical either way."""
-    scored = _query_scored(embeddings, query_vec_id, id_col, vec_col, strategy)
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(k)
-
-
-def _query_scored(
-    embeddings: DataFrame, query_vec_id: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    strategy: str = "auto", query_from: DataFrame | None = None,
-) -> DataFrame:
-    """(vec_id, cos_sim): cosine of every embedding to the inlined query
-    literal — the shared scoring projection behind brute_force_topk,
-    range_search, and filtered_topk (one expression, so all stay
-    bit-identical).  ``query_from`` lets the query row come from a
-    different (e.g. unfiltered) set than the scored candidates."""
-    import math
-
-    # plain column fetch (no transform expression -> nothing to codegen for
-    # this 1-row job); float32 -> float64 widening is exact, so driver-side
-    # float() equals Spark's cast
-    qsrc = embeddings if query_from is None else query_from
-    qrow = qsrc.filter(F.col(id_col) == query_vec_id).select(vec_col).first()
-    if qrow is None or not qrow[0]:
-        raise ValueError(f"no embedding for {id_col}={query_vec_id}")
-    qv = [float(x) for x in qrow[0]]
-    dim = len(qv)
-    qn = math.sqrt(sum(x * x for x in qv))
-    v = F.col(vec_col)
-    strategy = _resolve_strategy(embeddings, strategy)
-    if strategy == "codegen":
-        dot = reduce(
-            lambda acc, t: acc + t,
-            (_de(v, i) * F.lit(qv[i - 1]) for i in range(1, dim + 1)),
-        )
-        nrm = norm_unrolled(v, dim)
-    else:
-        dot = _dot_hof(v, F.array(*[F.lit(x) for x in qv]))
-        nrm = _norm_hof(v)
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(dot / (nrm * F.lit(qn)), 4).alias("cos_sim"),
-    )
-
-
-def filtered_topk(
-    embeddings: DataFrame, query_vec_id: int, pred: Column, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    strategy: str = "auto",
-) -> DataFrame:
-    """Filtered vector search: exact top-``k`` by cosine among the rows
-    satisfying ``pred`` (a metadata predicate) — the serving shape every
-    production vector store exposes ("nearest docs WHERE lang='en'").
-    This is PRE-filtering: the predicate prunes the scan before any
-    scoring work, so selective filters make the query CHEAPER (the
-    post-filter alternative — score all, then filter — wastes exactly the
-    filtered-out fraction and can return < k rows; with an IVF/LSH index
-    the same pre-filter applies inside each probed cell).  The query row
-    is fetched from the UNFILTERED set: the query need not satisfy the
-    predicate.
-
-    Scale: predicate + scoring fuse into one whole-stage-codegen scan
-    (the filter reaches the parquet reader when the predicate is on a
-    plain column), followed by a TakeOrderedAndProject — no shuffle
-    beyond the top-k."""
-    scored = _query_scored(
-        embeddings.filter(pred), query_vec_id, id_col, vec_col, strategy,
-        query_from=embeddings,
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(k)
-
-
-def range_search(
-    embeddings: DataFrame, query_vec_id: int, tau: float,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    strategy: str = "auto",
-) -> DataFrame:
-    """Exact cosine range query: every vector with cos_sim >= tau to the
-    embedding of ``query_vec_id`` (the query row itself included at 1.0) —
-    the radius-threshold complement of brute_force_topk for recall-style
-    retrieval ("everything at least this similar"), sharing its inlined
-    literal scoring expression.
-
-    Scale: a pure filter over one scan — NO shuffle at all (unlike top-k's
-    TakeOrderedAndProject); the predicate on the rounded score is exactly
-    the oracle's, so boundary rows agree between engines."""
-    scored = _query_scored(embeddings, query_vec_id, id_col, vec_col, strategy)
-    return scored.filter(F.col("cos_sim") >= tau)
 
 
 def lsh_buckets(
@@ -238,10 +122,10 @@ def lsh_buckets(
     Weights are a pure arithmetic function of (plane, dim) — no weight table
     to broadcast, no randomness to persist, identical across engines/runs.
 
-    ``strategy`` picks how the n_planes weighted sums evaluate (same
-    codegen-vs-compile trade as brute_force_topk): 'codegen' unrolls each
-    projection into a literal expression chain (the scale path — per-row
-    cost far below the HOF form, Janino compile amortized over the scan);
+    ``strategy`` picks how the n_planes weighted sums evaluate: 'codegen'
+    unrolls each projection into a literal expression chain (the scale
+    path — per-row cost far below the HOF form, Janino compile amortized
+    over the scan);
     'hof' evaluates aggregate/zip_with interpreted with the weights as an
     array literal (zero compile — right for small scans); 'auto' picks by
     Catalyst's size estimate.  Both run the identical left-to-right float64
@@ -337,216 +221,4 @@ def blocked_cosine_pairs(
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= tau)
-    )
-
-
-def knn_graph(
-    embeddings: DataFrame, k: int = 5, n_planes: int = N_PLANES,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_splits: int = 8, strategy: str = "auto",
-) -> DataFrame:
-    """Approximate k-NN graph -> (src, dst, cos_sim): per vector, its top-k
-    most-cosine-similar SAME-LSH-BUCKET neighbors — the graph substrate for
-    embedding-space dedup clusters, semantic graph walks, and kNN
-    classification over a corpus.
-
-    Approximation contract: candidates are confined to the vector's LSH
-    bucket (deterministic hyperplanes, so the bucketing — and therefore the
-    exact result set — is reproducible cross-engine).  Nodes whose bucket
-    has fewer than k+1 members return fewer than k edges; that is the
-    standard ANN-recall trade, not an error.
-
-    Scale: candidate volume is sum(|bucket|^2), never corpus^2; the pair
-    join reuses blocked_cosine_pairs' grid-split (hot buckets spread over
-    n_splits tasks) and its codegen-vs-HOF auto choice over once-projected
-    norms.  The only additional shuffle is the per-src top-k window, which
-    ranks on the 4dp-ROUNDED cosine with dst as the tie-break — fully
-    deterministic cross-engine."""
-    # resolve the codegen-vs-HOF choice ONCE from the raw input: the
-    # post-join size estimate (embeddings x buckets) is inflated and would
-    # pick the compile-heavy path for scans that never earn it back
-    strategy = _resolve_strategy(embeddings, strategy)
-    b = lsh_buckets(
-        embeddings, n_planes, id_col=id_col, vec_col=vec_col, strategy=strategy
-    )
-    blocked = embeddings.withColumnRenamed(id_col, "vec_id").join(b, "vec_id")
-    und = blocked_cosine_pairs(
-        blocked, "bucket", tau=-1.0, id_col="vec_id", vec_col=vec_col,
-        n_splits=n_splits, strategy=strategy,
-    )
-    # both orientations in ONE pass over the pair join (a unionAll of two
-    # selects would execute — and codegen-compile — the join twice)
-    directed = und.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("vec_a").alias("src"),
-                    F.col("vec_b").alias("dst"),
-                    F.col("cos_sim"),
-                ),
-                F.struct(
-                    F.col("vec_b").alias("src"),
-                    F.col("vec_a").alias("dst"),
-                    F.col("cos_sim"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst", "e.cos_sim")
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
-    return (
-        directed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        # + 0.0 canonicalizes IEEE negative zero (round(-0.00004, 4) = -0.0)
-        # so engines that format -0.0 differently can't diverge on display
-        .select("src", "dst", (F.col("cos_sim") + F.lit(0.0)).alias("cos_sim"))
-    )
-
-
-def quantize_embeddings(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Symmetric int8 quantization per vector: scale = max(|x_i|), q_i =
-    floor(x_i / scale * 127) — the storage/bandwidth step an embedding store
-    runs before ANN indexing (4x smaller vectors, distance computations on
-    int8).  (vec_id, scale, q: array<int>).  Pure higher-order column
-    arithmetic, no shuffle; floor (not round) so there is no tie-break mode
-    to disagree on across engines — the DuckDB oracle replays the identical
-    formula.  A zero vector quantizes to zeros with scale 0."""
-    v = _as_double(F.col(vec_col))
-    scale = F.array_max(F.transform(v, F.abs))
-    q = F.when(
-        scale == 0.0,
-        F.transform(v, lambda x: F.lit(0)),
-    ).otherwise(
-        F.transform(v, lambda x: F.floor(x / scale * F.lit(127.0)).cast("int"))
-    )
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(scale, 6).alias("scale"),
-        q.alias("q"),
-    )
-
-
-def ivf_assign(
-    embeddings: DataFrame, n_centroids: int = 8, id_col: str = "vec_id",
-    vec_col: str = "embedding", strategy: str = "auto",
-):
-    """The coarse-quantizer stage shared by IVF-flat (ivf_topk) and IVF-PQ
-    (the ann_ivf_adc contract query): centroids = the first ``n_centroids``
-    vectors by id (deterministic seeding, KMeans-free); every vector joins
-    its nearest centroid via a broadcast cross join + one per-vector
-    row_number.  Returns (assigned(vec_id, emb, cent_id), cents, cos) —
-    cos is the strategy-resolved cosine kernel so downstream stages score
-    with the bit-identical fold the assignment used."""
-    strategy = _resolve_strategy(embeddings, strategy)
-    if strategy == "codegen":
-        dim = infer_dim(embeddings, vec_col)  # only the unrolled form needs it
-
-        def cos(a: Column, b: Column) -> Column:
-            return dot_unrolled(a, b, dim) / (norm_unrolled(a, dim) * norm_unrolled(b, dim))
-    else:
-        cos = cosine
-
-    cents = embeddings.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec")
-    )
-    assigned = (
-        embeddings.crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("emb"),
-            "cent_id",
-            cos(F.col(vec_col), F.col("cvec")).alias("sim"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cent_id"))
-            ),
-        )
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "emb", "cent_id")
-    )
-    return assigned, cents, cos
-
-
-def ivf_topk(
-    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_centroids: int = 8,
-    n_probe: int = 2, id_col: str = "vec_id", vec_col: str = "embedding",
-    strategy: str = "auto",
-) -> DataFrame:
-    """IVF-flat approximate top-k: centroids = the first ``n_centroids``
-    vectors by id (deterministic seeding, KMeans-free); every vector is
-    assigned to its nearest centroid; the query probes its ``n_probe``
-    nearest cells and scores only those members.
-
-    The centroid table is tiny -> broadcast; assignment is one map-side pass.
-    The cosine kernel appears in THREE stages (assignment, probe selection,
-    final scoring), each a separate whole-stage-codegen compilation of the
-    unrolled form — so the codegen-vs-HOF auto choice matters 3x here (same
-    trade and same bit-identical fold as brute_force_topk/lsh_buckets).
-    """
-    assigned, cents, cos = ivf_assign(
-        embeddings, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-        strategy=strategy,
-    )
-    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec")
-    )
-    probe_cells = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", cos(F.col("cvec"), F.col("qvec")).alias("sim"))
-        .orderBy(F.col("sim").desc(), "cent_id")
-        .limit(n_probe)
-        .select("cent_id")
-    )
-    return (
-        assigned.join(F.broadcast(probe_cells), "cent_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", F.round(cos(F.col("emb"), F.col("qvec")), 4).alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
-
-
-def batch_topk(
-    embeddings: DataFrame, n_queries: int = 5, k: int = 3,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Batched vector search: top-``k`` by cosine for EVERY query in a
-    query set (here the first ``n_queries`` vec_ids), in ONE plan ->
-    (q_id, rank, vec_id, cos_sim) — the amortized serving shape: a batch
-    of queries broadcast against one scan beats n_queries separate scans
-    by the scan cost times (n_queries - 1).
-
-    Scale: the dictionary-sized query set broadcasts (a nested-loop
-    broadcast join, fan-out = n_queries per candidate row); scoring is the
-    same HOF cosine as the single-query ops (identical left-to-right
-    float64 summation, so per-pair values are bit-identical to theirs);
-    ranking is one (q_id)-partitioned window over the top-k-bounded
-    stream.  At real scale the same shape rides on the IVF index: probe
-    cells per query, union, one window."""
-    q = (
-        embeddings.filter(F.col(id_col) < n_queries)
-        .select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")
-        )
-    )
-    v = F.col(vec_col)
-    cos = F.round(
-        _dot_hof(v, F.col("q_emb")) / (_norm_hof(v) * _norm_hof(F.col("q_emb"))),
-        4,
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        embeddings.select(F.col(id_col).alias("vec_id"), vec_col)
-        .crossJoin(F.broadcast(q))
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "cos_sim")
     )

@@ -22,3 +22,12 @@ SF = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 def test_every_contract_query_matches_its_oracle(spark):
     failures = run_check(spark, SF, out=sys.stderr)
     assert not failures, f"oracle mismatches: {failures}"
+
+
+def test_registry_and_oracle_have_the_same_keys():
+    """No query without an oracle, and no oracle block left behind by a
+    deleted query (the gate walks queries() only, so an orphan would pass
+    every other check).  Runs no Spark."""
+    import __spark_entry__ as entrymod
+
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())

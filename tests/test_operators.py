@@ -1,17 +1,11 @@
-"""Unit tests for the training-data operators + plan-hygiene assertions."""
+"""Unit tests for the package operators + plan-hygiene assertions."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from plume_spark.operators import dedup, similarity, text, traversal
-from plume_spark.operators.multimodal import (
-    decode_real,
-    extract_features,
-    frame_sample_plan,
-    synthetic_media,
-)
+from plume_spark.operators import dedup, similarity, traversal
 
 
 @pytest.fixture()
@@ -46,41 +40,6 @@ def test_simhash_hamming(docs):
     ham = lambda a, b: bin(a ^ b).count("1")
     assert sh[0] == sh[3]
     assert ham(sh[0], sh[1]) <= ham(sh[0], sh[2])
-
-
-def test_text_operators(docs):
-    stats = {r["doc_id"]: r for r in text.token_stats(docs).collect()}
-    assert stats[0]["n_tokens"] == 13
-    q = {r["doc_id"]: r for r in text.quality_score(docs).collect()}
-    assert 0 <= q[0]["quality"] <= 1 and q[0]["punct_ratio"] == 0.0
-    lang = {r["doc_id"]: r["pred_lang"] for r in text.language_id(docs).collect()}
-    assert lang[0] == "en" and lang[4] == "es"
-    fp = {r["doc_id"]: r["fingerprint"] for r in text.fingerprint(docs).collect()}
-    assert fp[0] == fp[3] and fp[0] != fp[1]
-
-
-def test_similarity(spark):
-    import math
-
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0], 0),
-        (1, [0.9, 0.1, 0.0, 0.0], 0),
-        (2, [0.0, 1.0, 0.0, 0.0], 1),
-        (3, [-1.0, 0.0, 0.0, 0.0], 1),
-        (4, [0.8, 0.2, 0.0, 0.0], 0),
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    top = dedup_free = similarity.brute_force_topk(emb, query_vec_id=0, k=3).collect()
-    assert top[0]["vec_id"] == 0 and abs(top[0]["cos_sim"] - 1.0) < 1e-6
-    assert [r["vec_id"] for r in top] == [0, 1, 4]
-    buckets = {r["vec_id"]: r["bucket"] for r in similarity.lsh_buckets(emb).collect()}
-    assert buckets[0] == buckets[1]  # near vectors share hyperplane signs
-    assert buckets[0] != buckets[3]  # antipodal vectors flip every sign
-    pairs = {
-        (r["vec_a"], r["vec_b"]): r["cos_sim"]
-        for r in similarity.blocked_cosine_pairs(emb, "label", tau=0.9).collect()
-    }
-    assert (0, 1) in pairs and (2, 3) not in pairs
 
 
 def test_embedding_neardup(spark):
@@ -143,462 +102,6 @@ def test_cli_build_query_export(spark, tmp_path):
     assert n_pairs > 0
     assert main(["dedup-stream", "--input", docs_in, "--index", idx_dir]) == 0
     assert idx.pairs.row_count() == n_pairs
-
-
-def test_ivf_topk_matches_brute_on_probed_cells(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    rows = [(i, [float(x) for x in rng.normal(size=8)], i % 3) for i in range(60)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    approx = similarity.ivf_topk(emb, query_vec_id=5, k=5, n_centroids=4, n_probe=4)
-    exact = similarity.brute_force_topk(emb, query_vec_id=5, k=5)
-    # with n_probe = n_centroids the IVF search is exhaustive => identical
-    assert [r["vec_id"] for r in approx.collect()] == [r["vec_id"] for r in exact.collect()]
-
-
-def test_multimodal_plumbing(spark):
-    media = synthetic_media(spark, n=9, seed=1)
-    feats = extract_features(media)
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert len(rows) == 9
-    assert all(len(r["feature"]) == 16 for r in rows.values())
-    # deterministic: same input -> same features
-    again = {r["media_id"]: r for r in extract_features(synthetic_media(spark, n=9, seed=1)).collect()}
-    assert all(rows[i]["checksum"] == again[i]["checksum"] for i in rows)
-    assert all(rows[i]["feature"] == again[i]["feature"] for i in rows)
-    # frame sampling plan never touches payload
-    plan = frame_sample_plan(media, every_ms=1000)
-    assert plan.count() > 0 and "payload" not in plan.columns
-    # resize: images become out_w x out_h byte grids, deterministic; other
-    # modalities pass through byte-identical
-    from plume_spark.operators.multimodal import resize_images
-
-    orig = {r["media_id"]: r for r in media.collect()}
-    rs = {r["media_id"]: r for r in resize_images(media, out_w=8, out_h=6).collect()}
-    assert set(rs) == set(orig)
-    for i, r in rs.items():
-        if orig[i]["modality"] == "image":
-            assert (r["width"], r["height"]) == (8, 6)
-            assert len(r["payload"]) == 8 * 6
-        else:
-            assert bytes(r["payload"]) == bytes(orig[i]["payload"])
-            assert r["duration_ms"] == orig[i]["duration_ms"]
-    again = {
-        r["media_id"]: r
-        for r in resize_images(synthetic_media(spark, n=9, seed=1), out_w=8, out_h=6).collect()
-    }
-    assert all(bytes(again[i]["payload"]) == bytes(rs[i]["payload"]) for i in rs)
-    from plume_spark.operators.multimodal import HAVE_PIL
-
-    if not HAVE_PIL:
-        with pytest.raises(NotImplementedError):
-            decode_real(b"xx", "image/png")
-    with pytest.raises(NotImplementedError):
-        decode_real(b"xx", "video/mp4")
-
-
-def _wav_bytes(samples, rate=8000):
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    return buf.getvalue()
-
-
-def test_multimodal_real_wav_decode(spark):
-    """audio/wav real decode rides the stdlib wave module — no optional dep,
-    so the REAL path (decode -> featurize -> mapInPandas) is exercised in
-    every environment, not just pillow-equipped ones."""
-    import numpy as np
-
-    from plume_spark.operators.multimodal import (
-        FEATURE_DIM,
-        MEDIA,
-        extract_features,
-        real_decoder,
-    )
-
-    samples = [0, 16384, -16384, 32767, -32768] * 20
-    payload = _wav_bytes(samples)
-    pcm = decode_real(payload, "audio/wav")
-    assert np.allclose(pcm[:5] * 32768.0, samples[:5])
-    media = spark.createDataFrame(
-        [(1, "audio", "audio/wav", payload, None, None, 12)], schema=MEDIA
-    )
-    rows = extract_features(media, decoder=real_decoder).collect()
-    assert len(rows) == 1 and len(rows[0]["feature"]) == FEATURE_DIM
-    # deterministic and equal to driver-side decode+pool
-    from plume_spark.operators.multimodal import featurize
-
-    expect = [float(x) for x in featurize(pcm)]
-    assert rows[0]["feature"] == expect
-
-
-def _pnm_bytes(arr, rgb: bool = False) -> bytes:
-    """Minimal binary netpbm encoder (P5 gray / P6 RGB) for fixtures."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    h, w = a.shape[:2]
-    magic = b"P6" if rgb else b"P5"
-    return magic + f"\n# fixture\n{w} {h}\n255\n".encode() + a.tobytes()
-
-
-def test_multimodal_real_image_decode(spark):
-    """The REAL image branch of decode_real, exercised without pillow: the
-    pure-Python netpbm (P5/P6) decoder must recover the exact pixel grid,
-    collapse RGB with pillow's integer luma, and ride the full
-    extract_features mapInPandas path.  When pillow IS present, its decode
-    of the same P5 payload must agree bit-for-bit."""
-    import numpy as np
-
-    from plume_spark.operators.multimodal import (
-        FEATURE_DIM,
-        HAVE_PIL,
-        MEDIA,
-        extract_features,
-        featurize,
-        real_decoder,
-    )
-
-    gray = (np.arange(48, dtype=np.uint8).reshape(6, 8) * 5) % 255
-    p5 = _pnm_bytes(gray)
-    grid = decode_real(p5, "image/x-portable-graymap")
-    assert grid.shape == (6, 8)
-    assert np.array_equal(grid, gray.astype(np.float64) / 255.0)
-
-    rgb = np.stack([gray, 255 - gray, gray // 2], axis=-1)
-    p6 = _pnm_bytes(rgb, rgb=True)
-    grid6 = decode_real(p6, "image/x-portable-pixmap")
-    luma = (
-        rgb[..., 0].astype(np.uint32) * 299
-        + rgb[..., 1].astype(np.uint32) * 587
-        + rgb[..., 2].astype(np.uint32) * 114
-    ) // 1000
-    assert np.array_equal(grid6, luma.astype(np.float64) / 255.0)
-
-    if HAVE_PIL:  # parity with pillow on the identical payload
-        import io
-
-        from PIL import Image
-
-        pil = np.asarray(Image.open(io.BytesIO(p6)).convert("L"), dtype=np.float64)
-        assert np.array_equal(grid6, pil / 255.0)
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", "image/x-portable-graymap", p5, 8, 6, None),
-            (2, "image", "image/x-portable-pixmap", p6, 8, 6, None),
-        ],
-        schema=MEDIA,
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, decoder=real_decoder).collect()}
-    assert len(rows) == 2
-    assert rows[1]["feature"] == [float(x) for x in featurize(grid)]
-    assert rows[2]["feature"] == [float(x) for x in featurize(grid6)]
-    assert all(len(r["feature"]) == FEATURE_DIM for r in rows.values())
-
-
-def _png_bytes(arr, ctype: int, filters=None, plte=None, interlace: int = 0) -> bytes:
-    """Minimal PNG encoder for fixtures: 8-bit, one explicit filter type per
-    scanline so every reconstruction filter (None/Sub/Up/Average/Paeth) in
-    the decoder is exercised against an independently-built stream."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = a[..., None]
-    h, w, ch = a.shape
-    stride, bpp = w * ch, ch
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data))
-        )
-
-    def paeth(pa_, pb_, pc_):
-        p = pa_ + pb_ - pc_
-        da, db, dc = abs(p - pa_), abs(p - pb_), abs(p - pc_)
-        return pa_ if da <= db and da <= dc else (pb_ if db <= dc else pc_)
-
-    raw = bytearray()
-    prev = bytes(stride)
-    filters = filters if filters is not None else [0] * h
-    for y in range(h):
-        line = a[y].tobytes()
-        f = filters[y]
-        raw.append(f)
-        for i in range(stride):
-            left = line[i - bpp] if i >= bpp else 0
-            up = prev[i]
-            ul = prev[i - bpp] if i >= bpp else 0
-            pred = {0: 0, 1: left, 2: up, 3: (left + up) >> 1, 4: paeth(left, up, ul)}[f]
-            raw.append((line[i] - pred) & 0xFF)
-        prev = line
-    body = chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, interlace))
-    if plte is not None:
-        body += chunk(b"PLTE", np.asarray(plte, dtype=np.uint8).tobytes())
-    body += chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-    return b"\x89PNG\r\n\x1a\n" + body
-
-
-def _qoi_bytes(rgb) -> bytes:
-    """Spec-faithful QOI encoder (qoiformat.org v1.0) for fixtures: emits
-    RUN / INDEX / DIFF / LUMA / RGB ops exactly as the reference encoder
-    would, so the decoder under test is exercised against an independently
-    built stream (same policy as _png_bytes)."""
-    h, w, _ = rgb.shape
-    out = bytearray(b"qoif")
-    out += w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([3, 0])
-    index = [(0, 0, 0, 0)] * 64
-    pr, pg, pb, pa = 0, 0, 0, 255
-    run = 0
-    for y in range(h):
-        for x in range(w):
-            r, g, b = (int(v) for v in rgb[y, x])
-            if (r, g, b) == (pr, pg, pb):
-                run += 1
-                if run == 62:
-                    out.append(0xC0 | (run - 1))
-                    run = 0
-                continue
-            if run:
-                out.append(0xC0 | (run - 1))
-                run = 0
-            k = (r * 3 + g * 5 + b * 7 + 255 * 11) % 64
-            if index[k] == (r, g, b, 255):
-                out.append(k)
-            else:
-                index[k] = (r, g, b, 255)
-                dr = (r - pr + 128) % 256 - 128
-                dg = (g - pg + 128) % 256 - 128
-                db = (b - pb + 128) % 256 - 128
-                if -2 <= dr <= 1 and -2 <= dg <= 1 and -2 <= db <= 1:
-                    out.append(0x40 | ((dr + 2) << 4) | ((dg + 2) << 2) | (db + 2))
-                elif (
-                    -32 <= dg <= 31
-                    and -8 <= dr - dg <= 7
-                    and -8 <= db - dg <= 7
-                ):
-                    out.append(0x80 | (dg + 32))
-                    out.append(((dr - dg + 8) << 4) | (db - dg + 8))
-                else:
-                    out += bytes([0xFE, r, g, b])
-            pr, pg, pb = r, g, b
-    if run:
-        out.append(0xC0 | (run - 1))
-    out += b"\x00\x00\x00\x00\x00\x00\x00\x01"
-    return bytes(out)
-
-
-def test_multimodal_real_qoi_decode(spark):
-    """The SECOND compressed image codec without any dependency: the
-    pure-Python QOI decoder must replay run-length, seen-pixel-index,
-    byte-diff, luma-diff, and literal-RGB ops exactly, collapse RGB with
-    the house integer luma, and ride the full extract_features mapInPandas
-    path.  The fixture image is constructed to force EVERY op: a constant
-    band (RUN), +1-step gradients (DIFF), mid-size steps (LUMA), random
-    pixels (RGB), and a revisited color (INDEX)."""
-    import numpy as np
-
-    from plume_spark.operators.multimodal import (
-        FEATURE_DIM,
-        MEDIA,
-        _decode_qoi,
-        extract_features,
-        featurize,
-        real_decoder,
-    )
-
-    rng = np.random.default_rng(11)
-    rgb = np.zeros((8, 8, 3), dtype=np.uint8)
-    rgb[0, :] = (200, 10, 30)                    # row 0: constant -> RUN
-    for x in range(8):                            # row 1: +1 ramp -> DIFF
-        rgb[1, x] = (50 + x, 60 + x, 70 + x)
-    for x in range(8):                            # row 2: step 5 -> LUMA
-        rgb[2, x] = (40 + 5 * x, 80 + 5 * x, 120 + 5 * x)
-    rgb[3:6] = rng.integers(0, 256, (3, 8, 3))    # rows 3-5: literal RGB
-    rgb[6, :] = (200, 10, 30)                     # row 6: revisit -> INDEX+RUN
-    rgb[7, :] = rgb[3, ::-1]                      # row 7: more INDEX hits
-    payload = _qoi_bytes(rgb)
-    luma = (
-        rgb[..., 0].astype(np.uint32) * 299
-        + rgb[..., 1].astype(np.uint32) * 587
-        + rgb[..., 2].astype(np.uint32) * 114
-    ) // 1000
-    assert np.array_equal(_decode_qoi(payload), luma / 255.0)
-    assert np.array_equal(decode_real(payload, "image/qoi"), luma / 255.0)
-
-    # every op family is present in the encoded stream
-    ops = set()
-    at = 14
-    end = len(payload) - 8
-    while at < end:
-        byte = payload[at]
-        if byte == 0xFE:
-            ops.add("rgb"); at += 4
-        elif byte == 0xFF:
-            ops.add("rgba"); at += 5
-        else:
-            tag = byte >> 6
-            ops.add(["index", "diff", "luma", "run"][tag])
-            at += 2 if tag == 2 else 1
-    assert {"run", "index", "diff", "luma", "rgb"} <= ops
-
-    with pytest.raises(ValueError):  # truncated/garbage stays loud
-        _decode_qoi(b"qoif" + b"\x00" * 18)
-
-    media = spark.createDataFrame(
-        [(1, "image", "image/qoi", payload, 8, 8, None)], schema=MEDIA
-    )
-    rows = extract_features(media, decoder=real_decoder).collect()
-    assert rows[0]["feature"] == [float(x) for x in featurize(luma / 255.0)]
-    assert len(rows[0]["feature"]) == FEATURE_DIM
-
-
-def test_multimodal_real_png_decode(spark):
-    """The COMPRESSED image branch without pillow: the pure-Python PNG
-    decoder (stdlib zlib) must invert all five scanline filters exactly,
-    handle gray/RGB/RGBA/palette color types, agree with pillow when it is
-    present, and ride the full extract_features mapInPandas path."""
-    import numpy as np
-
-    from plume_spark.operators.multimodal import (
-        FEATURE_DIM,
-        HAVE_PIL,
-        MEDIA,
-        extract_features,
-        featurize,
-        real_decoder,
-    )
-
-    rng = np.random.default_rng(7)
-    gray = rng.integers(0, 256, size=(6, 8), dtype=np.uint8)
-    all_filters = [0, 1, 2, 3, 4, 2]
-    png_gray = _png_bytes(gray, ctype=0, filters=all_filters)
-    grid = decode_real(png_gray, "image/png")
-    assert np.array_equal(grid, gray.astype(np.float64) / 255.0)
-
-    rgb = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
-    luma = (
-        rgb[..., 0].astype(np.uint32) * 299
-        + rgb[..., 1].astype(np.uint32) * 587
-        + rgb[..., 2].astype(np.uint32) * 114
-    ) // 1000
-    png_rgb = _png_bytes(rgb, ctype=2, filters=all_filters)
-    assert np.array_equal(decode_real(png_rgb, "image/png"), luma / 255.0)
-
-    rgba = np.concatenate([rgb, rng.integers(0, 256, (6, 8, 1), dtype=np.uint8)], axis=-1)
-    png_rgba = _png_bytes(rgba, ctype=6, filters=all_filters)
-    assert np.array_equal(decode_real(png_rgba, "image/png"), luma / 255.0)
-
-    plte = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, size=(6, 8), dtype=np.uint8)
-    png_pal = _png_bytes(idx, ctype=3, filters=all_filters, plte=plte)
-    pal_rgb = plte[idx]
-    pal_luma = (
-        pal_rgb[..., 0].astype(np.uint32) * 299
-        + pal_rgb[..., 1].astype(np.uint32) * 587
-        + pal_rgb[..., 2].astype(np.uint32) * 114
-    ) // 1000
-    assert np.array_equal(decode_real(png_pal, "image/png"), pal_luma / 255.0)
-
-    with pytest.raises(NotImplementedError):  # Adam7 stays a loud gap
-        decode_real(_png_bytes(gray, ctype=0, interlace=1), "image/png")
-
-    if HAVE_PIL:  # parity with pillow on the identical payload
-        import io
-
-        from PIL import Image
-
-        pil = np.asarray(
-            Image.open(io.BytesIO(png_rgb)).convert("L"), dtype=np.float64
-        )
-        assert np.array_equal(decode_real(png_rgb, "image/png"), pil / 255.0)
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", "image/png", png_gray, 8, 6, None),
-            (2, "image", "image/png", png_rgb, 8, 6, None),
-        ],
-        schema=MEDIA,
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, decoder=real_decoder).collect()}
-    assert rows[1]["feature"] == [float(x) for x in featurize(grid)]
-    assert rows[2]["feature"] == [float(x) for x in featurize(luma / 255.0)]
-    assert all(len(r["feature"]) == FEATURE_DIM for r in rows.values())
-
-
-def _y4m_bytes(frames, cspace: str = "C420") -> bytes:
-    """Minimal YUV4MPEG2 encoder for fixtures: luma from ``frames``
-    ((n, h, w) uint8), constant-128 chroma planes sized per colorspace."""
-    import numpy as np
-
-    a = np.asarray(frames, dtype=np.uint8)
-    n, h, w = a.shape
-    chroma = {"C420": (w * h) // 2, "C444": w * h * 2, "Cmono": 0}[cspace]
-    out = [f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 {cspace}\n".encode()]
-    for f in a:
-        out.append(b"FRAME\n" + f.tobytes() + bytes([128]) * chroma)
-    return b"".join(out)
-
-
-def test_multimodal_real_video_decode(spark):
-    """The REAL video branch: pure-Python YUV4MPEG2 decode recovers the
-    exact luma stack (chroma skipped per colorspace), and
-    extract_frame_features fans each payload out to per-sampled-frame
-    feature rows through mapInPandas.  Compressed codecs still raise."""
-    import numpy as np
-
-    from plume_spark.operators.multimodal import (
-        FEATURE_DIM,
-        MEDIA,
-        extract_frame_features,
-        featurize,
-    )
-
-    frames = np.stack(
-        [(np.arange(24, dtype=np.uint8).reshape(4, 6) * 9 + k * 31) % 255 for k in range(5)]
-    )
-    for cspace in ("C420", "C444", "Cmono"):
-        payload = _y4m_bytes(frames, cspace)
-        stack = decode_real(payload, "video/x-yuv4mpeg")
-        assert stack.shape == (5, 4, 6)
-        assert np.array_equal(stack, frames.astype(np.float64) / 255.0)
-
-    payload = _y4m_bytes(frames)
-    media = spark.createDataFrame(
-        [
-            (7, "video", "video/x-yuv4mpeg", payload, 6, 4, 200),
-            (8, "image", "image/png", b"not-video", 1, 1, None),
-        ],
-        schema=MEDIA,
-    )
-    rows = sorted(
-        extract_frame_features(media, every_n=2).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2, 4]
-    assert all(r["media_id"] == 7 and r["n_frames"] == 5 for r in rows)
-    stack = decode_real(payload, "video/x-yuv4mpeg")
-    for r in rows:
-        assert r["feature"] == [float(x) for x in featurize(stack[r["frame_idx"]])]
-        assert len(r["feature"]) == FEATURE_DIM
-
-    with pytest.raises(NotImplementedError):
-        decode_real(b"\x00\x00\x01\xba mpeg-ps", "video/mp4")
 
 
 def test_traversal_tiny_graph(spark):
@@ -666,9 +169,6 @@ def test_hostile_inputs(spark):
     assert res2.triples.count() >= 1  # the Alice row still links
 
     big_doc = spark.createDataFrame([(0, "y" * 5000), (1, "")], ["doc_id", "text"])
-    stats = {r["doc_id"]: r for r in text.token_stats(big_doc).collect()}
-    assert stats[0]["n_tokens"] == 1 and stats[1]["n_tokens"] == 0
-    assert text.quality_score(big_doc).count() == 2
     assert dedup.exact_dedup(big_doc).count() == 2
 
 
@@ -876,7 +376,7 @@ def test_no_rowwise_python_in_plans(spark, docs):
 
     t = generate_transcripts(spark, 4, seed=0)
     result = run_pipeline(t, persist_changelog=False)
-    for df in [result.triples, dedup.minhash_dedup(docs), text.fingerprint(docs)]:
+    for df in [result.triples, dedup.minhash_dedup(docs)]:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan, plan[:2000]
 
@@ -962,50 +462,6 @@ def test_range_join_count_semantics(spark):
     assert got == {1: 2, 2: 0}
 
 
-def test_corpus_operators(spark, docs):
-    from plume_spark.operators import corpus
-
-    # decontamination: doc 3 is the "eval set"; docs 0 and 1 share most
-    # 5-grams with it (0 is an exact dup, 1 a near-dup), 2 and 4 share none
-    ev = docs.filter(F.col("doc_id") == 3)
-    train = docs.filter(F.col("doc_id") != 3)
-    ov = {r["doc_id"]: r for r in corpus.ngram_overlap(train, ev, n=5).collect()}
-    assert ov[0]["overlap_frac"] == 1.0  # exact duplicate of the eval doc
-    assert 0 < ov[1]["overlap_frac"] < 1.0
-    assert 2 not in ov and 4 not in ov
-
-    # boilerplate: docs 0 and 3 are exact dups -> every gram of theirs is in
-    # >= 2 docs; doc 1 shares all but its tail gram; 2/4 share none
-    bp = {r["doc_id"]: r for r in corpus.boilerplate_score(docs, n=3, min_docs=2).collect()}
-    assert bp[0]["boilerplate_frac"] == 1.0 and bp[3]["boilerplate_frac"] == 1.0
-    assert 0 < bp[1]["boilerplate_frac"] < 1.0
-    assert bp[2]["n_common"] == 0 and bp[4]["n_common"] == 0
-
-    # split: deterministic, total partition, same assignment on recompute
-    s1 = {r["doc_id"]: r["split"] for r in corpus.train_val_split(docs).collect()}
-    s2 = {r["doc_id"]: r["split"] for r in corpus.train_val_split(docs).collect()}
-    assert s1 == s2 and set(s1) == {0, 1, 2, 3, 4}
-    assert set(s1.values()) <= {"train", "val"}
-
-    # tfidf: rare terms outrank corpus-wide ones; k rows per doc max
-    tk = corpus.tfidf_topk(docs, k=2).collect()
-    by_doc: dict[int, list] = {}
-    for r in tk:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert all(len(v) <= 2 for v in by_doc.values())
-    assert all(r["df_docs"] < 5 for r in by_doc[2])  # distinctive, not 'the'
-
-    # packing: offsets are contiguous prefix sums within each shard
-    pk = sorted(corpus.pack_chunks(docs, budget=10, n_shards=2).collect(),
-                key=lambda r: (r["shard"], r["doc_id"]))
-    tok_counts = {r["doc_id"]: len(r["text"].split()) for r in docs.collect()}
-    seen: dict[int, int] = {}
-    for r in pk:
-        assert r["tok_offset"] == seen.get(r["shard"], 0)
-        assert r["chunk"] == r["tok_offset"] // 10
-        seen[r["shard"]] = r["tok_offset"] + tok_counts[r["doc_id"]]
-
-
 def test_incremental_neardup_equals_full(spark):
     """Index old docs once, dedup the new batch against it: pairs touching a
     new doc must be identical (incl. jaccard) to a full re-run's, and no
@@ -1064,79 +520,6 @@ def test_incremental_neardup_via_persisted_index(spark, tmp_path):
     assert sig_t.read().select("doc_id").distinct().count() == d.count()
 
 
-def test_corpus_hostile_inputs(spark):
-    """Corpus ops on degenerate docs: empty text, whitespace-only, fewer
-    tokens than the shingle width — empty results or sane rows, no crash."""
-    from plume_spark.operators import corpus
-
-    rows = [(0, ""), (1, "   "), (2, "one two"), (3, "a b c d e f")]
-    d = spark.createDataFrame(rows, ["doc_id", "text"])
-    assert corpus.ngram_overlap(d, d, n=5).count() >= 0
-    bp = {r["doc_id"]: r for r in corpus.boilerplate_score(d, n=3).collect()}
-    assert set(bp) == {3}  # only doc 3 has >= 3 tokens
-    assert {r["doc_id"] for r in corpus.train_val_split(d).collect()} == {0, 1, 2, 3}
-    tk = corpus.tfidf_topk(d, k=2).collect()
-    assert all(r["doc_id"] in (2, 3) for r in tk)  # docs with real tokens
-    pk = {r["doc_id"]: r for r in corpus.pack_chunks(d, budget=4, n_shards=2).collect()}
-    assert set(pk) == {0, 1, 2, 3}
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert corpus.boilerplate_score(empty).count() == 0
-    assert corpus.pack_chunks(empty).count() == 0
-
-
-def test_round3_operators_hostile_inputs(spark):
-    """mix_sample / dupe_ngram_rate / pii_scrub / quality_logreg /
-    quantize_embeddings on degenerate rows: empty text, no matches, short
-    docs, zero vectors — sane rows, no crash, exact expectations."""
-    from plume_spark.operators import corpus
-    from plume_spark.operators.similarity import quantize_embeddings
-    from plume_spark.operators.text import pii_scrub, quality_logreg
-
-    d = spark.createDataFrame(
-        [(0, "", "srcA"), (1, "   ", "srcB"), (2, "one two", "srcA"),
-         (3, "a b c d e f g h i j", "srcB")],
-        ["doc_id", "text", "source"],
-    )
-    # mix_sample: rate 1.0 keeps everything, 0.0 keeps nothing
-    all_r = spark.createDataFrame([("srcA", 1.0), ("srcB", 1.0)], ["source", "rate"])
-    none_r = spark.createDataFrame([("srcA", 0.0), ("srcB", 0.0)], ["source", "rate"])
-    assert corpus.mix_sample(d, all_r).count() == 4
-    assert corpus.mix_sample(d, none_r).count() == 0
-    # dupe rate: only doc 3 has >= 8 tokens; its grams are unique -> 0.0
-    dr = {r["doc_id"]: r for r in corpus.dupe_ngram_rate(d, n=8).collect()}
-    assert set(dr) == {3} and dr[3]["dup_frac"] == 0.0
-    # duplicated passage across two docs -> dup_frac 1.0 on both
-    d2 = spark.createDataFrame(
-        [(10, "x y z w v u t s"), (11, "x y z w v u t s")], ["doc_id", "text"]
-    )
-    dr2 = {r["doc_id"]: r["dup_frac"] for r in corpus.dupe_ngram_rate(d2, n=8).collect()}
-    assert dr2 == {10: 1.0, 11: 1.0}
-    # pii scrub: email + long digits redacted, counts exact; empty rows no-op
-    p = spark.createDataFrame(
-        [(0, "mail me at a.b+c@x-corp.io ref 1234567 ok"), (1, ""), (2, "no pii 123")],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in pii_scrub(p).collect()}
-    assert got[0]["text"] == "mail me at <EMAIL> ref <NUM> ok"
-    assert got[0]["n_redactions"] == 2
-    assert got[1]["text"] == "" and got[1]["n_redactions"] == 0
-    assert got[2]["text"] == "no pii 123" and got[2]["n_redactions"] == 0
-    # logreg: empty text scores at the bias point, bounded (0, 1)
-    import math
-
-    q = {r["doc_id"]: r for r in quality_logreg(d).collect()}
-    assert abs(q[0]["score"] - round(1 / (1 + math.exp(1.5)), 6)) < 1e-9
-    assert all(0.0 < r["score"] < 1.0 for r in q.values())
-    # quantize: zero vector -> scale 0, all-zero q; max element hits ±127
-    e = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [0.5, -1.0])],
-        "vec_id long, embedding array<float>",
-    )
-    qz = {r["vec_id"]: r for r in quantize_embeddings(e).collect()}
-    assert qz[0]["scale"] == 0.0 and qz[0]["q"] == [0, 0]
-    assert qz[1]["scale"] == 1.0 and qz[1]["q"] == [63, -127]
-
-
 def test_triangle_count_hand_computed(spark):
     from plume_spark.operators.graph_metrics import co_occurrence_edges, triangle_count
 
@@ -1160,25 +543,6 @@ def test_triangle_count_hand_computed(spark):
     pairs = {(r["a"], r["b"]): r["n_groups"]
              for r in co_occurrence_edges(df, "grp", "item", max_group_size=10).collect()}
     assert pairs == {(1, 2): 1, (1, 3): 1, (2, 3): 2}
-
-
-def test_corpus_pipeline_composition(spark):
-    """The ops compose into the full corpus-prep flow: select (quality +
-    lang + dedup keeper) -> split -> pack; every selected doc gets exactly
-    one split and one chunk slot."""
-    from plume_spark.operators import corpus
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    selected = corpus.select_corpus(d)
-    n_sel = selected.count()
-    assert 0 < n_sel < d.count()
-    kept = d.join(selected.select("doc_id"), "doc_id", "left_semi")
-    split = corpus.train_val_split(kept)
-    packed = corpus.pack_chunks(kept, budget=128, n_shards=4)
-    assert split.count() == n_sel and packed.count() == n_sel
-    joined = split.join(packed, "doc_id")
-    assert joined.count() == n_sel  # 1:1 across stages
-    assert joined.filter("split = 'val'").count() > 0
 
 
 def test_all_contract_plans_are_arrow_only(spark):
@@ -1242,28 +606,9 @@ def test_common_neighbors_hand_computed(spark):
     assert common_neighbors(star, max_degree=5).count() == 10
 
 
-def test_knn_graph_invariants(spark):
-    """k-NN graph over the sf0.001 embeddings: per-source cap, no
-    self-edges, descending rank order, and run-to-run determinism (the
-    hyperplanes are arithmetic, not random state)."""
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    g = similarity.knn_graph(e, k=5).collect()
-    per_src: dict[int, list] = {}
-    for r in g:
-        assert r["src"] != r["dst"]
-        assert -1.0 <= r["cos_sim"] <= 1.0
-        per_src.setdefault(r["src"], []).append((r["cos_sim"], r["dst"]))
-    assert max(len(v) for v in per_src.values()) <= 5
-    for v in per_src.values():  # rank order: cos desc, dst asc tie-break
-        assert v == sorted(v, key=lambda t: (-t[0], t[1]))
-    again = similarity.knn_graph(e, k=5).collect()
-    assert sorted(map(tuple, g)) == sorted(map(tuple, again))
-
-
 def test_lsh_and_pair_strategies_bit_identical(spark):
     """The codegen (unrolled) and HOF (interpreted) evaluation paths of the
-    LSH projection, the blocked pair join, and the k-NN graph must produce
-    IDENTICAL results — the auto switch picks by size estimate, so the
+    LSH projection and the blocked pair join must produce IDENTICAL results — the auto switch picks by size estimate, so the
     choice must never be observable in values.  (The gate data is small
     enough that auto always picks HOF; this test is what keeps the scale
     path honest.)"""
@@ -1281,19 +626,30 @@ def test_lsh_and_pair_strategies_bit_identical(spark):
     p_h = similarity.blocked_cosine_pairs(blocked, "blk_b", tau=-1.0, strategy="hof")
     assert rows(p_c) == rows(p_h)
 
-    g_c = similarity.knn_graph(e, k=5, strategy="codegen")
-    g_h = similarity.knn_graph(e, k=5, strategy="hof")
-    assert rows(g_c) == rows(g_h)
-
-    i_c = similarity.ivf_topk(e, 0, 10, 8, 2, strategy="codegen")
-    i_h = similarity.ivf_topk(e, 0, 10, 8, 2, strategy="hof")
-    assert rows(i_c) == rows(i_h)
+    # on a toy set: near vectors share every hyperplane sign, antipodal
+    # vectors flip all of them, and the pair join keeps only same-block
+    # pairs at or above tau
+    toy = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0], 0),
+            (1, [0.9, 0.1, 0.0, 0.0], 0),
+            (2, [0.0, 1.0, 0.0, 0.0], 1),
+            (3, [-1.0, 0.0, 0.0, 0.0], 1),
+            (4, [0.8, 0.2, 0.0, 0.0], 0),
+        ],
+        ["vec_id", "embedding", "label"],
+    )
+    for strategy in ("codegen", "hof"):
+        b = dict(map(tuple, similarity.lsh_buckets(toy, strategy=strategy).collect()))
+        assert b[0] == b[1] and b[0] != b[3]
+        pairs = similarity.blocked_cosine_pairs(toy, "label", tau=0.9, strategy=strategy)
+        got = {(r["vec_a"], r["vec_b"]) for r in pairs.collect()}
+        assert (0, 1) in got and (2, 3) not in got
 
 
 def test_graph_and_knn_hostile_inputs(spark):
-    """k_core / common_neighbors / knn_graph on degenerate inputs: empty
-    edge sets, self-loops only, single-row embeddings — sane empties, no
-    crash."""
+    """k_core / common_neighbors on degenerate inputs: empty edge sets and
+    self-loops only — sane empties, no crash."""
     from plume_spark.operators.graph_metrics import common_neighbors, k_core
 
     empty = spark.createDataFrame([], "a long, b long")
@@ -1302,12 +658,6 @@ def test_graph_and_knn_hostile_inputs(spark):
     loops = spark.createDataFrame([(1, 1), (2, 2)], ["a", "b"])
     assert k_core(loops, k=1).count() == 0  # self-loops dropped -> no edges
     assert common_neighbors(loops).count() == 0
-    # one vector: a bucket of size 1 -> no pairs, no edges
-    one = spark.createDataFrame(
-        [(0, [float(i) for i in range(64)], 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    assert similarity.knn_graph(one, k=3).count() == 0
 
 
 def test_k_core_empties_on_final_round(spark):
@@ -1338,49 +688,6 @@ def test_clustering_coefficient_known_graph(spark):
     }
 
 
-def test_range_search_matches_topk_scores(spark):
-    """range_search and brute_force_topk share one scoring expression:
-    every top-k row at or above the radius must appear in the range result
-    with the IDENTICAL rounded score (bit-equal floats)."""
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)], 0) for i in range(50)
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    topk = {
-        r["vec_id"]: r["cos_sim"]
-        for r in similarity.brute_force_topk(emb, query_vec_id=0, k=50).collect()
-    }
-    rng_rows = {
-        r["vec_id"]: r["cos_sim"]
-        for r in similarity.range_search(emb, query_vec_id=0, tau=0.1).collect()
-    }
-    expect = {v: s for v, s in topk.items() if s >= 0.1}
-    assert rng_rows == expect and rng_rows[0] == 1.0
-
-
-def test_readability_floors_and_formula(spark):
-    """Empty text stays defined (words and sentences floored at 1); a known
-    sentence reproduces the Flesch arithmetic exactly."""
-    from plume_spark.operators.text import readability
-
-    df = spark.createDataFrame(
-        [(1, "the cat sat."), (2, "   ")], ["doc_id", "text"]
-    )
-    got = {r["doc_id"]: r for r in readability(df).collect()}
-    # "the cat sat.": 3 words, 1 sentence run, vowel groups: e|a|a -> 3
-    r1 = got[1]
-    assert (r1["n_words"], r1["n_sentences"], r1["n_syllables"]) == (3, 1, 3)
-    expected = round(206.835 - 1.015 * 3.0 - 84.6 * 1.0, 2)
-    assert r1["flesch"] == expected
-    r2 = got[2]
-    assert (r2["n_words"], r2["n_sentences"], r2["n_syllables"]) == (1, 1, 0)
-
-
 def test_peak_concurrency_midnight_span_and_ties(spark):
     """A session spanning midnight counts toward BOTH days (clipped to day
     bounds); touching sessions (end == next start) count as concurrent
@@ -1407,29 +714,6 @@ def test_peak_concurrency_midnight_span_and_ties(spark):
     # start sorts first -> both active -> peak 2
     assert got["2024-01-02"]["peak_concurrency"] == 2
     assert got["2024-01-02"]["n_active"] == 3
-
-
-def test_word_entropy_degenerate_and_uniform(spark):
-    """All-same tokens -> entropy 0; k uniform tokens -> ln(k); empty /
-    whitespace-only docs drop out (no token rows), matching the oracle."""
-    import math
-
-    from plume_spark.operators.text import word_entropy
-
-    df = spark.createDataFrame(
-        [
-            (1, "a a a a"),
-            (2, "a b c d"),
-            (3, "   "),
-            (4, ""),
-        ],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in word_entropy(df).collect()}
-    assert set(got) == {1, 2}
-    assert got[1]["entropy"] == 0.0 and got[1]["n_distinct_tokens"] == 1
-    assert got[2]["entropy"] == round(math.log(4), 6)
-    assert got[2]["n_tokens"] == 4 and got[2]["n_distinct_tokens"] == 4
 
 
 def test_edge_lift_known_graph(spark):

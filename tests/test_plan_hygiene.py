@@ -33,24 +33,11 @@ def _exchanges(plan: str) -> int:
     return len(re.findall(r"(?<!Reused)Exchange", plan))
 
 
-def test_scan_speed_ops_have_zero_shuffles(spark):
-    """Pure per-row operators must stay pure: any Exchange in these plans
-    means someone added an aggregation/join to what should run at scan
-    speed over 100 TB."""
-    for name in ("text_pii_scrub", "text_quality_logreg", "emb_quantize",
-                 "corpus_repetition", "text_quality", "text_fingerprint",
-                 "text_readability", "ann_range_search",
-                 "corpus_gopher_rules", "corpus_chunk_windows"):
-        plan = _plan(spark, name)
-        assert _exchanges(plan) == 0, (name, plan[:1200])
-
-
 def test_bounded_shuffle_budgets(spark):
     """Shuffle-count budgets for the aggregation/join operators whose
     round-3 rewrites removed exchanges — a regression reintroduces them."""
     budgets = {
         "g4_cooccur": 2,        # groupBy(grp) + groupBy(a, b); was 4
-        "corpus_dupe_ngrams": 4,  # shingle distinct, gram DF, join, doc agg
         "a1_group_sum": 1,
         "w1_turn_ordering": 1,
         "w3_sessionize": 1,     # both windows share one (user) shuffle
@@ -58,12 +45,6 @@ def test_bounded_shuffle_budgets(spark):
         # both row_number windows and both aggs cluster by (a prefix of)
         # user_id — one exchange serves all four
         "w6_event_runs": 1,
-        # the underlying unigram_logprob plan owns 6 exchanges (tokenize/
-        # freq/total/join/doc-agg chain); tiering must add exactly ONE more
-        # (the tier aggregate) — a pure projection cannot cost a shuffle
-        "corpus_quality_tiers": 7,
-        # bucket join + grid-split pair join + per-src top-k window
-        "ann_knn_graph": 5,
         # backbone co-occurrence + degree/wedge/adjacency joins (each over
         # the small backbone edge set, but the count must not creep)
         "g8_common_neighbors": 15,
@@ -85,10 +66,6 @@ def test_bounded_shuffle_budgets(spark):
         # late round-4 additions
         # session window (user) + day repartition for sweep + day agg
         "w9_peak_concurrency": 3,
-        # (doc, token) partial + doc partial — both map-side combinable
-        "text_word_entropy": 2,
-        # one partial agg + the window over the (tiny) aggregate
-        "corpus_length_hist": 2,
         # distinct + two kind joins + pattern agg over the memoized flagship
         "kg_schema_induce": 7,
         # ONE group fold (checkpointed, 3 consumers) + pair agg + marginal
@@ -96,23 +73,11 @@ def test_bounded_shuffle_budgets(spark):
         "g11_edge_lift": 7,
         # per-user moments partial agg + the fact-to-moments equi-join
         "w10_zscore_outliers": 2,
-        # gram-df cap agg + size agg + shared-gram pair join + pair agg,
-        # all over ONE checkpointed capped-gram table
-        "corpus_containment": 4,
         # transcript window + provenance equi-join to the memoized flagship
         # checkpoint + the triple-key partial agg
         "kg_fact_recency": 6,
-        # key assignment is a pure projection; ONE window shuffle per group
-        "corpus_weighted_sample": 1,
         # one (type, week) partial agg + the lag window over the tiny agg
         "w11_week_over_week": 2,
-        # (label, dim) centroid agg + keyed join + (vec, label) agg +
-        # per-label top-k window over the per-vector aggregate
-        "emb_outliers": 6,
-        # first-occurrence agg + news agg + bucket agg + intra window over
-        # the checkpointed doc table; the lone SinglePartition window runs
-        # over the n_buckets-row aggregate only
-        "corpus_vocab_growth": 4,
         # first-view agg + keyed join + first-purchase conditional agg
         "w12_time_to_convert": 3,
         # session-2 additions
@@ -131,15 +96,9 @@ def test_bounded_shuffle_budgets(spark):
         "kg_degree_hist": 5,
         # one (user) lag-window shuffle + the percentile agg keyed by type
         "w15_interarrival": 2,
-        # logprob substrate owns its chain; the cut adds only the 1-row
-        # threshold agg (broadcast) + the final 3-row bucket agg
-        "corpus_ccnet_cut": 15,
         # transcript window + provenance join + fact agg + the argmax
         # window over the (subj,pred)-grouped fact table
         "kg_current_facts": 18,
-        # 1-row codebook aggregate (partial/final); the assignment itself
-        # is a pure projection after the broadcast
-        "emb_pq_codes": 2,
         # per-user partial agg + the rank window over the tiny aggregate
         "w16_gini": 2,
         # per-type median agg + broadcast-joined second percentile agg
@@ -147,10 +106,6 @@ def test_bounded_shuffle_budgets(spark):
         # plan reads the localCheckpointed alias-substrate entity table:
         # the filter/projection must stay shuffle-free
         "kg_alias_merge": 0,
-        # these two inherit the full minhash banding + verify (+ CC loop)
-        # chain; the budget pins that the added stage costs ~nothing
-        "corpus_decon_fuzzy": 42,
-        "corpus_dup_cluster_stats": 50,
         # CMS grid agg (partial/final after the explode) + exact top-20 +
         # the broadcast probe join
         "a14_countmin": 4,
@@ -169,14 +124,6 @@ def test_bounded_shuffle_budgets(spark):
         # one events scan + one user agg; bit-set distinct + its broadcast;
         # k_hit reuses the user partitioning, final join reuses it too
         "a15_bloom": 4,
-        # embeds the emb_pq_codes encode (codebook single-row agg + its
-        # broadcast) plus the 32-row LUT broadcast and 4 LUT hash joins —
-        # every exchange here is a broadcast of a <=32-row table
-        "ann_pq_adc": 10,
-        # session-3 additions
-        # the full ADC chain (10) + ONE broadcast of the 20-row shortlist
-        # into the candidate join — the exact rerank adds no wide exchange
-        "ann_rerank": 11,
         # same wedge topology as g8 minus the two degree re-joins (the
         # fixed-point weight rides the wedge rows): sym degree agg, capped
         # mid join, pair agg, adjacency anti-join
@@ -185,32 +132,13 @@ def test_bounded_shuffle_budgets(spark):
         # pool + anti-join vs the positive set, all over the memoized
         # flagship checkpoint
         "kg_neg_samples": 6,
-        # (source, tok) partial agg + the top-100 window; the moment agg
-        # runs on the window's existing (source) partitioning
-        "text_zipf_slope": 2,
         # ONE user-keyed equi-join carrying the 7-day range predicate +
         # the purchase-keyed partial agg
         "w19_attribution": 2,
-        # IVF assignment window + probe/member broadcasts + the full ADC
-        # chain — every exchange beyond the one assignment window shuffle
-        # is a broadcast of a <=32-row table
-        "ann_ivf_adc": 15,
-        # the probe is a broadcast-literal bitmap projection (zero
-        # shuffle); what remains: train-shingle distinct + the broadcast
-        # of the checkpointed eval-gram table + the per-doc tally
-        "corpus_decon_bloom": 3,
-        # ivf assignment window + probe/query/exact-topk broadcasts + the
-        # 10-row audit window; the three top-ks are TakeOrderedAndProject
-        "ann_multiprobe_topk": 6,
-        # two TakeOrderedAndProject top-10s + ONE 10-row broadcast join
-        "emb_matryoshka": 1,
         # 3 unrolled iterations x (rank join + degree join + contribution
         # agg) over the checkpointed node/indicator tables — the rank table
         # shuffles each round, the edge exchange is AQE-reused
         "g14_ppr": 21,
-        # assignment window + the (cent, dim) partial agg; the 8-row
-        # centroid table broadcasts
-        "emb_kmeans_step": 3,
         # triple distinct + (subj,obj) self-join + pair agg + antecedent
         # agg over the memoized flagship checkpoint
         "kg_rule_confidence": 8,
@@ -219,9 +147,6 @@ def test_bounded_shuffle_budgets(spark):
         # the CC loop runs eagerly at build time; the returned plan is the
         # label aggregate + edge-label join + two component-sized aggs
         "g15_component_profile": 18,
-        # exact top-10 TakeOrderedAndProject + two broadcasts (query
-        # bucket, candidate ids)
-        "ann_lsh_recall": 2,
         # ONE map-side-combinable partial agg over the events scan (the
         # a16 shape with a 4th decimal power sum riding along)
         "a17_group_kurtosis": 1,
@@ -230,42 +155,13 @@ def test_bounded_shuffle_budgets(spark):
         # endpoints + e_in/d_tot partial aggs + the community left join,
         # all over the checkpointed canonical edge set; m broadcasts
         "g16_modularity": 9,
-        # raw + target token-keyed partial aggs into the checkpointed
-        # vocabulary table + the totals row + the token join + the
-        # per-doc agg; the vocabulary and totals broadcast
-        "corpus_dsir": 6,
-        # ONE bounded-key (alphabet^2) partial agg + TakeOrderedAndProject
-        "text_bpe_pairs": 1,
-        # the (w1,w2) partial agg feeds the checkpoint; after it: two
-        # vocabulary-sized slot aggs + their joins back + the broadcast
-        # total + TakeOrderedAndProject
-        "text_pmi_bigrams": 7,
         # ONE (user_id) stream-shard window + ONE map-side-combinable agg
         "w20_late_events": 2,
-        # row projection is a zero-shuffle array fold; ONE 64-key dim agg
-        # + the 64-row norm broadcast
-        "emb_power_iter": 3,
         # ONE map-side-combinable partial agg (the two-variable moment set)
         "a18_group_corr": 1,
-        # bigram + unigram vocab aggs into checkpoints, the three count
-        # joins back onto the position stream, and the per-doc agg; the
-        # scalar total broadcasts
-        "corpus_bigram_logprob": 8,
-        # predicate + scoring fuse into one scan; the only exchange is the
-        # TakeOrderedAndProject top-k
-        "ann_filtered_topk": 1,
-        # the 5-row query set broadcasts; ONE (q_id) window shuffle ranks
-        # all queries in a single pass
-        "ann_batch_topk": 2,
         # ONE (user_id) window shuffle; the Horner folds are per-row array
         # expressions
         "w22_ema": 1,
-        # assignment/cells/exact-top-10 run eagerly (checkpointed); per
-        # probe level the plan carries ~8 exchanges, ALL of them tiny-
-        # table broadcasts or single-row count aggs (cells broadcast,
-        # 10-row hit join, two 1-row crossJoin broadcasts, two
-        # SinglePartition aggs) x 3 levels — nothing data-sized shuffles
-        "ann_recall_curve": 24,
         # two map-side-combinable partial aggs, same shuffle twice
         # ((user,type) then (user))
         "a19_user_entropy": 2,
@@ -296,9 +192,9 @@ def test_projection_prunes_scan_columns(spark):
 
 
 def test_small_topk_is_take_ordered_or_local(spark):
-    """ann_cosine_topk must end in TakeOrderedAndProject (a top-k, never a
-    global sort of the scored table)."""
-    plan = _plan(spark, "ann_cosine_topk")
+    """o1_topk must end in TakeOrderedAndProject (a top-k, never a global
+    sort of the events table)."""
+    plan = _plan(spark, "o1_topk")
     assert "TakeOrderedAndProject" in plan, plan[:1500]
     assert "Sort " not in plan  # no full sort operator
 
@@ -471,9 +367,6 @@ def test_no_list_backed_frames_in_the_package():
         # the synthetic input generator: a test and benchmark fixture, not
         # on the build, store or streaming path
         "generator.py",
-        # the multimodal decoder family, scheduled for deletion (ROADMAP
-        # item 2); its media rows never reach the graph build
-        "multimodal.py",
     }
     root = pathlib.Path(plume_spark.__file__).parent
     hits = sorted(
@@ -507,12 +400,14 @@ def transcript_parts(spark, tmp_path):
 
 def test_build_graph_job_budget(spark, tmp_path, transcript_parts):
     """Jobs of a small ``build_graph`` (8 work units): a cold build, an
-    unchanged rerun and an append — 19, 16 and 24 jobs (36, 28 and 37 while
+    unchanged rerun and an append — 16, 13 and 21 jobs (36, 28 and 37 while
     driver rows were Python-backed frames and the entity tables were
-    derived by Spark).  Driver rows are local relations (no Python worker,
+    derived by Spark; 19, 16 and 24 while the kind-constraint check ran a
+    count of its own).  Driver rows are local relations (no Python worker,
     no collect round trip for lineage), the empty staging table's MERGE
-    skips its bucket probe, and build_entities assembles the entity
-    dictionary from one collect: a new job in any of these shows here."""
+    skips its bucket probe, build_entities assembles the entity dictionary
+    from one collect, and the triples write counts kind violations: a new
+    job in any of these shows here."""
     from plume_spark.pipeline import build_graph
 
     base, grown = transcript_parts
@@ -522,4 +417,4 @@ def test_build_graph_job_budget(spark, tmp_path, transcript_parts):
         with _jobs(spark) as jobs:
             stats = build_graph(df, store, n_buckets=8)
         counts[label] = (len(jobs), stats["pending_units"])
-    assert counts == {"cold": (19, 8), "rerun": (16, 0), "append": (24, 4)}, counts
+    assert counts == {"cold": (16, 8), "rerun": (13, 0), "append": (21, 4)}, counts

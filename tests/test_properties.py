@@ -211,52 +211,7 @@ def test_driver_link_kernel_precision_and_determinism(norms):
         assert j >= JACCARD_TAU, (a, b, j)
 
 
-# ---------------------------------------------------------------- corpus ops
-
-_doc_texts = st.lists(
-    st.text(alphabet="ab c", min_size=0, max_size=40), min_size=1, max_size=12
-)
-
-
-@given(_doc_texts, st.integers(1, 20), st.integers(1, 4))
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-def test_pack_chunks_matches_python_reference(spark, texts, budget, n_shards):
-    """pack_chunks offsets == a sequential per-shard prefix-sum reference."""
-    from plume_spark.operators import corpus
-
-    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-    got = {
-        r["doc_id"]: (r["shard"], r["tok_offset"], r["chunk"])
-        for r in corpus.pack_chunks(docs, budget=budget, n_shards=n_shards).collect()
-    }
-    def _poly(v: str) -> int:
-        acc = 0
-        for ch in v:
-            acc = (acc * 131 + ord(ch)) % 2147483647
-        return acc
-
-    offsets: dict[int, int] = {}
-    for doc_id, text in sorted(enumerate(texts)):
-        shard = _poly(str(doc_id)) % n_shards
-        off = offsets.get(shard, 0)
-        assert got[doc_id] == (shard, off, off // budget)
-        offsets[shard] = off + len([t for t in text.split(" ") if t])
-
-
-@given(st.lists(st.integers(0, 10**9), min_size=1, max_size=30, unique=True))
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-def test_train_val_split_total_and_deterministic(spark, ids):
-    """Every doc gets exactly one stable split label; bucket in [0, 100)."""
-    from plume_spark.operators import corpus
-
-    docs = spark.createDataFrame([(i, "x") for i in ids], ["doc_id", "text"])
-    rows = corpus.train_val_split(docs, val_pct=25).collect()
-    assert sorted(r["doc_id"] for r in rows) == sorted(ids)
-    for r in rows:
-        assert 0 <= r["bucket"] < 100
-        assert r["split"] == ("val" if r["bucket"] < 25 else "train")
-    again = {r["doc_id"]: r["bucket"] for r in corpus.train_val_split(docs, val_pct=25).collect()}
-    assert again == {r["doc_id"]: r["bucket"] for r in rows}
+# ------------------------------------------------------------ graph operators
 
 
 @given(st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)), min_size=1, max_size=40))
@@ -346,122 +301,7 @@ def test_label_propagation_matches_bruteforce(spark, raw_edges, n_iters):
     assert got == labels
 
 
-@given(st.lists(st.text(alphabet="ab c", min_size=0, max_size=30), min_size=1, max_size=8))
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-def test_repetition_and_logprob_match_python(spark, texts):
-    """repetition_score and unigram_logprob == direct python references."""
-    import math
-
-    from plume_spark.operators import corpus
-
-    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-
-    rep = {r["doc_id"]: (r["n_ngrams"], r["rep_frac"])
-           for r in corpus.repetition_score(docs, n=2).collect()}
-    for i, t in enumerate(texts):
-        toks = [x for x in t.split(" ") if x]
-        grams = [" ".join(toks[j:j + 2]) for j in range(max(len(toks) - 1, 0))]
-        frac = round((len(grams) - len(set(grams))) / len(grams), 6) if grams else 0.0
-        assert rep[i] == (len(grams), frac)
-
-    lp = {r["doc_id"]: (r["n_tokens"], r["avg_logprob"])
-          for r in corpus.unigram_logprob(docs).collect()}
-    freq: dict[str, int] = {}
-    for t in texts:
-        for x in t.split(" "):
-            if x:
-                freq[x] = freq.get(x, 0) + 1
-    total = sum(freq.values())
-    for i, t in enumerate(texts):
-        toks = [x for x in t.split(" ") if x]
-        if not toks:
-            assert i not in lp
-            continue
-        want = round(sum(math.log(freq[x] / total) for x in toks) / len(toks), 6)
-        assert lp[i][0] == len(toks)
-        assert abs(lp[i][1] - want) <= 1e-6
-
-
 # ---------------------------------------------------------- round-3 operators
-
-
-@given(st.lists(st.text(alphabet="ab @.0189+-c", min_size=0, max_size=40),
-                min_size=1, max_size=10))
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-def test_pii_scrub_idempotent_and_clean(spark, texts):
-    """Scrubbing is idempotent (the replacement tokens contain no scrubbable
-    span) and the output never contains an email-shaped span or a 5+ digit
-    run; n_redactions is 0 exactly when text is unchanged."""
-    import re
-
-    from plume_spark.operators.text import PII_DIGITS, PII_EMAIL, pii_scrub
-
-    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-    once = {r["doc_id"]: r for r in pii_scrub(docs).collect()}
-    again = {
-        r["doc_id"]: r
-        for r in pii_scrub(
-            spark.createDataFrame(
-                [(i, once[i]["text"]) for i in once], ["doc_id", "text"]
-            )
-        ).collect()
-    }
-    for i, orig in enumerate(texts):
-        assert not re.search(PII_EMAIL, once[i]["text"])
-        assert not re.search(PII_DIGITS, once[i]["text"])
-        assert again[i]["text"] == once[i]["text"] and again[i]["n_redactions"] == 0
-        assert (once[i]["n_redactions"] == 0) == (once[i]["text"] == orig)
-
-
-@given(st.lists(st.lists(st.floats(-8, 8, allow_nan=False, width=32),
-                         min_size=1, max_size=6),
-                min_size=1, max_size=8))
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-def test_quantize_bounds_and_reconstruction(spark, vecs):
-    """int8 quantization invariants: q in [-127, 127]; dequantized error is
-    below one quantization step (scale/127); zero vectors round-trip to
-    zeros."""
-    from plume_spark.operators.similarity import quantize_embeddings
-
-    emb = spark.createDataFrame(
-        list(enumerate(vecs)), "vec_id long, embedding array<float>"
-    )
-    rows = {r["vec_id"]: r for r in quantize_embeddings(emb).collect()}
-    for i, v in enumerate(vecs):
-        r = rows[i]
-        assert all(-127 <= q <= 127 for q in r["q"])
-        v32 = [float(np.float32(x)) for x in v]
-        scale = max(abs(x) for x in v32)
-        if scale == 0:
-            assert r["q"] == [0] * len(v32) and r["scale"] == 0.0
-            continue
-        step = scale / 127.0
-        for x, q in zip(v32, r["q"]):
-            assert abs(x - q * step) <= step + 1e-9
-
-
-@given(st.lists(st.integers(0, 10**6), min_size=1, max_size=40, unique=True),
-       st.sampled_from([0.0, 0.25, 0.5, 1.0]))
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-def test_mix_sample_stable_membership(spark, ids, rate):
-    """Hash sampling is a deterministic membership function: the kept set at
-    rate r is exactly {id : u(id) < r*P}, is stable across runs, and is a
-    SUBSET of the kept set at any higher rate (growing a corpus or raising a
-    source's rate never un-keeps a doc)."""
-    from plume_spark.operators import corpus
-
-    docs = spark.createDataFrame([(i, "s") for i in ids], ["doc_id", "source"])
-    def kept(r):
-        rates = spark.createDataFrame([("s", r)], ["source", "rate"])
-        return {x["doc_id"] for x in corpus.mix_sample(docs, rates).collect()}
-    lo = kept(rate)
-    assert lo == {
-        i for i in ids
-        if ((i % corpus.MIX_P) * corpus.MIX_A + corpus.MIX_B) % corpus.MIX_P
-        < rate * corpus.MIX_P
-    }
-    assert lo <= kept(min(1.0, rate + 0.25))
-    assert lo == kept(rate)
 
 
 @given(st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)), min_size=1, max_size=40))
@@ -668,51 +508,6 @@ def test_personalized_pagerank_matches_bruteforce(spark, raw_edges, seeds):
         assert abs(got[n] - expected[n]) <= 1, (n, got[n], expected[n])
 
 
-@given(st.lists(st.text(alphabet="ab ", min_size=0, max_size=400), min_size=1, max_size=6))
-@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
-def test_chunk_windows_cover_and_overlap(spark, texts):
-    """Sliding-window chunking invariants on random texts: chunk 0 starts at
-    token 0; consecutive chunk starts differ by exactly the stride; every
-    token position is covered; all but the last chunk of a doc have
-    min(W, n) tokens; token counts reconstruct the doc length as
-    n == (n_chunks - 1) * S + last_chunk_len."""
-    W, S = 64, 48
-    docs = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-
-    # mirrors the registered query body (sha2 fingerprint, same fan-out)
-    toks_col = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    t = df.select("doc_id", toks_col.alias("toks")).filter(F.size("toks") > 0)
-    t = t.withColumn(
-        "chunk_idx",
-        F.explode(F.sequence(F.lit(0), F.expr(f"(size(toks) - 1) div {S}"))),
-    )
-    chunk = F.slice(F.col("toks"), F.col("chunk_idx") * S + 1, W)
-    got = (
-        t.select(
-            "doc_id", "chunk_idx", F.size(chunk).alias("n_tokens"),
-            F.sha2(F.array_join(chunk, " "), 256).alias("fp"),
-        )
-        .collect()
-    )
-    by_doc: dict[int, dict[int, int]] = {}
-    for r in got:
-        by_doc.setdefault(r["doc_id"], {})[r["chunk_idx"]] = r["n_tokens"]
-    for doc_id, text in docs:
-        n = len([x for x in text.split(" ") if x])
-        if n == 0:
-            assert doc_id not in by_doc
-            continue
-        chunks = by_doc[doc_id]
-        n_chunks = (n - 1) // S + 1
-        assert sorted(chunks) == list(range(n_chunks))
-        for i in range(n_chunks - 1):
-            assert chunks[i] == min(W, n - i * S)
-        assert chunks[n_chunks - 1] == min(W, n - (n_chunks - 1) * S)
-        # coverage: last chunk starts at (n_chunks-1)*S < n and W >= S
-        assert (n_chunks - 1) * S < n
-
-
 # ------------------------------------------------- round-5 session operators
 
 
@@ -761,26 +556,6 @@ def test_modularity_matches_bruteforce(spark, raw_edges, n_comm):
         assert got[c]["e_in"] == ex["e_in"]
         assert got[c]["d_tot"] == ex["d_tot"]
         assert abs(got[c]["contrib_e10"] - round(ex["contrib"] * 1e10)) <= 1
-
-
-@given(st.lists(st.text(alphabet="abc ", min_size=0, max_size=60), min_size=1, max_size=8))
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-def test_bpe_pair_counts_bruteforce(spark, texts):
-    """bpe_pair_counts vs a Counter reference: identical (pair, count) rows
-    in identical (count desc, pair asc) order, including the top-k cut."""
-    from collections import Counter
-
-    from plume_spark.operators.text import bpe_pair_counts
-
-    ref: Counter = Counter()
-    for t in texts:
-        for w in t.split(" "):
-            for i in range(len(w) - 1):
-                ref[w[i : i + 2]] += 1
-    expected = sorted(ref.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    got = [(r["pair"], r["n_pairs"]) for r in bpe_pair_counts(df, k=5).collect()]
-    assert got == expected
 
 
 @given(
@@ -921,220 +696,3 @@ def test_group_kurtosis_exact_moments(spark, rows):
             assert abs(spark_kurt - math.floor(kurt * 10000.0 + 0.5)) <= 1
 
 
-@given(st.lists(st.text(alphabet="abc ", min_size=2, max_size=50), min_size=2, max_size=6))
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_pmi_bigrams_bruteforce(spark, texts):
-    """pmi_bigrams vs a Counter reference: exact (w1, w2, c12, l1, r2) rows
-    in the exact top-k order; pmi_e6 within 1 unit of math.log."""
-    import math
-    from collections import Counter
-
-    from plume_spark.operators.text import pmi_bigrams
-
-    big: Counter = Counter()
-    for t in texts:
-        ws = [w for w in t.split(" ") if w]
-        for i in range(len(ws) - 1):
-            big[(ws[i], ws[i + 1])] += 1
-    if not big:
-        return
-    left: Counter = Counter()
-    right: Counter = Counter()
-    for (w1, w2), c in big.items():
-        left[w1] += c
-        right[w2] += c
-    t_big = sum(big.values())
-    expected = sorted(big.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    got = pmi_bigrams(df, k=5).collect()
-    assert [((r["w1"], r["w2"]), r["c12"]) for r in got] == expected
-    for r in got:
-        assert r["l1"] == left[r["w1"]] and r["r2"] == right[r["w2"]]
-        ref = math.floor(
-            math.log(r["c12"] * t_big / (r["l1"] * r["r2"])) * 1e6 + 0.5
-        )
-        assert abs(r["pmi_e6"] - ref) <= 1
-
-
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["s0", "s1"]), st.text(alphabet="ab ", min_size=0, max_size=40)),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_dsir_logratio_bruteforce(spark, rows):
-    """dsir_logratio vs a pure-Python add-1 model: n_tokens exact,
-    avg_logratio within 2e-6 of the reference."""
-    import math
-    from collections import Counter
-
-    from plume_spark.operators.corpus import dsir_logratio
-
-    docs = [(i, t, "en", src, len(t)) for i, (src, t) in enumerate(rows)]
-    raw: Counter = Counter()
-    tgt: Counter = Counter()
-    per_doc: dict[int, list[str]] = {}
-    for i, t, _l, src, _n in docs:
-        ws = [w for w in t.split(" ") if w]
-        per_doc[i] = ws
-        raw.update(ws)
-        if src == "s0":
-            tgt.update(ws)
-    if not raw:
-        return
-    v = len(raw)
-    n_raw = sum(raw.values())
-    n_tgt = sum(tgt.values())
-    df = spark.createDataFrame(docs, ["doc_id", "text", "lang", "source", "n_chars"])
-    got = {r["doc_id"]: r for r in dsir_logratio(df, target_sources=("s0",)).collect()}
-    for i, ws in per_doc.items():
-        if not ws:
-            assert i not in got
-            continue
-        lrs = [
-            math.log((tgt.get(w, 0) + 1) / (n_tgt + v))
-            - math.log((raw[w] + 1) / (n_raw + v))
-            for w in ws
-        ]
-        assert got[i]["n_tokens"] == len(ws)
-        assert abs(got[i]["avg_logratio"] - sum(lrs) / len(lrs)) <= 2e-6
-
-
-@given(st.lists(st.text(alphabet="ab ", min_size=0, max_size=60), min_size=1, max_size=5))
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_bigram_logprob_bruteforce(spark, texts):
-    """bigram_logprob vs a pure-Python interpolated model: n_bigrams exact,
-    avg_logprob within 2e-6; docs with < 2 tokens excluded."""
-    import math
-    from collections import Counter
-
-    from plume_spark.operators.corpus import bigram_logprob
-
-    uni: Counter = Counter()
-    big: Counter = Counter()
-    per_doc: dict[int, list[str]] = {}
-    for i, t in enumerate(texts):
-        ws = [w for w in t.split(" ") if w]
-        per_doc[i] = ws
-        uni.update(ws)
-        for j in range(len(ws) - 1):
-            big[(ws[j], ws[j + 1])] += 1
-    n_tok = sum(uni.values())
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    got = {r["doc_id"]: r for r in bigram_logprob(df, lam=0.7).collect()}
-    for i, ws in per_doc.items():
-        if len(ws) < 2:
-            assert i not in got
-            continue
-        lps = [
-            math.log(
-                0.7 * (big[(ws[j], ws[j + 1])] / uni[ws[j]])
-                + (1.0 - 0.7) * (uni[ws[j + 1]] / n_tok)
-            )
-            for j in range(len(ws) - 1)
-        ]
-        assert got[i]["n_bigrams"] == len(ws) - 1
-        assert abs(got[i]["avg_logprob"] - sum(lps) / len(lps)) <= 2e-6
-
-
-@given(
-    st.lists(
-        st.lists(st.integers(-999, 999), min_size=4, max_size=4),
-        min_size=2,
-        max_size=25,
-    )
-)
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_power_iter_exact_sums(spark, vecs):
-    """The emb_power_iter kernel vs exact numpy integer arithmetic: the
-    s_d sums are exact, the normalized u within 1 quantization unit."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    # plus one explicit half-boundary row: k/128 is exact in float32 and
-    # k/128 * 1e6 = k * 7812.5, so an odd k lands on .5, both signs
-    half_row = [-1 / 128, 1 / 128, -3 / 128, 5 / 128]
-    floats = [[v / 1000.0 for v in vec] for vec in vecs] + [half_row]
-    rows = [(i, f, 0) for i, f in enumerate(floats)]
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    # mirror the registered query over the in-memory frame
-    t = df.select(
-        F.expr(
-            "transform(embedding, v -> cast(round(cast(v as double) * 1000000)"
-            " as bigint))"
-        ).alias("q")
-    ).withColumn("p", F.expr("aggregate(q, 0L, (acc, x) -> acc + x)"))
-    x = t.select(F.posexplode("q").alias("dim", "qv"), "p")
-    s = x.groupBy("dim").agg(
-        F.sum((F.col("qv") * F.col("p")).cast("decimal(38,0)")).alias("s")
-    )
-    got = {r["dim"]: int(r["s"]) for r in s.collect()}
-    def half_up(x: float) -> int:
-        """Spark's ``round``: HALF_UP (ties away from zero) on the double's
-        decimal form (``BigDecimal.valueOf``)."""
-        return int(Decimal(repr(x)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
-
-    # exact reference: q = round(float32(v) * 1e6) — mirror the float32
-    # storage the frame applies before the engine's double widening
-    q = [[half_up(float(np.float32(v)) * 1e6) for v in f] for f in floats]
-    assert q[-1] == [-7813, 7813, -23438, 39063]
-    p = [sum(r) for r in q]
-    for d in range(4):
-        assert got[d] == sum(q[i][d] * p[i] for i in range(len(q)))
-
-
-@given(st.integers(0, 30), st.integers(2, 4))
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_filtered_and_batch_topk_consistency(spark, seed, mod):
-    """filtered_topk == brute_force_topk run over the pre-filtered set
-    (with the query fetched unfiltered), and batch_topk's per-query
-    rankings match the single-query exact ranking."""
-    import random
-
-    from pyspark.sql import types as T
-
-    from plume_spark.operators.similarity import batch_topk, brute_force_topk, filtered_topk
-
-    rnd = random.Random(seed)
-    rows = [
-        (i, [rnd.uniform(-1, 1) for _ in range(6)], i % 5) for i in range(30)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    flt = filtered_topk(df, 0, F.col("label") % mod == 0, k=5, strategy="hof").collect()
-    # reference: score the filtered candidates with the same single-query op
-    # (query row appended so the fetch succeeds, then dropped from results)
-    cand = df.filter((F.col("label") % mod == 0) | (F.col("vec_id") == 0))
-    ref = [
-        r
-        for r in brute_force_topk(cand, 0, k=6, strategy="hof").collect()
-        if (r["vec_id"] % 5) % mod == 0
-    ][:5]
-    assert [(r["vec_id"], r["cos_sim"]) for r in flt] == [
-        (r["vec_id"], r["cos_sim"]) for r in ref
-    ]
-    bt = batch_topk(df, n_queries=2, k=4)
-    by_q = {}
-    for r in bt.collect():
-        by_q.setdefault(r["q_id"], []).append((r["rank"], r["vec_id"], r["cos_sim"]))
-    for q in (0, 1):
-        single = brute_force_topk(df, q, k=4, strategy="hof").collect()
-        assert sorted(by_q[q]) == [
-            (i + 1, r["vec_id"], r["cos_sim"]) for i, r in enumerate(single)
-        ]

@@ -186,6 +186,69 @@ def test_kind_constraint_violations(spark, store):
     assert len(bad) == 1 and bad[0]["obj"] == 3
 
 
+def test_kind_allowed_matches_the_rule_table(spark):
+    """The constraint predicate equals a plain reading of EDGE_CONSTRAINTS
+    on every (pred, subj_kind, obj_kind) combination, NULLs and an unknown
+    pred included: a NULL or unknown pred is a violation, a NULL kind passes
+    only a '*' rule."""
+    import itertools
+
+    from plume_spark.operators.constraints import kind_allowed, kind_violations
+    from plume_spark.schemas import EDGE_CONSTRAINTS
+
+    kinds = sorted({k for s, o in EDGE_CONSTRAINTS.values() for k in s + o} - {"*"})
+    preds = sorted(EDGE_CONSTRAINTS) + ["unknown", None]
+    rows = list(itertools.product(preds, kinds + [None], kinds + [None]))
+
+    def allowed(pred, subj, obj):
+        return any(
+            pred == p and ("*" in s or subj in s) and ("*" in o or obj in o)
+            for p, (s, o) in EDGE_CONSTRAINTS.items()
+        )
+
+    typed = spark.createDataFrame(rows, "pred string, subj_kind string, obj_kind string")
+    got = {
+        (r["pred"], r["subj_kind"], r["obj_kind"]): r["ok"]
+        for r in typed.select("*", kind_allowed().alias("ok")).collect()
+    }
+    assert got == {r: allowed(*r) for r in rows}
+    bad = {tuple(r) for r in kind_violations(typed).collect()}
+    assert bad == {r for r in rows if not allowed(*r)}
+
+
+def test_build_counts_kind_violations_in_the_triples_write(spark, tmp_path):
+    """materialize_graph counts kind violations while it writes the triples
+    (an Observation, no job of its own).  With no mention staged the
+    dictionary is empty, the triples plan never scans the staging rows, and
+    the count runs by itself: 0 for an empty build, 1 for a staged triple
+    with a bad endpoint kind.  A real build then counts the same row during
+    its write."""
+    from plume_spark.generator import generate_transcripts
+    from plume_spark.operators.extraction import CHANGELOG_SCHEMA
+    from plume_spark.pipeline import (
+        _with_rec_id,
+        build_graph,
+        materialize_graph,
+        staging_table,
+    )
+    from plume_spark.schemas import TRANSCRIPTS
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    empty = spark.createDataFrame([], schema=TRANSCRIPTS)
+    assert build_graph(empty, store, n_buckets=4)["kind_violations"] == 0
+
+    row = dict.fromkeys(CHANGELOG_SCHEMA.names)
+    row.update(
+        rec_kind="triple", conv_id="bad", turn_idx=0, pred="works_at",
+        subj_norm="alice", subj_kind="person", obj_norm="hammer", obj_kind="tool",
+    )
+    bad = spark.createDataFrame([tuple(row.values())], schema=CHANGELOG_SCHEMA)
+    staging_table(store).append(_with_rec_id(bad))
+    assert materialize_graph(store)["kind_violations"] == 1
+    stats = build_graph(generate_transcripts(spark, 6, seed=1), store, n_buckets=4)
+    assert stats["kind_violations"] == 1 and stats["triples"] > 0
+
+
 def test_dangling_edge_check(spark, store):
     ents, trips = _fixture_frames(spark)
     store.bulk_write(ents, trips)
