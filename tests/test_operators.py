@@ -42,6 +42,32 @@ def test_simhash_hamming(docs):
     assert ham(sh[0], sh[1]) <= ham(sh[0], sh[2])
 
 
+def test_text_operators(docs):
+    """The text substrate the dedup family shares: distinct token sets,
+    word 3-gram shingles and the portable polynomial hash — an exact
+    duplicate hashes equal, a one-word edit does not."""
+    toks: dict[int, set] = {}
+    for r in dedup.tokens(docs).collect():
+        toks.setdefault(r["doc_id"], set()).add(r["tok"])
+    assert len(toks[0]) == 11  # 13 tokens, "the" three times
+    sh = {r["tok"] for r in dedup.shingles(docs, n=3).filter("doc_id = 0").collect()}
+    words = docs.filter("doc_id = 0").first()["text"].split()
+    assert sh == {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}
+
+    def poly_ref(s: str) -> int:
+        acc = 0
+        for c in s:
+            acc = (acc * dedup.POLY_MUL + ord(c)) % dedup.MINHASH_P
+        return acc
+
+    fp = {
+        r["doc_id"]: r["fp"]
+        for r in docs.select("doc_id", dedup.poly_hash(F.col("text")).alias("fp")).collect()
+    }
+    assert fp == {r["doc_id"]: poly_ref(r["text"]) for r in docs.collect()}
+    assert fp[0] == fp[3] and fp[0] != fp[1]
+
+
 def test_embedding_neardup(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -57,6 +83,81 @@ def test_embedding_neardup(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     # antipodal pair can never share an LSH bucket; orthogonal fails tau
     assert not any(3 in p or 2 in p for p in pairs)
+
+
+def test_similarity(spark):
+    """lsh_buckets and blocked_cosine_pairs on a toy set, on both
+    evaluation paths: near vectors share every hyperplane sign, antipodal
+    vectors flip all of them, and the pair join keeps only same-block
+    pairs at or above tau."""
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0], 0),
+        (1, [0.9, 0.1, 0.0, 0.0], 0),
+        (2, [0.0, 1.0, 0.0, 0.0], 1),
+        (3, [-1.0, 0.0, 0.0, 0.0], 1),
+        (4, [0.8, 0.2, 0.0, 0.0], 0),
+    ]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
+    for strategy in ("codegen", "hof"):
+        buckets = {
+            r["vec_id"]: r["bucket"]
+            for r in similarity.lsh_buckets(emb, strategy=strategy).collect()
+        }
+        assert buckets[0] == buckets[1]  # near vectors share hyperplane signs
+        assert buckets[0] != buckets[3]  # antipodal vectors flip every sign
+        pairs = {
+            (r["vec_a"], r["vec_b"]): r["cos_sim"]
+            for r in similarity.blocked_cosine_pairs(
+                emb, "label", tau=0.9, strategy=strategy
+            ).collect()
+        }
+        assert (0, 1) in pairs and (2, 3) not in pairs
+        assert set(pairs) == {(0, 1), (0, 4), (1, 4)}  # label 0, all >= 0.9
+
+
+def test_knn_graph_invariants(spark):
+    """The embedding similarity graph (dedup.embedding_neardup) over the
+    sf0.001 embeddings: no self-edges, each unordered pair once as
+    (low, high), scores within [tau, 1], and run-to-run determinism (the
+    hyperplanes are arithmetic, not random state)."""
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    g = dedup.embedding_neardup(e, tau=0.2).collect()
+    assert g  # the gate data has near pairs at this radius
+    assert all(r["vec_a"] < r["vec_b"] for r in g)
+    assert all(0.2 <= r["cos_sim"] <= 1.0 for r in g)
+    assert len({(r["vec_a"], r["vec_b"]) for r in g}) == len(g)
+    again = dedup.embedding_neardup(e, tau=0.2).collect()
+    assert sorted(map(tuple, g)) == sorted(map(tuple, again))
+
+
+def test_range_search_matches_topk_scores(spark):
+    """One scoring expression behind every pair: a range search (one block,
+    cos >= tau) equals the full pair table cut at tau with bit-equal
+    scores, the full table matches Python cosine to its 4-place rounding,
+    and the LSH-blocked search can only miss pairs, never rescore them."""
+    import math
+    import random
+
+    rng = random.Random(7)
+    vecs = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(50)]
+    emb = spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>, label int",
+    )
+
+    def scored(df):
+        return {(r["vec_a"], r["vec_b"]): r["cos_sim"] for r in df.collect()}
+
+    every = scored(similarity.blocked_cosine_pairs(emb, "label", tau=-1.0))
+    assert len(every) == 50 * 49 // 2
+    for (a, b), s in every.items():
+        dot = sum(x * y for x, y in zip(vecs[a], vecs[b]))
+        ref = dot / (math.sqrt(sum(x * x for x in vecs[a])) * math.sqrt(sum(y * y for y in vecs[b])))
+        assert abs(s - ref) <= 5e-5 + 1e-12, (a, b, s, ref)
+    in_range = scored(similarity.blocked_cosine_pairs(emb, "label", tau=0.1))
+    assert in_range == {p: s for p, s in every.items() if s >= 0.1}
+    lsh = scored(dedup.embedding_neardup(emb, tau=0.1))
+    assert lsh and all(in_range[p] == s for p, s in lsh.items())
 
 
 def test_cli_build_query_export(spark, tmp_path):
@@ -608,8 +709,8 @@ def test_common_neighbors_hand_computed(spark):
 
 def test_lsh_and_pair_strategies_bit_identical(spark):
     """The codegen (unrolled) and HOF (interpreted) evaluation paths of the
-    LSH projection and the blocked pair join must produce IDENTICAL results — the auto switch picks by size estimate, so the
-    choice must never be observable in values.  (The gate data is small
+    LSH projection and the blocked pair join must produce IDENTICAL
+    results — the auto switch picks by size estimate, so the choice must never be observable in values.  (The gate data is small
     enough that auto always picks HOF; this test is what keeps the scale
     path honest.)"""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -625,26 +726,6 @@ def test_lsh_and_pair_strategies_bit_identical(spark):
     p_c = similarity.blocked_cosine_pairs(blocked, "blk_b", tau=-1.0, strategy="codegen")
     p_h = similarity.blocked_cosine_pairs(blocked, "blk_b", tau=-1.0, strategy="hof")
     assert rows(p_c) == rows(p_h)
-
-    # on a toy set: near vectors share every hyperplane sign, antipodal
-    # vectors flip all of them, and the pair join keeps only same-block
-    # pairs at or above tau
-    toy = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0], 0),
-            (1, [0.9, 0.1, 0.0, 0.0], 0),
-            (2, [0.0, 1.0, 0.0, 0.0], 1),
-            (3, [-1.0, 0.0, 0.0, 0.0], 1),
-            (4, [0.8, 0.2, 0.0, 0.0], 0),
-        ],
-        ["vec_id", "embedding", "label"],
-    )
-    for strategy in ("codegen", "hof"):
-        b = dict(map(tuple, similarity.lsh_buckets(toy, strategy=strategy).collect()))
-        assert b[0] == b[1] and b[0] != b[3]
-        pairs = similarity.blocked_cosine_pairs(toy, "label", tau=0.9, strategy=strategy)
-        got = {(r["vec_a"], r["vec_b"]) for r in pairs.collect()}
-        assert (0, 1) in got and (2, 3) not in got
 
 
 def test_graph_and_knn_hostile_inputs(spark):

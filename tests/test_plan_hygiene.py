@@ -33,6 +33,16 @@ def _exchanges(plan: str) -> int:
     return len(re.findall(r"(?<!Reused)Exchange", plan))
 
 
+def test_scan_speed_ops_have_zero_shuffles(spark):
+    """Pure per-row operators must stay pure: any Exchange in these plans
+    means someone added an aggregation/join to what should run at scan
+    speed over 100 TB."""
+    for name in ("f5_json_payload", "p1_projection_defaults", "p5_property_presence",
+                 "p6_theta_filter", "f2_list_csv", "f8_content_hash"):
+        plan = _plan(spark, name)
+        assert _exchanges(plan) == 0, (name, plan[:1200])
+
+
 def test_bounded_shuffle_budgets(spark):
     """Shuffle-count budgets for the aggregation/join operators whose
     round-3 rewrites removed exchanges — a regression reintroduces them."""

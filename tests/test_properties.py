@@ -508,6 +508,60 @@ def test_personalized_pagerank_matches_bruteforce(spark, raw_edges, seeds):
         assert abs(got[n] - expected[n]) <= 1, (n, got[n], expected[n])
 
 
+@given(
+    st.lists(st.tuples(st.integers(0, 11), st.integers(0, 11)), min_size=1, max_size=30),
+    st.integers(1, 4),
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_power_iter_exact_sums(spark, raw_edges, n_iters):
+    """pagerank's synchronous power iteration vs exact rational arithmetic
+    (fractions.Fraction) of the same recurrence, self-loops and duplicate
+    edges included: every node present and within 1 ppm (the only slack
+    is float summation order before the ppm rounding)."""
+    from fractions import Fraction
+
+    from plume_spark.operators.pagerank import pagerank
+
+    edges = sorted(set(raw_edges))
+    nodes = sorted({n for e in edges for n in e})
+    out: dict[int, list[int]] = {}
+    for s_, d_ in edges:
+        out.setdefault(s_, []).append(d_)
+    damping = Fraction(85, 100)
+    r = {n: Fraction(1) for n in nodes}
+    for _ in range(n_iters):
+        push = {n: Fraction(0) for n in nodes}
+        for s_, ds in out.items():
+            for d_ in ds:
+                push[d_] += r[s_] / len(ds)
+        r = {n: (1 - damping) + damping * push[n] for n in nodes}
+    e = spark.createDataFrame(raw_edges, ["subj", "obj"])
+    got = {r_["node"]: r_["rank_ppm"] for r_ in pagerank(e, n_iters=n_iters).collect()}
+    assert set(got) == set(nodes)
+    for n in nodes:
+        assert abs(got[n] - r[n] * 1_000_000) <= 1, (n, got[n], float(r[n]))
+
+
+@given(st.lists(st.text(alphabet="ab ", min_size=0, max_size=400), min_size=1, max_size=6))
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+def test_chunk_windows_cover_and_overlap(spark, texts):
+    """dedup.shingles' sliding word windows on random texts: a doc of n
+    tokens yields exactly the windows starting at 0..n-k, so every token
+    position is covered and consecutive windows overlap by k-1 tokens; a
+    doc shorter than k yields none."""
+    from plume_spark.operators import dedup
+
+    k = 3
+    docs = [(i, t) for i, t in enumerate(texts)]
+    got: dict[int, set[str]] = {}
+    for r in dedup.shingles(spark.createDataFrame(docs, ["doc_id", "text"]), n=k).collect():
+        got.setdefault(r["doc_id"], set()).add(r["tok"])
+    for doc_id, text in docs:
+        toks = [x for x in text.split(" ") if x]
+        want = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+        assert got.get(doc_id, set()) == want, (doc_id, text)
+
+
 # ------------------------------------------------- round-5 session operators
 
 
