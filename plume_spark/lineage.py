@@ -24,15 +24,18 @@ one storage partition at cluster scale.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from plume_spark.schemas import LINEAGE
 from plume_spark.session import local_frame
 from plume_spark.store.catalog import SnapshotTable
 
 BUCKET_COL = "_bucket"
+_UNIT_KEY = T.StructType([LINEAGE["partition_id"], LINEAGE["input_hash"]])
 
 
 def with_bucket(transcripts: DataFrame, n_buckets: int) -> DataFrame:
@@ -59,13 +62,24 @@ def bucket_hashes(transcripts_bucketed: DataFrame) -> DataFrame:
 
 
 def committed_units(lineage: SnapshotTable, stage: str) -> DataFrame:
-    """(partition_id, input_hash) pairs already committed for a stage."""
-    return (
-        lineage.read()
-        .filter(F.col("stage") == stage)
-        .select("partition_id", "input_hash")
-        .distinct()
-    )
+    """(partition_id, input_hash) pairs already committed for a stage.
+
+    Read on the driver with pyarrow: lineage holds a few rows per unit and
+    commit, so the pairs enter Spark as a local relation and the anti-join
+    against them runs no job of its own (a Spark scan of the table cost two:
+    its distinct and the broadcast of the result)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pairs: set[tuple[int, str]] = set()
+    for f in lineage.files_for():
+        t = pq.read_table(
+            os.path.join(lineage.path, f),
+            columns=["partition_id", "input_hash"],
+            filters=pc.field("stage") == stage,
+        )
+        pairs.update(zip(t["partition_id"].to_pylist(), t["input_hash"].to_pylist()))
+    return local_frame(lineage.spark, sorted(pairs), _UNIT_KEY)
 
 
 def pending_units(

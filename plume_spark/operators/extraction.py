@@ -68,9 +68,8 @@ CHANGELOG_SCHEMA = T.StructType(
     ]
 )
 
-# UDF-side schema: mention_id is attached JVM-side afterwards (vectorized
-# xxhash64 over the natural key) — a per-mention hash loop in Python was
-# measured as a material slice of extraction CPU.
+# UDF-side schema: the compact mention records carry no occurrence, so no
+# mention_id; extract_changelog adds the column as NULL.
 _UDF_SCHEMA = T.StructType([f for f in CHANGELOG_SCHEMA.fields if f.name != "mention_id"])
 
 # one regex that matches a MAXIMAL capitalized-token run directly: a token
@@ -261,29 +260,25 @@ def split_valid_rejects(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     return transcripts.filter(~bad), transcripts.filter(bad)
 
 
-def _extract_batches(batches):
-    """mapInPandas adapter: the kernel applied to each incoming Arrow batch in
-    place (no shuffle — see extract_changelog)."""
-    for pdf in batches:
-        out = _extract_part_vec(pdf)
-        if len(out):
-            yield out
-
-
 def _extract_batches_compact(batches):
-    """mapInPandas adapter with per-batch mention pre-aggregation: mention
-    records collapse to the batch's DISTINCT (norm, kind) pairs (a map-side
-    partial of the global per-norm reduction build_entities performs), triple
+    """mapInPandas adapter: the kernel applied to each incoming Arrow batch in
+    place (no shuffle — see extract_changelog), with its mention records
+    collapsed to the batch's DISTINCT (norm, kind) pairs (a map-side partial
+    of the global per-norm reduction build_entities performs); triple
     records pass through untouched.
 
     Entity linking is a pure function of the distinct-norm dictionary and the
     kind hint is a global min over (norm, kind) pairs, so collapsing
-    duplicates inside a batch changes NOTHING downstream — it just stops
-    shipping the same surface form thousands of times through Arrow and the
-    cache (mention occurrences outnumber distinct norms ~3000:1 at bench
-    scale; the mention-stream scan was measured memory-bandwidth-bound, i.e.
-    the one cost MORE cores cannot buy down)."""
-    for out in _extract_batches(batches):
+    duplicates changes NOTHING downstream.  It stops shipping the same
+    surface form thousands of times through Arrow, the cache and the staging
+    table (25,460 mention occurrences for 191 distinct pairs on a
+    3,000-conversation, ~100-entity corpus; the mention-stream scan was
+    measured memory-bandwidth-bound, the one cost MORE cores cannot buy
+    down)."""
+    for pdf in batches:
+        out = _extract_part_vec(pdf)
+        if not len(out):
+            continue
         is_m = out["rec_kind"] == "mention"
         m = out[is_m]
         if len(m):
@@ -297,7 +292,7 @@ def _extract_batches_compact(batches):
         yield pd.concat([m, out[~is_m]], ignore_index=True)
 
 
-def extract_changelog(transcripts: DataFrame, compact_mentions: bool = False) -> DataFrame:
+def extract_changelog(transcripts: DataFrame) -> DataFrame:
     """Parallel extraction pass: valid rows -> change-log DataFrame.
 
     The ForkJoin ``parts.parallel().collect(supplier, accumulator, combiner)``
@@ -313,24 +308,17 @@ def extract_changelog(transcripts: DataFrame, compact_mentions: bool = False) ->
     stream is disk/memory-bandwidth-bound, which caps N-vs-4N scaling well
     below the CPU-bound extraction itself.
 
-    ``compact_mentions``: mention records are collapsed to per-batch distinct
-    (norm, kind) pairs — sufficient (and ~3000x lighter at bench scale) for
-    entity linking, which is a pure function of the distinct-norm dictionary;
-    occurrence-level fields are nulled.  run_pipeline sets it (its mention
-    records only feed linking); the store/staging path keeps full records."""
+    Mention records are compact: per-batch distinct (norm, kind) pairs, all
+    that entity linking reads.  Their occurrence-level fields (conv_id,
+    turn_idx, surface, spans, arg_index, mention_id) are NULL.  Triple
+    records are per occurrence.  Every consumer — ``run_pipeline``, the
+    staging change log of the persisted build and the stream — reads this
+    one form; the per-occurrence mentions are ``_extract_part_vec``'s."""
     valid, _ = split_valid_rejects(transcripts)
     extracted = valid.select("conv_id", "turn_idx", "text").mapInPandas(
-        _extract_batches_compact if compact_mentions else _extract_batches,
-        schema=_UDF_SCHEMA,
+        _extract_batches_compact, schema=_UDF_SCHEMA
     )
-    # stable mention identity, JVM-side and vectorized (the IDriver.scala:91-98
-    # identity contract): deterministic over the natural key, so resume runs
-    # regenerate identical ids.
-    mention_id = F.when(
-        F.col("rec_kind") == "mention",
-        F.xxhash64("conv_id", "turn_idx", "span_start"),
-    )
-    return extracted.withColumn("mention_id", mention_id).select(
+    return extracted.withColumn("mention_id", F.lit(None).cast("long")).select(
         *[f.name for f in CHANGELOG_SCHEMA.fields]
     )
 

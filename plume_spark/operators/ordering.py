@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TURN_WINDOW_COLS = ("turn_idx", "ts")
-
 
 def ordered_turns(transcripts: DataFrame) -> DataFrame:
     """Add ``turn_rank`` = dense 0-based position of the turn within its

@@ -32,7 +32,6 @@ from plume_spark.operators.extraction import (
 
 @dataclass
 class PipelineResult:
-    mentions: DataFrame
     entities: DataFrame
     triples: DataFrame
     rejects: DataFrame
@@ -50,16 +49,11 @@ def run_pipeline(
     _, rejects = split_valid_rejects(transcripts)
     # One extraction pass feeds both mention and triple branches — persist so
     # the pandas UDF runs once (the reference runs runOnPart once and splits
-    # the DiffGraph afterwards, Neo4jDriver.scala:198-212).  Two volume cuts,
-    # both because the columnar cache build (and every scan of it) is
-    # memory-bandwidth-bound — the one cost more cores cannot buy down:
-    # (a) compact_mentions collapses mention records to per-batch distinct
-    #     (norm, kind) pairs (linking is a pure function of the distinct-norm
-    #     dictionary, so downstream results are identical);
-    # (b) only the columns the pipeline's own jobs consume are cached.
-    # The full per-occurrence mention frame stays available as a lazy,
-    # uncached recompute (PipelineResult.mentions).
-    changelog = extract_changelog(transcripts, compact_mentions=True)
+    # the DiffGraph afterwards, Neo4jDriver.scala:198-212).  Only the columns
+    # the pipeline's own jobs consume are cached: the columnar cache build
+    # (and every scan of it) is memory-bandwidth-bound, the one cost more
+    # cores cannot buy down.
+    changelog = extract_changelog(transcripts)
     slim = changelog.select(
         "rec_kind", "conv_id", "turn_idx", "norm", "kind", "pred",
         "subj_norm", "subj_kind", "obj_norm", "obj_kind",
@@ -74,16 +68,16 @@ def run_pipeline(
     )
     entities, norm_to_entity = build_entities(mentions_slim, tau)
     triples = canonicalize_triples(raw_triples, norm_to_entity)
-    # full per-occurrence frame: lazy, uncached, re-extracts only if read
-    mentions, _ = split_changelog(extract_changelog(transcripts))
-    return PipelineResult(
-        mentions, entities, triples, rejects, kind_violations(raw_triples)
-    )
+    return PipelineResult(entities, triples, rejects, kind_violations(raw_triples))
 
 
 def _with_rec_id(changelog: DataFrame) -> DataFrame:
     """Deterministic identity for every change-log record, so staging-table
-    merges are idempotent under retries (null-safe: keys are coalesced)."""
+    merges are idempotent under retries.  A compact mention record is keyed
+    by its (norm, kind), so the MERGE keeps each pair once across batches,
+    units, retries and epochs.  ``xxhash64`` skips NULL inputs: a triple
+    record (NULL norm and kind) hashes exactly as it did before those two
+    keys were added, so triple ids never change."""
     return changelog.withColumn(
         "rec_id",
         F.xxhash64(
@@ -94,6 +88,8 @@ def _with_rec_id(changelog: DataFrame) -> DataFrame:
             F.coalesce(F.col("subj_norm"), F.lit("")),
             F.coalesce(F.col("pred"), F.lit("")),
             F.coalesce(F.col("obj_norm"), F.lit("")),
+            "norm",
+            "kind",
         ),
     )
 
@@ -114,7 +110,8 @@ def build_graph(
        hash-bucket: pending units = bucket work list anti-joined against
        committed lineage (the reference's changed-files-only rebuild,
        CHANGELOG.md:179); extracted change-log records land in a staging
-       table via rec_id-keyed MERGE (retry-safe).
+       table via rec_id-keyed MERGE (retry-safe).  Mentions are staged as
+       distinct (norm, kind) records, triples per occurrence.
     2. **materialize** — linking + canonicalization + triple rewrite, a
        deterministic GLOBAL function of the full change log, committed as an
        atomic OVERWRITE of entities/triples.  Global because canonical names
@@ -122,6 +119,9 @@ def build_graph(
        with an uninterrupted run.  The change log (distinct norms + triple
        records) is orders of magnitude smaller than the transcript text, so
        re-running this stage per increment is the right cost split at scale.
+       A call whose staging rows, stored graph and ``tau`` are those of a
+       committed materialize is skipped (the reference's artifact-hash
+       early exit, CHANGELOG.md:694), so an unchanged rerun writes nothing.
 
     A killed run re-executed from the top therefore produces exactly the
     tables an uninterrupted run produces (tested in test_resume.py).
@@ -162,7 +162,9 @@ def stage_changelog(store, transcripts: DataFrame, stage: str, units: list[tuple
     The checkpoint cuts the pandas-UDF extraction out of the pruned MERGE,
     which consumes the change log twice (bucket probe + anti-join/write).
     Change-log records are compact, orders of magnitude below the transcript
-    text.  The rec_id-keyed MERGE makes a retried or replayed step a no-op.
+    text: one record per triple occurrence and per distinct (norm, kind)
+    mention pair.  The rec_id-keyed MERGE makes a retried or replayed step a
+    no-op, and keeps a mention pair staged by an earlier unit or epoch once.
     ``extract_changelog`` and ``commit_lineage`` are looked up when called,
     so a tracer that wraps them sees this step."""
     from plume_spark.lineage import commit_lineage
@@ -197,20 +199,52 @@ def staging_table(store):
     return store.catalog.table("changelog", staging_schema, layout)
 
 
+def _materialized_hash(staged: list[str], store, tau: float | None) -> str:
+    """Fingerprint of a materialize: the staging data files it read, the
+    current entities and triples files, and ``tau``.  Data files are
+    immutable and uniquely named, so equal fingerprints mean the stored
+    graph is the one materialize wrote from these very staging rows."""
+    import hashlib
+    import json
+
+    files = [sorted(staged)] + [sorted(t.files_for()) for t in (store.entities, store.triples)]
+    return hashlib.sha256(json.dumps([files, tau]).encode()).hexdigest()
+
+
 def materialize_graph(store, tau: float | None = None) -> dict:
     """Stage 2 of the persist path: staging change log -> entities + triples,
     committed as an atomic OVERWRITE (deterministic global function of the
     full change log; see build_graph docstring for why it is global).  Shared
     verbatim by batch and streaming ingest — both produce the same staging
-    rows, so both converge to identical graph tables."""
+    rows, so both converge to identical graph tables.  Linking reads only
+    the distinct (norm, kind) pairs of the mention records, so per-occurrence
+    mention rows an older store staged and compact ones give the same graph.
+
+    The ``materialize`` lineage row records the fingerprint of what it read
+    and wrote (``_materialized_hash``).  When the current fingerprint is
+    already committed, the call returns ``"materialized": False`` with the
+    stored row counts, read from the manifests, and runs no Spark job.  A
+    fingerprint is committed only for a write that counted no kind
+    violation, so a skipped call reports ``kind_violations`` 0: the count of
+    the write it reuses.  A write that counted some is redone, and recounted,
+    by the next call."""
     from pyspark.sql import Observation
 
     from plume_spark.lineage import commit_lineage
     from plume_spark.operators.constraints import kind_allowed, kind_violations
 
     staging = staging_table(store)
-    changelog = staging.read()
-    mentions, raw_triples = split_changelog(changelog)
+    staged = staging.files_for()
+    if store.lineage.exists(
+        {"stage": "materialize", "input_hash": _materialized_hash(staged, store, tau)}
+    ):
+        return {
+            "materialized": False,
+            "kind_violations": 0,
+            "entities": store.entities.row_count(),
+            "triples": store.triples.row_count(),
+        }
+    mentions, raw_triples = split_changelog(staging.scan(staged))
     # write-time schema check (checkEdgeConstraint recast): the closed
     # extraction vocabulary guarantees zero, so any hit is a pipeline bug.
     # Counted by the triples overwrite itself, not by a job of its own.
@@ -227,14 +261,20 @@ def materialize_graph(store, tau: float | None = None) -> dict:
     # count runs as a job of its own.
     metrics = checked._jo.getRow()
     stats = {
+        "materialized": True,
         "kind_violations": metrics.getAs("kind_violations")
         if metrics.length()
-        else kind_violations(raw_triples).count()
+        else kind_violations(raw_triples).count(),
+        "entities": store.entities.row_count(),
+        "triples": store.triples.row_count(),
     }
-    stats["entities"] = store.entities.row_count()
-    stats["triples"] = store.triples.row_count()
+    done = (
+        _materialized_hash(staged, store, tau)
+        if stats["kind_violations"] == 0
+        else "kind-violations"
+    )
     commit_lineage(
-        store.lineage, "materialize", [(-1, "global", stats["entities"])],
+        store.lineage, "materialize", [(-1, done, stats["entities"])],
         rows_out=stats["triples"],
     )
     return stats

@@ -5,7 +5,6 @@ Mirrors the reference's fixed node/edge schema system
 IDriver.scala:102-129: node labels) recast for the transcript graft:
 
 * ``transcripts`` — authoritative input shape (BASELINE.json input_hint)
-* ``mentions``    — per-turn extraction output (analog of DetachedNodeData)
 * ``entities``    — canonical node table (label + props + list property)
 * ``triples``     — directed, labeled edge table (src, label, dst + evidence)
 * ``lineage``     — per-partition checkpoint/counters (analog of the per-pass
@@ -35,19 +34,6 @@ TRANSCRIPTS = T.StructType(
         T.StructField("text", T.StringType()),
         T.StructField("tool", T.StringType()),
         T.StructField("ts", T.TimestampType()),
-    ]
-)
-
-MENTIONS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("mention_id", T.LongType()),
-        T.StructField("surface", T.StringType()),
-        T.StructField("norm", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("span_start", T.IntegerType()),
-        T.StructField("span_end", T.IntegerType()),
     ]
 )
 
@@ -82,25 +68,6 @@ LINEAGE = T.StructType(
         T.StructField("committed_at", T.TimestampType()),
     ]
 )
-
-# raw (pre-canonicalization) triples carry surface-form subject/object norms
-RAW_TRIPLES = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("subj_norm", T.StringType()),
-        T.StructField("subj_kind", T.StringType()),
-        T.StructField("pred", T.StringType()),
-        T.StructField("obj_norm", T.StringType()),
-        T.StructField("obj_kind", T.StringType()),
-        T.StructField("src_mention", T.StringType()),
-        T.StructField("obj_mention", T.StringType()),
-    ]
-)
-
-# Closed predicate vocabulary (analog of the closed edge-label set,
-# SchemaBuilder.scala:49-50 + EdgeTypes): extraction only emits these.
-PREDICATES = ("works_at", "uses", "met", "produces", "visited", "mentions")
 
 # Edge endpoint constraints (analog of checkEdgeConstraint,
 # SchemaBuilder.scala:54-129): pred -> (allowed subj kinds, allowed obj kinds).

@@ -66,76 +66,65 @@ def run_check(
         t0 = time.time()
         try:
             df = fn(spark, sf)
-            spark_rows = [tuple(r) for r in df.collect()]
-            spark_cols = df.columns
         except Exception as e:
-            failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL  {name}: spark error: {str(e)[:300]}", file=out)
-            if records is not None:
-                records[name] = {
-                    "rows_match": False, "schema_match": False,
-                    "hash_match": False, "spark_rows": None,
-                    "oracle_rows": None, "err": f"spark: {str(e)[:200]}",
-                }
+            failures += _error(name, "spark", e, None, out, records)
             continue
-        try:
-            res = con.execute(oq[name])
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
-        except Exception as e:
-            failures.append((name, f"DUCK ERROR: {e}"))
-            print(f"FAIL  {name}: duckdb error: {str(e)[:300]}", file=out)
-            if records is not None:
-                records[name] = {
-                    "rows_match": False, "schema_match": False,
-                    "hash_match": False, "spark_rows": len(spark_rows),
-                    "oracle_rows": None, "err": f"duckdb: {str(e)[:200]}",
-                }
-            continue
-        ok_cols = sorted(spark_cols) == sorted(duck_cols)
-        ok_n = len(spark_rows) == len(duck_rows)
-        ok_vals = ok_cols and ok_n and rows_key(spark_rows, spark_cols) == rows_key(duck_rows, duck_cols)
-        if records is not None:
-            records[name] = {
-                "rows_match": ok_n, "schema_match": ok_cols,
-                "hash_match": ok_vals, "spark_rows": len(spark_rows),
-                "oracle_rows": len(duck_rows), "err": None,
-            }
-        status = "OK   " if (ok_cols and ok_n and ok_vals) else "FAIL "
-        print(
-            f"{status} {name}: spark={len(spark_rows)} duck={len(duck_rows)} "
-            f"cols={'ok' if ok_cols else (spark_cols, duck_cols)} vals={'ok' if ok_vals else 'MISMATCH'} "
-            f"[{time.time()-t0:.1f}s]",
-            file=out,
-        )
-        if not (ok_cols and ok_n and ok_vals):
-            failures.append((name, "mismatch"))
-            if ok_cols and ok_n:
-                sk = rows_key(spark_rows, spark_cols)
-                dk = rows_key(duck_rows, duck_cols)
-                diff_s = [x for x in sk if x not in set(dk)][:3]
-                diff_d = [x for x in dk if x not in set(sk)][:3]
-                print(f"   spark-only: {diff_s}", file=out)
-                print(f"   duck-only : {diff_d}", file=out)
+        failures += _compare(name, df, con, oq[name], t0, out, records)
     return failures
 
 
-def _compare(name, df, con, sql, t0, out) -> list:
-    spark_rows = [tuple(r) for r in df.collect()]
-    res = con.execute(sql)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+def _error(name, side, e, spark_rows, out, records) -> list:
+    """One query that raised on ``side`` ("spark" or "duckdb")."""
+    print(f"FAIL  {name}: {side} error: {str(e)[:300]}", file=out)
+    if records is not None:
+        records[name] = {
+            "rows_match": False, "schema_match": False,
+            "hash_match": False, "spark_rows": spark_rows,
+            "oracle_rows": None, "err": f"{side}: {str(e)[:200]}",
+        }
+    return [(name, f"{'SPARK' if side == 'spark' else 'DUCK'} ERROR: {e}")]
+
+
+def _compare(name, df, con, sql, t0, out, records: dict | None = None) -> list:
+    """The one verdict of the gate: ``df`` and the DuckDB result of ``sql``
+    have the same column names, row count and order-insensitive values.
+    Returns [(name, reason)] on failure, else []; fills ``records[name]``
+    when ``records`` is a dict."""
+    try:
+        spark_rows = [tuple(r) for r in df.collect()]
+    except Exception as e:
+        return _error(name, "spark", e, None, out, records)
+    try:
+        res = con.execute(sql)
+        duck_cols = [d[0] for d in res.description]
+        duck_rows = res.fetchall()
+    except Exception as e:
+        return _error(name, "duckdb", e, len(spark_rows), out, records)
     ok_cols = sorted(df.columns) == sorted(duck_cols)
     ok_n = len(spark_rows) == len(duck_rows)
-    ok_vals = ok_cols and ok_n and rows_key(spark_rows, df.columns) == rows_key(duck_rows, duck_cols)
-    status = "OK   " if (ok_cols and ok_n and ok_vals) else "FAIL "
+    sk = rows_key(spark_rows, df.columns) if ok_cols and ok_n else None
+    dk = rows_key(duck_rows, duck_cols) if ok_cols and ok_n else None
+    ok_vals = ok_cols and ok_n and sk == dk
+    if records is not None:
+        records[name] = {
+            "rows_match": ok_n, "schema_match": ok_cols,
+            "hash_match": ok_vals, "spark_rows": len(spark_rows),
+            "oracle_rows": len(duck_rows), "err": None,
+        }
+    status = "OK   " if ok_vals else "FAIL "
     print(
         f"{status} {name}: spark={len(spark_rows)} duck={len(duck_rows)} "
         f"cols={'ok' if ok_cols else (df.columns, duck_cols)} "
         f"vals={'ok' if ok_vals else 'MISMATCH'} [{time.time()-t0:.1f}s]",
         file=out,
     )
-    return [] if (ok_cols and ok_n and ok_vals) else [(name, "mismatch")]
+    if ok_vals:
+        return []
+    if sk is not None:
+        only_s, only_d = set(sk) - set(dk), set(dk) - set(sk)
+        print(f"   spark-only: {[x for x in sk if x in only_s][:3]}", file=out)
+        print(f"   duck-only : {[x for x in dk if x in only_d][:3]}", file=out)
+    return [(name, "mismatch")]
 
 
 def run_scaled_check(spark, sf: str, k: int = 8, out=sys.stdout) -> list:

@@ -38,7 +38,7 @@ def main():
     phases: dict[str, float] = {}
 
     t0 = time.time()
-    changelog = extract_changelog(t, compact_mentions=True)
+    changelog = extract_changelog(t)
     slim = changelog.select(
         "rec_kind", "conv_id", "turn_idx", "norm", "kind", "pred",
         "subj_norm", "subj_kind", "obj_norm", "obj_kind",
@@ -60,7 +60,7 @@ def main():
 
     t0 = time.time()
     triples = canonicalize_triples(raw_triples, norm_to_entity)
-    res = PipelineResult(None, entities, triples, None)
+    res = PipelineResult(entities, triples, None)
     n_tr = triples_with_names(res).count()
     phases["canonicalize_count"] = round(time.time() - t0, 2)
 

@@ -410,21 +410,28 @@ def transcript_parts(spark, tmp_path):
 
 def test_build_graph_job_budget(spark, tmp_path, transcript_parts):
     """Jobs of a small ``build_graph`` (8 work units): a cold build, an
-    unchanged rerun and an append — 16, 13 and 21 jobs (36, 28 and 37 while
-    driver rows were Python-backed frames and the entity tables were
-    derived by Spark; 19, 16 and 24 while the kind-constraint check ran a
-    count of its own).  Driver rows are local relations (no Python worker,
-    no collect round trip for lineage), the empty staging table's MERGE
-    skips its bucket probe, build_entities assembles the entity dictionary
-    from one collect, and the triples write counts kind violations: a new
-    job in any of these shows here."""
+    unchanged rerun and an append — 16, 3 and 20 jobs (16, 13 and 21 while
+    an unchanged rerun re-materialized and the committed units were read by
+    a Spark scan of lineage; 36, 28 and 37 while driver rows were
+    Python-backed frames and the entity tables were derived by Spark).
+    Driver rows are local relations (no Python worker, no collect round trip
+    for lineage), the empty staging table's MERGE skips its bucket probe,
+    build_entities assembles the entity dictionary from one collect, the
+    triples write counts kind violations, and a rerun whose staging rows
+    and graph are those of the last materialize only finds its pending
+    units: a new job in any of these shows here.  The rerun commits no
+    entities or triples snapshot."""
     from plume_spark.pipeline import build_graph
 
     base, grown = transcript_parts
     store = GraphStore(spark, str(tmp_path / "g"))
     counts = {}
     for label, df in (("cold", base), ("rerun", base), ("append", grown)):
+        versions = [len(t.snapshots()) for t in (store.entities, store.triples)]
         with _jobs(spark) as jobs:
             stats = build_graph(df, store, n_buckets=8)
         counts[label] = (len(jobs), stats["pending_units"])
-    assert counts == {"cold": (16, 8), "rerun": (13, 0), "append": (21, 4)}, counts
+        if label == "rerun":
+            assert not stats["materialized"]
+            assert [len(t.snapshots()) for t in (store.entities, store.triples)] == versions
+    assert counts == {"cold": (16, 8), "rerun": (3, 0), "append": (20, 4)}, counts

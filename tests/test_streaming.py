@@ -49,6 +49,10 @@ def test_stream_matches_batch_and_redrain_is_noop(spark, tmp_path):
 
     staging = staging_table(s)
     assert len(staging.files_for()) <= staging.layout.n_buckets
+    # the compaction ran before materialize: the drain's graph stays current
+    from plume_spark.pipeline import materialize_graph
+
+    assert materialize_graph(s, 0.95)["materialized"] is False
 
     b = GraphStore(spark, str(tmp_path / "batch-store"))
     build_graph(t, b, tau=0.95)
