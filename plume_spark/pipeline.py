@@ -147,6 +147,10 @@ def build_graph(
         sub = tb.filter(F.col(BUCKET_COL).isin(buckets)).drop(BUCKET_COL)
         done = [(r["partition_id"], r["input_hash"], r["rows_in"]) for r in pend_rows]
         stage_changelog(store, sub, "extract", done)
+        # the staging MERGE keeps the modulus; once its rows pass it, double
+        # it here, after the staging step (stream_build's compaction grows it
+        # after a drain, never inside an epoch)
+        staging_table(store).grow()
 
     # ---- stage 2: global materialize (atomic overwrite) ----
     stats.update(materialize_graph(store, tau))
@@ -184,7 +188,8 @@ def staging_table(store):
     incoming keys' file-buckets only (merge_insert(prune=True)) — without
     the layout every epoch/unit-batch would rescan the ENTIRE accumulated
     change log for the idempotency check, an O(store)-per-increment cost at
-    the 10^12-turn target (the same fix as DedupIndex's registry)."""
+    the 10^12-turn target (the same fix as DedupIndex's registry).  The
+    modulus starts at one bucket and grows with the rows (``grow``)."""
     from plume_spark.operators.extraction import CHANGELOG_SCHEMA
     from pyspark.sql import types as T
 
@@ -193,9 +198,7 @@ def staging_table(store):
     staging_schema = T.StructType(
         CHANGELOG_SCHEMA.fields + [T.StructField("rec_id", T.LongType())]
     )
-    layout = TableLayout(
-        bucket_by="rec_id", n_buckets=16, sort_by=("rec_id",), stats_cols=("rec_id",)
-    )
+    layout = TableLayout(bucket_by="rec_id", sort_by=("rec_id",), stats_cols=("rec_id",))
     return store.catalog.table("changelog", staging_schema, layout)
 
 
@@ -219,11 +222,16 @@ def materialize_graph(store, tau: float | None = None) -> dict:
     rows, so both converge to identical graph tables.  Linking reads only
     the distinct (norm, kind) pairs of the mention records, so per-occurrence
     mention rows an older store staged and compact ones give the same graph.
+    Both overwrites size their bucket modulus from the staging row count, so
+    a first build of a large store writes with many tasks, and a store
+    written under another modulus is rewritten sized.
 
     The ``materialize`` lineage row records the fingerprint of what it read
     and wrote (``_materialized_hash``).  When the current fingerprint is
-    already committed, the call returns ``"materialized": False`` with the
-    stored row counts, read from the manifests, and runs no Spark job.  A
+    already committed and both graph tables are at the sized modulus (so a
+    store written under another modulus is rewritten once), the call
+    returns ``"materialized": False`` with the stored row counts, read from
+    the manifests, and runs no Spark job.  A
     fingerprint is committed only for a write that counted no kind
     violation, so a skipped call reports ``kind_violations`` 0: the count of
     the write it reuses.  A write that counted some is redone, and recounted,
@@ -235,7 +243,13 @@ def materialize_graph(store, tau: float | None = None) -> dict:
 
     staging = staging_table(store)
     staged = staging.files_for()
-    if store.lineage.exists(
+    # entities and triples are each at most the staging rows: both are
+    # written under the modulus sized from that count, known without a job
+    bound = staging.row_count()
+    sized = all(
+        t.n_buckets == t.buckets_for(bound) for t in (store.entities, store.triples)
+    )
+    if sized and store.lineage.exists(
         {"stage": "materialize", "input_hash": _materialized_hash(staged, store, tau)}
     ):
         return {
@@ -254,8 +268,8 @@ def materialize_graph(store, tau: float | None = None) -> dict:
     )
     entities, norm_to_entity = build_entities(mentions, tau)
     triples = canonicalize_triples(observed, norm_to_entity).dropDuplicates()
-    store.entities.overwrite(entities)
-    store.triples.overwrite(triples)
+    store.entities.overwrite(entities, rows=bound)
+    store.triples.overwrite(triples, rows=bound)
     # An empty dictionary plans the triples as an empty relation that never
     # scans the raw triples; the observation then holds no metric, and the
     # count runs as a job of its own.

@@ -25,6 +25,15 @@ Semantics mirrored from Iceberg (and why they matter at 100 TB):
   its bucket id and per-column min/max (read from the parquet footer via
   pyarrow), and ``read(point=...)`` opens only the files that can contain the
   probed key — file skipping, not full scans, is what a point lookup costs.
+* Bucket modulus sized to the rows: the modulus is table state, committed in
+  each manifest, not a layout constant.  One rule (``buckets_for``) sizes it:
+  the smallest power-of-two multiple with ``rows <= n * TARGET_ROWS_PER_BUCKET``.
+  A new table has one bucket.  ``overwrite(df, rows=...)`` re-sizes it from a
+  row bound known without a Spark job (a manifest count); ``compact`` sizes it
+  from the table's own count, never below the current modulus; appends and
+  MERGEs keep it, and ``grow`` doubles it through ``rebucket`` once the
+  manifest count passes ``n * TARGET_ROWS_PER_BUCKET``.  Small tables are
+  thus one file per commit, and a full scan opens one footer, not sixteen.
 * Per-file bucket provenance: a bucket id only means something together
   with the key and modulus it was hashed under, so every file entry records
   its ``bucket_by`` and ``n_buckets`` next to ``bucket``.  A point probe is
@@ -47,8 +56,9 @@ per snapshot.
   ``pmod(xxhash64(key), n)`` the write path assigned — no Spark job.
   It runs once per distinct (key, modulus) among the files.
 * Driver-side probes: ``exists(eq)`` prunes with ``files_for(point=eq)`` and
-  reads the kept files with pyarrow, only the ``eq`` columns, with the
-  equality pushed down to row-group statistics; it stops at the first hit.
+  reads the kept files with ``pq.ParquetFile`` (no dataset set-up, which was
+  most of a probe), only the ``eq`` columns of the row groups whose footer
+  min/max admit the probe; it stops at the first hit.
   A probe costs a manifest read plus one small file read — the I/O the single
   Spark task of a scan would do, without scheduling a job
   (``GraphStore.node_exists`` / ``edge_exists`` are one call each).
@@ -85,20 +95,27 @@ from pyspark.sql import types as T
 from plume_spark.functions.xxh64 import xxhash64
 from plume_spark.session import local_frame
 
+# mean rows per file-bucket above which a table's modulus doubles: with a
+# FIXED modulus every bucket-pruned probe widens linearly as a table grows
+# (the round-3 dedup-epoch probe's 60x drift); growth keeps probe cost
+# tracking the batch at any table size, and the O(table) rewrite is
+# amortized O(1) per ingested row by the doubling schedule
+TARGET_ROWS_PER_BUCKET = 500_000
+
 
 @dataclass(frozen=True)
 class TableLayout:
     """Physical layout contract for a SnapshotTable.
 
     ``bucket_by``: hash-bucket key — rows land in ``pmod(xxhash64(key), n)``
-    directories, so a point read on the key opens 1/n of the files;
+    directories, so a point read on the key opens 1/n of the files; the
+    modulus n is table state sized to the rows (``SnapshotTable.n_buckets``);
     ``sort_by``: within-file sort order — tightens parquet min/max stats for
     the listed columns (range pruning), and gives run-length-friendly pages;
     ``stats_cols``: columns whose per-file min/max go into the manifest.
     """
 
     bucket_by: str | None = None
-    n_buckets: int = 16
     sort_by: tuple[str, ...] = ()
     stats_cols: tuple[str, ...] = ()
 
@@ -112,6 +129,36 @@ class BucketSet:
     key: str
     n_buckets: int
     ids: frozenset[int]
+
+
+def _minmax(st) -> tuple | None:
+    """(min, max) of a column chunk's footer statistics, strings decoded;
+    None when the chunk records none."""
+    if st is None or not st.has_min_max:
+        return None
+    lo, hi = st.min, st.max
+    if isinstance(lo, bytes):
+        lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
+    return lo, hi
+
+
+def _admitting_row_groups(md, eq: dict) -> list[int]:
+    """Row groups of a parquet file whose footer min/max admit every value
+    of ``eq``.  A file of one row group keeps it: its min/max are the
+    file's, which ``files_for`` already compared with the probe."""
+    if md.num_row_groups == 1:
+        return [0]
+    names = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    keep = []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for col, val in eq.items():
+            rng = _minmax(rg.column(names[col]).statistics)
+            if rng is not None and not rng[0] <= val <= rng[1]:
+                break
+        else:
+            keep.append(g)
+    return keep
 
 
 def _file_stats(abs_path: str, stats_cols: tuple[str, ...]) -> tuple[int, dict]:
@@ -129,13 +176,11 @@ def _file_stats(abs_path: str, stats_cols: tuple[str, ...]) -> tuple[int, dict]:
         lo = hi = None
         complete = True
         for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(i).statistics
-            if st is None or not st.has_min_max:
+            rng = _minmax(md.row_group(rg).column(i).statistics)
+            if rng is None:
                 complete = False
                 break
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
+            mn, mx = rng
             lo = mn if lo is None or mn < lo else lo
             hi = mx if hi is None or mx > hi else hi
         if complete and lo is not None:
@@ -159,16 +204,27 @@ class SnapshotTable:
         self._full: tuple[list[str], DataFrame] | None = None
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        # the bucket modulus is TABLE state, not constructor state: a process
-        # reopening a table that ``rebucket`` grew keeps writing under the
-        # grown modulus.  (Reads stay exact either way: each file records the
-        # key and modulus it was bucketed under.)
-        if layout and layout.bucket_by:
-            persisted = self._manifest(self._current_version()).get("n_buckets")
-            if persisted and persisted != layout.n_buckets:
-                from dataclasses import replace
 
-                self.layout = replace(layout, n_buckets=persisted)
+    @staticmethod
+    def buckets_for(rows: int, n: int = 1) -> int:
+        """The sizing rule: the smallest ``n * 2**k`` (k >= 0) with
+        ``rows <= n * 2**k * TARGET_ROWS_PER_BUCKET``."""
+        while rows > n * TARGET_ROWS_PER_BUCKET:
+            n *= 2
+        return n
+
+    @property
+    def n_buckets(self) -> int:
+        """The bucket modulus new files are written under.  It is TABLE
+        state, committed in every manifest, so a process reopening a table
+        that ``rebucket`` grew keeps writing under the grown modulus; a table
+        with no commit has one bucket.  (Reads stay exact whatever it is:
+        each file records the key and modulus it was bucketed under.)"""
+        m = self._manifest(self._current_version())
+        return m.get("n_buckets") or self.buckets_for(m["row_count"])
+
+    def _bucketed(self) -> bool:
+        return bool(self.layout and self.layout.bucket_by)
 
     # ------------------------------------------------------------- manifests
 
@@ -193,7 +249,13 @@ class SnapshotTable:
             for e in manifest["files"]
         ]
 
-    def _commit(self, files: list[dict], row_count: int, operation: str) -> int:
+    def _commit(
+        self, files: list[dict], row_count: int, operation: str, n_buckets: int | None = None
+    ) -> int:
+        """Commit a snapshot; a bucketed table records ``n_buckets`` (default:
+        the current modulus) as the modulus later writes use."""
+        if self._bucketed() and n_buckets is None:
+            n_buckets = self.n_buckets
         parent = self._current_version()
         version = parent + 1
         manifest = {
@@ -204,8 +266,8 @@ class SnapshotTable:
             "row_count": row_count,
             "committed_at": time.time(),
         }
-        if self.layout and self.layout.bucket_by:
-            manifest["n_buckets"] = self.layout.n_buckets
+        if self._bucketed():
+            manifest["n_buckets"] = n_buckets
         mpath = os.path.join(self.path, "_snapshots", f"v{version}.json")
         with open(mpath, "w") as f:
             json.dump(manifest, f)
@@ -227,11 +289,14 @@ class SnapshotTable:
         if got != want:
             raise ValueError(f"{self.path}: frame columns {got} do not match the declared {want}")
 
-    def _write_files(self, df: DataFrame, keep_empty: bool = True) -> tuple[list[dict], int]:
+    def _write_files(
+        self, df: DataFrame, n_buckets: int, keep_empty: bool = True
+    ) -> tuple[list[dict], int]:
         """Materialize df as immutable parquet files under a fresh commit dir,
-        honoring the table layout (bucketing + sort), and harvest per-file
-        footer stats into manifest entries.  ``keep_empty=False`` removes the
-        commit dir again when it holds no row and returns ``([], 0)``."""
+        honoring the table layout (bucketing under modulus ``n_buckets`` +
+        sort), and harvest per-file footer stats into manifest entries.
+        ``keep_empty=False`` removes the commit dir again when it holds no
+        row and returns ``([], 0)``."""
         self._check_schema(df)
         commit_dir = f"data/{uuid.uuid4().hex}"
         out = os.path.join(self.path, commit_dir)
@@ -239,8 +304,8 @@ class SnapshotTable:
         if lay and lay.bucket_by and lay.bucket_by in df.columns:
             bucketed = df.withColumn(
                 "_bucket",
-                F.pmod(F.xxhash64(lay.bucket_by), F.lit(lay.n_buckets)).cast("int"),
-            ).repartition(lay.n_buckets, "_bucket")
+                F.pmod(F.xxhash64(lay.bucket_by), F.lit(n_buckets)).cast("int"),
+            ).repartition(n_buckets, "_bucket")
             sort_cols = [c for c in (lay.sort_by or ()) if c in df.columns]
             if sort_cols:
                 bucketed = bucketed.sortWithinPartitions(*sort_cols)
@@ -268,7 +333,7 @@ class SnapshotTable:
                 total += rows
                 entry = {"path": rel, "bucket": bucket, "stats": stats, "rows": rows}
                 if bucket is not None:
-                    entry.update(bucket_by=lay.bucket_by, n_buckets=lay.n_buckets)
+                    entry.update(bucket_by=lay.bucket_by, n_buckets=n_buckets)
                 entries.append(entry)
         if total == 0 and not keep_empty:
             shutil.rmtree(out)
@@ -278,18 +343,27 @@ class SnapshotTable:
     # ------------------------------------------------------------ operations
 
     def append(self, df: DataFrame) -> int:
-        """Append-only commit: no existing file is touched.  A frame with no
-        rows commits nothing and returns the current version, so re-running
-        an applied MERGE leaves the snapshot history as it was."""
-        files, n = self._write_files(df, keep_empty=False)
+        """Append-only commit: no existing file is touched, and the bucket
+        modulus is kept (``grow`` resizes it).  A frame with no rows commits
+        nothing and returns the current version, so re-running an applied
+        MERGE leaves the snapshot history as it was."""
+        n_buckets = self.n_buckets
+        files, n = self._write_files(df, n_buckets, keep_empty=False)
         if n == 0:
             return self._current_version()
         prev = self._manifest(self._current_version())
-        return self._commit(list(prev["files"]) + files, prev["row_count"] + n, "append")
+        return self._commit(
+            list(prev["files"]) + files, prev["row_count"] + n, "append", n_buckets
+        )
 
-    def overwrite(self, df: DataFrame) -> int:
-        files, n = self._write_files(df)
-        return self._commit(files, n, "overwrite")
+    def overwrite(self, df: DataFrame, rows: int | None = None) -> int:
+        """Full rewrite.  ``rows`` is an upper bound on ``df``'s row count
+        known without a Spark job (a manifest count); the bucket modulus is
+        re-sized to it (``buckets_for``), shrinking or growing.  Without it
+        the table keeps its modulus."""
+        n_buckets = self.n_buckets if rows is None else self.buckets_for(rows)
+        files, n = self._write_files(df, n_buckets)
+        return self._commit(files, n, "overwrite", n_buckets)
 
     def truncate(self) -> int:
         """S8 destructive clear (the `MATCH (n) DETACH DELETE n` analog,
@@ -308,17 +382,17 @@ class SnapshotTable:
     def buckets_of(self, df: DataFrame, col: str) -> BucketSet:
         """Bucket ids the values of ``df[col]`` (keys of this table's bucket
         key) hash into — computed with the SAME xxhash64/pmod Spark applied
-        at write time, under the current layout.  One small job over ``df``
+        at write time, under the current modulus.  One small job over ``df``
         (distinct over at most n_buckets ints); feed the result to
         ``read(buckets=...)`` for a batch-probe pruned scan: the multi-key
         generalization of ``read(point=...)``."""
-        lay = self.layout
+        n = self.n_buckets
         rows = (
-            df.select(F.pmod(F.xxhash64(col), F.lit(lay.n_buckets)).cast("int").alias("b"))
+            df.select(F.pmod(F.xxhash64(col), F.lit(n)).cast("int").alias("b"))
             .distinct()
             .collect()
         )
-        return BucketSet(lay.bucket_by, lay.n_buckets, frozenset(int(r["b"]) for r in rows))
+        return BucketSet(self.layout.bucket_by, n, frozenset(int(r["b"]) for r in rows))
 
     def files_for(
         self,
@@ -390,12 +464,14 @@ class SnapshotTable:
     def exists(self, eq: dict, snapshot_id: int | None = None) -> bool:
         """Whether any row equals ``eq`` ({col: value}) on every column —
         answered on the driver, with no Spark job.  Pruned by
-        ``files_for(point=eq)``; each kept file is read with pyarrow, only
-        the ``eq`` columns, the equality pushed down to row-group statistics,
-        stopping at the first hit.  Probe values are typed from the declared
-        schema before any file is pruned, so a value the column type cannot
-        hold raises, and so does ``None`` (SQL equality with NULL holds for
-        no row, and a NULL key probe is a caller's bug)."""
+        ``files_for(point=eq)``; each kept file is opened with
+        ``pq.ParquetFile`` (no dataset set-up), only the ``eq`` columns of
+        the row groups whose footer min/max admit the probe are read, and
+        the equality is applied to them, stopping at the first hit.  Probe
+        values are typed from the declared schema before any file is pruned,
+        so a value the column type cannot hold raises, and so does ``None``
+        (SQL equality with NULL holds for no row, and a NULL key probe is a
+        caller's bug)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -408,10 +484,12 @@ class SnapshotTable:
                 raise TypeError(f"{self.path}: probe value for {col} is None")
             term = pc.field(col) == pa.scalar(val, declared.get(col))
             cond = term if cond is None else cond & term
-        return any(
-            pq.read_table(os.path.join(self.path, f), columns=list(eq), filters=cond).num_rows
-            for f in self.files_for(point=eq, snapshot_id=snapshot_id)
-        )
+        for f in self.files_for(point=eq, snapshot_id=snapshot_id):
+            pf = pq.ParquetFile(os.path.join(self.path, f))
+            groups = _admitting_row_groups(pf.metadata, eq)
+            if groups and pf.read_row_groups(groups, columns=list(eq)).filter(cond).num_rows:
+                return True
+        return False
 
     def scan(self, files: list[str]) -> DataFrame:
         """Frame over data files (relative paths, as ``files_for`` returns
@@ -445,11 +523,12 @@ class SnapshotTable:
         is consumed twice (bucket probe + anti-join): pass something cheap to
         recompute or already checkpointed.  A table with no files skips the
         probe: its read is an empty local frame, and the optimizer drops the
-        anti-join.
+        anti-join.  So does a table of one bucket: every key hashes into it,
+        so the probe could prune nothing.
         """
-        lay = self.layout
-        if prune and lay and lay.bucket_by and lay.bucket_by in keys and self.files_for():
-            current = self.read(buckets=self.buckets_of(df, lay.bucket_by)).select(*keys)
+        key = self.layout.bucket_by if self._bucketed() else None
+        if prune and key in keys and self.files_for() and self.n_buckets > 1:
+            current = self.read(buckets=self.buckets_of(df, key)).select(*keys)
         else:
             current = self.read().select(*keys)
         new = df.dropDuplicates(keys).join(current, keys, "left_anti")
@@ -486,6 +565,10 @@ class SnapshotTable:
         Old snapshots keep referencing the old files, so time travel is
         unaffected until ``expire_snapshots`` reclaims them.
 
+        A bucketed table is rewritten under ``buckets_for(row_count,
+        n_buckets)``: the rule sizes the modulus from the manifest count and
+        never below the current one, so an explicit or grown modulus stays.
+
         Returns the new snapshot id, or None when the table already holds
         ``min_files`` or fewer files (no-op — compaction must be idempotent
         and cheap to call on a schedule).
@@ -494,12 +577,14 @@ class SnapshotTable:
 
         entries = self._entries(self._manifest(self._current_version()))
         lay = self.layout
-        if lay and lay.bucket_by:
+        n_buckets = self.buckets_for(self.row_count(), self.n_buckets)
+        if self._bucketed():
             # bucketed natural form: every file bucketed under the layout's
-            # key and modulus, at most one file per bucket.  Files recording
-            # another key, or none, are rewritten even one per bucket.
+            # key and the sized modulus, at most one file per bucket.  Files
+            # recording another key, or none, are rewritten even one per
+            # bucket.
             laid_out = all(
-                (e.get("bucket_by"), e.get("n_buckets")) == (lay.bucket_by, lay.n_buckets)
+                (e.get("bucket_by"), e.get("n_buckets")) == (lay.bucket_by, n_buckets)
                 for e in entries
             )
             buckets = [e.get("bucket") for e in entries]
@@ -513,12 +598,13 @@ class SnapshotTable:
             # ever narrows, so a small table collapses to one file)
             n = max(1, math.ceil(self.row_count() / max(1, target_file_rows)))
             df = df.coalesce(n)
-        files, cnt = self._write_files(df)
-        return self._commit(files, cnt, "compact")
+        files, cnt = self._write_files(df, n_buckets)
+        return self._commit(files, cnt, "compact", n_buckets)
 
     def rebucket(self, n_buckets: int) -> int | None:
-        """Rewrite the table under a new (larger) bucket modulus — the
-        Iceberg ``REPLACE PARTITION FIELD bucket(N, key)`` + rewrite analog.
+        """Rewrite the table under a new bucket modulus — the Iceberg
+        ``REPLACE PARTITION FIELD bucket(N, key)`` + rewrite analog.  ``grow``
+        calls it on a doubling schedule; it also sets an explicit modulus.
 
         A fixed modulus makes per-bucket size grow linearly with the table,
         so every bucket-pruned probe widens as an index ages (the round-3
@@ -526,16 +612,28 @@ class SnapshotTable:
         schedule keeps rows-per-bucket bounded; the rewrite is O(table) but
         amortized O(1) per ingested row.  The new modulus is committed in the
         manifest, so later processes reopening the table keep writing under
-        it; older snapshots' files keep their own recorded modulus."""
-        from dataclasses import replace
-
-        lay = self.layout
-        if not (lay and lay.bucket_by) or n_buckets == lay.n_buckets:
+        it; older snapshots' files keep their own recorded modulus.  A table
+        with no files commits the modulus alone, with no Spark job."""
+        if not self._bucketed() or n_buckets == self.n_buckets:
             return None
-        df = self.read()
-        self.layout = replace(lay, n_buckets=n_buckets)
-        files, cnt = self._write_files(df)
-        return self._commit(files, cnt, "rebucket")
+        files, cnt = self._write_files(self.read(), n_buckets) if self.files_for() else ([], 0)
+        return self._commit(files, cnt, "rebucket", n_buckets)
+
+    def grow(self) -> tuple[int, int] | None:
+        """Maintenance: double the modulus until the manifest row count fits
+        (``buckets_for``), rewriting through ``rebucket``.  The check is O(1)
+        (manifest counts); a table that fits is untouched.  Returns the
+        (old, new) modulus of a grown table, else None.  Run it after a batch
+        staging step or in a drain's maintenance slot, never inside a
+        streaming micro-batch fold."""
+        if not self._bucketed():
+            return None
+        n = self.n_buckets
+        want = self.buckets_for(self.row_count(), n)
+        if want == n:
+            return None
+        self.rebucket(want)
+        return n, want
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Iceberg ``expire_snapshots`` analog: retain only the most recent

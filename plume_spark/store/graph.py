@@ -27,16 +27,17 @@ TRIPLE_KEY = ["subj", "pred", "obj", "conv_id", "turn_idx"]
 #   (edge_exists knows subj, never conv_id) hashes subj on the driver and
 #   opens the one file of that bucket, as a node probe does.  This departs
 #   from SURVEY §4's bucket(N, conv_id): transcripts and extraction work units
-#   stay conv_id-keyed, but no read of the edge table knows a conv_id.  At
-#   10^12 turns n_buckets is sized ~ |table| / (executors * few GB).
+#   stay conv_id-keyed, but no read of the edge table knows a conv_id.
 # * entities bucketed + sorted by entity_id: point-lookup file skipping.
+# The bucket modulus of both is table state, not a layout constant: each
+# materialize overwrites them sized from the staging row count, an upper
+# bound on entities and triples (SnapshotTable.buckets_for: one bucket per
+# TARGET_ROWS_PER_BUCKET rows, rounded up to a power of two).
 TRIPLES_LAYOUT = TableLayout(
-    bucket_by="subj", n_buckets=16, sort_by=("pred", "subj"),
-    stats_cols=("pred", "subj", "conv_id"),
+    bucket_by="subj", sort_by=("pred", "subj"), stats_cols=("pred", "subj", "conv_id"),
 )
 ENTITIES_LAYOUT = TableLayout(
-    bucket_by="entity_id", n_buckets=16, sort_by=("entity_id",),
-    stats_cols=("entity_id",),
+    bucket_by="entity_id", sort_by=("entity_id",), stats_cols=("entity_id",),
 )
 
 

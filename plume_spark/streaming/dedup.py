@@ -135,20 +135,18 @@ class DedupIndex:
         ]
     )
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 16):
+    def __init__(self, spark: SparkSession, path: str):
         self.path = path
         # every table is bucketed on ITS probe key — doc-keyed tables by
         # doc_id, the band table by sig_hash, gset fingerprints by gset_hash —
         # so each per-epoch probe/MERGE opens only the file-buckets the
         # batch's keys hash into (the same index idea as the graph store's
-        # entities/triples layouts)
+        # entities/triples layouts); each modulus grows with its table
+        # (``grow_buckets``)
         from plume_spark.store.catalog import TableLayout
 
         def lay(key: str, sort: tuple = ()) -> TableLayout:
-            return TableLayout(
-                bucket_by=key, n_buckets=n_buckets,
-                sort_by=sort or (key,), stats_cols=(key,),
-            )
+            return TableLayout(bucket_by=key, sort_by=sort or (key,), stats_cols=(key,))
 
         self.sigs = SnapshotTable(spark, f"{path}/sigs", schema=self.SIGS, layout=lay("doc_id"))
         self.toks = SnapshotTable(spark, f"{path}/toks", schema=self.TOKS, layout=lay("doc_id"))
@@ -158,13 +156,6 @@ class DedupIndex:
         self.pairs = SnapshotTable(
             spark, f"{path}/pairs", schema=self.PAIRS, layout=lay("doc_a", ("doc_a", "doc_b"))
         )
-
-    # mean rows per file-bucket above which a table's modulus doubles: with a
-    # FIXED modulus every bucket-pruned probe widens linearly as the index
-    # grows (the round-3 probe's 60x drift); growth keeps probe cost tracking
-    # the BATCH at any index size, and the O(table) rewrite is amortized O(1)
-    # per ingested row by the doubling schedule
-    TARGET_ROWS_PER_BUCKET = 500_000
 
     def tables(self) -> tuple[SnapshotTable, ...]:
         return (self.sigs, self.toks, self.bands, self.gsets, self.docs, self.pairs)
@@ -206,29 +197,15 @@ class DedupIndex:
         except FileNotFoundError:
             pass
 
-    def grow_buckets(self, target_rows_per_bucket: int | None = None) -> dict:
-        """Maintenance: grow any table whose mean bucket size exceeds the
-        target to the smallest power-of-two modulus that fits.  The check is
-        O(1) per table (manifest row counts); a table that doesn't need
-        growth is untouched.  Returns {table: (old_n, new_n)} for the grown
-        ones.  Run from the post-drain maintenance slot (with compact), never
-        inside the per-epoch fold."""
-        import os as _os
+    def grow_buckets(self) -> dict:
+        """Maintenance: grow every table whose rows passed its modulus
+        (``SnapshotTable.grow``).  Returns {table: (old_n, new_n)} for the
+        grown ones.  Run from the post-drain maintenance slot (with
+        compact), never inside the per-epoch fold."""
+        import os
 
-        target = target_rows_per_bucket or self.TARGET_ROWS_PER_BUCKET
-        grown: dict[str, tuple[int, int]] = {}
-        for t in self.tables():
-            lay = t.layout
-            if not (lay and lay.bucket_by):
-                continue
-            rows, n = t.row_count(), lay.n_buckets
-            want = n
-            while rows > want * target:
-                want *= 2
-            if want > n:
-                t.rebucket(want)
-                grown[_os.path.basename(t.path)] = (n, want)
-        return grown
+        grown = {os.path.basename(t.path): t.grow() for t in self.tables()}
+        return {name: g for name, g in grown.items() if g}
 
 
 def fold_batch(

@@ -103,9 +103,11 @@ def stream_build(
     # staging; bin-pack them back into a layout-conforming fileset so the next
     # drain's anti-join scans files proportional to data, not to epochs
     # (Iceberg rewrite_data_files on a schedule).  History is retained —
-    # reclaiming it is the operator's explicit expire_snapshots call.  It runs
-    # before materialize, whose fingerprint names the staging files it read:
-    # compacting afterwards would make the next materialize_graph redo it.
+    # reclaiming it is the operator's explicit expire_snapshots call.  It
+    # also grows the modulus once the rows pass it (the drain's growth slot).
+    # It runs before materialize, whose fingerprint names the staging files
+    # it read: compacting afterwards would make the next materialize_graph
+    # redo it.
     if progress["epochs"] and staging_table(store).compact(min_files=1) is not None:
         progress["compacted"] = True
     if materialize and progress["epochs"]:

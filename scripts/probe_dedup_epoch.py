@@ -75,9 +75,9 @@ def main() -> None:
                 t.compact(min_files=1)
             index_docs = idx.docs.row_count()
             n_buckets = {
-                "toks": idx.toks.layout.n_buckets,
-                "bands": idx.bands.layout.n_buckets,
-                "gsets": idx.gsets.layout.n_buckets,
+                "toks": idx.toks.n_buckets,
+                "bands": idx.bands.n_buckets,
+                "gsets": idx.gsets.n_buckets,
             }
 
             # stateless path: re-bands the whole index's signatures per call

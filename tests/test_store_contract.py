@@ -295,6 +295,9 @@ def test_bucket_and_minmax_pruning(spark, store):
     filtered (conservative pruning)."""
     n = 600
     ents, trips = _pruning_frames(spark, n)
+    # 600 rows size to one bucket: set an explicit modulus to prune across
+    store.entities.rebucket(16)
+    store.triples.rebucket(16)
     store.bulk_write(ents, trips)
 
     all_ent_files = store.entities.files_for()
@@ -331,22 +334,23 @@ def test_write_rejects_frames_off_the_declared_schema(spark, store):
 
 def test_rebucket_grows_modulus_and_stays_exact(spark, tmp_path):
     """rebucket() contract: rows identical afterward, pruned point/probe
-    reads stay exact under the grown modulus, and a NEW table handle opened
-    with the stale default modulus adopts the persisted one (probing with
-    the write-time modulus is what keeps bucket pruning correct)."""
+    reads stay exact under the grown modulus, and a NEW table handle adopts
+    the persisted modulus (probing with the write-time modulus is what keeps
+    bucket pruning correct)."""
     from pyspark.sql import types as T
 
     from plume_spark.store.catalog import SnapshotTable, TableLayout
 
     schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
-    lay = TableLayout(bucket_by="k", n_buckets=4, sort_by=("k",), stats_cols=("k",))
+    lay = TableLayout(bucket_by="k", sort_by=("k",), stats_cols=("k",))
     t = SnapshotTable(spark, str(tmp_path / "grow"), schema=schema, layout=lay)
+    assert t.rebucket(4) is not None and t.n_buckets == 4
     df = spark.range(500).selectExpr("id AS k", "id * 2 AS v")
     t.append(df)
     before = {tuple(r) for r in t.read().collect()}
 
     assert t.rebucket(16) is not None
-    assert t.layout.n_buckets == 16
+    assert t.n_buckets == 16
     assert {tuple(r) for r in t.read().collect()} == before
     # pruned point read under the new modulus: fewer files, same rows
     assert len(t.files_for(point={"k": 17})) < len(t.files_for())
@@ -357,9 +361,9 @@ def test_rebucket_grows_modulus_and_stays_exact(spark, tmp_path):
     )
     assert t.row_count() == 510
 
-    # reopening with the constructor default must adopt the persisted modulus
+    # a reopened handle must adopt the persisted modulus
     t2 = SnapshotTable(spark, str(tmp_path / "grow"), schema=schema, layout=lay)
-    assert t2.layout.n_buckets == 16
+    assert t2.n_buckets == 16
     assert t2.read(point={"k": 505}).filter("k = 505").count() == 1
     # growing is one-way here: same modulus is a no-op
     assert t2.rebucket(16) is None
@@ -374,8 +378,9 @@ def test_time_travel_point_reads_survive_rebucket(spark, tmp_path):
     from plume_spark.store.catalog import SnapshotTable, TableLayout
 
     schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
-    lay = TableLayout(bucket_by="k", n_buckets=4, sort_by=("k",), stats_cols=("k",))
+    lay = TableLayout(bucket_by="k", sort_by=("k",), stats_cols=("k",))
     t = SnapshotTable(spark, str(tmp_path / "tt"), schema=schema, layout=lay)
+    t.rebucket(4)
     t.append(spark.range(200).selectExpr("id AS k", "id * 2 AS v"))
     v1 = t._current_version()
     assert t.rebucket(32) is not None
@@ -392,6 +397,104 @@ def test_time_travel_point_reads_survive_rebucket(spark, tmp_path):
         assert any(f.endswith(p) for p in kept), (k, f, kept)
     assert t.read(snapshot_id=v1, point={"k": 17}).filter("k = 17").count() == 1
     assert t.read(point={"k": 17}).filter("k = 17").count() == 1
+
+
+def test_bucket_modulus_is_sized_to_rows(spark, tmp_path, monkeypatch):
+    """The bucket modulus is table state sized to the rows: a new table has
+    one bucket; appends and MERGEs keep it, and ``grow`` doubles it once the
+    manifest count passes ``n * TARGET_ROWS_PER_BUCKET``, with point probes
+    exact throughout; a materialize into an empty store sizes entities and
+    triples from the staging rows; a store written under a fixed 16 buckets
+    reopens exactly, and its next materialize rewrites it sized.  The target
+    is lowered so that small tables cross it."""
+    from pyspark.sql import types as T
+
+    from plume_spark.generator import generate_transcripts
+    from plume_spark.pipeline import build_graph, staging_table
+    from plume_spark.store import catalog
+    from plume_spark.store.catalog import SnapshotTable, TableLayout
+
+    def moduli(t):
+        return {e["n_buckets"] for e in t._entries(t._manifest(t._current_version()))}
+
+    # a store written under the old fixed layout: every table at 16 buckets
+    gen = generate_transcripts(spark, 12, seed=3)
+    root = str(tmp_path / "fixed")
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "buckets_for", staticmethod(lambda rows, n=1: max(n, 16)))
+        build_graph(gen, GraphStore(spark, root), n_buckets=4)
+    old = GraphStore(spark, root)
+    ents = sorted(map(tuple, old.entities.read().collect()))
+    trips = sorted(map(tuple, old.triples.read().collect()))
+    assert old.entities.n_buckets == old.triples.n_buckets == 16
+    assert moduli(old.entities) == moduli(old.triples) == {16}
+    assert all(old.node_exists(e[0]) for e in ents)
+    assert all(old.edge_exists(t[0], t[2], t[1]) for t in trips)
+    assert build_graph(gen, old, n_buckets=4)["materialized"]
+    assert old.entities.n_buckets == old.triples.n_buckets == 1
+    assert moduli(old.entities) == moduli(old.triples) == {1}
+    assert sorted(map(tuple, old.entities.read().collect())) == ents
+    assert sorted(map(tuple, old.triples.read().collect())) == trips
+    assert not build_graph(gen, old, n_buckets=4)["materialized"]
+
+    monkeypatch.setattr(catalog, "TARGET_ROWS_PER_BUCKET", 100)
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
+    lay = TableLayout(bucket_by="k", sort_by=("k",), stats_cols=("k",))
+    t = SnapshotTable(spark, str(tmp_path / "t"), schema, lay)
+    assert t.n_buckets == 1 and t.grow() is None
+    t.append(spark.range(150).selectExpr("id * 7 AS k", "id AS v"))
+    assert t.n_buckets == 1 and len(t.files_for()) == 1
+    assert t.grow() == (1, 2) and t.grow() is None
+    t.merge_insert(spark.range(100, 450).selectExpr("id * 7 AS k", "id AS v"), ["k"], prune=True)
+    assert t.row_count() == 450 and t.n_buckets == 2
+    assert t.grow() == (2, 8) and moduli(t) == {8}
+    assert SnapshotTable(spark, t.path, schema, lay).n_buckets == 8
+    assert len(t.files_for(point={"k": 7 * 17})) == 1 < len(t.files_for())
+    assert t.read(point={"k": 7 * 17}).filter("k = 119").count() == 1
+    assert all(t.exists({"k": 7 * i}) is (i < 450) for i in range(460))
+    assert not t.exists({"k": 3})
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    build_graph(gen, store, n_buckets=4)
+    staging = staging_table(store)
+    want = SnapshotTable.buckets_for(staging.row_count())
+    assert want > 1 and staging.n_buckets == want
+    for tab in (store.entities, store.triples):
+        assert tab.n_buckets == want and moduli(tab) == {want}
+    assert sorted(map(tuple, store.triples.read().collect())) == trips
+    assert not build_graph(gen, store, n_buckets=4)["materialized"]
+
+
+def test_exists_reads_only_admitting_row_groups(spark, tmp_path):
+    """A file of several row groups: ``exists`` reads only the row groups
+    whose footer min/max admit the probe, on long and string columns, and
+    answers as the rows written."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from plume_spark.store.catalog import SnapshotTable, TableLayout, _admitting_row_groups
+
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("s", T.StringType())])
+    t = SnapshotTable(
+        spark, str(tmp_path / "rg"), schema,
+        TableLayout(bucket_by="k", sort_by=("k",), stats_cols=("k",)),
+    )
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        t.append(spark.range(5000).selectExpr("id * 2 AS k", "format_string('s%05d', id * 2) AS s"))
+    finally:
+        spark.conf.unset("parquet.block.size")
+    (f,) = t.files_for()
+    md = pq.ParquetFile(os.path.join(t.path, f)).metadata
+    assert md.num_row_groups > 2
+    for probe in ({"k": 4000}, {"s": "s04000"}, {"k": 4000, "s": "s04000"}):
+        assert len(_admitting_row_groups(md, probe)) == 1
+    assert _admitting_row_groups(md, {"k": 4000, "s": "s00002"}) == []
+    for k in (0, 2, 4000, 9998):
+        assert t.exists({"k": k}) and t.exists({"k": k, "s": f"s{k:05d}"})
+    for k in (1, 4001, 10_000, -2):
+        assert not t.exists({"k": k})
+    assert not t.exists({"k": 4000, "s": "s04002"})
 
 
 @pytest.mark.parametrize("recorded", [True, False], ids=["conv_id_recorded", "no_key_recorded"])
@@ -414,6 +517,7 @@ def test_conv_id_keyed_triples_stay_exact_under_subj_layout(spark, tmp_path, rec
     old = SnapshotTable(
         spark, str(root / "triples"), TRIPLES, replace(TRIPLES_LAYOUT, bucket_by="conv_id")
     )
+    old.rebucket(16)  # 600 rows size to one bucket
     old.append(trips)
     if not recorded:
         mpath = os.path.join(old.path, "_snapshots", f"v{old._current_version()}.json")
@@ -486,6 +590,7 @@ def probe_tables(spark, tmp_path_factory):
         return spark.createDataFrame(full, schema=TRIPLES)
 
     t = SnapshotTable(spark, str(root / "t"), TRIPLES, TRIPLES_LAYOUT)
+    t.rebucket(16)
     for r in range(3):
         t.append(frame(_PROBE_ROWS[24 * r : 24 * (r + 1)]))
     appended = t._current_version()
@@ -493,6 +598,7 @@ def probe_tables(spark, tmp_path_factory):
 
     lay = replace(TRIPLES_LAYOUT, bucket_by="conv_id")
     nokey = SnapshotTable(spark, str(root / "nokey"), TRIPLES, lay)
+    nokey.rebucket(16)
     nokey.append(frame(_PROBE_ROWS))
     mpath = os.path.join(nokey.path, "_snapshots", f"v{nokey._current_version()}.json")
     with open(mpath) as f:
@@ -578,6 +684,7 @@ def test_compact_and_expire_snapshots(spark, store):
     and keeps time travel intact; expire_snapshots() then reclaims the old
     files and manifests, after which only retained history is readable."""
     t = store.entities
+    t.rebucket(16)  # 50 rows size to one bucket: prune across sixteen
     for i in range(5):  # five micro-batch commits, one tiny fileset each
         t.append(
             spark.createDataFrame(

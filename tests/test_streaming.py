@@ -48,7 +48,7 @@ def test_stream_matches_batch_and_redrain_is_noop(spark, tmp_path):
     from plume_spark.pipeline import staging_table
 
     staging = staging_table(s)
-    assert len(staging.files_for()) <= staging.layout.n_buckets
+    assert len(staging.files_for()) <= staging.n_buckets
     # the compaction ran before materialize: the drain's graph stays current
     from plume_spark.pipeline import materialize_graph
 
@@ -382,6 +382,7 @@ def test_dedup_index_layout_prunes(spark, tmp_path):
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = DedupIndex(spark, str(tmp_path / "idx"))
+    idx.sigs.rebucket(16)  # the sf0.001 signatures size to one bucket
     sigs, toks = dedup.minhash_state(d)
     idx.sigs.append(sigs)
     idx.toks.append(toks)
