@@ -24,6 +24,7 @@ from plume_spark.functions.quantize import qround
 from plume_spark.operators import dedup, similarity, traversal
 from plume_spark.operators.extraction import extract_changelog, split_changelog
 from plume_spark.pipeline import run_pipeline, triples_with_names
+from plume_spark.session import local_frame
 
 NORM_SQL = (
     "trim(regexp_replace(regexp_replace(lower({col}), '[^a-z0-9]+', ' ', 'g'), "
@@ -1040,7 +1041,7 @@ def _q_t2_range_join(spark, sf):
 
 def _q_j4(spark, sf):
     c = graft.load(spark, sf, "customer")
-    keys = c.sparkSession.createDataFrame([(k,) for k in LOOKUP_NAMES], ["c_name"])
+    keys = local_frame(spark, [(k,) for k in LOOKUP_NAMES], "c_name string")
     return traversal.point_lookup(c, keys, "c_name").select("c_custkey", "c_name")
 
 
@@ -1139,7 +1140,7 @@ def _q_j5(spark, sf):
     # unindexed scan-lookup variant of J4: same semantics, shuffle-hash join
     # forced (no broadcast) — the reference's index-off benchmark twin
     c = graft.load(spark, sf, "customer")
-    keys = c.sparkSession.createDataFrame([(k,) for k in LOOKUP_NAMES], ["c_name"])
+    keys = local_frame(spark, [(k,) for k in LOOKUP_NAMES], "c_name string")
     return (
         c.join(keys.hint("shuffle_hash"), "c_name", "left_semi")
         .select("c_custkey", "c_name")
@@ -1494,7 +1495,8 @@ def _q_stream_sessionize(spark, sf):
 
     drain()
     for i in (1, 2):
-        sent = spark.createDataFrame(
+        sent = local_frame(
+            spark,
             [(10**9 + i, hi + datetime.timedelta(days=30 * i), -1, "click", 0.0, "{}")],
             e.schema,
         )

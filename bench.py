@@ -151,6 +151,9 @@ def run_bench(sf_dir: str, cpus: int, names: list[str] | None = None) -> dict:
     if "kg_build_scaled" in names and os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
         _warmup(spark, sf_dir)
     timings: dict[str, float] = {}
+    # 1-min host load average before and after each query's repetitions, so a
+    # timing can be read against the load it ran under
+    load: dict[str, list[float]] = {}
     n_triples = 0
     flagship_samples: list[float] = []
     for name in names:
@@ -162,6 +165,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str] | None = None) -> dict:
         # same estimator.  Other queries stay single-shot to keep the suite
         # under ~2 min.
         reps = 2 if name in ("kg_build_triples", "kg_build_distlink") else 1
+        load[name] = [round(os.getloadavg()[0], 2)]
         for _ in range(reps):
             t0 = time.time()
             df = qs[name](spark, sf_dir)
@@ -174,6 +178,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str] | None = None) -> dict:
                 flagship_samples.append(dt)
                 spark.catalog.clearCache()  # cold pipeline each sample
             timings[name] = min(timings.get(name, dt), dt)
+        load[name].append(round(os.getloadavg()[0], 2))
     total = round(sum(timings.values()), 3)
     e2e = timings.get("kg_build_triples", total)
     return {
@@ -181,6 +186,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str] | None = None) -> dict:
         "value": e2e,
         "unit": "sec",
         "queries": timings,
+        "load": load,
         "sf": sf_dir,
         "cpus": cpus,
         "triples": n_triples,

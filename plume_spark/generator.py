@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from plume_spark.schemas import TRANSCRIPTS
+from plume_spark.session import local_frame
 
 # ---------------------------------------------------------------- lexicons
 
@@ -162,4 +163,4 @@ def quarantine_fixture(spark: SparkSession) -> DataFrame:
         (None, 0, "user", "some text", None, _EPOCH),
         ("conv-bad2", None, "user", "Bob Jones uses QueryPad daily", None, _EPOCH),
     ]
-    return spark.createDataFrame(rows, schema=TRANSCRIPTS)
+    return local_frame(spark, rows, TRANSCRIPTS)

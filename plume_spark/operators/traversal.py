@@ -102,7 +102,10 @@ def k_hop(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
     removes what they would add.  The edges are projected to non-null
     (subj, obj) once, so every hop joins the same plan and Spark reuses one
     exchange of it; an edge with a null obj is no edge here, so a null is
-    never returned as a node."""
+    never returned as a node.  Build ``seeds`` with ``session.local_frame``:
+    a list-backed ``createDataFrame`` seed frame is a pickled Python RDD of
+    ``defaultParallelism`` slices whose scan runs one Python task per slice
+    on every call, while a local frame runs none."""
     if k == 0:
         return seeds.select("node").distinct()
     edges = edges.select("subj", "obj").filter(

@@ -364,26 +364,23 @@ def test_local_frame_round_trips_and_plans_as_local_relation(spark, table):
 
 
 def test_no_list_backed_frames_in_the_package():
-    """Every driver-rows frame goes through ``session.local_frame`` (an Arrow
-    LocalRelation).  A list handed to ``createDataFrame`` is a pickled Python
-    RDD whose every scan runs Python worker tasks."""
+    """Every driver-rows frame, in the package and in the query contract,
+    goes through ``session.local_frame`` (an Arrow LocalRelation).  A list
+    handed to ``createDataFrame`` is a pickled Python RDD whose every scan
+    runs Python worker tasks."""
     import pathlib
 
     import plume_spark
 
-    allowed = {
-        # the one call: builds the Arrow table the others go through
-        "session.py",
-        # the synthetic input generator: a test and benchmark fixture, not
-        # on the build, store or streaming path
-        "generator.py",
-    }
     root = pathlib.Path(plume_spark.__file__).parent
+    entry = root.parent / "__spark_entry__.py"
     hits = sorted(
-        f"{p.relative_to(root)}:{i}"
-        for p in root.rglob("*.py")
+        f"{p.relative_to(root.parent)}:{i}"
+        for p in [*root.rglob("*.py"), entry]
         for i, line in enumerate(p.read_text().splitlines(), 1)
-        if "createDataFrame(" in line and p.name not in allowed
+        # session.py holds the one call, which builds the Arrow table the
+        # others go through
+        if "createDataFrame(" in line and p.name != "session.py"
     )
     assert hits == []
     session_calls = [
